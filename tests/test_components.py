@@ -82,7 +82,7 @@ def test_canonical_survivors_flags(spark):
 
 def test_no_lingering_cached_rdds(spark):
     # each round's checkpoint is released deterministically once the
-    # next round is materialized (_unpersist_ids) — only the returned
+    # next round is materialized (Scope.release) — only the returned
     # labels frame may stay cached. Assert the loop doesn't pile up
     # storage proportional to rounds: a 33-node chain runs ~5 pointer-
     # jumping rounds, so a per-round leak would show up as >1 extra
@@ -235,38 +235,31 @@ def test_checkpoint_stats_do_not_compound(spark):
     self-join loop therefore squares the estimate per round (a power
     tower that eventually stalls the driver in BigInteger.multiply and
     then throws "BigInteger would overflow supported range"; boruvka
-    at sf1 hit it first). _checkpoint_tracked must (a) keep honest
-    small stats so broadcast planning still works, and (b) reset the
-    leaf once the estimate passes the information-free ceiling."""
+    at sf1 hit it first). The materialize checkpoint must (a) keep
+    honest small stats so broadcast planning still works, and (b) reset
+    the leaf once the estimate passes the information-free ceiling."""
     from pyspark.sql import functions as F
 
-    from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
-        _unpersist_ids,
-    )
-
-    sc = spark.sparkContext
+    from tvbigdataproject_spark.operators.materialize import Scope
 
     def bits(d):
         return int(
             d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         ).bit_length()
 
-    cur, ids = _checkpoint_tracked(
-        spark.range(50).select(F.col("id").alias("a")), sc
-    )
-    assert bits(cur) < 96  # honest small stats preserved
-    for _ in range(8):
-        j = cur.join(
-            cur.select(F.col("a").alias("a2")), F.col("a") == F.col("a2")
-        ).select("a")
-        new, nids = _checkpoint_tracked(j, sc)
-        _unpersist_ids(sc, ids)
-        cur, ids = new, nids
-        assert cur.count() == 50
-    # without the ceiling this is ~9 * 2^8 = 2300+ bits and climbing
-    assert bits(cur) < 160, bits(cur)
-    _unpersist_ids(sc, ids)
+    with Scope() as s:
+        cur = s.checkpoint(spark.range(50).select(F.col("id").alias("a")))
+        assert bits(cur) < 96  # honest small stats preserved
+        for _ in range(8):
+            j = cur.join(
+                cur.select(F.col("a").alias("a2")), F.col("a") == F.col("a2")
+            ).select("a")
+            new = s.checkpoint(j)
+            s.release(cur)
+            cur = new
+            assert cur.count() == 50
+        # without the ceiling this is ~9 * 2^8 = 2300+ bits and climbing
+        assert bits(cur) < 160, bits(cur)
 
 
 def test_probe_columns_never_leak_and_spans_equal_per_round(spark):

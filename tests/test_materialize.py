@@ -1,0 +1,137 @@
+"""The iterative tier's materialization layer (operators/materialize.py):
+the Scope ownership contract, release() of kept results, the typed
+EdgeSet and the one local-solve gate."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from tvbigdataproject_spark.operators import trade_edges as te
+from tvbigdataproject_spark.operators.materialize import (
+    EdgeSet,
+    Scope,
+    local_solve_ok,
+    persistent_ids,
+    release,
+)
+
+SF = "/root/testdata/sf0.001"
+
+
+def test_scope_releases_everything_on_error_and_keeps_what_it_hands_out(spark):
+    sc = spark.sparkContext
+    before = persistent_ids(sc)
+    with pytest.raises(ValueError):
+        with Scope() as s:
+            s.checkpoint(spark.range(10))
+            raise ValueError("mid-loop failure")
+    assert persistent_ids(sc) - before == set()
+
+    foreign = spark.range(3).persist()
+    foreign.count()
+    try:
+        before = persistent_ids(sc)
+        with Scope() as s:
+            dropped = s.checkpoint(spark.range(5))
+            kept = s.keep(s.checkpoint(spark.range(7)))
+            s.release(dropped)
+            s.release(foreign)  # not the scope's: left alone
+        assert kept.count() == 7 and foreign.is_cached
+        created = persistent_ids(sc) - before
+        assert len(created) == 1  # only the kept frame's blocks
+        # release() frees a kept result through any projection of it
+        release(kept.select(F.col("id").alias("x")).where("x > 2"))
+        assert not persistent_ids(sc) & created
+        assert foreign.count() == 3
+    finally:
+        foreign.unpersist()
+
+
+def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(spark):
+    # an operator handed the session trade table must leave the cache's
+    # blocks persisted and release everything it made except its
+    # result; release(result) then returns the context to the cache
+    from tvbigdataproject_spark.operators.components import (
+        label_propagation,
+        strongly_connected_components,
+    )
+    from tvbigdataproject_spark.operators.traversal import (
+        bfs_levels,
+        kcore_peel,
+        luby_mis,
+        reachable_masks,
+    )
+
+    sc = spark.sparkContext
+    te.release_trade_pairs(spark)
+    before = persistent_ids(sc)
+    bi = te.trade_edges_bi(spark, SF)
+    n_edges = bi.count()
+    cache = persistent_ids(sc) - before
+    assert cache  # the session table's checkpoint blocks
+    src = spark.createDataFrame([(1,)], "node long")
+    runs = [
+        lambda: bfs_levels(bi, source=1, max_hops=3),
+        lambda: kcore_peel(bi, k=2, rounds=3),
+        lambda: label_propagation(bi, rounds=3),
+        lambda: luby_mis(bi, rounds=2),
+        lambda: reachable_masks(bi, src, local_edge_threshold=0),
+        lambda: strongly_connected_components(bi),
+    ]
+    try:
+        for run in runs:
+            before = persistent_ids(sc)
+            out = run()
+            out.count()
+            alive = persistent_ids(sc)
+            assert cache <= alive  # the borrowed blocks survive
+            created = alive - before
+            assert len(created) <= 1  # at most the result's own
+            release(out)
+            assert not persistent_ids(sc) & created
+            assert cache <= persistent_ids(sc)
+        assert bi.count() == n_edges  # still served from the cache
+    finally:
+        te.release_trade_pairs(spark)
+
+
+def test_dag_levels_cycle_raise_leaks_nothing(spark):
+    from tvbigdataproject_spark.operators.traversal import (
+        dag_longest_path_levels,
+    )
+
+    sc = spark.sparkContext
+    cyc = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    before = persistent_ids(sc)
+    with pytest.raises(RuntimeError, match="cycle"):
+        dag_longest_path_levels(cyc, max_rounds=10)
+    assert persistent_ids(sc) - before == set()
+
+
+@pytest.mark.parametrize(
+    "producer",
+    [te.trade_edges, te.trade_edges_bi, te.trade_edges_weighted_bi],
+    ids=lambda f: f.__name__,
+)
+def test_trade_edge_sets_have_no_duplicate_pairs(spark, producer):
+    # the check that replaces the old unchecked input_materialized
+    # promise: an EdgeSet is unique on (src, dst)
+    es = producer(spark, "/root/testdata/sf0.01")
+    try:
+        assert isinstance(es, EdgeSet)
+        dups = es.df.groupBy("src", "dst").count().where("count > 1").count()
+        assert es.count() > 0 and dups == 0
+    finally:
+        te.release_trade_pairs(spark)
+
+
+def test_local_solve_gate_threshold_and_env(spark, monkeypatch):
+    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    monkeypatch.delenv("SPARK_GRAFT_LOCAL_EDGES", raising=False)
+    assert local_solve_ok(e)  # 2 edges under the 1M default
+    assert local_solve_ok(e, 2) and not local_solve_ok(e, 1)
+    assert not local_solve_ok(e, 0)  # 0 disables
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "1")
+    assert not local_solve_ok(e)
+    assert local_solve_ok(e, 5)  # the argument wins over the env var

@@ -102,7 +102,7 @@ def test_error_path_leaks_nothing(spark):
     # must be released by the finally clause.
     import pytest
 
-    from tvbigdataproject_spark.operators.components import _persistent_ids
+    from tvbigdataproject_spark.operators.materialize import persistent_ids
     from tvbigdataproject_spark.operators.mst import boruvka_msf
 
     sc = spark.sparkContext
@@ -110,8 +110,8 @@ def test_error_path_leaks_nothing(spark):
     e = spark.createDataFrame(
         [(i, i + 1, 100 - i) for i in range(n)], "src long, dst long, w long"
     )
-    before = _persistent_ids(sc)
+    before = persistent_ids(sc)
     with pytest.raises(RuntimeError):
         boruvka_msf(e, max_rounds=1)
-    leaked = _persistent_ids(sc) - before
+    leaked = persistent_ids(sc) - before
     assert not leaked, leaked

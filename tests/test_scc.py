@@ -9,9 +9,9 @@ import random
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.components import (
-    _persistent_ids,
     strongly_connected_components,
 )
+from tvbigdataproject_spark.operators.materialize import persistent_ids
 
 
 def _tarjan(n_nodes, edges):
@@ -144,14 +144,14 @@ def test_nonconvergence_raises_and_leaks_nothing(spark):
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
     )
     for max_rounds, phase in ((1, "forward coloring"), (2, "backward sweep")):
-        before = _persistent_ids(sc)
+        before = persistent_ids(sc)
         with pytest.raises(RuntimeError, match=phase):
             # threshold 0: the r13 local-Tarjan endgame would solve
             # this sub-threshold graph without entering the phases
             strongly_connected_components(
                 e, max_rounds=max_rounds, local_edge_threshold=0
             )
-        leaked = _persistent_ids(sc) - before
+        leaked = persistent_ids(sc) - before
         assert not leaked, (phase, leaked)
 
 
@@ -174,7 +174,7 @@ def test_partitioning_invariance_and_no_leaked_blocks(spark):
     sc = spark.sparkContext
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 6)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    before = _persistent_ids(sc)
+    before = persistent_ids(sc)
     base = sorted(
         map(tuple, strongly_connected_components(e).collect())
     )
@@ -188,7 +188,7 @@ def test_partitioning_invariance_and_no_leaked_blocks(spark):
     # self-loop node 6 is a singleton SCC and must be present
     assert (6, 6) in dict(base).items()
     # only the two returned results' own checkpoint blocks may remain
-    leaked = _persistent_ids(sc) - before
+    leaked = persistent_ids(sc) - before
     assert len(leaked) <= 4, leaked
 
 

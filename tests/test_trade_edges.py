@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators import trade_edges as te
-from tvbigdataproject_spark.operators.components import _persistent_ids
+from tvbigdataproject_spark.operators.materialize import persistent_ids
 
 SF = "/root/testdata/sf0.001"
 
@@ -61,32 +61,23 @@ def test_materialize_once_same_object(spark):
 
 def test_release_frees_blocks_and_rebuilds(spark):
     sc = spark.sparkContext
-    before = _persistent_ids(sc)
+    before = persistent_ids(sc)
     a = te.trade_pairs(spark, SF)
-    created = _persistent_ids(sc) - before
+    created = persistent_ids(sc) - before
     assert created  # the build persisted checkpoint blocks
     n = a.count()
     te.release_trade_pairs(spark)
-    assert not (_persistent_ids(sc) & created)  # all released
+    assert not (persistent_ids(sc) & created)  # all released
     b = te.trade_pairs(spark, SF)  # a fresh build, not the dead frame
     assert b is not a and b.count() == n
 
 
 def test_dead_context_entries_dropped_not_unpersisted(spark):
-    sc = spark.sparkContext
     live = te.trade_pairs(spark, SF)
-    live_ids = {
-        ids
-        for (app, _d, _v), (_df, ids) in te._CACHE.items()
-        if app == sc.applicationId
-    }
-    # plant a fake entry from a "previous" context whose ids collide
-    # with the live blocks — the bug class ADVICE r11 named
-    collide = frozenset().union(*live_ids) if live_ids else frozenset()
-    te._CACHE[("app-from-a-previous-life", "/x", "distinct")] = (
-        live,
-        collide,
-    )
+    # plant a fake entry from a "previous" context whose frame reads
+    # the live blocks — releasing it would free them, the bug class
+    # ADVICE r11 named
+    te._CACHE[("app-from-a-previous-life", "/x", "distinct")] = live
     te.trade_pairs(spark, SF)  # any call sweeps stale entries
     assert ("app-from-a-previous-life", "/x", "distinct") not in te._CACHE
     # the LIVE context's blocks survived the sweep (no cross-context
@@ -96,7 +87,7 @@ def test_dead_context_entries_dropped_not_unpersisted(spark):
 
 def test_bi_edges_double_and_negate(spark):
     pairs = te.trade_pairs(spark, SF)
-    bi = te.trade_edges_bi(spark, SF)
+    bi = te.trade_edges_bi(spark, SF).df
     n = pairs.count()
     assert bi.count() == 2 * n
     # exact multiset check (sign tests don't work here: the synthetic

@@ -342,3 +342,26 @@ def test_reachable_masks_local_matches_distributed(spark):
     }
     assert local == dist
     assert local == {1: 3, 2: 1, 3: 1, 4: 1, 5: 2, 6: 2}
+
+
+def test_reachable_set_local_matches_distributed(spark):
+    # size-gated local forward BFS endgame vs the distributed frontier
+    # loop: identical visited sets on the two-sweep fixture, along the
+    # edges and along their reverses.
+    from tvbigdataproject_spark.operators.traversal import reachable_set
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 1), (3, 2), (6, 5)],
+        "src long, dst long",
+    )
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    srcs = spark.createDataFrame([(1,)], "node long")
+    for graph, want in ((edges, {1, 2, 3, 4}), (rev, {1, 5, 6})):
+        local = {r.node for r in reachable_set(graph, srcs).collect()}
+        dist = {
+            r.node
+            for r in reachable_set(
+                graph, srcs, local_edge_threshold=0
+            ).collect()
+        }
+        assert local == dist == want

@@ -34,16 +34,13 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
-)
+from tvbigdataproject_spark.operators.materialize import EdgeSet, Scope
 
 _BC_SCALE = 1 << 30
 
 
 def brandes_betweenness(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_hops: int,
     src: str = "src",
@@ -72,23 +69,15 @@ def brandes_betweenness(
     rounds; state is bounded by k * |reachable|, exactly the landmark
     method's contract.
     """
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _checkpoint_tracked(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
-        sc,
-    )
     start = sources.select(
         F.col("node").alias("landmark"),
         F.col("node"),
         F.lit(0).cast("int").alias("hop"),
         F.lit(1).cast("long").alias("sigma"),
     )
-    try:
-        settled, settled_ids = _forward(e, start, max_hops, checkpoint_interval, sc)
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    try:
+    with Scope() as s:
+        e = s.edges(edges, src, dst).df
+        settled = _forward(s, e, start, max_hops, checkpoint_interval)
         # One 1-row aggregate over the already-checkpointed settled
         # table serves two guards:
         # - the graph may be shallower than the hop budget (the forward
@@ -114,15 +103,12 @@ def brandes_betweenness(
             >= (1 << 63)
         )
         return _backward(
-            e, settled, min(max_hops, int(deepest or 0)), sc,
+            s, e, settled, min(max_hops, int(deepest or 0)),
             use_decimal=use_decimal,
         )
-    finally:
-        _unpersist_ids(sc, settled_ids)
-        _unpersist_ids(sc, e_ids)
 
 
-def _forward(e, start, max_hops, checkpoint_interval, sc):
+def _forward(s, e, start, max_hops, checkpoint_interval):
     """BFS levels + shortest-path counts: (landmark, node, hop, sigma).
 
     A node first reached at hop h has sigma = sum of the sigmas of its
@@ -130,54 +116,50 @@ def _forward(e, start, max_hops, checkpoint_interval, sc):
     path, so the anti-join against already-settled nodes before the
     partial-aggregated sigma sum is the whole algorithm.
     """
-    visited, visited_ids = _checkpoint_tracked(start, sc)
-    try:
-        hop = 0
-        while hop < max_hops:
-            span = min(max(1, checkpoint_interval), max_hops - hop)
-            plan = visited
-            for _ in range(span):
-                hop += 1
-                frontier = plan.where(F.col("hop") == hop - 1)
-                nxt = (
-                    frontier.join(e, frontier.node == e.src)
-                    .select(
-                        "landmark", F.col("dst").alias("node"), "sigma"
-                    )
-                    .join(
-                        plan.select("landmark", "node"),
-                        ["landmark", "node"],
-                        "left_anti",
-                    )
-                    .groupBy("landmark", "node")
-                    .agg(F.sum("sigma").alias("sigma"))
-                    .select(
-                        "landmark",
-                        "node",
-                        F.lit(hop).cast("int").alias("hop"),
-                        "sigma",
-                    )
+    visited = s.checkpoint(start)
+    hop = 0
+    while hop < max_hops:
+        span = min(max(1, checkpoint_interval), max_hops - hop)
+        plan = visited
+        for _ in range(span):
+            hop += 1
+            frontier = plan.where(F.col("hop") == hop - 1)
+            nxt = (
+                frontier.join(e, frontier.node == e.src)
+                .select(
+                    "landmark", F.col("dst").alias("node"), "sigma"
                 )
-                plan = plan.unionByName(nxt)
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
-            _unpersist_ids(sc, visited_ids)
-            visited, visited_ids = stepped, stepped_ids
-            # convergence check at the span boundary (the materialized
-            # frontier makes the count one cheap block scan — the same
-            # pattern as connected_components): a graph shallower than
-            # max_hops must not keep re-checkpointing the full visited
-            # table through empty join rounds.
-            if hop < max_hops and not visited.where(
-                F.col("hop") == hop
-            ).head(1):
-                break
-    except Exception:
-        _unpersist_ids(sc, visited_ids)
-        raise
-    return visited, visited_ids
+                .join(
+                    plan.select("landmark", "node"),
+                    ["landmark", "node"],
+                    "left_anti",
+                )
+                .groupBy("landmark", "node")
+                .agg(F.sum("sigma").alias("sigma"))
+                .select(
+                    "landmark",
+                    "node",
+                    F.lit(hop).cast("int").alias("hop"),
+                    "sigma",
+                )
+            )
+            plan = plan.unionByName(nxt)
+        stepped = s.checkpoint(plan)
+        s.release(visited)
+        visited = stepped
+        # convergence check at the span boundary (the materialized
+        # frontier makes the count one cheap block scan — the same
+        # pattern as connected_components): a graph shallower than
+        # max_hops must not keep re-checkpointing the full visited
+        # table through empty join rounds.
+        if hop < max_hops and not visited.where(
+            F.col("hop") == hop
+        ).head(1):
+            break
+    return visited
 
 
-def _backward(e, settled, max_hops, sc, use_decimal: bool = False):
+def _backward(s, e, settled, max_hops, use_decimal: bool = False):
     """Dependency accumulation by descending depth level:
     delta(v) = sum over successor edges v->w with hop(w) = hop(v)+1 of
     sigma_v * (SCALE + delta_w) div sigma_w (exact integers).
@@ -202,66 +184,59 @@ def _backward(e, settled, max_hops, sc, use_decimal: bool = False):
             F.lit(0).cast("long").alias("bc_scaled"),
             F.lit(0.0).alias("betweenness"),
         )
-    level_ids: list[set[int]] = []
     levels: list[DataFrame] = []
     delta_next = settled.where(F.col("hop") == max_hops).select(
         "landmark", "node", F.lit(0).cast("long").alias("delta_scaled")
     )
-    try:
-        for h in range(max_hops - 1, -1, -1):
-            w_full = (
-                settled.where(F.col("hop") == h + 1)
-                .join(delta_next, ["landmark", "node"], "left")
-                .select(
-                    "landmark",
-                    F.col("node").alias("w"),
-                    F.col("sigma").alias("sigma_w"),
-                    F.coalesce("delta_scaled", F.lit(0)).alias("delta_w"),
-                )
-            )
-            v = settled.where(F.col("hop") == h).select(
-                "landmark", "node", "sigma"
-            )
-            contrib = (
-                v.join(e, v.node == e.src)
-                .select("landmark", "node", "sigma", F.col("dst").alias("w"))
-                .join(w_full, ["landmark", "w"])
-                .select(
-                    "landmark",
-                    "node",
-                    F.expr(
-                        f"cast(sigma as decimal(38,0)) * ({_BC_SCALE}L + delta_w) div sigma_w"
-                        if use_decimal
-                        else f"sigma * ({_BC_SCALE}L + delta_w) div sigma_w"
-                    ).alias("c"),
-                )
-            )
-            delta_level = contrib.groupBy("landmark", "node").agg(
-                F.sum("c").alias("delta_scaled")
-            )
-            delta_level, ids = _checkpoint_tracked(delta_level, sc)
-            level_ids.append(ids)
-            levels.append(delta_level)
-            delta_next = delta_level
-        bc = (
-            reduce(DataFrame.unionByName, levels)
-            .where(F.col("node") != F.col("landmark"))
-            .groupBy("node")
-            .agg(F.sum("delta_scaled").alias("bc_scaled"))
+    for h in range(max_hops - 1, -1, -1):
+        w_full = (
+            settled.where(F.col("hop") == h + 1)
+            .join(delta_next, ["landmark", "node"], "left")
             .select(
-                "node",
-                "bc_scaled",
-                (
-                    F.col("bc_scaled").cast("double") / float(_BC_SCALE)
-                ).alias("betweenness"),
+                "landmark",
+                F.col("node").alias("w"),
+                F.col("sigma").alias("sigma_w"),
+                F.coalesce("delta_scaled", F.lit(0)).alias("delta_w"),
             )
         )
-        # materialize the result BEFORE the finally releases the level
-        # deltas it is computed from; the returned checkpoint's own
-        # blocks stay alive with the returned plan (the same contract
-        # as bfs_levels' returned visited set)
-        out, _ = _checkpoint_tracked(bc, sc)
-        return out
-    finally:
-        for ids in level_ids:
-            _unpersist_ids(sc, ids)
+        v = settled.where(F.col("hop") == h).select(
+            "landmark", "node", "sigma"
+        )
+        contrib = (
+            v.join(e, v.node == e.src)
+            .select("landmark", "node", "sigma", F.col("dst").alias("w"))
+            .join(w_full, ["landmark", "w"])
+            .select(
+                "landmark",
+                "node",
+                F.expr(
+                    f"cast(sigma as decimal(38,0)) * ({_BC_SCALE}L + delta_w) div sigma_w"
+                    if use_decimal
+                    else f"sigma * ({_BC_SCALE}L + delta_w) div sigma_w"
+                ).alias("c"),
+            )
+        )
+        delta_level = contrib.groupBy("landmark", "node").agg(
+            F.sum("c").alias("delta_scaled")
+        )
+        delta_level = s.checkpoint(delta_level)
+        levels.append(delta_level)
+        delta_next = delta_level
+    bc = (
+        reduce(DataFrame.unionByName, levels)
+        .where(F.col("node") != F.col("landmark"))
+        .groupBy("node")
+        .agg(F.sum("delta_scaled").alias("bc_scaled"))
+        .select(
+            "node",
+            "bc_scaled",
+            (
+                F.col("bc_scaled").cast("double") / float(_BC_SCALE)
+            ).alias("betweenness"),
+        )
+    )
+    # materialize the result BEFORE the scope releases the level
+    # deltas it is computed from; the returned checkpoint's own
+    # blocks stay alive with the returned plan (the same contract
+    # as bfs_levels' returned visited set)
+    return s.keep(s.checkpoint(bc))

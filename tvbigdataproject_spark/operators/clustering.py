@@ -41,10 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
-)
+from tvbigdataproject_spark.operators.materialize import Scope, release
 
 QUANT_SCALE = 1 << 20  # dyadic: float * 2^20 is exact in double
 
@@ -111,9 +108,8 @@ def kmeans_lloyd_centroids(
     checkpointed broadcastable form `_assign` consumes. Exposed so
     quality metrics (silhouette) can score against the same centroids
     kmeans_lloyd assigns with, without re-deriving the loop."""
-    sc = corpus.sparkSession.sparkContext
     quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    return _lloyd_loop(quant, k, iters, dim, id_col, sc)
+    return _lloyd_loop(quant, k, iters, dim, id_col)
 
 
 def kmeans_lloyd(
@@ -132,16 +128,15 @@ def kmeans_lloyd(
     A cell that loses all members keeps its previous centroid
     (coalesce on the cell spine), so k never silently shrinks.
     """
-    sc = corpus.sparkSession.sparkContext
     quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    packed = _lloyd_loop(quant, k, iters, dim, id_col, sc)
+    packed = _lloyd_loop(quant, k, iters, dim, id_col)
     # the returned (lazy) plan reads only the final checkpointed pack;
     # it stays persisted — one k-row blob, the operator's live output
     return _assign(quant, packed, id_col).select(id_col, "cell", "dist_q")
 
 
 def _lloyd_loop(
-    quant: DataFrame, k: int, iters: int, dim: int, id_col: str, sc
+    quant: DataFrame, k: int, iters: int, dim: int, id_col: str
 ) -> DataFrame:
 
     seed_order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
@@ -156,9 +151,8 @@ def _lloyd_loop(
             F.col("qv").alias("cv"),
         )
     )
-    packed, live_ids = _checkpoint_tracked(_pack_centroids(cents), sc)
-
-    try:
+    with Scope() as s:
+        packed = s.checkpoint(_pack_centroids(cents))
         for _ in range(iters):
             assigned = _assign(quant, packed, id_col)
             # (cell, pos)-keyed update instead of `dim` explicit sum
@@ -202,15 +196,11 @@ def _lloyd_loop(
                 "cell",
                 F.coalesce("new_cv", "prev_cv").alias("cv"),
             )
-            packed, new_ids = _checkpoint_tracked(_pack_centroids(stepped), sc)
+            new_packed = s.checkpoint(_pack_centroids(stepped))
             # the new pack is materialized; the previous round's is done
-            _unpersist_ids(sc, live_ids)
-            live_ids = new_ids
-    except Exception:
-        _unpersist_ids(sc, live_ids)
-        raise
-
-    return packed
+            s.release(packed)
+            packed = new_packed
+        return s.keep(packed)
 
 
 def dbscan_cosine(
@@ -275,7 +265,6 @@ def dbscan_cosine(
     is bitwise engine-portable (the embed_neardup_pairs convention).
     """
     from tvbigdataproject_spark.operators.components import (
-        _persistent_ids,
         connected_components,
     )
     from tvbigdataproject_spark.operators.similarity import (
@@ -283,7 +272,6 @@ def dbscan_cosine(
         cosine_pairs_multiprobe,
     )
 
-    sc = emb.sparkSession.sparkContext
     if cells_col is not None:
         raw_pairs = cosine_pairs_multiprobe(
             emb,
@@ -300,11 +288,8 @@ def dbscan_cosine(
             vec_col=vec_col,
             cell_col=cell_col,
         )
-    pairs, pair_ids = _checkpoint_tracked(
-        raw_pairs.select("vec_a", "vec_b"),
-        sc,
-    )
-    try:
+    with Scope() as s:
+        pairs = s.checkpoint(raw_pairs.select("vec_a", "vec_b"))
         nbrs = pairs.unionByName(
             pairs.select(
                 F.col("vec_b").alias("vec_a"), F.col("vec_a").alias("vec_b")
@@ -327,11 +312,9 @@ def dbscan_cosine(
             .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
         )
         loops = core.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        before_cc = _persistent_ids(sc)
         clusters = connected_components(core_edges.unionByName(loops)).select(
             F.col("node").alias("vec_id"), F.col("label").alias("core_cluster")
         )
-        cc_ids = _persistent_ids(sc) - before_cc
         border = (
             nbrs.join(
                 core.select(F.col("node").alias("vec_a")), "vec_a", "left_anti"
@@ -361,11 +344,9 @@ def dbscan_cosine(
         )
         # one small row per vector: materialize the verdict, then every
         # upstream block (quadratic pairs, CC labels) is dead
-        out_ck, out_ids = _checkpoint_tracked(out, sc)
-        _unpersist_ids(sc, cc_ids)
-        return out_ck
-    finally:
-        _unpersist_ids(sc, pair_ids)
+        out = s.keep(s.checkpoint(out))
+        release(clusters)
+        return out
 
 
 def pq_codebook_pack(

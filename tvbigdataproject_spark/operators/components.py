@@ -34,10 +34,10 @@ Design for 100 TB:
   lives outside the cacheManager, so it is otherwise freed only when
   Python GC happens to trigger the async ContextCleaner — on a
   long-lived session that leaves O(rounds) label tables cached
-  nondeterministically. The ids are tracked by diffing
-  ``getPersistentRDDs`` around each checkpoint and unpersisted
-  explicitly (tests/test_components.py asserts no growth over a
-  deep-chain multi-round run).
+  nondeterministically. Every operator runs inside a
+  ``materialize.Scope``, which releases each superseded checkpoint
+  explicitly and everything else on exit (tests/test_components.py
+  asserts no growth over a deep-chain multi-round run).
 """
 
 from __future__ import annotations
@@ -45,97 +45,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _persistent_ids(sc) -> set[int]:
-    """Ids of currently persisted RDDs (the checkpoint blocks live here)."""
-    jmap = sc._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _unpersist_ids(sc, ids: set[int]) -> None:
-    """Release the persisted RDDs with these ids (non-blocking)."""
-    if not ids:
-        return
-    jmap = sc._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
+from tvbigdataproject_spark.operators.materialize import (
+    EdgeSet,
+    Scope,
+    collect_edges,
+    local_frame,
+    local_solve_ok,
+)
 
 
-# localCheckpoint carries the ORIGINAL plan's ESTIMATED statistics onto
-# the checkpointed leaf (originStats), and the size-only stats visitor
-# multiplies join children's sizes — so an iterative operator whose
-# round contains a self-join SQUARES the estimate every round, a power
-# tower that first makes Catalyst's BigInt arithmetic the bottleneck
-# (minutes of driver CPU inside BigInteger.multiply) and then overflows
-# BigInteger's magnitude cap outright ("BigInteger would overflow
-# supported range" — boruvka_msf at sf1 was the first to hit it, at
-# ~2^(63 * 2^r) bits). Past this ceiling the estimate carries no
-# information anyway, so the checkpoint is rebuilt as a fresh LogicalRDD
-# over the SAME materialized rows (no recompute, same persisted blocks),
-# whose stats fall back to the leaf default. Below the ceiling the
-# inherited estimate is kept — it is what lets small checkpointed tables
-# keep auto-broadcasting.
-_STATS_BITLEN_CEILING = 96
-# one-time flag: the stats rebuild failing is advisory but must not be
-# silent (ADVICE r11) — warn on the first failure, then stay quiet
-_STATS_REBUILD_WARNED = False
-
-
-def _checkpoint_tracked(df: DataFrame, sc) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint(eager) + the ids of the RDDs it persisted, so the
-    caller can release them the moment they stop being needed."""
-    before = _persistent_ids(sc)
-    out = df.localCheckpoint(eager=True)
-    jdf = out._jdf
-    try:
-        # py4j hands scala.math.BigInt back as a plain Python int
-        size = int(
-            jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        blown = size.bit_length() > _STATS_BITLEN_CEILING
-    except Exception:  # stats access is advisory, never fail the loop
-        blown = False
-    if blown:
-        # internalCreateDataFrame is a private Spark API (pinned against
-        # pyspark 4.1); if a future Spark renames it, keep the (valid,
-        # just pessimistically-estimated) checkpoint rather than fail
-        # the iteration — losing the stats reset degrades planning,
-        # losing the checkpointed rows would break the run. The
-        # degradation must be OBSERVABLE though (ADVICE r11): a silent
-        # fallback would let the driver-CPU/BigInteger blowup the
-        # rebuild exists to prevent quietly return, so the first
-        # failure per process warns once with the real cause.
-        try:
-            spark = df.sparkSession
-            fresh = spark._jsparkSession.internalCreateDataFrame(
-                jdf.queryExecution().toRdd(), jdf.schema(), False
-            )
-            out = DataFrame(fresh, spark)
-        except Exception as exc:
-            global _STATS_REBUILD_WARNED
-            if not _STATS_REBUILD_WARNED:
-                _STATS_REBUILD_WARNED = True
-                import warnings
-
-                warnings.warn(
-                    "checkpoint stats rebuild failed; keeping the "
-                    "pessimistic size estimate (planning may degrade "
-                    f"on deep iterative plans): {exc!r}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-    return out, _persistent_ids(sc) - before
-
-
-_CC_LOCAL_EDGES_DEFAULT = 1_000_000
-
-
-def _cc_local(spark, sym: DataFrame) -> DataFrame:
+def _cc_local(e: DataFrame) -> DataFrame:
     """Exact connected components of a sub-threshold edge set, solved on
     the driver: union-find with path compression over the collected
-    (a, b) rows, then component label = min member id — identical to
-    the distributed min-propagation fixpoint. See _scc_local for the
+    (a, b) rows — one orientation is enough, union-find is direction
+    blind — then component label = min member id, identical to the
+    distributed min-propagation fixpoint. See _scc_local for the
     size-gate rationale (the caller bounds the collect)."""
     parent: dict = {}
 
@@ -147,8 +71,7 @@ def _cc_local(spark, sym: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in sym.collect():
-        a, b = row[0], row[1]
+    for a, b in collect_edges(e, "a", "b"):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -161,17 +84,11 @@ def _cc_local(spark, sym: DataFrame) -> DataFrame:
         r = find(n)
         if r not in label or n < label[r]:
             label[r] = n
-    a_field = sym.schema[0]
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("node", a_field.dataType, False),
-            StructField("label", a_field.dataType, False),
-        ]
-    )
-    return spark.createDataFrame(
-        [(n, label[find(n)]) for n in parent], schema=schema
+    t = e.schema["a"].dataType
+    return local_frame(
+        e.sparkSession,
+        [(n, label[find(n)]) for n in parent],
+        [("node", t), ("label", t)],
     )
 
 
@@ -201,46 +118,40 @@ def connected_components(
     monotone non-increasing, so "no change across the whole span" is
     equivalent to "no change in any round of it". Results are
     checkpoint-placement-independent; only job count changes.
+
+    Both paths are exact; which one runs is the ``local_solve_ok`` size
+    gate on the edge count. ``max_iter`` and ``checkpoint_interval``
+    bound only the distributed loop — below the gate the driver-local
+    union-find runs to the exact fixpoint and never raises; pass
+    ``local_edge_threshold=0`` to force the distributed loop and
+    restore the ``max_iter`` raise.
     """
-    sc = edges.sparkSession.sparkContext
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # materialize the (static) symmetric edge set once: every round's
-    # neighborhood join re-reads it, and the upstream plan is typically
-    # the expensive part — for dedup_components it is the shingle
-    # self-join pair generator, which must not be replayed per round
-    sym, sym_ids = _checkpoint_tracked(
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))), sc
-    )
-    try:
-        # r13 size-gated driver-local endgame (see _scc_local): once the
-        # (already materialized) pair set is below the threshold, the
-        # whole propagation loop — 2 jobs per span at best — collapses
-        # to one cached count + one bounded collect + serial union-find.
-        # Same labels; the count reads the fresh checkpoint, not the
-        # expensive upstream.
-        if local_edge_threshold is None:
-            local_edge_threshold = _local_threshold(
-                "SPARK_GRAFT_CC_LOCAL_EDGES", _CC_LOCAL_EDGES_DEFAULT
-            )
-        if local_edge_threshold > 0 and (
-            sym.count() <= 2 * local_edge_threshold
-        ):
-            return _cc_local(edges.sparkSession, sym)
-        return _cc_loop(sym, sc, max_iter, checkpoint_interval)
-    finally:
-        # the returned labels are materialized (checkpointed) — the edge
-        # blocks are dead on every exit path
-        _unpersist_ids(sc, sym_ids)
+    with Scope() as s:
+        # materialize the (static) edge set once, in ONE orientation:
+        # every round's neighborhood join re-reads it, and the upstream
+        # plan is typically the expensive part — for dedup_components it
+        # is the shingle self-join pair generator, which must not be
+        # replayed per round. The loop symmetrizes lazily over these
+        # blocks (two narrow cached scans), so the checkpoint, the gate
+        # count and the local collect all see half the rows.
+        e = s.checkpoint(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+        # r13 size-gated driver-local endgame (see _scc_local): below the
+        # threshold the whole propagation loop — 2 jobs per span at best
+        # — collapses to one cached count + one bounded collect + serial
+        # union-find. Same labels.
+        if local_solve_ok(e, local_edge_threshold):
+            return _cc_local(e)
+        sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        return _cc_loop(s, sym, max_iter, checkpoint_interval)
 
 
 def _cc_loop(
-    sym: DataFrame, sc, max_iter: int, checkpoint_interval: int
+    s: Scope, sym: DataFrame, max_iter: int, checkpoint_interval: int
 ) -> DataFrame:
-    labels, labels_ids = _checkpoint_tracked(
+    labels = s.checkpoint(
         sym.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node")),
-        sc,
+        .withColumn("label", F.col("node"))
     )
     rounds_done = 0
     while rounds_done < max_iter:
@@ -303,7 +214,7 @@ def _cc_loop(
                     "_prev",
                 )
             )
-        jumped, jumped_ids = _checkpoint_tracked(plan, sc)
+        jumped = s.checkpoint(plan)
         rounds_done += span
         changed = (
             jumped.where(F.col("label") != F.col("_prev")).limit(1).count()
@@ -312,12 +223,12 @@ def _cc_loop(
         # computed — release it now instead of waiting for Python GC to
         # reach the async ContextCleaner (O(spans) cached label tables
         # on a long-lived session otherwise)
-        _unpersist_ids(sc, labels_ids)
-        labels, labels_ids = jumped, jumped_ids
+        s.release(labels)
+        labels = jumped
         if changed == 0:
             # consumers see exactly (node, label); the carried _prev
             # column is an internal of the convergence probe
-            return labels.select("node", "label")
+            return s.keep(labels).select("node", "label")
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -354,12 +265,11 @@ def canonical_survivors(
 
 
 def label_propagation(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     rounds: int,
     src: str = "src",
     dst: str = "dst",
     checkpoint_interval: int = 2,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Bounded-round synchronous label-propagation community detection
     (Raghavan et al. 2007) over an undirected graph (feed a
@@ -394,26 +304,15 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    sc = edges.sparkSession.sparkContext
-    e_sel = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if input_materialized:
-        # caller declares the edge set distinct + materialized (see
-        # traversal._input_edges) — per-round scans read the existing
-        # blocks, no dedup exchange, no duplicate checkpoint (r13)
-        e, e_ids = e_sel, set()
-    else:
-        e, e_ids = _checkpoint_tracked(e_sel.distinct(), sc)
-    try:
-        labels, labels_ids = _checkpoint_tracked(
+    with Scope() as s:
+        # an EdgeSet (e.g. the session trade table) is read as given;
+        # anything else is deduped and checkpointed once
+        e = s.edges(edges, src, dst).df
+        labels = s.checkpoint(
             e.select(F.col("src").alias("node"))
             .distinct()
-            .select("node", F.col("node").alias("community")),
-            sc,
+            .select("node", F.col("node").alias("community"))
         )
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    try:
         done = 0
         while done < rounds:
             span = min(max(1, checkpoint_interval), rounds - done)
@@ -441,15 +340,10 @@ def label_propagation(
                         F.col("nb_label").alias("community"),
                     )
                 )
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
-            _unpersist_ids(sc, labels_ids)
-            labels, labels_ids = stepped, stepped_ids
-    except Exception:
-        _unpersist_ids(sc, labels_ids)
-        raise
-    finally:
-        _unpersist_ids(sc, e_ids)
-    return labels
+            stepped = s.checkpoint(plan)
+            s.release(labels)
+            labels = stepped
+        return s.keep(labels)
 
 
 def best_of_cluster_survivors(
@@ -492,24 +386,7 @@ def best_of_cluster_survivors(
     ).select(id_col, "component", quality_col, "keep")
 
 
-def _local_threshold(env_var: str, default: int) -> int:
-    """Edge-count gate for the driver-local solvers below, env-tunable
-    per deployment (0 disables). Mirrors the size-gated SHUFFLE_HASH
-    hint (operators/trade_edges.py): a constant that *bounds driver
-    memory*, not one tuned to the local bench — 1M edges of two longs
-    is ~16 MB collected, the same order as a routine broadcast build."""
-    import os
-
-    try:
-        return int(os.environ.get(env_var, str(default)))
-    except ValueError:
-        return default
-
-
-_SCC_LOCAL_EDGES_DEFAULT = 1_000_000
-
-
-def _scc_local(spark, rem_e: DataFrame, rem_n: DataFrame) -> DataFrame:
+def _scc_local(rem_e: DataFrame, rem_n: DataFrame) -> DataFrame:
     """Exact SCC of the (sub-threshold) remainder, solved on the driver:
     iterative Tarjan over the collected edge list, labels = min member
     id per SCC — identical output to the distributed FW-BW-Trim peel,
@@ -517,14 +394,10 @@ def _scc_local(spark, rem_e: DataFrame, rem_n: DataFrame) -> DataFrame:
     cluster barriers. The standard endgame of multistep SCC methods
     (Slota et al. 2014 switch to a serial algorithm once the remainder
     is small); the caller gates entry on the collected size."""
-    edge_rows = rem_e.select("s", "d").collect()
-    node_rows = rem_n.select("node").collect()
-    adj: dict = {}
-    for r in node_rows:
-        adj[r[0]] = []
-    for r in edge_rows:
-        adj.setdefault(r[0], []).append(r[1])
-        adj.setdefault(r[1], [])
+    adj: dict = {r[0]: [] for r in rem_n.select("node").collect()}
+    for s_, d_ in collect_edges(rem_e, "s", "d"):
+        adj.setdefault(s_, []).append(d_)
+        adj.setdefault(d_, [])
     # Tarjan, iterative (no recursion-depth limit)
     index: dict = {}
     low: dict = {}
@@ -574,27 +447,18 @@ def _scc_local(spark, rem_e: DataFrame, rem_n: DataFrame) -> DataFrame:
                 parent, _ = work[-1]
                 if low[v] < low[parent]:
                     low[parent] = low[v]
-    node_field = rem_n.schema["node"]
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("node", node_field.dataType, False),
-            StructField("scc", node_field.dataType, False),
-        ]
-    )
-    return spark.createDataFrame(
-        [(n, comp_of[n]) for n in adj], schema=schema
+    t = rem_n.schema["node"].dataType
+    return local_frame(
+        rem_n.sparkSession, [(n, comp_of[n]) for n in adj], [("node", t), ("scc", t)]
     )
 
 
 def strongly_connected_components(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     src: str = "src",
     dst: str = "dst",
     max_peels: int = 30,
     max_rounds: int = 50,
-    input_materialized: bool = False,
     local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """(node, scc) for every node of the DIRECTED graph; scc is the
@@ -632,52 +496,43 @@ def strongly_connected_components(
     is a scalar count — nothing per-row reaches the driver. Rounds are
     data-dependent (bounded by the condensation depth); ``max_peels``/
     ``max_rounds`` raise rather than return a wrong fixpoint.
+
+    Once a remainder passes the ``local_solve_ok`` size gate the peel
+    hands it to the exact driver-local Tarjan, which never raises:
+    ``max_peels``/``max_rounds`` bound only the distributed phases. Pass
+    ``local_edge_threshold=0`` to force them and restore the raise.
     """
-    sc = edges.sparkSession.sparkContext
-    spark = edges.sparkSession
-    if local_edge_threshold is None:
-        local_edge_threshold = _local_threshold(
-            "SPARK_GRAFT_SCC_LOCAL_EDGES", _SCC_LOCAL_EDGES_DEFAULT
+    with Scope() as s:
+        es = s.edges(edges, src, dst)
+        # self-edges never matter to an SCC: a narrow filter over the
+        # materialized rows (the node table below still sees them, so a
+        # self-loop-only node is its own singleton SCC)
+        rem_e = es.df.select(F.col("src").alias("s"), F.col("dst").alias("d")).where(
+            F.col("s") != F.col("d")
         )
-    e0 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).where(
-        F.col(src) != F.col(dst)
-    )
-    if input_materialized:
-        # caller declares the edge set distinct + materialized (see
-        # traversal._input_edges): the self-edge filter stays (narrow,
-        # over cached rows), the dedup exchange and duplicate
-        # checkpoint go
-        rem_e, rem_e_ids = e0, set()
-    else:
-        rem_e, rem_e_ids = _checkpoint_tracked(e0.distinct(), sc)
-    rem_n, rem_n_ids = _checkpoint_tracked(
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct(),
-        sc,
-    )
-    done: list[DataFrame] = []
-    done_ids: list[set[int]] = []
+        rem_n = s.checkpoint(
+            es.df.select(F.col("src").alias("node"))
+            .unionByName(es.df.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        # per-peel SCC rows; their blocks stay in the scope until the
+        # final union is materialized
+        done: list[DataFrame] = []
 
-    def _shrink(members: DataFrame) -> None:
-        """Drop assigned nodes from the remaining graph (both tables
-        re-checkpointed; previous blocks released)."""
-        nonlocal rem_e, rem_e_ids, rem_n, rem_n_ids
-        m = members.select("node")
-        new_n, new_n_ids = _checkpoint_tracked(
-            rem_n.join(m, "node", "left_anti"), sc
-        )
-        new_e, new_e_ids = _checkpoint_tracked(
-            rem_e.join(m.select(F.col("node").alias("s")), "s", "left_anti")
-            .join(m.select(F.col("node").alias("d")), "d", "left_anti"),
-            sc,
-        )
-        _unpersist_ids(sc, rem_n_ids)
-        _unpersist_ids(sc, rem_e_ids)
-        rem_n, rem_n_ids = new_n, new_n_ids
-        rem_e, rem_e_ids = new_e, new_e_ids
+        def _drop_edges(members: DataFrame) -> DataFrame:
+            """rem_e without the edges touching ``members``, re-checkpointed
+            (every later pass/round re-reads it); the superseded edge
+            blocks — and the input edge set's, if this scope made it —
+            are released."""
+            m = members.select("node")
+            new_e = s.checkpoint(
+                rem_e.join(m.select(F.col("node").alias("s")), "s", "left_anti")
+                .join(m.select(F.col("node").alias("d")), "d", "left_anti")
+            )
+            s.release(rem_e)
+            s.release(es.df)
+            return new_e
 
-    try:
         for _ in range(max_peels):
             if not rem_n.head(1):
                 break
@@ -689,11 +544,8 @@ def strongly_connected_components(
             # bounded collect + one exact serial Tarjan. Same labels by
             # construction; the gate bounds driver memory the way the
             # broadcast threshold does.
-            if local_edge_threshold > 0 and (
-                rem_e.count() <= local_edge_threshold
-            ):
-                done.append(_scc_local(spark, rem_e, rem_n))
-                done_ids.append(set())
+            if local_solve_ok(rem_e, local_edge_threshold):
+                done.append(_scc_local(rem_e, rem_n))
                 break
             # 1. TRIM to fixpoint: no in-edge or no out-edge ->
             # singleton SCC; each inner pass exposes the next layer,
@@ -705,54 +557,33 @@ def strongly_connected_components(
             # table, shrunk node table, plus the union+distinct's extra
             # exchange inside the trivial plan). The trivial rows and
             # the surviving node set are both lazy filters over the one
-            # checkpoint; its blocks transfer to the `done` bookkeeping
-            # (they back the emitted SCC rows until the final union).
+            # checkpoint; its blocks back the emitted SCC rows in
+            # `done` until the final union.
             while True:
                 has_in = rem_e.select(F.col("d").alias("node")).distinct()
                 has_out = rem_e.select(F.col("s").alias("node")).distinct()
-                flagged, f_ids = _checkpoint_tracked(
-                    rem_n.join(
-                        has_in.withColumn("_i", F.lit(1)), "node", "left"
-                    )
+                flagged = s.checkpoint(
+                    rem_n.join(has_in.withColumn("_i", F.lit(1)), "node", "left")
                     .join(has_out.withColumn("_o", F.lit(1)), "node", "left")
                     .select(
                         "node",
-                        (
-                            F.col("_i").isNull() | F.col("_o").isNull()
-                        ).alias("_t"),
-                    ),
-                    sc,
+                        (F.col("_i").isNull() | F.col("_o").isNull()).alias("_t"),
+                    )
                 )
                 if not flagged.where("_t").head(1):
-                    _unpersist_ids(sc, f_ids)
+                    s.release(flagged)
                     break
                 trivial = flagged.where("_t").select(
                     "node", F.col("node").alias("scc")
                 )
                 done.append(trivial)
-                done_ids.append(f_ids)
                 # shrink: survivors are a lazy filter over the flagged
                 # checkpoint (no separate node materialization); edges
-                # still re-checkpoint (every later pass/round re-reads
-                # them). The old rem_n blocks are owned either by the
-                # peel bookkeeping or by `done` — release only the
-                # former.
-                m = trivial.select("node")
-                new_e, new_e_ids = _checkpoint_tracked(
-                    rem_e.join(
-                        m.select(F.col("node").alias("s")), "s", "left_anti"
-                    ).join(
-                        m.select(F.col("node").alias("d")), "d", "left_anti"
-                    ),
-                    sc,
-                )
-                _unpersist_ids(sc, rem_e_ids)
-                _unpersist_ids(sc, rem_n_ids)
-                rem_e, rem_e_ids = new_e, new_e_ids
-                rem_n, rem_n_ids = (
-                    flagged.where(~F.col("_t")).select("node"),
-                    set(),  # blocks owned by done_ids now
-                )
+                # still re-checkpoint. Releasing a flagged view is a
+                # no-op — its blocks belong to `done` now.
+                rem_e = _drop_edges(trivial)
+                s.release(rem_n)
+                rem_n = flagged.where(~F.col("_t")).select("node")
             if not rem_n.head(1):
                 break
 
@@ -768,11 +599,8 @@ def strongly_connected_components(
             # scan filter on the fresh checkpoint, not a shuffle join
             # of old vs new. Bowtie's 12-round coloring was ~84 of its
             # 179 per-rep jobs before this.
-            colors, c_ids = _checkpoint_tracked(
-                rem_n.select("node", F.col("node").alias("color")), sc
-            )
+            colors = s.checkpoint(rem_n.select("node", F.col("node").alias("color")))
             rounds_left = max_rounds
-            converged = False
             while rounds_left > 0:
                 span = min(2, rounds_left)
                 rounds_left -= span
@@ -796,34 +624,26 @@ def strongly_connected_components(
                         ).alias("color"),
                         F.col("color").alias("_mid"),
                     )
-                new_c, new_c_ids = _checkpoint_tracked(plan, sc)
-                changed = new_c.where(
-                    F.col("color") != F.col("_mid")
-                ).head(1)
-                _unpersist_ids(sc, c_ids)
-                colors, c_ids = new_c, new_c_ids
+                new_c = s.checkpoint(plan)
+                changed = new_c.where(F.col("color") != F.col("_mid")).head(1)
+                s.release(colors)
+                colors = new_c
                 if not changed:
-                    converged = True
                     break
-            if not converged:
-                _unpersist_ids(sc, c_ids)
+            else:
                 raise RuntimeError(
                     f"scc: forward coloring did not converge in {max_rounds} rounds"
                 )
-            colors = colors.select("node", "color")
 
             # 3. BACKWARD SWEEP from the roots within same color
-            member, m_ids = _checkpoint_tracked(
+            member = m_ck = s.checkpoint(
                 colors.where(F.col("node") == F.col("color")).select(
                     "node", F.col("color").alias("scc")
-                ),
-                sc,
+                )
             )
             for _r in range(max_rounds):
                 grown = (
-                    rem_e.join(
-                        member.select(F.col("node").alias("d"), "scc"), "d"
-                    )
+                    rem_e.join(member.select(F.col("node").alias("d"), "scc"), "d")
                     .select(F.col("s").alias("node"), "scc")
                     .join(
                         colors.select("node", F.col("color").alias("scc")),
@@ -841,27 +661,27 @@ def strongly_connected_components(
                 # re-materializes member once — cheaper than the old
                 # per-round extra checkpoint whenever the sweep grows
                 # at least twice, and equal otherwise.
-                combined, new_m_ids = _checkpoint_tracked(
+                combined = s.checkpoint(
                     member.select("node", "scc")
                     .withColumn("_new", F.lit(False))
-                    .unionByName(grown.withColumn("_new", F.lit(True))),
-                    sc,
+                    .unionByName(grown.withColumn("_new", F.lit(True)))
                 )
                 grew = combined.where("_new").head(1)
-                _unpersist_ids(sc, m_ids)
-                member, m_ids = combined.select("node", "scc"), new_m_ids
+                s.release(m_ck)
+                m_ck, member = combined, combined.select("node", "scc")
                 if not grew:
                     break
             else:
-                _unpersist_ids(sc, c_ids)
-                _unpersist_ids(sc, m_ids)
                 raise RuntimeError(
                     f"scc: backward sweep did not converge in {max_rounds} rounds"
                 )
-            _unpersist_ids(sc, c_ids)
+            s.release(colors)
             done.append(member)
-            done_ids.append(m_ids)
-            _shrink(member)
+            # drop the peeled SCCs from the remaining graph
+            new_n = s.checkpoint(rem_n.join(member.select("node"), "node", "left_anti"))
+            rem_e = _drop_edges(member)
+            s.release(rem_n)
+            rem_n = new_n
         else:
             raise RuntimeError(f"scc: not settled after {max_peels} peels")
 
@@ -871,10 +691,4 @@ def strongly_connected_components(
             0
         ).select("node", F.col("node").alias("scc"))
         # one row per node: materialize, then every peel table is dead
-        out_ck, _ = _checkpoint_tracked(out, sc)
-        return out_ck
-    finally:
-        _unpersist_ids(sc, rem_e_ids)
-        _unpersist_ids(sc, rem_n_ids)
-        for ids in done_ids:
-            _unpersist_ids(sc, ids)
+        return s.keep(s.checkpoint(out))

@@ -21,10 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
-)
+from tvbigdataproject_spark.operators.materialize import Scope
 
 
 def boruvka_msf(
@@ -50,7 +47,6 @@ def boruvka_msf(
     ``max_rounds`` raises rather than return a partial forest (25
     rounds covers 2^25 components).
     """
-    sc = edges.sparkSession.sparkContext
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -61,21 +57,6 @@ def boruvka_msf(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    # every live checkpoint block id is mirrored in ``held`` so a
-    # mid-round exception releases round-transient checkpoints
-    # (sel/parent tables) too, not just the loop-carried ones —
-    # the error-path cache hygiene scc and reachable_masks already have
-    held: set[int] = set()
-
-    def _ck(df: DataFrame) -> tuple[DataFrame, set[int]]:
-        out, ids = _checkpoint_tracked(df, sc)
-        held.update(ids)
-        return out, ids
-
-    def _rel(ids: set[int]) -> None:
-        _unpersist_ids(sc, ids)
-        held.difference_update(ids)
-
     # CONTRACTED edge representation (r12, the c100 16-GB fix): each
     # row is the minimum ORIGINAL edge (w, u, v) between a live
     # component pair (cu, cv). Round 1 starts with cu=u, cv=v; each
@@ -92,14 +73,13 @@ def boruvka_msf(
     # original edge per component pair preserves every component's
     # minimum outgoing edge, so the selected forest is unchanged (and
     # still THE unique MSF under the total order).
-    ec, ec_ids = _ck(
-        canon.select(
-            F.col("u").alias("cu"), F.col("v").alias("cv"), "w", "u", "v"
+    with Scope() as s:
+        ec = s.checkpoint(
+            canon.select(
+                F.col("u").alias("cu"), F.col("v").alias("cv"), "w", "u", "v"
+            )
         )
-    )
-    forest: DataFrame | None = None
-    f_ids: set[int] = set()
-    try:
+        forest: DataFrame | None = None
         for _ in range(max_rounds):
             # both orientations in one pass (no self-union => the
             # contracted table is referenced once and stays lazy)
@@ -125,7 +105,7 @@ def boruvka_msf(
             # min over a struct is lexicographic, so the selection is
             # the unique total-order minimum per component
             sel = cand.groupBy("comp").agg(F.min("e").alias("e"))
-            sel, s_ids = _ck(
+            sel = s.checkpoint(
                 sel.select(
                     "comp",
                     F.col("e.w").alias("w"),
@@ -135,16 +115,16 @@ def boruvka_msf(
                 ),
             )
             if not sel.head(1):
-                _rel(s_ids)
+                s.release(sel)
                 break
             picked = sel.select("u", "v", "w").distinct()
-            new_forest, nf_ids = _ck(
+            new_forest = s.checkpoint(
                 picked
                 if forest is None
                 else forest.unionByName(picked),
             )
-            _rel(f_ids)
-            forest, f_ids = new_forest, nf_ids
+            s.release(forest)
+            forest = new_forest
             # contraction: hook each selecting component to its chosen
             # neighbor; a mutual pair (2-cycle) roots at the smaller id
             par = sel.select("comp", "parent")
@@ -171,8 +151,8 @@ def boruvka_msf(
                 .otherwise(F.col("parent"))
                 .alias("parent"),
             )
-            par_ck, p_ids = _ck(hooked)
-            _rel(s_ids)
+            par_ck = s.checkpoint(hooked)
+            s.release(sel)
             # pointer jumping to the roots (chains halve per step)
             for _j in range(max_rounds):
                 pj = par_ck.alias("x").join(
@@ -186,7 +166,7 @@ def boruvka_msf(
                     "comp",
                     F.coalesce("gp", "parent").alias("parent"),
                 )
-                new_p, np_ids = _ck(pj)
+                new_p = s.checkpoint(pj)
                 changed = (
                     new_p.alias("n")
                     .join(
@@ -198,8 +178,8 @@ def boruvka_msf(
                     .where(F.col("parent") != F.col("old"))
                     .head(1)
                 )
-                _rel(p_ids)
-                par_ck, p_ids = new_p, np_ids
+                s.release(par_ck)
+                par_ck = new_p
                 if not changed:
                     break
             else:
@@ -255,25 +235,13 @@ def boruvka_msf(
                     F.col("e.v").alias("v"),
                 )
             )
-            new_ec, nec_ids = _ck(contracted)
-            _rel(ec_ids)
-            _rel(p_ids)
-            ec, ec_ids = new_ec, nec_ids
+            new_ec = s.checkpoint(contracted)
+            s.release(ec)
+            s.release(par_ck)
+            ec = new_ec
         else:
             raise RuntimeError(
                 f"boruvka_msf: not settled after {max_rounds} rounds"
             )
-        if forest is None:
-            out = ec.limit(0).select("u", "v", "w")
-            out_ck, _ = _checkpoint_tracked(out, sc)
-            return out_ck
-        out_ck, _ = _checkpoint_tracked(
-            forest.select("u", "v", "w"), sc
-        )
-        return out_ck
-    finally:
-        # release EVERY still-held checkpoint block — loop-carried
-        # (ec/forest) and any round-transient table a mid-round
-        # exception left behind (the returned out_ck is checkpointed
-        # outside ``held`` so it survives)
-        _unpersist_ids(sc, held)
+        out = ec.limit(0) if forest is None else forest
+        return s.keep(s.checkpoint(out.select("u", "v", "w")))

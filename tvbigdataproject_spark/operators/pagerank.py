@@ -30,8 +30,8 @@ double, diverging in the last bits.
 
 Scale notes (100 TB): lineage is truncated per round with eager
 localCheckpoint and the superseded round's blocks are released
-deterministically (components' _checkpoint_tracked/_unpersist_ids —
-VERDICT r2 item 5 discipline); on a real cluster prefer reliable
+deterministically (operators/materialize.py's Scope — VERDICT r2
+item 5 discipline); on a real cluster prefer reliable
 checkpoint() with a checkpoint dir. Skewed in-degree (celebrity nodes)
 is handled by the opt-in `salt_buckets` two-phase contribution sum —
 bitwise-identical to the unsalted path and off by default at bench
@@ -43,16 +43,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
-)
+from tvbigdataproject_spark.operators.materialize import EdgeSet, Scope
 
 _SCALE = 10**12
 
 
 def pagerank(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     n_iter: int = 3,
     damping: float = 0.85,
     base_num: float = 0.15,
@@ -62,7 +59,6 @@ def pagerank(
     checkpoint_interval: int = 3,
     salt_buckets: int | None = None,
     sources: DataFrame | None = None,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Ranks for every node appearing as a source in `edges` (feed a
     bidirectional edge list for undirected semantics — then the src set
@@ -108,99 +104,87 @@ def pagerank(
     default: the extra shuffle stage only pays for itself under real
     skew.
     """
-    sc = edges.sparkSession.sparkContext
     # The input plan may be arbitrarily expensive (a join chain, a
     # near-dup pair generator) — materialize it ONCE. Without this every
     # reference to the derived static tables (nodes in each round's left
     # join, shares, the node count) replays the upstream plan: at sf0.1
     # that recompute, not per-round job overhead, dominated the query.
-    # ``input_materialized``: the caller declares the edges already
-    # backed by materialized rows (session trade tables) — e is then a
-    # narrow cast projection over the existing blocks and only the
-    # derived outw/shares tables materialize (r13, traversal's
-    # _input_edges contract).
-    e_sel = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("double").alias("w"),
-    )
-    if input_materialized:
-        e, e_ids = e_sel, set()
-    else:
-        e, e_ids = _checkpoint_tracked(e_sel, sc)
-    try:
+    # An EdgeSet (the session trade tables) is already backed by
+    # materialized rows — e is then a narrow cast projection over the
+    # existing blocks and only the derived outw/shares tables
+    # materialize (r13).
+    with Scope() as s:
+        if isinstance(edges, EdgeSet):
+            e = edges.df.select("src", "dst", F.col(weight).cast("double").alias("w"))
+        else:
+            e = s.checkpoint(
+                edges.select(
+                    F.col(src).alias("src"),
+                    F.col(dst).alias("dst"),
+                    F.col(weight).cast("double").alias("w"),
+                )
+            )
         # out-weights double as the node set (the node set IS the src
         # set — see docstring), so one grouped materialization serves
         # both every round's left join and the normalization join; no
         # separate distinct pass
-        outw, outw_ids = _checkpoint_tracked(
-            e.groupBy("src").agg(F.sum("w").alias("ow")), sc
-        )
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    nodes = outw.select(F.col("src").alias("node"))
-    try:
+        outw = s.checkpoint(e.groupBy("src").agg(F.sum("w").alias("ow")))
+        nodes = outw.select(F.col("src").alias("node"))
         # normalized once up front: contribution of u→v is
         # rank(u) * share(u,v); checkpointed because every iteration
         # re-reads it
-        shares, shares_ids = _checkpoint_tracked(
+        shares = s.checkpoint(
             e.join(outw, "src").select(
                 "src", "dst", (F.col("w") / F.col("ow")).alias("share")
-            ),
-            sc,
-        )
-    except Exception:
-        _unpersist_ids(sc, e_ids | outw_ids)
-        raise
-    # every iteration consumer reads shares/nodes — the raw edge blocks
-    # are dead the moment shares is materialized
-    _unpersist_ids(sc, e_ids)
-
-    if sources is None:
-        n = nodes.count()
-        nodes = nodes.select("node", F.lit(base_num / n).alias("base"))
-        init = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    else:
-        # personalized: teleport mass concentrates on the source set.
-        # |S| is bounded by contract, so the membership mark is a
-        # broadcast left join; base_num/|S| and 1/|S| are plain double
-        # divisions (the oracle must force DOUBLE division too —
-        # DuckDB's 0.15/3 would be DECIMAL arithmetic)
-        # restrict to sources that exist in the graph FIRST: an
-        # out-of-graph source has no rank row, so counting it in |S|
-        # would silently drop its share of the teleport mass. One
-        # id-only semi join against the node table (sources is bounded;
-        # the shuffled side carries a single id column), and the
-        # reduced set is what both |S| and the membership mark see.
-        in_graph = sources.select(F.col("node").alias("s_node")).join(
-            nodes, F.col("s_node") == nodes.node, "left_semi"
-        )
-        s_cnt = in_graph.count()
-        if s_cnt == 0:
-            raise ValueError(
-                "personalized pagerank: no source node exists in the graph"
             )
-        marked = nodes.join(
-            F.broadcast(in_graph),
-            nodes.node == F.col("s_node"),
-            "left",
         )
-        in_s = F.col("s_node").isNotNull()
-        nodes = marked.select(
-            "node",
-            F.when(in_s, F.lit(base_num / float(s_cnt)))
-            .otherwise(F.lit(0.0))
-            .alias("base"),
-        )
-        init = marked.select(
-            "node",
-            F.when(in_s, F.lit(1.0 / float(s_cnt)))
-            .otherwise(F.lit(0.0))
-            .alias("rank"),
-        )
-    ranks, ranks_ids = _checkpoint_tracked(init, sc)
-    try:
+        # every iteration consumer reads shares/nodes — the raw edge
+        # blocks are dead the moment shares is materialized
+        s.release(e)
+
+        if sources is None:
+            n = nodes.count()
+            nodes = nodes.select("node", F.lit(base_num / n).alias("base"))
+            init = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+        else:
+            # personalized: teleport mass concentrates on the source set.
+            # |S| is bounded by contract, so the membership mark is a
+            # broadcast left join; base_num/|S| and 1/|S| are plain double
+            # divisions (the oracle must force DOUBLE division too —
+            # DuckDB's 0.15/3 would be DECIMAL arithmetic)
+            # restrict to sources that exist in the graph FIRST: an
+            # out-of-graph source has no rank row, so counting it in |S|
+            # would silently drop its share of the teleport mass. One
+            # id-only semi join against the node table (sources is bounded;
+            # the shuffled side carries a single id column), and the
+            # reduced set is what both |S| and the membership mark see.
+            in_graph = sources.select(F.col("node").alias("s_node")).join(
+                nodes, F.col("s_node") == nodes.node, "left_semi"
+            )
+            s_cnt = in_graph.count()
+            if s_cnt == 0:
+                raise ValueError(
+                    "personalized pagerank: no source node exists in the graph"
+                )
+            marked = nodes.join(
+                F.broadcast(in_graph),
+                nodes.node == F.col("s_node"),
+                "left",
+            )
+            in_s = F.col("s_node").isNotNull()
+            nodes = marked.select(
+                "node",
+                F.when(in_s, F.lit(base_num / float(s_cnt)))
+                .otherwise(F.lit(0.0))
+                .alias("base"),
+            )
+            init = marked.select(
+                "node",
+                F.when(in_s, F.lit(1.0 / float(s_cnt)))
+                .otherwise(F.lit(0.0))
+                .alias("rank"),
+            )
+        ranks = s.checkpoint(init)
         rounds_done = 0
         while rounds_done < n_iter:
             span = min(max(1, checkpoint_interval), n_iter - rounds_done)
@@ -232,12 +216,10 @@ def pagerank(
                         + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
                     ).alias("rank"),
                 )
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
+            stepped = s.checkpoint(plan)
             rounds_done += span
             # the superseded span is dead the moment the new one is
             # materialized — release it now, don't wait for GC
-            _unpersist_ids(sc, ranks_ids)
-            ranks, ranks_ids = stepped, stepped_ids
-    finally:
-        _unpersist_ids(sc, shares_ids | outw_ids)
-    return ranks
+            s.release(ranks)
+            ranks = stepped
+        return s.keep(ranks)

@@ -191,22 +191,13 @@ def fit_ivf_centers(
     # chain per internal job. Projection to the features column only;
     # same rows, same partitioning/order, so the seeded fit returns
     # bit-identical centroids.
-    from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
-        _unpersist_ids,
-    )
+    from tvbigdataproject_spark.operators.materialize import Scope
 
-    sc = corpus.sparkSession.sparkContext
-    feats_ck, feats_ids = _checkpoint_tracked(
-        feats.select("__features"), sc
-    )
-    try:
+    with Scope() as s:
         model = KMeans(
             k=n_cells, seed=seed, maxIter=max_iter,
             featuresCol="__features", predictionCol="__cell",
-        ).fit(feats_ck)
-    finally:
-        _unpersist_ids(sc, feats_ids)
+        ).fit(s.checkpoint(feats.select("__features")))
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
     if cache_key is not None:
         _CENTER_CACHE[key] = centers

@@ -21,16 +21,18 @@ sf_dir) and hands out cheap projections of the checkpointed rows:
   side under the same bytes-per-task criterion AQE applies, because an
   ungated hint OOM'd the 16g JVM at c100 (SCALE.md r11 ladder); past
   the gate the sort-merge join (spills, never OOMs) takes over.
-- the materialization is an eager ``localCheckpoint`` with tracked
-  block ids (operators/components.py discipline). Consumers get lazy
-  projections/unions over the checkpointed RDD, so an iterative
-  operator's per-round scan reads materialized rows — no join
-  recompute, and no per-query re-materialization either.
-- the cache is keyed by ``sc.applicationId`` (ADVICE r11: raw RDD ids
-  are small sequential ints scoped to a SparkContext, so a stash that
+- the materialization is an eager tracked checkpoint
+  (operators/materialize.py). Consumers get lazy projections/unions
+  over the checkpointed RDD, so an iterative operator's per-round scan
+  reads materialized rows — no join recompute, and no per-query
+  re-materialization either. The edge views are ``EdgeSet``s: the
+  pairs are distinct by construction, so operators read them as given
+  instead of deduplicating and re-checkpointing them.
+- the cache is keyed by ``sc.applicationId`` (ADVICE r11: RDD ids are
+  small sequential ints scoped to a SparkContext, so a stash that
   survives a context restart could release unrelated RDDs in the new
   context — entries from a different application id are dropped, never
-  unpersisted against the live context) and guarded by a lock; a lost
+  released against the live context) and guarded by a lock; a lost
   build race releases the loser's blocks and reuses the winner.
 
 At 100 TB the same shape holds: the pair table is orders-of-magnitude
@@ -49,15 +51,16 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
+from tvbigdataproject_spark.operators.materialize import (
+    EdgeSet,
+    checkpoint,
+    release,
 )
 from tvbigdataproject_spark.sources import read_table
 
 _LOCK = threading.RLock()
-# (applicationId, abspath(sf_dir), variant) -> (checkpointed df, ids)
-_CACHE: dict[tuple[str, str, str], tuple[DataFrame, frozenset[int]]] = {}
+# (applicationId, abspath(sf_dir), variant) -> checkpointed df
+_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _joined_pairs(spark, sf_dir: str):
@@ -89,21 +92,21 @@ def _cached(spark, sf_dir: str, variant: str, build) -> DataFrame:
     key = (app, os.path.abspath(sf_dir), variant)
     with _LOCK:
         for stale in [k for k in _CACHE if k[0] != app]:
-            # dead-context entries: drop WITHOUT unpersist — the ids
-            # are meaningless (and dangerous) in the live context
+            # dead-context entries: drop WITHOUT release — their RDD
+            # ids are meaningless (and dangerous) in the live context
             del _CACHE[stale]
         hit = _CACHE.get(key)
         if hit is not None:
-            return hit[0]
+            return hit
     # build outside the lock (it runs a job); a concurrent duplicate
     # build is benign — the loser's blocks are released below
-    ck, ids = _checkpoint_tracked(build(spark, sf_dir), sc)
+    ck = checkpoint(build(spark, sf_dir))
     with _LOCK:
         again = _CACHE.get(key)
         if again is not None:
-            _unpersist_ids(sc, ids)
-            return again[0]
-        _CACHE[key] = (ck, frozenset(ids))
+            release(ck)
+            return again
+        _CACHE[key] = ck
         return ck
 
 
@@ -133,21 +136,48 @@ def trade_pair_counts(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def trade_edges(spark, sf_dir: str) -> DataFrame:
+def trade_edges(spark, sf_dir: str) -> EdgeSet:
     """Directed (src=o_custkey, dst=-l_suppkey) edges — a lazy
-    projection over the shared checkpointed pair table."""
+    projection over the shared checkpointed pair table, distinct
+    because the pairs are."""
     p = trade_pairs(spark, sf_dir)
-    return p.select(
-        F.col("o_custkey").alias("src"),
-        (-F.col("l_suppkey")).alias("dst"),
+    return EdgeSet(
+        p.select(
+            F.col("o_custkey").alias("src"),
+            (-F.col("l_suppkey")).alias("dst"),
+        )
     )
 
 
-def trade_edges_bi(spark, sf_dir: str) -> DataFrame:
-    """Bidirected trade edges (both orientations of every pair)."""
-    e = trade_edges(spark, sf_dir)
-    return e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def trade_edges_bi(spark, sf_dir: str) -> EdgeSet:
+    """Bidirected trade edges (both orientations of every pair).
+    Customer and supplier ids live in sign-disjoint spaces, so the two
+    orientations never collide — except the pair (0, 0), which appears
+    once per orientation when customer 0 trades with supplier 0 (the
+    id-space overlap noted in tests/test_trade_edges.py; every oracle
+    replays the same UNION ALL, and sf0.01 has no such pair)."""
+    e = trade_edges(spark, sf_dir).df
+    return EdgeSet(
+        e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    )
+
+
+def trade_edges_weighted_bi(spark, sf_dir: str) -> EdgeSet:
+    """Bidirected trade edges weighted by line-item multiplicity:
+    (src, dst, w = n) for both orientations of every pair of
+    ``trade_pair_counts`` — the pagerank / sssp input. Unique on
+    (src, dst) under the same caveat as ``trade_edges_bi``."""
+    e = trade_pair_counts(spark, sf_dir).select(
+        F.col("o_custkey").alias("src"),
+        (-F.col("l_suppkey")).alias("dst"),
+        F.col("n").alias("w"),
+    )
+    return EdgeSet(
+        e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
     )
 
 
@@ -158,7 +188,6 @@ def release_trade_pairs(spark) -> None:
     app = sc.applicationId
     with _LOCK:
         for k in [k for k in _CACHE if k[0] == app]:
-            _df, ids = _CACHE.pop(k)
-            _unpersist_ids(sc, set(ids))
+            release(_CACHE.pop(k))
         for k in [k for k in _CACHE if k[0] != app]:
             del _CACHE[k]

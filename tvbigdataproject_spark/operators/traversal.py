@@ -32,42 +32,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
+from tvbigdataproject_spark.operators.materialize import (
+    EdgeSet,
+    Scope,
+    collect_edges,
+    local_frame,
+    local_solve_ok,
 )
 
 
-def _input_edges(
-    edges: DataFrame, src: str, dst: str, sc, input_materialized: bool
-) -> tuple[DataFrame, set[int]]:
-    """The static edge set every round re-reads. By default it is
-    defensively deduped and eagerly checkpointed (the upstream plan may
-    be an expensive join chain that must not replay per round).
-
-    ``input_materialized=True`` is the caller's declaration that the
-    edges are ALREADY distinct and backed by materialized rows (e.g. a
-    projection over the session's checkpointed trade-pair table,
-    operators/trade_edges.py) — the per-round scan then reads the
-    existing blocks directly and the operator skips one exchange + one
-    checkpoint job + a duplicate copy of the edge blocks (r12 verdict
-    item 7: every trade-graph query paid a second checkpoint of rows
-    the session had already checkpointed)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if input_materialized:
-        return e, set()
-    return _checkpoint_tracked(e.distinct(), sc)
-
-
 def bfs_levels(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     source: int,
     max_hops: int,
     src: str = "src",
     dst: str = "dst",
     checkpoint_interval: int = 2,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Minimum hop count from `source` to every node reachable within
     `max_hops` directed hops. Returns (node, hop) with hop in
@@ -85,20 +67,15 @@ def bfs_levels(
     over one graph, pre-bucket `edges` by `src` so every round's join
     is co-located.
     """
-    sc = edges.sparkSession.sparkContext
-    # materialize the (static) edge set once — every hop's frontier join
-    # re-reads it, and the upstream plan may be an expensive join chain
-    e, e_ids = _input_edges(edges, src, dst, sc, input_materialized)
-    spark = edges.sparkSession
-    start = spark.createDataFrame(
-        [(int(source), 0)], schema="node long, hop int"
-    )
-    try:
-        visited, visited_ids = _checkpoint_tracked(start, sc)
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    try:
+    with Scope() as s:
+        # materialize the (static) edge set once — every hop's frontier
+        # join re-reads it, and the upstream plan may be an expensive
+        # join chain (an EdgeSet already is materialized and distinct)
+        e = s.edges(edges, src, dst).df
+        start = e.sparkSession.createDataFrame(
+            [(int(source), 0)], schema="node long, hop int"
+        )
+        visited = s.checkpoint(start)
         hop = 0
         while hop < max_hops:
             span = min(max(1, checkpoint_interval), max_hops - hop)
@@ -114,27 +91,21 @@ def bfs_levels(
                     .select("node", F.lit(hop).cast("int").alias("hop"))
                 )
                 plan = plan.unionByName(nxt)
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
-            _unpersist_ids(sc, visited_ids)
-            visited, visited_ids = stepped, stepped_ids
-    except Exception:
-        _unpersist_ids(sc, visited_ids)
-        raise
-    finally:
+            stepped = s.checkpoint(plan)
+            s.release(visited)
+            visited = stepped
         # the returned visited set is materialized — the edge blocks are
         # dead regardless of how we leave the loop
-        _unpersist_ids(sc, e_ids)
-    return visited
+        return s.keep(visited)
 
 
 def bfs_levels_multi(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_hops: int,
     src: str = "src",
     dst: str = "dst",
     checkpoint_interval: int = 2,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop count from EVERY node in `sources`
     (a one-column DataFrame of node ids, column `node`) to every node
@@ -149,19 +120,15 @@ def bfs_levels_multi(
     bounded by k * |reachable| — choose k (the landmark count) small
     and fixed, which is how landmark methods are used.
     """
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _input_edges(edges, src, dst, sc, input_materialized)
-    start = sources.select(
-        F.col("node").alias("landmark"),
-        F.col("node"),
-        F.lit(0).cast("int").alias("hop"),
-    )
-    try:
-        visited, visited_ids = _checkpoint_tracked(start, sc)
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    try:
+    with Scope() as s:
+        e = s.edges(edges, src, dst).df
+        visited = s.checkpoint(
+            sources.select(
+                F.col("node").alias("landmark"),
+                F.col("node"),
+                F.lit(0).cast("int").alias("hop"),
+            )
+        )
         hop = 0
         while hop < max_hops:
             span = min(max(1, checkpoint_interval), max_hops - hop)
@@ -179,25 +146,19 @@ def bfs_levels_multi(
                     )
                 )
                 plan = plan.unionByName(nxt)
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
-            _unpersist_ids(sc, visited_ids)
-            visited, visited_ids = stepped, stepped_ids
-    except Exception:
-        _unpersist_ids(sc, visited_ids)
-        raise
-    finally:
-        _unpersist_ids(sc, e_ids)
-    return visited
+            stepped = s.checkpoint(plan)
+            s.release(visited)
+            visited = stepped
+        return s.keep(visited)
 
 
 def kcore_peel(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     k: int,
     rounds: int,
     src: str = "src",
     dst: str = "dst",
     checkpoint_interval: int = 2,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Bounded-round k-core peel: `rounds` iterations of "drop every
     node with degree < k, recompute degrees". Returns (node, deg) for
@@ -217,9 +178,8 @@ def kcore_peel(
     without plan blowup) with the checkpoint-release discipline of
     operators/components.py.
     """
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _input_edges(edges, src, dst, sc, input_materialized)
-    try:
+    with Scope() as s:
+        e = s.edges(edges, src, dst).df
         rounds_done = 0
         while rounds_done < rounds:
             span = min(max(1, checkpoint_interval), rounds - rounds_done)
@@ -235,13 +195,11 @@ def kcore_peel(
                     plan.join(keep, plan.src == keep.node, "left_semi")
                     .join(keep, F.col("dst") == keep.node, "left_semi")
                 )
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
+            stepped = s.checkpoint(plan)
             rounds_done += span
-            _unpersist_ids(sc, e_ids)
-            e, e_ids = stepped, stepped_ids
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
+            s.release(e)
+            e = stepped
+        s.keep(e)
     return e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -347,14 +305,13 @@ def triangle_corner_counts(
 
 
 def sssp_bounded(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     source: int,
     rounds: int,
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
     checkpoint_interval: int = 2,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Single-source shortest path bounded to ``rounds`` relaxation
     rounds (Bellman-Ford): (node, dist) where dist is the minimum total
@@ -372,28 +329,26 @@ def sssp_bounded(
     minimum weight so the per-round join fan-out is the simple-edge
     count.
     """
-    sc = edges.sparkSession.sparkContext
-    e_sel = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("long").alias("w"),
-    )
-    if input_materialized:
-        # caller declares (src, dst) already unique (parallel edges
-        # pre-collapsed) and the rows materialized — see _input_edges
-        e, e_ids = e_sel, set()
-    else:
-        e, e_ids = _checkpoint_tracked(
-            e_sel.groupBy("src", "dst").agg(F.min("w").alias("w")), sc
+    with Scope() as s:
+        if isinstance(edges, EdgeSet):
+            # (src, dst) already unique — parallel edges pre-collapsed —
+            # and the rows materialized: read the weight as given
+            e = edges.df.select("src", "dst", F.col(weight).cast("long").alias("w"))
+        else:
+            e = s.checkpoint(
+                edges.select(
+                    F.col(src).alias("src"),
+                    F.col(dst).alias("dst"),
+                    F.col(weight).cast("long").alias("w"),
+                )
+                .groupBy("src", "dst")
+                .agg(F.min("w").alias("w"))
+            )
+        dist = s.checkpoint(
+            e.sparkSession.createDataFrame(
+                [(int(source), 0)], schema="node long, dist long"
+            )
         )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(int(source), 0)], schema="node long, dist long")
-    try:
-        dist, dist_ids = _checkpoint_tracked(dist, sc)
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    try:
         done = 0
         while done < rounds:
             span = min(max(1, checkpoint_interval), rounds - done)
@@ -409,24 +364,18 @@ def sssp_bounded(
                     .groupBy("node")
                     .agg(F.min("dist").alias("dist"))
                 )
-            stepped, stepped_ids = _checkpoint_tracked(plan, sc)
-            _unpersist_ids(sc, dist_ids)
-            dist, dist_ids = stepped, stepped_ids
-    except Exception:
-        _unpersist_ids(sc, dist_ids)
-        raise
-    finally:
-        _unpersist_ids(sc, e_ids)
-    return dist
+            stepped = s.checkpoint(plan)
+            s.release(dist)
+            dist = stepped
+        return s.keep(dist)
 
 
 def luby_mis(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     rounds: int,
     src: str = "src",
     dst: str = "dst",
     checkpoint_interval: int = 1,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """Bounded-round Luby maximal-independent-set over an undirected
     graph (feed a bidirectional edge list). Returns (node, round) for
@@ -450,31 +399,24 @@ def luby_mis(
     """
     from tvbigdataproject_spark.functions.hashing import hex16_hash
 
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _input_edges(edges, src, dst, sc, input_materialized)
     # priority key: 16-bit hash in the high bits, the (shifted) node id
     # in the low bits -> unique, positive, portable to SQL arithmetic
     pkey = (
         hex16_hash(F.col("node").cast("string")) * F.lit(4294967296).cast("long")
         + (F.col("node") + F.lit(2147483648).cast("long"))
     )
-    try:
-        active, active_ids = _checkpoint_tracked(
+    with Scope() as s:
+        e = s.edges(edges, src, dst).df
+        active = active_ck = s.checkpoint(
             e.select(F.col("src").alias("node"))
             .distinct()
-            .select("node", pkey.alias("pkey")),
-            sc,
+            .select("node", pkey.alias("pkey"))
         )
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    # empty (node, round) frame with node's real type — so rounds=0
-    # returns a DataFrame (not None) and unions stay type-stable
-    selected = active.select(
-        "node", F.lit(0).cast("int").alias("round")
-    ).where(F.lit(False))
-    selected_ids: set = set()
-    try:
+        # empty (node, round) frame with node's real type — so rounds=0
+        # returns a DataFrame (not None) and unions stay type-stable
+        selected = selected_ck = active.select(
+            "node", F.lit(0).cast("int").alias("round")
+        ).where(F.lit(False))
         for r in range(1, rounds + 1):
             nb = active.select(
                 F.col("node").alias("nb_node"), F.col("pkey").alias("nb_pkey")
@@ -500,31 +442,29 @@ def luby_mis(
             )
             out = selected.unionByName(sel)
             if r % checkpoint_interval == 0 or r == rounds:
-                stepped, stepped_ids = _checkpoint_tracked(out, sc)
-                nxt_cp, nxt_ids = _checkpoint_tracked(nxt, sc)
-                _unpersist_ids(sc, active_ids | selected_ids)
-                active, active_ids = nxt_cp, nxt_ids
-                selected, selected_ids = stepped, stepped_ids
-                # the freshly tracked blocks become the new ancestors
-                # the next un-checkpointed spans build on
+                stepped = s.checkpoint(out)
+                nxt_cp = s.checkpoint(nxt)
+                s.release(active_ck)
+                s.release(selected_ck)
+                # the fresh checkpoints become the new ancestors the
+                # next un-checkpointed spans build on
+                active = active_ck = nxt_cp
+                selected = selected_ck = stepped
             else:
                 # in-span round: keep the plan lazy; the last
-                # materialized ancestors (active_ids/selected_ids) must
+                # materialized ancestors (active_ck/selected_ck) must
                 # survive until the next truncation point
                 active, selected = nxt, out
-    finally:
         # the returned selected set stays materialized; everything else
         # is dead
-        _unpersist_ids(sc, e_ids | active_ids)
-    return selected
+        return s.keep(selected)
 
 
 def dag_longest_path_levels(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 50,
-    input_materialized: bool = False,
 ) -> DataFrame:
     """(node, level) for a DAG: level = length of the LONGEST path from
     any source to the node (sources are level 0) — the topological
@@ -542,20 +482,16 @@ def dag_longest_path_levels(
     Each round is one corpus-partitioned equi-join + groupBy-max with
     eager tracked checkpointing (the connected_components discipline).
     """
-    sc = edges.sparkSession.sparkContext
-    e_sel = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if input_materialized:
-        e, e_ids = e_sel, set()
-    else:
-        e, e_ids = _checkpoint_tracked(e_sel.distinct(), sc)
-    lvl, lvl_ids = _checkpoint_tracked(
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-        .select("node", F.lit(0).cast("int").alias("level")),
-        sc,
-    )
-    try:
+    with Scope() as s:
+        e = s.edges(edges, src, dst).df.select(
+            F.col("src").alias("s"), F.col("dst").alias("d")
+        )
+        lvl = s.checkpoint(
+            e.select(F.col("s").alias("node"))
+            .unionByName(e.select(F.col("d").alias("node")))
+            .distinct()
+            .select("node", F.lit(0).cast("int").alias("level"))
+        )
         for _ in range(max_rounds):
             incoming = (
                 e.join(
@@ -573,7 +509,7 @@ def dag_longest_path_levels(
                     F.col("level"), F.coalesce("lin", F.col("level"))
                 ).alias("level"),
             )
-            new_lvl, new_ids = _checkpoint_tracked(stepped, sc)
+            new_lvl = s.checkpoint(stepped)
             changed = (
                 new_lvl.join(
                     lvl.select("node", F.col("level").alias("old")), "node"
@@ -581,40 +517,29 @@ def dag_longest_path_levels(
                 .where(F.col("level") != F.col("old"))
                 .head(1)
             )
-            _unpersist_ids(sc, lvl_ids)
-            lvl, lvl_ids = new_lvl, new_ids
+            s.release(lvl)
+            lvl = new_lvl
             if not changed:
-                return lvl
+                return s.keep(lvl)
         raise RuntimeError(
             f"dag_longest_path_levels: no fixpoint in {max_rounds} rounds "
             "(deep DAG or a cycle — levels on a cycle grow without bound)"
         )
-    except Exception:
-        _unpersist_ids(sc, lvl_ids)
-        raise
-    finally:
-        _unpersist_ids(sc, e_ids)
 
 
-def _collect_graph(e: DataFrame, sources: DataFrame):
-    """Driver-side (edges, source-nodes) of a sub-threshold graph; the
-    caller gates entry on the edge count (see components._scc_local)."""
-    edge_rows = [(r[0], r[1]) for r in e.collect()]
-    src_rows = [r[0] for r in sources.select("node").distinct().collect()]
-    return edge_rows, src_rows
-
-
-def _bfs_masks_local(edge_rows, src_rows) -> dict:
+def _bfs_masks_local(edge_rows, src_rows, bits: int = 3) -> dict:
     """(node -> mask) fixpoint of the fused bidirectional sweep, serial:
     bit 1 propagates along the edges, bit 2 along their reverses,
-    sources start (and stay) at 3 — exactly reachable_masks' invariant
-    (per-bit-per-node visitation, OR-accumulated)."""
+    sources start (and stay) at ``bits`` — exactly reachable_masks'
+    invariant (per-bit-per-node visitation, OR-accumulated). ``bits=1``
+    is the forward-only sweep reachable_set needs."""
     fwd: dict = {}
     rev: dict = {}
     for s, d in edge_rows:
         fwd.setdefault(s, []).append(d)
-        rev.setdefault(d, []).append(s)
-    mask: dict = {n: 3 for n in src_rows}
+        if bits & 2:
+            rev.setdefault(d, []).append(s)
+    mask: dict = {n: bits for n in src_rows}
     frontier = list(mask)
     while frontier:
         nxt: dict = {}
@@ -634,13 +559,17 @@ def _bfs_masks_local(edge_rows, src_rows) -> dict:
     return mask
 
 
+def _source_ids(sources: DataFrame) -> list:
+    """The distinct source node ids, on the driver (local endgames)."""
+    return [r[0] for r in sources.select("node").distinct().collect()]
+
+
 def reachable_set(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_rounds: int = 50,
     src: str = "src",
     dst: str = "dst",
-    input_materialized: bool = False,
     local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """All nodes reachable from ANY node of ``sources`` (a one-column
@@ -656,94 +585,51 @@ def reachable_set(
     stops at the empty-frontier fixpoint (round count = eccentricity
     of the source set, not max_rounds). ``max_rounds`` raises rather
     than return a silently truncated set.
+
+    Below the ``local_solve_ok`` edge gate a serial driver-side BFS
+    returns the same set and never raises: ``max_rounds`` bounds only
+    the distributed loop. Pass ``local_edge_threshold=0`` to force that
+    loop and restore the raise.
     """
-    sc = edges.sparkSession.sparkContext
-    e, e_ids = _input_edges(edges, src, dst, sc, input_materialized)
-    # r13 size-gated driver-local endgame (components._scc_local
-    # rationale): a sub-threshold graph's whole frontier loop —
-    # O(eccentricity) full-barrier rounds of 3 jobs each — collapses
-    # to one count + one bounded collect + a serial BFS. Same visited
-    # set by construction.
-    from tvbigdataproject_spark.operators.components import (
-        _local_threshold,
-        _SCC_LOCAL_EDGES_DEFAULT,
-    )
-
-    if local_edge_threshold is None:
-        local_edge_threshold = _local_threshold(
-            "SPARK_GRAFT_REACH_LOCAL_EDGES", _SCC_LOCAL_EDGES_DEFAULT
-        )
-    if local_edge_threshold > 0 and e.count() <= local_edge_threshold:
-        try:
-            edge_rows, src_rows = _collect_graph(e, sources)
-        finally:
-            _unpersist_ids(sc, e_ids)
-        reached = set(src_rows)
-        adj: dict = {}
-        for s_, d_ in edge_rows:
-            adj.setdefault(s_, []).append(d_)
-        frontier = list(reached)
-        while frontier:
-            nxt = []
-            for v in frontier:
-                for w in adj.get(v, ()):
-                    if w not in reached:
-                        reached.add(w)
-                        nxt.append(w)
-            frontier = nxt
-        from pyspark.sql.types import StructField, StructType
-
-        node_field = sources.select("node").schema[0]
-        return edges.sparkSession.createDataFrame(
-            [(n,) for n in reached],
-            StructType([StructField("node", node_field.dataType, False)]),
-        )
-    try:
-        visited, visited_ids = _checkpoint_tracked(
-            sources.select("node").distinct(), sc
-        )
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    frontier, frontier_ids = visited, set()
-    try:
+    with Scope() as s:
+        e = s.edges(edges, src, dst).df
+        # r13 size-gated driver-local endgame (components._scc_local
+        # rationale): a sub-threshold graph's whole frontier loop —
+        # O(eccentricity) full-barrier rounds of 3 jobs each — collapses
+        # to one count + one bounded collect + a serial BFS. Same
+        # visited set by construction.
+        if local_solve_ok(e, local_edge_threshold):
+            mask = _bfs_masks_local(collect_edges(e), _source_ids(sources), bits=1)
+            return local_frame(
+                e.sparkSession,
+                [(n,) for n in mask],
+                [("node", sources.schema["node"].dataType)],
+            )
+        visited = frontier = s.checkpoint(sources.select("node").distinct())
         for _ in range(max_rounds):
-            nxt = (
+            nxt = s.checkpoint(
                 frontier.join(e, frontier.node == e.src)
                 .select(F.col("dst").alias("node"))
                 .distinct()
                 .join(visited, "node", "left_anti")
             )
-            nxt, nxt_ids = _checkpoint_tracked(nxt, sc)
             if nxt.limit(1).count() == 0:
-                _unpersist_ids(sc, nxt_ids)
-                _unpersist_ids(sc, frontier_ids)
-                return visited
-            new_vis, new_vis_ids = _checkpoint_tracked(
-                visited.unionByName(nxt), sc
-            )
-            _unpersist_ids(sc, visited_ids)
-            _unpersist_ids(sc, frontier_ids)
-            visited, visited_ids = new_vis, new_vis_ids
-            frontier, frontier_ids = nxt, nxt_ids
-        _unpersist_ids(sc, frontier_ids)
+                return s.keep(visited)
+            new_vis = s.checkpoint(visited.unionByName(nxt))
+            s.release(visited)
+            s.release(frontier)
+            visited, frontier = new_vis, nxt
         raise RuntimeError(
             f"reachable_set: frontier not empty after {max_rounds} rounds"
         )
-    except Exception:
-        _unpersist_ids(sc, visited_ids)
-        raise
-    finally:
-        _unpersist_ids(sc, e_ids)
 
 
 def reachable_masks(
-    edges: DataFrame,
+    edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_rounds: int = 50,
     src: str = "src",
     dst: str = "dst",
-    input_materialized: bool = False,
     local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """(node, mask) for every node reachable from ``sources`` in either
@@ -767,70 +653,42 @@ def reachable_masks(
     matches the two-sweep version while the round count halves. Eager
     checkpoint + tracked release per round; ``max_rounds`` raises
     rather than return a truncated set.
+
+    Below the ``local_solve_ok`` edge gate a serial two-bit BFS on the
+    driver returns the same (node, mask) rows and never raises:
+    ``max_rounds`` bounds only the distributed loop. Pass
+    ``local_edge_threshold=0`` to force that loop and restore the
+    raise.
     """
-    sc = edges.sparkSession.sparkContext
-    # base edge set, one orientation: materialized by the caller's
-    # declaration, or defensively deduped + checkpointed here (half the
-    # blocks of the pre-r13 shape, which checkpointed the DOUBLED
-    # direction-tagged table; the tagged union below is distinct by
-    # construction over a distinct base — the b column separates the
-    # branches — and re-deriving it per round is two narrow cached
-    # scans).
-    base, base_ids = _input_edges(edges, src, dst, sc, input_materialized)
-    # r13 size-gated driver-local endgame (components._scc_local
-    # rationale): below the edge threshold the fused two-wave frontier
-    # loop — max(ecc_fwd, ecc_rev) rounds x (checkpoint + probe +
-    # checkpoint) jobs — collapses to one count + one bounded collect
-    # + a serial two-bit BFS. Identical (node, mask) fixpoint.
-    from tvbigdataproject_spark.operators.components import (
-        _local_threshold,
-        _SCC_LOCAL_EDGES_DEFAULT,
-    )
-
-    if local_edge_threshold is None:
-        local_edge_threshold = _local_threshold(
-            "SPARK_GRAFT_REACH_LOCAL_EDGES", _SCC_LOCAL_EDGES_DEFAULT
-        )
-    if local_edge_threshold > 0 and base.count() <= local_edge_threshold:
-        try:
-            edge_rows, src_rows = _collect_graph(base, sources)
-        finally:
-            _unpersist_ids(sc, base_ids)
-        mask = _bfs_masks_local(edge_rows, src_rows)
-        from pyspark.sql.types import (
-            IntegerType,
-            StructField,
-            StructType,
-        )
-
-        node_field = sources.select("node").schema[0]
-        return edges.sparkSession.createDataFrame(
-            sorted(mask.items()),
-            StructType(
-                [
-                    StructField("node", node_field.dataType, False),
-                    StructField("mask", IntegerType(), False),
-                ]
-            ),
-        )
-    e2, e_ids = (
-        base.withColumn("b", F.lit(1)).unionByName(
+    with Scope() as s:
+        # base edge set, one orientation: an EdgeSet as given, else
+        # deduped + checkpointed here (half the blocks of the pre-r13
+        # shape, which checkpointed the DOUBLED direction-tagged table;
+        # the tagged union below is distinct by construction over a
+        # distinct base — the b column separates the branches — and
+        # re-deriving it per round is two narrow cached scans).
+        base = s.edges(edges, src, dst).df
+        # r13 size-gated driver-local endgame (components._scc_local
+        # rationale): below the edge threshold the fused two-wave
+        # frontier loop — max(ecc_fwd, ecc_rev) rounds x (checkpoint +
+        # probe + checkpoint) jobs — collapses to one count + one
+        # bounded collect + a serial two-bit BFS. Identical (node, mask)
+        # fixpoint.
+        if local_solve_ok(base, local_edge_threshold):
+            mask = _bfs_masks_local(collect_edges(base), _source_ids(sources))
+            return local_frame(
+                base.sparkSession,
+                sorted(mask.items()),
+                [("node", sources.schema["node"].dataType), ("mask", IntegerType())],
+            )
+        e2 = base.withColumn("b", F.lit(1)).unionByName(
             base.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
             ).withColumn("b", F.lit(2))
-        ),
-        base_ids,
-    )
-    try:
-        visited, visited_ids = _checkpoint_tracked(
-            sources.select("node").distinct().withColumn("mask", F.lit(3)),
-            sc,
         )
-    except Exception:
-        _unpersist_ids(sc, e_ids)
-        raise
-    frontier, frontier_ids = visited, set()
-    try:
+        visited = frontier = s.checkpoint(
+            sources.select("node").distinct().withColumn("mask", F.lit(3))
+        )
         for _ in range(max_rounds):
             prop = (
                 frontier.join(e2, frontier.node == e2.src)
@@ -838,7 +696,7 @@ def reachable_masks(
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.bit_or("b").alias("mbits"))
             )
-            nxt = (
+            nxt = s.checkpoint(
                 prop.join(
                     visited.select("node", F.col("mask").alias("vmask")),
                     "node",
@@ -847,34 +705,21 @@ def reachable_masks(
                 .select(
                     "node",
                     F.col("mbits")
-                    .bitwiseAND(
-                        F.bitwise_not(F.coalesce("vmask", F.lit(0)))
-                    )
+                    .bitwiseAND(F.bitwise_not(F.coalesce("vmask", F.lit(0))))
                     .alias("mask"),
                 )
                 .where(F.col("mask") != 0)
             )
-            nxt, nxt_ids = _checkpoint_tracked(nxt, sc)
             if nxt.limit(1).count() == 0:
-                _unpersist_ids(sc, nxt_ids)
-                _unpersist_ids(sc, frontier_ids)
-                return visited
-            new_vis, new_vis_ids = _checkpoint_tracked(
+                return s.keep(visited)
+            new_vis = s.checkpoint(
                 visited.unionByName(nxt)
                 .groupBy("node")
-                .agg(F.bit_or("mask").alias("mask")),
-                sc,
+                .agg(F.bit_or("mask").alias("mask"))
             )
-            _unpersist_ids(sc, visited_ids)
-            _unpersist_ids(sc, frontier_ids)
-            visited, visited_ids = new_vis, new_vis_ids
-            frontier, frontier_ids = nxt, nxt_ids
-        _unpersist_ids(sc, frontier_ids)
+            s.release(visited)
+            s.release(frontier)
+            visited, frontier = new_vis, nxt
         raise RuntimeError(
             f"reachable_masks: frontier not empty after {max_rounds} rounds"
         )
-    except Exception:
-        _unpersist_ids(sc, visited_ids)
-        raise
-    finally:
-        _unpersist_ids(sc, e_ids)

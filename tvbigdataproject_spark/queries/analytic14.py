@@ -385,11 +385,9 @@ def ipf_raking_weights(spark, sf_dir):
     # every round's margin aggregate reads cached rows instead of
     # replaying the customer join+aggregate (r12: 21 jobs -> the grid
     # build + bounded-row algebra)
-    from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
-    )
+    from tvbigdataproject_spark.operators.materialize import checkpoint
 
-    cells, _ = _checkpoint_tracked(cells, spark.sparkContext)
+    cells = checkpoint(cells)
     cur = cells.select(
         "segment", "region", "n", F.lit(_IPF_S).cast("long").alias("w")
     )

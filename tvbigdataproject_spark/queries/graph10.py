@@ -89,25 +89,18 @@ def community_conductance(spark, sf_dir):
     nothing all-pairs), one community-keyed aggregate, a one-row total
     broadcast, and a TakeOrdered top-{k}.
     """
-    from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
-        _persistent_ids,
-        _unpersist_ids,
-        label_propagation,
-    )
+    from tvbigdataproject_spark.operators.components import label_propagation
+    from tvbigdataproject_spark.operators.materialize import checkpoint, release
     from tvbigdataproject_spark.operators.trade_edges import trade_edges_bi
 
-    sc = spark.sparkContext
     # shared session-scoped edge table (operators/trade_edges.py, r12)
     bi = trade_edges_bi(spark, sf_dir)
-    before_lpa = _persistent_ids(sc)
-    lab = label_propagation(bi, rounds=_LPA_ROUNDS, input_materialized=True)
-    lpa_ids = _persistent_ids(sc) - before_lpa
+    lab = label_propagation(bi, rounds=_LPA_ROUNDS)
 
     ls = lab.select(F.col("node").alias("src"), F.col("community").alias("cs"))
     ld = lab.select(F.col("node").alias("dst"), F.col("community").alias("cd"))
     vol = (
-        bi.join(ls, "src")
+        bi.df.join(ls, "src")
         .join(ld, "dst")
         .groupBy(F.col("cs").alias("community"))
         .agg(
@@ -132,8 +125,8 @@ def community_conductance(spark, sf_dir):
     )
     # pin the bounded result, then release every checkpoint this query
     # created (the community_modularity cleanup discipline)
-    pinned, _ = _checkpoint_tracked(out, sc)
-    _unpersist_ids(sc, lpa_ids)
+    pinned = checkpoint(out)
+    release(lab)
     return pinned
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.pagerank import pagerank
-from tvbigdataproject_spark.operators.trade_edges import trade_pair_counts
+from tvbigdataproject_spark.operators.trade_edges import trade_edges_weighted_bi
 from tvbigdataproject_spark.queries.registry import query
 
 _N_ITER = 3
@@ -81,20 +81,8 @@ def pagerank_trade_graph(spark, sf_dir):
     """
     # weighted edges from the shared session-scoped pair-count table
     # (operators/trade_edges.py, r12)
-    e0 = trade_pair_counts(spark, sf_dir).select(
-        F.col("o_custkey").alias("src"),
-        (-F.col("l_suppkey")).alias("dst"),
-        F.col("n").cast("double").alias("w"),
-    )
-    bi = e0.unionByName(
-        e0.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w")
-        )
-    )
-    return pagerank(
-        bi, n_iter=_N_ITER, damping=0.85, base_num=0.15,
-        input_materialized=True,
-    )
+    bi = trade_edges_weighted_bi(spark, sf_dir)
+    return pagerank(bi, n_iter=_N_ITER, damping=0.85, base_num=0.15)
 
 
 _PPR_K = 3  # landmark count (the 3 lowest-id customers)
@@ -178,19 +166,12 @@ def ppr_from_landmarks(spark, sf_dir):
     """
     # weighted edges from the shared session-scoped pair-count table
     # (operators/trade_edges.py, r12)
-    e0 = trade_pair_counts(spark, sf_dir).select(
-        F.col("o_custkey").alias("src"),
-        (-F.col("l_suppkey")).alias("dst"),
-        F.col("n").cast("double").alias("w"),
-    )
-    bi = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w"))
-    )
+    bi = trade_edges_weighted_bi(spark, sf_dir)
     seeds = (
-        bi.select(F.col("src").alias("node"))
+        bi.df.select(F.col("src").alias("node"))
         .distinct()
         .where(F.col("node") > 0)
         .orderBy("node")
         .limit(_PPR_K)
     )
-    return pagerank(bi, n_iter=_N_ITER, sources=seeds, input_materialized=True)
+    return pagerank(bi, n_iter=_N_ITER, sources=seeds)

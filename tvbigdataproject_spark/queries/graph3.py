@@ -68,9 +68,7 @@ def bfs_hops_trade(spark, sf_dir):
     release (operators/traversal.py).
     """
     bi = trade_edges_bi(spark, sf_dir)
-    return bfs_levels(
-        bi, source=_BFS_SOURCE, max_hops=_BFS_HOPS, input_materialized=True
-    )
+    return bfs_levels(bi, source=_BFS_SOURCE, max_hops=_BFS_HOPS)
 
 
 _KCORE_K = 30
@@ -126,9 +124,7 @@ def kcore_trade_graph(spark, sf_dir):
     rounds for reproducibility, same design as pagerank_trade_graph).
     """
     bi = trade_edges_bi(spark, sf_dir)
-    return kcore_peel(
-        bi, k=_KCORE_K, rounds=_KCORE_ROUNDS, input_materialized=True
-    )
+    return kcore_peel(bi, k=_KCORE_K, rounds=_KCORE_ROUNDS)
 
 
 @query(

@@ -13,7 +13,7 @@ from tvbigdataproject_spark.operators.traversal import (
 )
 from tvbigdataproject_spark.operators.trade_edges import (
     trade_edges_bi,
-    trade_pair_counts,
+    trade_edges_weighted_bi,
 )
 from tvbigdataproject_spark.queries.registry import query
 
@@ -76,17 +76,8 @@ def sssp_trade_graph(spark, sf_dir):
     """
     # weighted edges from the shared session-scoped pair-count table
     # (operators/trade_edges.py, r12)
-    e0 = trade_pair_counts(spark, sf_dir).select(
-        F.col("o_custkey").alias("src"),
-        (-F.col("l_suppkey")).alias("dst"),
-        F.col("n").alias("w"),
-    )
-    bi = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w"))
-    )
-    return sssp_bounded(
-        bi, source=_SSSP_SOURCE, rounds=_SSSP_ROUNDS, input_materialized=True
-    )
+    bi = trade_edges_weighted_bi(spark, sf_dir)
+    return sssp_bounded(bi, source=_SSSP_SOURCE, rounds=_SSSP_ROUNDS)
 
 
 _LANDMARK_K = 3
@@ -137,15 +128,13 @@ def landmark_distances(spark, sf_dir):
     """
     bi = trade_edges_bi(spark, sf_dir)
     landmarks = (
-        bi.where(F.col("src") > 0)
+        bi.df.where(F.col("src") > 0)
         .select(F.col("src").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(_LANDMARK_K)
     )
-    return bfs_levels_multi(
-        bi, landmarks, max_hops=_LANDMARK_HOPS, input_materialized=True
-    )
+    return bfs_levels_multi(bi, landmarks, max_hops=_LANDMARK_HOPS)
 
 
 @query(
@@ -197,15 +186,13 @@ def harmonic_closeness_landmarks(spark, sf_dir):
     """
     bi = trade_edges_bi(spark, sf_dir)
     landmarks = (
-        bi.where(F.col("src") > 0)
+        bi.df.where(F.col("src") > 0)
         .select(F.col("src").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(_LANDMARK_K)
     )
-    dist = bfs_levels_multi(
-        bi, landmarks, max_hops=_LANDMARK_HOPS, input_materialized=True
-    )
+    dist = bfs_levels_multi(bi, landmarks, max_hops=_LANDMARK_HOPS)
     return (
         dist.where(F.col("hop") > 0)
         .groupBy("node")
@@ -287,7 +274,7 @@ def mis_trade_graph(spark, sf_dir):
     with the iterative tier's checkpoint-release discipline.
     """
     bi = trade_edges_bi(spark, sf_dir)
-    return luby_mis(bi, rounds=_MIS_ROUNDS, input_materialized=True)
+    return luby_mis(bi, rounds=_MIS_ROUNDS)
 
 
 _LPA_ROUNDS = 2
@@ -416,7 +403,7 @@ def lpa_communities(spark, sf_dir):
     from tvbigdataproject_spark.operators.components import label_propagation
 
     bi = trade_edges_bi(spark, sf_dir)
-    return label_propagation(bi, rounds=_LPA_ROUNDS, input_materialized=True)
+    return label_propagation(bi, rounds=_LPA_ROUNDS)
 
 
 @query(
@@ -444,17 +431,12 @@ def community_modularity(spark, sf_dir):
     once at sf0.1; exchange reuse does not fire across the
     differently-shaped branches). LPA's internal checkpoints are
     released before returning (the one-row result is pinned eagerly,
-    then the delta is unpersisted); the edge table itself stays
+    then LPA's kept labels are released); the edge table itself stays
     cached for the next graph query.
     """
-    from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
-        _persistent_ids,
-        _unpersist_ids,
-        label_propagation,
-    )
+    from tvbigdataproject_spark.operators.components import label_propagation
+    from tvbigdataproject_spark.operators.materialize import checkpoint, release
 
-    sc = spark.sparkContext
     # the edge list rides the session-scoped shared checkpoint
     # (operators/trade_edges.py, r12): materialized once per
     # (context, sf_dir), reused by every graph query — this query's
@@ -462,15 +444,9 @@ def community_modularity(spark, sf_dir):
     # scan the same persisted rows, and the blocks are NOT released
     # here (they belong to the shared cache, not this call)
     bi = trade_edges_bi(spark, sf_dir)
-    # capture LPA's surviving checkpoint blocks as the delta around the
-    # call itself — NOT a whole-query diff of global persistent-RDD
-    # state, which on a shared session would sweep up (and release)
-    # caches concurrent queries or user persist() calls created
-    before_lpa = _persistent_ids(sc)
-    lab = label_propagation(bi, rounds=_LPA_ROUNDS, input_materialized=True)
-    lpa_ids = _persistent_ids(sc) - before_lpa
+    lab = label_propagation(bi, rounds=_LPA_ROUNDS)
 
-    deg = bi.groupBy(F.col("src").alias("node")).agg(
+    deg = bi.df.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     dc = (
@@ -485,7 +461,7 @@ def community_modularity(spark, sf_dir):
     ls = lab.select(F.col("node").alias("src"), F.col("community").alias("cs"))
     ld = lab.select(F.col("node").alias("dst"), F.col("community").alias("cd"))
     intra = (
-        bi.join(ls, "src")
+        bi.df.join(ls, "src")
         .join(ld, "dst")
         .where(F.col("cs") == F.col("cd"))
         .groupBy(F.col("cs").alias("community"))
@@ -528,12 +504,14 @@ def community_modularity(spark, sf_dir):
             / (F.col("total_degree") * F.col("total_degree")).cast("double")
         ).alias("modularity"),
     )
-    # the result is ONE row; pin it eagerly so every intermediate this
-    # query checkpointed (the shared edge list + LPA's final labels) can
-    # be released NOW instead of accruing on a long-lived session —
-    # bench alone constructs this query 5x per run.
-    out, out_ids = _checkpoint_tracked(result, sc)
-    _unpersist_ids(sc, lpa_ids - out_ids)
+    # the result is ONE row; pin it eagerly so LPA's final labels — the
+    # one table this query checkpointed; the shared edge list belongs
+    # to the session cache — can be released NOW instead of accruing
+    # on a long-lived session (bench alone constructs this query 5x
+    # per run). release() touches only the labels' own blocks, never a
+    # concurrent query's or a user's persist().
+    out = checkpoint(result)
+    release(lab)
     return out
 
 
@@ -601,15 +579,13 @@ def effective_diameter_landmarks(spark, sf_dir):
     """
     bi = trade_edges_bi(spark, sf_dir)
     landmarks = (
-        bi.where(F.col("src") > 0)
+        bi.df.where(F.col("src") > 0)
         .select(F.col("src").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(_LANDMARK_K)
     )
-    dist = bfs_levels_multi(
-        bi, landmarks, max_hops=_ED_HOPS, input_materialized=True
-    )
+    dist = bfs_levels_multi(bi, landmarks, max_hops=_ED_HOPS)
     hops = dist.groupBy("hop").agg(F.count(F.lit(1)).alias("c"))
     from pyspark.sql import Window
 

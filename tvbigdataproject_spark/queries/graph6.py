@@ -38,7 +38,7 @@ def betweenness_landmarks(spark, sf_dir):
     """
     bi = trade_edges_bi(spark, sf_dir)
     landmarks = (
-        bi.where(F.col("src") > 0)
+        bi.df.where(F.col("src") > 0)
         .select(F.col("src").alias("node"))
         .distinct()
         .orderBy("node")
@@ -109,19 +109,19 @@ def graph_diameter_sweep(spark, sf_dir):
     from tvbigdataproject_spark.operators.traversal import bfs_levels_multi
 
     seed = (
-        bi.groupBy(F.col("src").alias("node"))
+        bi.df.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), F.col("node").asc())
         .limit(1)
         .select("node")
     )
-    d1 = bfs_levels_multi(bi, seed, max_hops=_DS_HOPS, input_materialized=True)
+    d1 = bfs_levels_multi(bi, seed, max_hops=_DS_HOPS)
     far = (
         d1.orderBy(F.col("hop").desc(), F.col("node").asc())
         .limit(1)
         .select("node")
     )
-    d2 = bfs_levels_multi(bi, far, max_hops=_DS_HOPS, input_materialized=True)
+    d2 = bfs_levels_multi(bi, far, max_hops=_DS_HOPS)
     ecc = d2.agg(F.max("hop").alias("ecc_lb"))
     tail = (
         d2.join(F.broadcast(ecc), F.col("hop") == F.col("ecc_lb"))

@@ -17,11 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from tvbigdataproject_spark.operators.components import (
-    _checkpoint_tracked,
-    _unpersist_ids,
-)
 from tvbigdataproject_spark.operators.dedup import ngram_jaccard_pairs
+from tvbigdataproject_spark.operators.materialize import Scope
 from tvbigdataproject_spark.queries.dedup import _SH_SQL
 from tvbigdataproject_spark.queries.registry import query
 from tvbigdataproject_spark.sources import read_table
@@ -133,32 +130,21 @@ def ktruss_neardup(spark, sf_dir):
     inputs are freed.
     """
     docs = read_table(spark, sf_dir, "documents")
-    sc = spark.sparkContext
-    pairs, pair_ids = _checkpoint_tracked(
-        ngram_jaccard_pairs(docs, n=3, threshold=0.4).select(
-            "doc_a", "doc_b"
-        ),
-        sc,
-    )
-    try:
-        e1, e1_ids = _checkpoint_tracked(
+    with Scope() as s:
+        pairs = s.checkpoint(
+            ngram_jaccard_pairs(docs, n=3, threshold=0.4).select(
+                "doc_a", "doc_b"
+            )
+        )
+        e1 = s.checkpoint(
             _support(pairs)
             .where(F.col("support") >= _TRUSS_K - 2)
-            .select("doc_a", "doc_b"),
-            sc,
+            .select("doc_a", "doc_b")
         )
-    except Exception:
-        _unpersist_ids(sc, pair_ids)
-        raise
-    try:
         out = _support(e1).where(F.col("support") >= _TRUSS_K - 2).select(
             "doc_a", "doc_b", F.col("support").cast("long")
         )
-        out_ck, _ = _checkpoint_tracked(out, sc)
-        return out_ck
-    finally:
-        _unpersist_ids(sc, e1_ids)
-        _unpersist_ids(sc, pair_ids)
+        return s.keep(s.checkpoint(out))
 
 
 # The trade-returns digraph + its mutual-reachability SCC labels as a
@@ -335,7 +321,6 @@ def condensation_levels_trade(spark, sf_dir):
     DAG on this nation-restricted graph.
     """
     from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
         strongly_connected_components,
     )
     from tvbigdataproject_spark.operators.traversal import (
@@ -343,10 +328,15 @@ def condensation_levels_trade(spark, sf_dir):
     )
 
     edges = _trade_returns_edges(spark, sf_dir)
-    sc = spark.sparkContext
     labels = strongly_connected_components(edges)  # checkpointed result
-    # contract: edge (u, v) -> (scc(u), scc(v)), self-edges dropped
-    cond, cond_ids = _checkpoint_tracked(
+    members = labels.groupBy("scc").agg(
+        F.count(F.lit(1)).cast("long").alias("n_members")
+    )
+    # contract: edge (u, v) -> (scc(u), scc(v)), self-edges dropped; the
+    # operator dedups and checkpoints the contracted pairs once. Isolated
+    # components (no condensation edge) never enter the level table —
+    # they are level 0 by definition.
+    lvl = dag_longest_path_levels(
         edges.join(
             labels.select(F.col("node").alias("src"), F.col("scc").alias("s")),
             "src",
@@ -355,24 +345,10 @@ def condensation_levels_trade(spark, sf_dir):
             labels.select(F.col("node").alias("dst"), F.col("scc").alias("d")),
             "dst",
         )
-        .where(F.col("s") != F.col("d"))
-        .select(F.col("s").alias("src"), F.col("d").alias("dst"))
-        .distinct(),
-        sc,
+        .where(F.col("s") != F.col("d")),
+        src="s",
+        dst="d",
     )
-    members = labels.groupBy("scc").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members")
-    )
-    try:
-        # isolated components (no condensation edge) never enter the
-        # level table — they are level 0 by definition. cond is already
-        # distinct + checkpointed above, so the operator skips its
-        # defensive dedup/re-checkpoint (r13).
-        lvl = dag_longest_path_levels(cond, input_materialized=True)
-    finally:
-        from tvbigdataproject_spark.operators.components import _unpersist_ids
-
-        _unpersist_ids(sc, cond_ids)
     return members.join(
         lvl.withColumnRenamed("node", "scc"), "scc", "left"
     ).select(
@@ -443,26 +419,19 @@ def bowtie_trade_returns(spark, sf_dir):
     the operator side is general).
     """
     from tvbigdataproject_spark.operators.components import (
-        _checkpoint_tracked,
-        _unpersist_ids,
         strongly_connected_components,
     )
     from tvbigdataproject_spark.operators.traversal import reachable_masks
 
     # r13: the thresholded edge derivation (li⋈orders⋈cust + two aggs)
     # feeds BOTH the SCC and the reachability sweep — materialize it
-    # once here and let the operators skip their defensive
-    # distinct+checkpoint (the edge set is distinct by construction:
-    # groupBy-derived rows, sign-disjoint orientations). Both consumers
-    # return checkpointed tables, so the blocks die with this frame.
-    sc = spark.sparkContext
-    edges, edge_ids = _checkpoint_tracked(
-        _trade_returns_edges(spark, sf_dir), sc
-    )
-    try:
-        labels = strongly_connected_components(
-            edges, input_materialized=True
-        )
+    # once here as an EdgeSet (the distinct runs inside the same
+    # checkpoint job) and let the operators skip their defensive
+    # distinct+checkpoint. Both consumers return checkpointed tables,
+    # so the blocks die with this scope.
+    with Scope() as s:
+        edges = s.edges(_trade_returns_edges(spark, sf_dir))
+        labels = strongly_connected_components(edges)
         core_label = (
             labels.groupBy("scc")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -475,9 +444,7 @@ def bowtie_trade_returns(spark, sf_dir):
         )
         # mask bit 1 = reached FROM the core (OUT side), bit 2 = reaches
         # the core via reversed edges (IN side); core itself carries 3.
-        masks = reachable_masks(edges, core_nodes, input_materialized=True)
-    finally:
-        _unpersist_ids(sc, edge_ids)
+        masks = reachable_masks(edges, core_nodes)
     nodes = labels.select("node")
     return (
         nodes.join(

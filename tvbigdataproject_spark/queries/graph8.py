@@ -118,7 +118,7 @@ def wl_colors_trade_graph(spark, sf_dir):
     dictionary-encoded to 8-byte longs at birth so the per-round
     shuffles never carry digest strings.
     """
-    bi = trade_edges_bi(spark, sf_dir)
+    bi = trade_edges_bi(spark, sf_dir).df
     colors = bi.select("src").distinct().select(
         F.col("src").alias("node"),
         F.when(F.col("src") > 0, F.lit(0))

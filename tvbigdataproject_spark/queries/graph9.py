@@ -120,7 +120,7 @@ def katz_centrality_trade(spark, sf_dir):
     # never release unrelated RDDs (ADVICE r11).
     from tvbigdataproject_spark.operators.trade_edges import trade_edges_bi
 
-    bi = trade_edges_bi(spark, sf_dir)
+    bi = trade_edges_bi(spark, sf_dir).df
     # carry-total recursion: y_k = (node, x_k, t_k = t_{k-1} + x_k), so
     # every x_k is referenced EXACTLY once (by y_{k+1}) and the final
     # answer is t_r — no union that would re-reference (and re-execute)

@@ -292,7 +292,7 @@ def minhash_scurve_design(spark, sf_dir):
     oracle rewrite); the 6 config legs reuse one sims table; output
     is 6 rows.
     """
-    from tvbigdataproject_spark.operators.components import _checkpoint_tracked
+    from tvbigdataproject_spark.operators.materialize import checkpoint
     from tvbigdataproject_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = read_table(spark, sf_dir, "documents")
@@ -301,11 +301,10 @@ def minhash_scurve_design(spark, sf_dir):
     # pair list) instead of replaying the blocked join per consumer
     # (r12: this query's wall was ~7x one join). The blocks back the
     # returned plan and are released with the session.
-    sims, _ = _checkpoint_tracked(
+    sims = checkpoint(
         ngram_jaccard_pairs(docs, n=3, threshold=_SC_MIN_JACC).select(
             F.col("jacc").alias("s")
-        ),
-        spark.sparkContext,
+        )
     )
     n04 = sims.where(F.col("s") >= 0.4).agg(
         F.count(F.lit(1)).alias("n04")
