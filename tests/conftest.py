@@ -72,3 +72,11 @@ TWEETS = [
 @pytest.fixture(scope="session")
 def tweets_df(spark):
     return spark.createDataFrame(TWEETS, TWEET_SCHEMA)
+
+
+@pytest.fixture(scope="session")
+def tweets_json(spark, tweets_df, tmp_path_factory):
+    """The tweet fixture as a JSON file, the CLI's input format."""
+    path = str(tmp_path_factory.mktemp("tweets") / "tweets.json")
+    tweets_df.write.mode("overwrite").json(path)
+    return path

@@ -8,16 +8,8 @@ from __future__ import annotations
 import csv
 import os
 
-import pytest
-
 from tvbigdataproject_spark.__main__ import build_parser, main
-
-
-@pytest.fixture(scope="module")
-def tweets_json(spark, tweets_df, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("cli") / "tweets.json")
-    tweets_df.write.mode("overwrite").json(path)
-    return path
+from tvbigdataproject_spark.operators.materialize import persistent_ids
 
 
 def _read_csv(path, sep=","):
@@ -27,6 +19,7 @@ def _read_csv(path, sep=","):
 
 def test_cli_produces_all_artifacts(spark, tweets_json, tmp_path):
     out = str(tmp_path / "outputs")
+    before = persistent_ids(spark.sparkContext)
     main(
         [
             tweets_json,
@@ -38,6 +31,8 @@ def test_cli_produces_all_artifacts(spark, tweets_json, tmp_path):
         ],
         spark=spark,
     )
+    # the caller's session gets back every block the pipeline made
+    assert persistent_ids(spark.sparkContext) - before == set()
 
     # full graph: single files, reference naming (gFull/g.edges.csv)
     edges = _read_csv(os.path.join(out, "gFull", "g.edges.csv"))

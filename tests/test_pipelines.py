@@ -7,12 +7,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators.graph import k_hop_neighborhood
+from tvbigdataproject_spark.operators.materialize import persistent_ids
 from tvbigdataproject_spark.plans import TweetGraphPipeline
 
 
 @pytest.fixture(scope="module")
 def pipe(spark, tweets_df):
-    return TweetGraphPipeline(spark, tweets=tweets_df)
+    with TweetGraphPipeline(spark, tweets=tweets_df) as p:
+        yield p
 
 
 def rows(df, *cols):
@@ -89,8 +92,7 @@ def test_q3_jaccard_edge_orientation(spark, tweets_df):
     assert abs(w31[("3", "1")] - 1 / 3) < 1e-12
 
 
-def test_q4_full_graph(pipe):
-    g = pipe.full_graph()
+def check_full_graph(g):
     edges = rows(g.edges, "src", "dst", "type")
     assert ("1", "2", "RT") in edges
     assert ("3", "delta", "HT") in edges
@@ -102,8 +104,12 @@ def test_q4_full_graph(pipe):
     assert g.edges.count() == 20
 
 
-def test_q5_bi_report(pipe):
-    rep = {r["user"]: r for r in pipe.bi_report().collect()}
+def test_q4_full_graph(pipe):
+    check_full_graph(pipe.full_graph())
+
+
+def check_bi_report(report):
+    rep = {r["user"]: r for r in report.collect()}
     u1 = rep["1"]
     assert u1["hashtags"] == "[cafe,spark]"
     assert u1["retweeted_users"] == "[2,6]"  # users who retweeted u1
@@ -122,6 +128,10 @@ def test_q5_bi_report(pipe):
     assert rep["8"]["jaccard_users"] == "[7]"
 
 
+def test_q5_bi_report(pipe):
+    check_bi_report(pipe.bi_report())
+
+
 def test_q6_word_cloud_corpus(pipe):
     texts = sorted(r["text"] for r in pipe.word_cloud_corpus().collect())
     # retweets prefer the retweeted post's text; cleaning lowercases and
@@ -137,8 +147,7 @@ def test_q6_word_cloud_corpus(pipe):
     assert len(pipe.word_cloud_corpus(drop_empty=True).collect()) == 11
 
 
-def test_q7_neighborhood(pipe):
-    g = pipe.neighborhood("1", hops=2)
+def check_neighborhood(g):
     ids = {r["id"] for r in g.vertices.collect()}
     # hop-1 (dst-only, non-HT): {2, 6}; subgraph = edges incident to
     # {1,2,6} incl. their HT edges (u2 has none — rt tags credit u1)
@@ -146,11 +155,13 @@ def test_q7_neighborhood(pipe):
     assert g.edges.count() == 6
 
 
+def test_q7_neighborhood(pipe):
+    check_neighborhood(pipe.neighborhood("1", hops=2))
+
+
 def test_q7_quirk_flags(pipe):
     # disabling the reference quirks: follow both directions, allow HT
     # hops → tags join the frontier
-    from tvbigdataproject_spark.operators.graph import k_hop_neighborhood
-
     g = k_hop_neighborhood(
         pipe.full_graph().edges,
         "3",
@@ -161,3 +172,62 @@ def test_q7_quirk_flags(pipe):
     ids = {r["id"] for r in g.vertices.collect()}
     # u3's tags are in the frontier now, and u4 (retweeter of 3) too
     assert "alpha" in ids and "4" in ids
+
+
+@pytest.mark.parametrize("hops", [0, -1])
+def test_k_hop_neighborhood_rejects_hops_below_one(pipe, hops):
+    with pytest.raises(ValueError, match="hops"):
+        k_hop_neighborhood(pipe.full_graph().edges, "1", hops=hops)
+
+
+# --- the shared graph core ---------------------------------------------------
+
+
+def test_graph_artifacts_in_reverse_order_match_goldens(spark, tweets_df):
+    # a fresh pipeline builds its core inside whichever artifact comes
+    # first; the CLI's order is full graph, report, neighborhood
+    with TweetGraphPipeline(spark, tweets=tweets_df) as p:
+        check_neighborhood(p.neighborhood("1", hops=2))
+        check_bi_report(p.bi_report())
+        check_full_graph(p.full_graph())
+
+
+def json_scans(df) -> int:
+    """File-scan leaves over JSON in ``df``'s optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves().iterator()
+    n = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            n += leaf.relation().toString() == "json"
+    return n
+
+
+def test_graph_artifacts_read_the_core_not_the_json(spark, tweets_json):
+    with TweetGraphPipeline(spark, path=tweets_json) as p:
+        # the per-type plans stay lazy over the scan
+        assert json_scans(p.jaccard_edges()) > 0
+        for df in (
+            p.full_graph().edges,
+            p.full_graph().vertices,
+            p.bi_report(),
+            p.neighborhood("1", hops=2).edges,
+        ):
+            assert json_scans(df) == 0
+
+
+def test_close_frees_every_block_after_an_artifact_raises(spark, tweets_df):
+    sc = spark.sparkContext
+    before = persistent_ids(sc)
+    with pytest.raises(ValueError, match="hops"):
+        with TweetGraphPipeline(spark, tweets=tweets_df) as p:
+            p.neighborhood("1", hops=2)
+            # map, edge table, subgraph edges
+            assert len(persistent_ids(sc) - before) == 3
+            p.neighborhood("1", hops=0)
+    assert persistent_ids(sc) - before == set()
+    # a closed pipeline rebuilds its core on the next call
+    check_full_graph(p.full_graph())
+    p.close()
+    assert persistent_ids(sc) - before == set()

@@ -3,7 +3,8 @@
 # must be preceded by this script SUCCEEDING — it runs, in order:
 #
 #   1. tools/plan_audit.py        -> PLANS.md row count == registry count
-#   2. full pytest tests/         -> suite green at the snapshot
+#   2. tier-1 pytest tests/       -> suite green at the snapshot
+#      + pytest perfbench/tests   -> the benchmark's own checks green
 #   3. full tools/check_parity.py -> dated "N passed" line in COVERAGE.md
 #      (via parity_gate.sh, which also stamps the bench-regression verdict)
 #
@@ -24,8 +25,16 @@ if [ "$ROWS" -lt "$REG" ]; then
     exit 1
 fi
 
-echo "== 2/3 full pytest =="
-python -m pytest tests/ -q
+echo "== 2/3 full pytest (tier-1 command, then perfbench/tests) =="
+# the same command as ROADMAP.md's tier-1 verify: without
+# SPARK_GRAFT_CPUS, get_spark would size the session for 32 cores
+(
+    SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+    SPARK_LOCAL_DIRS=/tmp/spark-local
+    export SPARK_GRAFT_CPUS SPARK_LOCAL_DIRS
+    timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+    python -m pytest perfbench/tests -q -p no:cacheprovider
+)
 
 echo "== 3/3 full parity gate (appends dated line to COVERAGE.md) =="
 sh tools/parity_gate.sh

@@ -92,72 +92,73 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         spark = get_spark(app_name="BdProject")
 
     print(f"Starting the processing of the file: {args.input_file}")
-    pipe = TweetGraphPipeline(
+    # the pipeline builds the graph once for every artifact; leaving the
+    # block frees it, which matters when the caller owns the session
+    with TweetGraphPipeline(
         spark,
         path=args.input_file,
         jaccard_threshold=0.5,
         only_tags_from_not_retweeted_posts=args.only_tags_from_not_retweetted_posts,
-    )
+    ) as pipe:
+        # every materialization rides inline quality accounting on its own
+        # write (operators/quality.py via the sinks' audit hooks — df.observe,
+        # zero extra scan) and reports rows written, the production habit of
+        # hanging counters on each sink step.
+        if args.save_word_cloud:
+            print("Saving word cloud")
+            m = write_single_csv(
+                pipe.word_cloud_corpus().select(F.col("text").alias("txt_plus_rt")),
+                os.path.join(out, "wordCloud.csv"),
+                sep=",",
+                audit_null_cols=[],
+            )
+            print(f"  rows written: {m['rows']}")
 
-    # every materialization rides inline quality accounting on its own
-    # write (operators/quality.py via the sinks' audit hooks — df.observe,
-    # zero extra scan) and reports rows written, the production habit of
-    # hanging counters on each sink step.
-    if args.save_word_cloud:
-        print("Saving word cloud")
-        m = write_single_csv(
-            pipe.word_cloud_corpus().select(F.col("text").alias("txt_plus_rt")),
-            os.path.join(out, "wordCloud.csv"),
-            sep=",",
-            audit_null_cols=[],
-        )
-        print(f"  rows written: {m['rows']}")
+        if args.save_full_graph:
+            print("Saving full graph")
+            g = pipe.full_graph()
+            gm = save_graph(
+                g.vertices, g.edges, os.path.join(out, "gFull"), prefix="g",
+                single_file=True, sep=",", audit=True,
+            )
+            print(
+                f"  edges written: {gm['edges']['rows']}, "
+                f"vertices written: {gm['vertices']['rows']}"
+            )
 
-    if args.save_full_graph:
-        print("Saving full graph")
-        g = pipe.full_graph()
-        gm = save_graph(
-            g.vertices, g.edges, os.path.join(out, "gFull"), prefix="g",
-            single_file=True, sep=",", audit=True,
-        )
-        print(
-            f"  edges written: {gm['edges']['rows']}, "
-            f"vertices written: {gm['vertices']['rows']}"
-        )
+        if args.save_pbi_report:
+            print("Saving Power BI report")
+            report = pipe.bi_report().select(
+                F.col("user"),
+                F.col("hashtags").alias("hashTags"),
+                F.col("retweeted_users").alias("retweetUsers"),
+                F.col("retweeting_users").alias("beRetweetUsers"),
+                F.col("jaccard_users").alias("jaccardUsers"),
+            )
+            m = write_single_csv(
+                report,
+                os.path.join(out, "exportPowerBI.csv"),
+                sep=";",
+                audit_null_cols=["user"],
+            )
+            print(f"  rows written: {m['rows']} (null users: {m['nulls_user']})")
 
-    if args.save_pbi_report:
-        print("Saving Power BI report")
-        report = pipe.bi_report().select(
-            F.col("user"),
-            F.col("hashtags").alias("hashTags"),
-            F.col("retweeted_users").alias("retweetUsers"),
-            F.col("retweeting_users").alias("beRetweetUsers"),
-            F.col("jaccard_users").alias("jaccardUsers"),
-        )
-        m = write_single_csv(
-            report,
-            os.path.join(out, "exportPowerBI.csv"),
-            sep=";",
-            audit_null_cols=["user"],
-        )
-        print(f"  rows written: {m['rows']} (null users: {m['nulls_user']})")
-
-    if args.id_neighbours:
-        print(f"Saving neighbours of node id={args.id_neighbours}")
-        g = pipe.neighborhood(args.id_neighbours, hops=2)
-        gm = save_graph(
-            g.vertices,
-            g.edges,
-            os.path.join(out, f"id_neighbours_{args.id_neighbours}"),
-            prefix="id",
-            single_file=True,
-            sep=",",
-            audit=True,
-        )
-        print(
-            f"  edges written: {gm['edges']['rows']}, "
-            f"vertices written: {gm['vertices']['rows']}"
-        )
+        if args.id_neighbours:
+            print(f"Saving neighbours of node id={args.id_neighbours}")
+            g = pipe.neighborhood(args.id_neighbours, hops=2)
+            gm = save_graph(
+                g.vertices,
+                g.edges,
+                os.path.join(out, f"id_neighbours_{args.id_neighbours}"),
+                prefix="id",
+                single_file=True,
+                sep=",",
+                audit=True,
+            )
+            print(
+                f"  edges written: {gm['edges']['rows']}, "
+                f"vertices written: {gm['vertices']['rows']}"
+            )
 
     print(f"Elaboration completed.\nOutput path: {out}")
     if owns_session:

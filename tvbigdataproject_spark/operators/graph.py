@@ -106,7 +106,12 @@ def k_hop_neighborhood(
     - ``exclude_types_from_hop``: hop expansion skips HT edges
       (``if row["type"] != "HT"`` :267), though HT edges incident to the
       frontier still appear in the final subgraph (:271-272).
+
+    ``hops`` must be at least 1: the 1-hop subgraph is the edges
+    incident to ``seed_id``.
     """
+    if hops < 1:
+        raise ValueError(f"hops must be >= 1, got {hops}")
     frontier = edges.sparkSession.createDataFrame([(seed_id,)], "id string")
     visited = frontier
     for _ in range(hops - 1):

@@ -170,13 +170,13 @@ class EdgeSet:
 
 
 class Scope:
-    """Owns the checkpoints an operator makes.
+    """Owns the checkpoints an operator (or a pipeline) makes.
 
     ``checkpoint`` materializes and records a frame; ``release`` frees a
     recorded frame (anything it did not checkpoint is left alone);
     ``keep`` hands a recorded frame to the caller. On exit — normal or
-    exception — every frame still recorded is released, so an error
-    mid-loop leaks no blocks.
+    exception — or on ``close()``, every frame still recorded is
+    released, so an error mid-loop leaks no blocks.
     """
 
     def __init__(self) -> None:
@@ -186,6 +186,9 @@ class Scope:
         return self
 
     def __exit__(self, *exc) -> None:
+        self.close()
+
+    def close(self) -> None:
         for df, ids in self._held.values():
             _unpersist_ids(df.sparkSession.sparkContext, ids)
         self._held.clear()

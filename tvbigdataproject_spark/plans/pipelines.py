@@ -8,6 +8,13 @@ deliberate divergences, per SURVEY.md §7.4:
 - the BI report's disjunctive JC join is rewritten as a two-orientation
   equi-join (same rows, hash join instead of BroadcastNestedLoopJoin);
 - no repartition(1) sinks, no driver-side collect loops, no GraphFrames.
+
+Lifetime: the reference builds its full graph once, in the
+RetweetTagsJaccardGraph constructor (:29-46), and exports it several
+ways. ``TweetGraphPipeline`` does the same per instance: the first
+graph artifact checkpoints the hashtag map and the distinct RT + HT +
+JC edge table, and every graph artifact reads those two leaves until
+``close()`` frees them. The per-edge-type methods stay lazy plans.
 """
 
 from __future__ import annotations
@@ -29,14 +36,24 @@ from tvbigdataproject_spark.operators.graph import (
     pair_candidates,
     vertices_from_edges,
 )
+from tvbigdataproject_spark.operators.materialize import Scope
 from tvbigdataproject_spark.sources.io import read_tweets
 
 
 class TweetGraphPipeline:
     """Retweet + hashtag + Jaccard unified graph over a tweet table.
 
-    Mirrors RetweetTagsJaccardGraph (reference :10-276) as lazy plan
-    builders; nothing materializes until the caller acts.
+    Mirrors RetweetTagsJaccardGraph (reference :10-276). The edge-type
+    methods (``retweet_edges``, ``user_hashtags``, ``hashtag_edges``,
+    ``jaccard_edges``) and ``word_cloud_corpus`` return lazy plans over
+    the tweets. ``full_graph``, ``bi_report`` and ``neighborhood`` read
+    the graph core instead: the hashtag map and the distinct edge
+    table, checkpointed once, on the first call to any of them, and
+    held by the pipeline (``neighborhood`` also checkpoints its
+    subgraph edges). Frames those three return stay valid until
+    ``close()``, which frees every block the pipeline made; use the
+    pipeline as a context manager to close it. A closed pipeline
+    rebuilds its core on the next call.
     """
 
     def __init__(
@@ -55,6 +72,29 @@ class TweetGraphPipeline:
         self.tweets = tweets
         self.jaccard_threshold = jaccard_threshold
         self.only_tags_from_not_retweeted_posts = only_tags_from_not_retweeted_posts
+        self._scope = Scope()
+        self._core: tuple[DataFrame, DataFrame] | None = None
+
+    def __enter__(self) -> TweetGraphPipeline:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def close(self) -> None:
+        """Free the graph core and every subgraph checkpointed from it."""
+        self._scope.close()
+        self._core = None
+
+    def _graph_core(self) -> tuple[DataFrame, DataFrame]:
+        """(hashtag map, distinct RT ∪ HT ∪ JC edges), both checkpointed
+        in the pipeline's scope on first use — the reference's gFull,
+        built once in its constructor (:29-46)."""
+        if self._core is None:
+            mapping = self._scope.checkpoint(self.user_hashtags())
+            edges = self._scope.checkpoint(self._graph_edges(mapping))
+            self._core = (mapping, edges)
+        return self._core
 
     # --- Q1: retweet graph (reference :48-72) -----------------------------
 
@@ -117,9 +157,11 @@ class TweetGraphPipeline:
     def hashtag_edges(self) -> DataFrame:
         """user → hashtag with weight = usage count (reference :119-128:
         explode + groupBy-count; dst is the hashtag)."""
+        return self._hashtag_edges(self.user_hashtags())
+
+    def _hashtag_edges(self, mapping: DataFrame) -> DataFrame:
         return (
-            self.user_hashtags()
-            .select("id", F.explode("hts").alias("tag"))
+            mapping.select("id", F.explode("hts").alias("tag"))
             .groupBy(F.col("id").alias("src"), F.col("tag").alias("dst"))
             .agg(F.count(F.lit(1)).cast("double").alias("w"))
             .withColumn("type", F.lit("HT"))
@@ -138,7 +180,9 @@ class TweetGraphPipeline:
         The candidate gate is the reference's own algorithmic idea —
         kept, with the motif machinery deleted.
         """
-        mapping = self.user_hashtags()
+        return self._jaccard_edges(self.user_hashtags())
+
+    def _jaccard_edges(self, mapping: DataFrame) -> DataFrame:
         tag_edges = mapping.select("id", F.explode("hts").alias("tag"))
         cands = pair_candidates(tag_edges, min_shared=2, src_col="id", item_col="tag")
         a = mapping.select(F.col("id").alias("id_a"), F.col("hts").alias("hts_a"))
@@ -161,15 +205,21 @@ class TweetGraphPipeline:
 
     # --- Q4: full graph (reference :37-46) --------------------------------
 
-    def full_graph(self) -> Graph:
-        """Union of RT + HT + JC edges and their induced vertices
-        (reference :39-46; .distinct() on both unions)."""
-        edges = (
+    def _graph_edges(self, mapping: DataFrame) -> DataFrame:
+        """Distinct RT ∪ HT ∪ JC edges, the HT and JC parts over
+        ``mapping`` (reference :39-46)."""
+        return (
             self.retweet_edges()
-            .unionByName(self.hashtag_edges())
-            .unionByName(self.jaccard_edges())
+            .unionByName(self._hashtag_edges(mapping))
+            .unionByName(self._jaccard_edges(mapping))
             .distinct()
         )
+
+    def full_graph(self) -> Graph:
+        """Union of RT + HT + JC edges and their induced vertices
+        (reference :39-46; .distinct() on both unions), read from the
+        checkpointed core."""
+        edges = self._graph_core()[1]
         return Graph(vertices_from_edges(edges), edges)
 
     # --- Q5: BI report (reference :194-243) -------------------------------
@@ -183,9 +233,13 @@ class TweetGraphPipeline:
         a BroadcastNestedLoopJoin (:225-227); rewritten here by exploding
         each JC edge into both orientations and equi-joining — identical
         matches, hash join (SURVEY.md J5).
+
+        Reads the core: the RT and JC rows are the core's rows of that
+        type, since each type is unique on (src, dst) before the union
+        and ``distinct()`` cannot merge rows of different types.
         """
-        mapping = self.user_hashtags()
-        rt = self.retweet_edges()
+        mapping, edges = self._graph_core()
+        rt = edges.where(F.col("type") == "RT")
 
         # users I retweeted: I am dst in (src → dst = retweeter)... the
         # reference joins mapping.id == rt.src first (:207-208): users
@@ -202,7 +256,7 @@ class TweetGraphPipeline:
             .agg(F.collect_set("src").alias("i_retweeted"))
         )
 
-        jc = self.jaccard_edges()
+        jc = edges.where(F.col("type") == "JC")
         jc_both = jc.select(F.col("src").alias("id"), F.col("dst").alias("partner")).unionByName(
             jc.select(F.col("dst").alias("id"), F.col("src").alias("partner"))
         )
@@ -249,12 +303,17 @@ class TweetGraphPipeline:
 
     def neighborhood(self, node_id: str, hops: int = 2) -> Graph:
         """k-hop neighborhood around a node — distributed frontier
-        expansion replacing the reference's collect() loop; quirk flags
-        (dst-only, HT-hop exclusion) default to reference behavior."""
-        return k_hop_neighborhood(
-            self.full_graph().edges,
+        expansion over the core's edges, replacing the reference's
+        collect() loop; quirk flags (dst-only, HT-hop exclusion) default
+        to reference behavior. The subgraph's edges are checkpointed in
+        the pipeline's scope, so writing edges and vertices runs the
+        hops once."""
+        sub = k_hop_neighborhood(
+            self._graph_core()[1],
             seed_id=node_id,
             hops=hops,
             follow_dst_only=True,
             exclude_types_from_hop=("HT",),
         )
+        edges = self._scope.checkpoint(sub.edges)
+        return Graph(vertices_from_edges(edges), edges)
