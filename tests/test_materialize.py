@@ -11,6 +11,8 @@ from tvbigdataproject_spark.operators import trade_edges as te
 from tvbigdataproject_spark.operators.materialize import (
     EdgeSet,
     Scope,
+    checkpoint,
+    fits_broadcast,
     local_solve_ok,
     persistent_ids,
     release,
@@ -135,3 +137,24 @@ def test_local_solve_gate_threshold_and_env(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "1")
     assert not local_solve_ok(e)
     assert local_solve_ok(e, 5)  # the argument wins over the env var
+
+
+def test_fits_broadcast_reads_only_a_bare_checkpoints_stored_size(spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    small = checkpoint(spark.range(100).selectExpr("id AS node"))
+    try:
+        assert fits_broadcast(small)
+        # a lazy plan and anything built over a checkpoint have no
+        # measured size: never broadcast on an estimate
+        assert not fits_broadcast(spark.range(100).selectExpr("id AS node"))
+        other = small.select(F.col("node").alias("n"))
+        assert not fits_broadcast(small.join(other, F.col("node") == F.col("n")))
+        assert not fits_broadcast(small.where("node > 3"))
+        spark.conf.set(key, "-1")  # disabled, as Spark's own broadcast
+        assert not fits_broadcast(small)
+        spark.conf.set(key, "1")  # the stored bytes exceed one byte
+        assert not fits_broadcast(small)
+    finally:
+        spark.conf.set(key, old)
+        release(small)

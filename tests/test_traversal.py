@@ -2,10 +2,15 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators import traversal
 from tvbigdataproject_spark.operators.traversal import (
     bfs_levels,
+    bfs_levels_multi,
     kcore_peel,
     sssp_bounded,
     triangle_corner_counts,
@@ -117,7 +122,7 @@ def test_sssp_releases_checkpoint_blocks(spark):
     sc = spark.sparkContext
     before = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     e = _wedges(spark, [(1, 2, 1), (2, 3, 2), (3, 4, 3)])
-    out = sssp_bounded(e, source=1, rounds=4, checkpoint_interval=2)
+    out = sssp_bounded(e, source=1, rounds=4)
     assert out.count() == 4
     after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     # only the final result's blocks may remain pinned
@@ -151,7 +156,7 @@ def test_bfs_multi_releases_checkpoint_blocks(spark):
         [(1, 2), (2, 3), (3, 1)], "src long, dst long"
     )
     sources = spark.createDataFrame([(1,), (2,)], "node long")
-    out = bfs_levels_multi(edges, sources, max_hops=4, checkpoint_interval=2)
+    out = bfs_levels_multi(edges, sources, max_hops=4)
     assert out.count() == 6
     after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before <= 1
@@ -365,3 +370,121 @@ def test_reachable_set_local_matches_distributed(spark):
             ).collect()
         }
         assert local == dist == want
+
+
+def test_bfs_levels_and_sssp_keep_string_ids(spark):
+    e = spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", 2), ("a", "c", 5)],
+        "src string, dst string, w long",
+    )
+    bfs = bfs_levels(e, source="a", max_hops=3)
+    assert bfs.schema["node"].dataType.simpleString() == "string"
+    assert {r.node: r.hop for r in bfs.collect()} == {"a": 0, "b": 1, "c": 1}
+    sp = sssp_bounded(e, source="a", rounds=3)
+    assert sp.schema["node"].dataType.simpleString() == "string"
+    assert {r.node: r.dist for r in sp.collect()} == {"a": 0, "b": 1, "c": 3}
+    # numeric strings stay strings, whatever type the source is given in
+    num = spark.createDataFrame([("1", "2"), ("2", "3")], "src string, dst string")
+    got = bfs_levels(num, source=1, max_hops=3)
+    assert got.schema["node"].dataType.simpleString() == "string"
+    assert {r.node: r.hop for r in got.collect()} == {"1": 0, "2": 1, "3": 2}
+
+
+def test_bfs_multi_repeated_source_counts_once(spark):
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    sources = spark.createDataFrame([(1,), (1,)], "node long")
+    want = [(1, 1, 0), (1, 2, 1), (1, 3, 2)]
+    for hops in (0, 3):  # the start state itself, and after the rounds
+        got = sorted(tuple(r) for r in bfs_levels_multi(edges, sources, hops).collect())
+        assert got == want[: hops + 1]
+
+
+def _random_graph(seed: int):
+    """Directed multigraph with cycles, self-loops, parallel edges of
+    different weights and a component the sources cannot reach."""
+    rng = random.Random(seed)
+    edges = [(rng.randrange(30), rng.randrange(30), rng.randint(1, 9)) for _ in range(70)]
+    edges += [(3, 3, 2), (7, 7, 1)]  # self-loops
+    edges += [(a, b, w + 4) for a, b, w in edges[:10]]  # parallel, heavier
+    edges += [(40 + i, 40 + (i + 1) % 5, 1) for i in range(5)]  # unreachable
+    return edges
+
+
+def _ref_bfs(edges, source, max_hops):
+    hop = {source: 0}
+    frontier = [source]
+    for k in range(1, max_hops + 1):
+        nxt = {d for s, d, _ in edges if s in frontier and d not in hop}
+        hop.update((n, k) for n in nxt)
+        frontier = list(nxt)
+    return hop
+
+
+def _ref_sssp(edges, source, rounds):
+    dist = {source: 0}
+    for _ in range(rounds):
+        step = dict(dist)
+        for s, d, w in edges:
+            if s in dist and dist[s] + w < step.get(d, float("inf")):
+                step[d] = dist[s] + w
+        dist = step
+    return dist
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["default", "no_broadcast"])
+def test_frontier_operators_match_python_reference(spark, monkeypatch, threshold):
+    rows = _random_graph(7)
+    edges = spark.createDataFrame(rows, "src long, dst long, w long")
+    sources = [0, 5, 12]
+    ecc = max(max(_ref_bfs(rows, s, 60).values()) for s in sources)
+    hops = ecc + 2
+    gated = []
+    gate = traversal.fits_broadcast
+
+    def spy(df):
+        gated.append(gate(df))
+        return gated[-1]
+
+    monkeypatch.setattr(traversal, "fits_broadcast", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        got = {r.node: r.hop for r in bfs_levels(edges, 0, hops).collect()}
+        assert got == _ref_bfs(rows, 0, hops)
+        srcs = spark.createDataFrame([(s,) for s in sources], "node long")
+        multi = {
+            (r.landmark, r.node): r.hop
+            for r in bfs_levels_multi(edges, srcs, hops).collect()
+        }
+        assert multi == {
+            (s, n): h for s in sources for n, h in _ref_bfs(rows, s, hops).items()
+        }
+        dist = {r.node: r.dist for r in sssp_bounded(edges, 0, hops).collect()}
+        assert dist == _ref_sssp(rows, 0, hops)
+    finally:
+        spark.conf.set(key, old)
+    # every round consulted the gate; -1 never broadcasts, the small
+    # default-threshold states always do
+    assert len(gated) == 3 * hops
+    assert gated == [threshold is None] * len(gated)
+
+
+def test_bfs_levels_job_fence_on_trade_graph(spark):
+    from tvbigdataproject_spark.operators import trade_edges as te
+
+    sc = spark.sparkContext
+    bi = te.trade_edges_bi(spark, "/root/testdata/sf0.01")
+    group = "test_bfs_levels_job_fence"
+    try:
+        sc.setJobGroup(group, group)
+        out = bfs_levels(bi, 1, 3)
+        sc._jsc.clearJobGroup()
+        # one start checkpoint, then per hop: frontier broadcast, the
+        # min-aggregate's shuffle, the checkpoint
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+        assert out.count() > 1
+    finally:
+        sc._jsc.clearJobGroup()
+        te.release_trade_pairs(spark)

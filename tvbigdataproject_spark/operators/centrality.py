@@ -59,8 +59,8 @@ def brandes_betweenness(
     themselves accrue no dependency (Brandes excludes s).
 
     Scale shape: the forward phase is multi-source BFS carrying an
-    extra BIGINT sigma through the SAME per-round join + anti-join +
-    partial-agg shape as bfs_levels_multi (one frontier keyed by
+    extra BIGINT sigma through a per-round join + anti-join +
+    partial-agg over bfs_levels_multi's key (one frontier keyed by
     (landmark, node), rounds = depth, eager-checkpoint lineage
     truncation with deterministic block release). The backward phase
     is one join per DEPTH LEVEL, descending: level-h nodes join their

@@ -15,6 +15,8 @@ owns that discipline:
   frames, hands results to the caller with ``keep`` and, on exit
   (normal or exception), releases everything else it made.
 - ``release(df)`` — frees a result an operator kept, later.
+- ``fits_broadcast(df)`` — whether a checkpoint's measured size is
+  under the session's broadcast threshold, for frontier joins.
 - ``EdgeSet`` — rows already materialized and unique on (src, dst);
   operators use it as given instead of deduplicating and checkpointing.
 - ``local_solve_ok`` — the one size gate for driver-local endgames,
@@ -118,26 +120,64 @@ def checkpoint(df: DataFrame) -> DataFrame:
     return _checkpoint_tracked(df)[0]
 
 
+def _persisted_under(leaf, persisted: set[int]) -> int | None:
+    """Id of the persisted RDD a LogicalRDD ``leaf`` reads: its own RDD,
+    or — after the stats rebuild — the one under a narrow map over it."""
+    rdd = leaf.rdd()
+    while rdd.id() not in persisted:
+        deps = rdd.dependencies()
+        if deps.size() != 1:
+            return None
+        rdd = deps.head().rdd()
+    return rdd.id()
+
+
+def _is_rdd_leaf(plan) -> bool:
+    return plan.getClass().getSimpleName() == "LogicalRDD"
+
+
 def _blocks(df: DataFrame) -> set[int]:
-    """Ids of the persisted RDDs behind ``df``'s checkpoint leaves. A
-    leaf is a LogicalRDD over the checkpointed RDD itself, or — after
-    the stats rebuild — one narrow map over it."""
+    """Ids of the persisted RDDs behind ``df``'s checkpoint leaves."""
     persisted = persistent_ids(df.sparkSession.sparkContext)
     found: set[int] = set()
     leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     while leaves.hasNext():
         leaf = leaves.next()
-        if leaf.getClass().getSimpleName() != "LogicalRDD":
-            continue
-        rdd = leaf.rdd()
-        while rdd.id() not in persisted:
-            deps = rdd.dependencies()
-            if deps.size() != 1:
-                break
-            rdd = deps.head().rdd()
-        else:
-            found.add(rdd.id())
+        if _is_rdd_leaf(leaf):
+            rdd_id = _persisted_under(leaf, persisted)
+            if rdd_id is not None:
+                found.add(rdd_id)
     return found
+
+
+def fits_broadcast(df: DataFrame) -> bool:
+    """True when ``df`` is a bare checkpoint (its plan is one checkpoint
+    leaf) whose stored blocks — memory plus disk bytes, as the block
+    manager's storage info reports them — are at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold``. A non-positive threshold
+    disables it, as it disables Spark's own broadcast choice. Reads no
+    rows and launches no job.
+
+    Catalyst cannot make this call itself: a checkpoint inherits the
+    estimated statistics of the plan it materialized, and join estimates
+    multiply, so a small frontier that came out of a join over a large
+    edge table is planned as if it were large. The stored size is
+    measured, not estimated.
+    """
+    spark = df.sparkSession
+    threshold = int(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    plan = df._jdf.queryExecution().analyzed()
+    if threshold <= 0 or not _is_rdd_leaf(plan):
+        return False
+    stored = {
+        int(i.id()): int(i.memSize()) + int(i.diskSize())
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+    rdd_id = _persisted_under(plan, set(stored))
+    # storage info not yet posted for these blocks: no measured size
+    return rdd_id is not None and stored[rdd_id] <= threshold
 
 
 def release(df: DataFrame) -> None:

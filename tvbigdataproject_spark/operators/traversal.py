@@ -3,13 +3,19 @@
 Rounds out the iterative-graph tier (components, pagerank) with the two
 other classic distributed-graph shapes:
 
-- **BFS levels** — frontier expansion, the building block of
-  shortest-hop queries and k-hop reachability. Same iterative MapReduce
-  discipline as operators/components.py: per-round join + distinct,
-  eager localCheckpoint lineage truncation, deterministic release of the
-  superseded round's blocks (VERDICT r2 item 5 discipline). The frontier
-  is the only thing that grows; visited-set membership is an anti-join,
-  never a driver-side set.
+- **BFS levels and bounded SSSP** — frontier expansion, the building
+  block of shortest-hop queries, k-hop reachability and landmark
+  distances. ``bfs_levels``, ``bfs_levels_multi`` and ``sssp_bounded``
+  share one round (``_min_round``): join the frontier onto the
+  out-edges, union the candidates with the state, keep the minimum per
+  key, checkpoint, release the previous state. The state never leaves
+  the cluster (the reference collects each frontier to the driver), and
+  because it is materialized every round its stored size is known:
+  when ``materialize.fits_broadcast`` measures it under the session's
+  broadcast threshold the frontier is broadcast and the static edge
+  table is scanned in place rather than shuffled on every hop.
+  Catalyst cannot see that a checkpoint is small — it inherits the
+  multiplied join estimates of the plan it came from.
 
 - **Triangle counting** — the degree-ordered wedge-join algorithm:
   orient every undirected edge from the lower-(degree, id) endpoint to
@@ -38,62 +44,84 @@ from tvbigdataproject_spark.operators.materialize import (
     EdgeSet,
     Scope,
     collect_edges,
+    fits_broadcast,
     local_frame,
     local_solve_ok,
 )
 
 
+def _min_round(
+    s: Scope,
+    state: DataFrame,
+    e: DataFrame,
+    frontier: DataFrame,
+    out: list,
+    keys: list[str],
+    value: str,
+) -> DataFrame:
+    """One frontier round over the materialized ``state``: join
+    ``frontier`` (rows of ``state``) onto the out-edges ``e``, project
+    the candidates to ``out``, union them with ``state``, keep the
+    minimum ``value`` per ``keys``, checkpoint, and release ``state``.
+
+    The frontier is broadcast when ``fits_broadcast`` measures the state
+    checkpoint under the session threshold: the edge table is then
+    scanned in place instead of shuffled, and the only exchange left is
+    the partial min-aggregate's. Above the threshold (or with it at -1)
+    Catalyst plans the join as it would without the gate."""
+    side = F.broadcast(frontier) if fits_broadcast(state) else frontier
+    cand = e.join(side, e.src == side.node).select(*out)
+    nxt = s.checkpoint(
+        state.unionByName(cand).groupBy(*keys).agg(F.min(value).alias(value))
+    )
+    s.release(state)
+    return nxt
+
+
 def bfs_levels(
     edges: DataFrame | EdgeSet,
-    source: int,
+    source: int | str,
     max_hops: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Minimum hop count from `source` to every node reachable within
     `max_hops` directed hops. Returns (node, hop) with hop in
-    [0, max_hops]; unreachable nodes are absent.
+    [0, max_hops]; unreachable nodes are absent. ``node`` has the type
+    of the edges' ``src`` column, and ``source`` is cast to it.
 
-    Each round is one equi-join (frontier onto out-edges) + distinct +
-    anti-join against the visited set — all shuffle-partitioned by node
-    id. The visited set is checkpointed every ``checkpoint_interval``
-    hops (each hop references the previous visited plan three times —
-    anti-join, union, frontier filter — so in-span lineage grows
-    ~3^k; keep k small, the default 2 halves the fixed per-job cost
-    without plan blowup) and the superseded span's blocks are released
-    the moment the next span materializes. At 100 TB the frontier join
-    inherits whatever partitioning `edges` carries; for repeated BFS
-    over one graph, pre-bucket `edges` by `src` so every round's join
-    is co-located.
+    Each hop is one round of ``_min_round``: the rows at hop k-1 join
+    the out-edges, the candidates (hop k) union the visited set, and a
+    min-aggregate per node keeps the first hop that reached it — a
+    candidate already visited loses to its smaller hop, so no distinct
+    or anti-join is needed. The visited set is checkpointed every hop
+    and the previous one released; its measured size decides whether
+    the frontier is broadcast (``fits_broadcast``), which is what keeps
+    the static edge table from being shuffled on every hop. For
+    repeated BFS over one graph too large to broadcast into, pre-bucket
+    `edges` by `src` so every round's join is co-located.
     """
     with Scope() as s:
         # materialize the (static) edge set once — every hop's frontier
         # join re-reads it, and the upstream plan may be an expensive
         # join chain (an EdgeSet already is materialized and distinct)
         e = s.edges(edges, src, dst).df
-        start = e.sparkSession.createDataFrame(
-            [(int(source), 0)], schema="node long, hop int"
+        visited = s.checkpoint(
+            e.sparkSession.range(1).select(
+                F.lit(source).cast(e.schema["src"].dataType).alias("node"),
+                F.lit(0).alias("hop"),
+            )
         )
-        visited = s.checkpoint(start)
-        hop = 0
-        while hop < max_hops:
-            span = min(max(1, checkpoint_interval), max_hops - hop)
-            plan = visited
-            for _ in range(span):
-                hop += 1
-                frontier = plan.where(F.col("hop") == hop - 1)
-                nxt = (
-                    frontier.join(e, frontier.node == e.src)
-                    .select(F.col("dst").alias("node"))
-                    .distinct()
-                    .join(plan, "node", "left_anti")
-                    .select("node", F.lit(hop).cast("int").alias("hop"))
-                )
-                plan = plan.unionByName(nxt)
-            stepped = s.checkpoint(plan)
-            s.release(visited)
-            visited = stepped
+        for hop in range(1, max_hops + 1):
+            visited = _min_round(
+                s,
+                visited,
+                e,
+                visited.where(F.col("hop") == hop - 1),
+                [F.col("dst").alias("node"), F.lit(hop).alias("hop")],
+                ["node"],
+                "hop",
+            )
         # the returned visited set is materialized — the edge blocks are
         # dead regardless of how we leave the loop
         return s.keep(visited)
@@ -105,18 +133,19 @@ def bfs_levels_multi(
     max_hops: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop count from EVERY node in `sources`
-    (a one-column DataFrame of node ids, column `node`) to every node
-    within `max_hops`. Returns (landmark, node, hop). This is the
-    landmark-distance primitive behind closeness/eccentricity estimates
-    and graph-diameter lower bounds: k BFS sweeps share one frontier
-    keyed by (landmark, node) instead of running k sequential BFS loops
-    — the round count stays max_hops, not k * max_hops.
+    (a one-column DataFrame of node ids, column `node`; repeated ids
+    count once) to every node within `max_hops`. Returns (landmark,
+    node, hop). This is the landmark-distance primitive behind
+    closeness/eccentricity estimates and graph-diameter lower bounds: k
+    BFS sweeps share one frontier keyed by (landmark, node) instead of
+    running k sequential BFS loops — the round count stays max_hops, not
+    k * max_hops.
 
-    Same per-round shape and checkpoint-release discipline as
-    bfs_levels; the visited set is composite-keyed, so memory is
+    Same round as bfs_levels (``_min_round``, keyed by (landmark,
+    node)), with the same per-hop checkpoint, release and measured
+    broadcast gate; the visited set is composite-keyed, so memory is
     bounded by k * |reachable| — choose k (the landmark count) small
     and fixed, which is how landmark methods are used.
     """
@@ -126,29 +155,19 @@ def bfs_levels_multi(
             sources.select(
                 F.col("node").alias("landmark"),
                 F.col("node"),
-                F.lit(0).cast("int").alias("hop"),
-            )
+                F.lit(0).alias("hop"),
+            ).distinct()
         )
-        hop = 0
-        while hop < max_hops:
-            span = min(max(1, checkpoint_interval), max_hops - hop)
-            plan = visited
-            for _ in range(span):
-                hop += 1
-                frontier = plan.where(F.col("hop") == hop - 1)
-                nxt = (
-                    frontier.join(e, frontier.node == e.src)
-                    .select("landmark", F.col("dst").alias("node"))
-                    .distinct()
-                    .join(plan, ["landmark", "node"], "left_anti")
-                    .select(
-                        "landmark", "node", F.lit(hop).cast("int").alias("hop")
-                    )
-                )
-                plan = plan.unionByName(nxt)
-            stepped = s.checkpoint(plan)
-            s.release(visited)
-            visited = stepped
+        for hop in range(1, max_hops + 1):
+            visited = _min_round(
+                s,
+                visited,
+                e,
+                visited.where(F.col("hop") == hop - 1),
+                ["landmark", F.col("dst").alias("node"), F.lit(hop).alias("hop")],
+                ["landmark", "node"],
+                "hop",
+            )
         return s.keep(visited)
 
 
@@ -306,12 +325,11 @@ def triangle_corner_counts(
 
 def sssp_bounded(
     edges: DataFrame | EdgeSet,
-    source: int,
+    source: int | str,
     rounds: int,
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Single-source shortest path bounded to ``rounds`` relaxation
     rounds (Bellman-Ford): (node, dist) where dist is the minimum total
@@ -319,13 +337,15 @@ def sssp_bounded(
     ``rounds`` edges. With rounds >= |V|-1 this is the exact SSSP on a
     non-negative-weight graph; at a fixed small bound it is the
     deterministic "distance within k hops" semantics that an unrolled
-    SQL oracle can mirror layer-for-layer.
+    SQL oracle can mirror layer-for-layer. ``node`` has the type of the
+    edges' ``src`` column, and ``source`` is cast to it.
 
-    Each round is one equi-join (current distances onto out-edges) +
-    union + min-aggregate, all shuffle-partitioned by node id — the
-    same per-round shape as pagerank (one join, one keyed agg), so the
-    same checkpoint-every-k discipline bounds lineage while halving
-    fixed per-job overhead. Parallel edges are pre-collapsed to their
+    Each round is bfs_levels' round (``_min_round``) relaxing from the
+    whole distance table: current distances join the out-edges, the
+    relaxed distances union the table, and a min-aggregate per node
+    keeps the shortest. The table is checkpointed every round and the
+    previous one released; its measured size decides whether it is
+    broadcast into the join. Parallel edges are pre-collapsed to their
     minimum weight so the per-round join fan-out is the simple-edge
     count.
     """
@@ -345,28 +365,24 @@ def sssp_bounded(
                 .agg(F.min("w").alias("w"))
             )
         dist = s.checkpoint(
-            e.sparkSession.createDataFrame(
-                [(int(source), 0)], schema="node long, dist long"
+            e.sparkSession.range(1).select(
+                F.lit(source).cast(e.schema["src"].dataType).alias("node"),
+                F.lit(0).cast("long").alias("dist"),
             )
         )
-        done = 0
-        while done < rounds:
-            span = min(max(1, checkpoint_interval), rounds - done)
-            plan = dist
-            for _ in range(span):
-                done += 1
-                relaxed = plan.join(e, plan.node == e.src).select(
+        for _ in range(rounds):
+            dist = _min_round(
+                s,
+                dist,
+                e,
+                dist,
+                [
                     F.col("dst").alias("node"),
                     (F.col("dist") + F.col("w")).alias("dist"),
-                )
-                plan = (
-                    plan.unionByName(relaxed)
-                    .groupBy("node")
-                    .agg(F.min("dist").alias("dist"))
-                )
-            stepped = s.checkpoint(plan)
-            s.release(dist)
-            dist = stepped
+                ],
+                ["node"],
+                "dist",
+            )
         return s.keep(dist)
 
 

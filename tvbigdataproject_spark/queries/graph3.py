@@ -64,8 +64,10 @@ def bfs_hops_trade(spark, sf_dir):
     The oracle's recursive CTE uses UNION (distinct) so the recursion
     carries at most nodes x hops rows — the walk count through a dense
     trade graph is exponential, the visited set is not. The DataFrame
-    side is the iterative frontier operator with per-round checkpoint
-    release (operators/traversal.py).
+    side is the iterative frontier operator (operators/traversal.py):
+    one join and one min-aggregate per hop, the visited set checkpointed
+    every hop and broadcast into the join while its measured size fits
+    the broadcast threshold.
     """
     bi = trade_edges_bi(spark, sf_dir)
     return bfs_levels(bi, source=_BFS_SOURCE, max_hops=_BFS_HOPS)

@@ -69,9 +69,10 @@ def sssp_trade_graph(spark, sf_dir):
     exact and the unrolled-CTE oracle matches bitwise.
 
     The DataFrame side is operators/traversal.py::sssp_bounded — one
-    equi-join + min-aggregate per round, node-id-partitioned, with the
-    checkpoint-every-k lineage discipline shared by the whole iterative
-    tier. Supplier ids are negated into their own id space (same
+    equi-join + min-aggregate per round, the distance table
+    checkpointed every round and broadcast into the join while its
+    measured size fits the broadcast threshold (the round bfs_levels
+    runs). Supplier ids are negated into their own id space (same
     convention as pagerank_trade_graph / bfs_hops_trade).
     """
     # weighted edges from the shared session-scoped pair-count table
@@ -122,7 +123,7 @@ def landmark_distances(spark, sf_dir):
 
     The DataFrame side is ONE multi-source frontier loop keyed by
     (landmark, node) (operators/traversal.py::bfs_levels_multi), not k
-    sequential BFS runs — the job count stays max_hops. The oracle is
+    sequential BFS runs — the round count stays max_hops. The oracle is
     the recursive CTE with UNION-distinct recursion, whose state is
     bounded by landmarks x nodes x hops, never the walk count.
     """
