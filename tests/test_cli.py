@@ -60,6 +60,35 @@ def test_cli_produces_all_artifacts(spark, tweets_json, tmp_path):
     assert len(ne) == 1 + 6
 
 
+def test_cli_artifacts_launch_no_python_worker(spark, tweets_json, tmp_path, monkeypatch):
+    # a classic createDataFrame over a Python list goes through
+    # SparkContext.parallelize and runs its rows through Python workers;
+    # the four artifacts must build every frame in the JVM
+    from pyspark import SparkContext
+
+    calls = []
+    real = SparkContext.parallelize
+
+    def spy(self, *args, **kwargs):
+        calls.append(args[:1])
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkContext, "parallelize", spy)
+    main(
+        [
+            tweets_json,
+            "--output_path", str(tmp_path / "outputs"),
+            "--save_full_graph",
+            "--save_pbi_report",
+            "--save_word_cloud",
+            "--id_neighbours", "1",
+        ],
+        spark=spark,
+    )
+    assert os.path.exists(tmp_path / "outputs" / "id_neighbours_1" / "id.edges.csv")
+    assert calls == []
+
+
 def test_cli_flag_spelling_matches_reference():
     # drop-in compatibility includes the reference's misspelled flag
     # (main.py:39) and its BooleanOptionalAction negative form

@@ -4,12 +4,17 @@ see SURVEY.md §2.11 for the reference composition each mirrors."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+from itertools import combinations
+
 import pytest
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.graph import k_hop_neighborhood
 from tvbigdataproject_spark.operators.materialize import persistent_ids
 from tvbigdataproject_spark.plans import TweetGraphPipeline
+from tvbigdataproject_spark.schemas import TWEET_SCHEMA
+from tvbigdataproject_spark.sources.io import write_single_csv
 
 
 @pytest.fixture(scope="module")
@@ -231,3 +236,186 @@ def test_close_frees_every_block_after_an_artifact_raises(spark, tweets_df):
     check_full_graph(p.full_graph())
     p.close()
     assert persistent_ids(sc) - before == set()
+
+
+# --- the neighborhood against a plain-Python reference -----------------------
+
+
+def python_neighborhood(edges, seed, hops, follow_dst_only, exclude):
+    """k_hop_neighborhood on a list of (src, dst, w, type) tuples:
+    (the subgraph's distinct edges, its vertex set)."""
+    visited = frontier = {seed}
+    for _ in range(hops - 1):
+        nxt = set()
+        for s, d, _, t in edges:
+            if t in exclude:
+                continue
+            if s in frontier:
+                nxt.add(d)
+            if not follow_dst_only and d in frontier:
+                nxt.add(s)
+        frontier = nxt - visited
+        visited = visited | frontier
+    sub = {e for e in edges if e[0] in visited or e[1] in visited}
+    return sub, {e[0] for e in sub} | {e[1] for e in sub}
+
+
+def random_multigraph(seed, as_id):
+    """User edges (RT/JC) with cycles and self-loops, HT edges from
+    users to tag nodes, and exact duplicate rows; ids rendered by
+    ``as_id``. Tags reach the frontier only when HT edges are hopped,
+    and users behind a tag only when edges are also followed back."""
+    import random
+
+    rng = random.Random(seed)
+    users, tags = range(24), range(100, 108)
+    edges = [
+        (as_id(rng.choice(users)), as_id(rng.choice(users)), float(rng.randint(1, 3)), rng.choice(["RT", "JC"]))
+        for _ in range(60)
+    ]
+    edges += [(as_id(u), as_id(u), 1.0, "RT") for u in users if u % 7 == 0]
+    edges += [(as_id(u), as_id(t), 1.0, "HT") for u in users for t in rng.sample(tags, rng.randint(0, 2))]
+    return edges + rng.sample(edges, 12)
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+@pytest.mark.parametrize("follow_dst_only", [True, False])
+def test_k_hop_neighborhood_matches_python_reference(spark, id_type, follow_dst_only):
+    as_id = str if id_type == "string" else int
+    edges = random_multigraph(7, as_id)
+    assert len(set(edges)) < len(edges)
+    df = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}, w double, type string")
+    # a seed with out-edges at every depth, and one absent from the
+    # graph at one depth; the CLI passes the seed as a string whatever
+    # the id type
+    seed = next(s for s, _, _, t in edges if t == "RT")
+    cases = [(seed, hops) for hops in range(1, 5)] + [(as_id(999), 3)]
+    for start, hops in cases:
+        for exclude in ((), ("HT",)):
+            g = k_hop_neighborhood(
+                df, str(start), hops=hops, follow_dst_only=follow_dst_only,
+                exclude_types_from_hop=exclude,
+            )
+            want_edges, want_ids = python_neighborhood(edges, start, hops, follow_dst_only, exclude)
+            case = (start, hops, exclude)
+            got = [tuple(r) for r in g.edges.collect()]
+            assert len(got) == len(set(got)), case  # duplicate input rows once
+            assert set(got) == want_edges, case
+            assert {r["id"] for r in g.vertices.collect()} == want_ids, case
+            assert g.vertices.schema["id"].dataType == df.schema["src"].dataType
+    # the reference itself: the absent seed's neighborhood is empty, and
+    # some case above reaches past hop 1 through both tags and users
+    assert python_neighborhood(edges, as_id(999), 3, False, ()) == (set(), set())
+    deep = python_neighborhood(edges, seed, 4, False, ())[1]
+    assert deep - python_neighborhood(edges, seed, 1, False, ())[1]
+    assert any(as_id(t) in deep for t in range(100, 108))
+
+
+# --- the graph core's uniqueness invariant -----------------------------------
+
+
+def _post(uid, tags=None):
+    return {
+        "user": {"id": uid},
+        "text": "t",
+        "hashtagEntities": None if tags is None else [{"text": t} for t in tags],
+        "hashtagEntitiesArray": tags,
+    }
+
+
+def _tweet(uid, tags=None, rt=None):
+    return {**_post(uid, tags), "retweeted_status": rt}
+
+
+# the same tags again and again: across case and accents inside one
+# post and across posts, through retweets credited to the author, and
+# through u12 retweeting itself; u10 and u13 end with equal tag sets
+REPEATS = [
+    _tweet(10, ["Café", "CAFE", "café"]),
+    _tweet(10, ["cafe", "Spark"]),
+    _tweet(11, rt=_post(10, ["Café", "SPARK"])),
+    _tweet(11, rt=_post(10, ["Café", "SPARK"])),
+    _tweet(12, ["Ümlaut", "umlaut", "spark"]),
+    _tweet(12, rt=_post(12, ["UMLAUT", "Spark"])),
+    _tweet(13, ["SPARK", "Cafe"], rt=_post(10, ["café"])),
+    _tweet(14, rt=_post(13, None)),
+]
+
+
+def python_report(records, threshold=0.5):
+    """bi_report without Spark: {user: (hashtags, retweeted_users,
+    retweeting_users, jaccard_users)} for every user with tags."""
+    fold = str.maketrans("éü", "eu")
+    tags, rts = defaultdict(set), set()
+    for r in records:
+        rs = r["retweeted_status"]
+        for post in (r, rs):
+            if post is not None and post["hashtagEntitiesArray"] is not None:
+                tags[str(post["user"]["id"])] |= {t.lower().translate(fold) for t in post["hashtagEntitiesArray"]}
+        if rs is not None:
+            rts.add((str(rs["user"]["id"]), str(r["user"]["id"])))
+    jc = defaultdict(set)
+    for a, b in combinations(sorted(tags), 2):
+        shared = tags[a] & tags[b]
+        if len(shared) >= 2 and len(shared) / len(tags[a] | tags[b]) > threshold:
+            jc[a].add(b)
+            jc[b].add(a)
+
+    def listed(xs):
+        return "[" + ",".join(sorted(xs)) + "]"
+
+    return {
+        u: (listed(ts), listed(d for s, d in rts if s == u), listed(s for s, d in rts if d == u), listed(jc[u]))
+        for u, ts in tags.items()
+        if ts
+    }
+
+
+@pytest.fixture(scope="module")
+def repeat_pipe(spark):
+    with TweetGraphPipeline(spark, tweets=spark.createDataFrame(REPEATS, TWEET_SCHEMA)) as p:
+        yield p
+
+
+@pytest.mark.parametrize("corpus", ["pipe", "repeat_pipe"])
+def test_core_edges_are_unique_and_ht_rows_are_counts(request, corpus):
+    p = request.getfixturevalue(corpus)
+    edges = [tuple(r) for r in p.full_graph().edges.collect()]
+    assert len(edges) == len(set(edges))
+    counted = (
+        p.user_hashtags()
+        .select(F.col("id").alias("src"), F.explode("hts").alias("dst"))
+        .groupBy("src", "dst")
+        .count()
+    )
+    want = sorted((r["src"], r["dst"], float(r["count"]), "HT") for r in counted.collect())
+    assert sorted(e for e in edges if e[3] == "HT") == want
+
+
+def test_bi_report_matches_python_report_with_a_self_retweet(repeat_pipe):
+    got = {r["user"]: tuple(r)[1:] for r in repeat_pipe.bi_report().collect()}
+    want = python_report(REPEATS)
+    assert got == want
+    # u12 retweeted itself: it is in both of its own RT columns
+    assert want["12"][1:3] == ("[12]", "[12]")
+    assert want["10"] == ("[cafe,spark]", "[11,13]", "[]", "[13]")
+
+
+def test_neighborhood_build_and_report_sink_job_fences(spark, tweets_df, tmp_path):
+    sc = spark.sparkContext
+    with TweetGraphPipeline(spark, tweets=tweets_df) as p:
+        p.full_graph()  # the core, as the CLI's first graph artifact builds it
+        try:
+            sc.setJobGroup("fence_neighborhood", "fence_neighborhood")
+            p.neighborhood("1", hops=2)
+            sc.setJobGroup("fence_report_sink", "fence_report_sink")
+            write_single_csv(p.bi_report(), str(tmp_path / "report.csv"), sep=";", audit_null_cols=["user"])
+        finally:
+            sc._jsc.clearJobGroup()
+    # two shuffles (the hop's distinct, the subgraph's), three
+    # broadcasts (the seed for the hop and the anti-join, the visited
+    # ids for the subgraph filter) and the checkpoint
+    assert len(sc.statusTracker().getJobIdsForGroup("fence_neighborhood")) <= 6
+    # the map's shuffle, the partner aggregate's shuffle and broadcast,
+    # the write
+    assert len(sc.statusTracker().getJobIdsForGroup("fence_report_sink")) <= 4

@@ -10,7 +10,7 @@ import json
 
 import pytest
 
-from tools.stage_attr import attribute, parse_groups
+from tools.stage_attr import attribute, parse_groups, stage_scopes
 
 
 def _write_log(tmp_path, events):
@@ -27,7 +27,14 @@ def _job_start(group, stage_ids):
     }
 
 
-def _stage_done(sid, name, sub_ms, comp_ms, tasks=32):
+def _rdd(rid, scope=None):
+    rdd = {"RDD ID": rid, "Name": "MapPartitionsRDD"}
+    if scope is not None:
+        rdd["Scope"] = json.dumps({"id": str(rid), "name": scope})
+    return rdd
+
+
+def _stage_done(sid, name, sub_ms, comp_ms, tasks=32, rdds=()):
     return {
         "Event": "SparkListenerStageCompleted",
         "Stage Info": {
@@ -36,8 +43,23 @@ def _stage_done(sid, name, sub_ms, comp_ms, tasks=32):
             "Submission Time": sub_ms,
             "Completion Time": comp_ms,
             "Number of Tasks": tasks,
+            "RDD Info": list(rdds),
         },
     }
+
+
+# a classic createDataFrame over a Python list, as Spark logs it: RDD
+# Info in no particular order, the PythonRDD without a scope, and one
+# scope shared by two RDDs
+PYTHON_WORKER_RDDS = [
+    _rdd(6, "WriteFiles"),
+    _rdd(0, "parallelize"),
+    _rdd(2, "mapPartitions"),
+    _rdd(5, "WholeStageCodegen (1)"),
+    _rdd(4, "mapPartitions"),
+    _rdd(1),
+    _rdd(3, "map"),
+]
 
 
 @pytest.fixture()
@@ -51,9 +73,9 @@ def log_dir(tmp_path):
         _job_start("q1#rep1", [2, 3]),
         _stage_done(2, "scan parquet", 5000, 5500),
         _stage_done(3, "exchange hashpartitioning", 5500, 5750),
-        # q2 rep0 only (no warm rep recorded)
+        # q2 rep0 only (no warm rep recorded), one Python-worker stage
         _job_start("q2#rep0", [4]),
-        _stage_done(4, "scan parquet", 6000, 6400),
+        _stage_done(4, "$anonfun$withThreadLocalCaptured$2", 6000, 6400, rdds=PYTHON_WORKER_RDDS),
         # a stage with no group (driver-side job) must be ignored
         _stage_done(9, "orphan", 0, 99999),
         # torn tail line of an .inprogress log must be skipped
@@ -71,6 +93,19 @@ def test_parse_groups_links_stages_to_job_groups(log_dir):
     rows = groups["q1#rep0"]
     assert [r["sec"] for r in rows] == [2.0, 1.0]
     assert rows[0]["stage"] == "scan parquet" and rows[0]["tasks"] == 32
+
+
+def test_stage_rows_name_the_rdd_scopes_they_run(log_dir):
+    groups = parse_groups(log_dir)
+    # creation order, each name once, scopeless RDDs skipped
+    assert groups["q2#rep0"][0]["scopes"] == [
+        "parallelize", "mapPartitions", "map", "WholeStageCodegen (1)", "WriteFiles",
+    ]
+    # empty or missing RDD Info: no scopes
+    assert groups["q1#rep0"][0]["scopes"] == []
+    assert stage_scopes({}) == []
+    torn = {"RDD Info": [{"RDD ID": 1, "Scope": '{"id":'}, {"RDD ID": 2, "Scope": '"x"'}]}
+    assert stage_scopes(torn) == []
 
 
 def test_attribute_picks_fastest_warm_rep(log_dir):

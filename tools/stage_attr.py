@@ -18,6 +18,13 @@ completion times, needing no UI, REST endpoint, or py4j listener.
     python tools/stage_attr.py /tmp/spark-graft-eventlog [query ...]
 
 prints, per query, the fastest rep's stages sorted by wall time.
+
+Under AQE every stage is named after the thread that submits it
+(``$anonfun$withThreadLocalCaptured...``), so each stage row also lists
+the RDD scopes it runs (``Stage Info`` -> ``RDD Info`` -> ``Scope``):
+``Exchange``, ``WholeStageCodegen (2)``, ``BatchEvalPython``, or
+``parallelize`` + ``mapPartitions`` for a Python-worker job such as a
+``createDataFrame`` over a Python list.
 """
 
 from __future__ import annotations
@@ -72,12 +79,28 @@ def _event_lines(log_dir: str):
                     continue  # torn tail line of an .inprogress log
 
 
+def stage_scopes(info: dict) -> list[str]:
+    """Distinct RDD scope names of one ``Stage Info``, in RDD-id
+    (creation) order. RDDs without a scope, or with a torn one, are
+    skipped."""
+    names: list[str] = []
+    for rdd in sorted(info.get("RDD Info") or [], key=lambda r: r.get("RDD ID", 0)):
+        try:
+            name = json.loads(rdd.get("Scope") or "{}").get("name")
+        except (json.JSONDecodeError, AttributeError):
+            continue
+        if name and name not in names:
+            names.append(name)
+    return names
+
+
 def parse_groups(log_dir: str) -> dict[str, list[dict]]:
     """Map job-group id -> list of stage rows for stages run under it.
 
     Stage row: {"stage": name, "id": stageId, "sec": wall seconds,
-    "tasks": numTasks}. A stage submitted by several jobs of the same
-    group is counted once (first completion wins).
+    "tasks": numTasks, "scopes": stage_scopes}. A stage submitted by
+    several jobs of the same group is counted once (first completion
+    wins).
     """
     stage_to_group: dict[int, str] = {}
     rows: dict[str, dict[int, dict]] = defaultdict(dict)
@@ -103,6 +126,7 @@ def parse_groups(log_dir: str) -> dict[str, list[dict]]:
                     "id": sid,
                     "sec": round((comp - sub) / 1000.0, 3),
                     "tasks": info.get("Number of Tasks", 0),
+                    "scopes": stage_scopes(info),
                 },
             )
     return {g: sorted(d.values(), key=lambda r: -r["sec"]) for g, d in rows.items()}

@@ -67,18 +67,18 @@ def degrees(edges: DataFrame) -> DataFrame:
 def filter_edges_by_nodes(
     edges: DataFrame, node_ids: DataFrame, types: list[str] | None = None
 ) -> DataFrame:
-    """Edges incident to any node in ``node_ids`` (a 1-column ``id`` frame).
+    """Distinct edges incident to any node in ``node_ids`` (a 1-column
+    frame).
 
     The reference builds ``src in (...) OR dst in (...)`` strings from a
     Python list (RetweetTagsJaccardGraph.py:262-263,270-272) which caps
-    the frontier at what fits in a SQL string. A semi-join frontier has
-    no such cap; when the frontier is small Spark broadcasts it
-    automatically.
+    the frontier at what fits in a SQL string. Here the same predicate
+    takes ``node_ids`` as an IN-subquery: one pass over the edges with
+    two existence joins (the id side broadcast when small), no cap.
+    The ``distinct()`` makes repeated input rows come back once.
     """
-    ids = node_ids.select(F.col(node_ids.columns[0]).alias("id")).distinct()
-    hit_src = edges.join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
-    hit_dst = edges.join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
-    out = hit_src.unionByName(hit_dst).distinct()
+    ids = node_ids.select(node_ids.columns[0])
+    out = edges.where(F.col("src").isin(ids) | F.col("dst").isin(ids)).distinct()
     if types is not None:
         out = out.where(F.col("type").isin(types))
     return out
@@ -97,8 +97,17 @@ def k_hop_neighborhood(
     (RetweetTagsJaccardGraph.py:252-276), which collects hop-1 edges to
     the driver, loops in Python, and re-filters with a string IN-list —
     two jobs with a driver bottleneck proportional to the frontier.
-    Here the frontier stays a DataFrame joined back against the edge
-    table per hop; each hop is one semi-join (broadcast when small).
+    Here the frontier stays a DataFrame: each hop takes the ``dst`` of
+    the edges whose ``src`` is IN the frontier (without
+    ``follow_dst_only``, also the ``src`` of those whose ``dst`` is) —
+    IN-subqueries, planned as semi-joins and broadcast when small — and
+    a ``left_anti`` join drops the visited ids. The two directions stay
+    two filters: one ``src IN f OR dst IN f`` plans as existence joins
+    that re-run every earlier hop's jobs at three hops and more. The
+    anti-join is kept over ``NOT IN`` because ``NOT IN`` is null-aware:
+    one null frontier id would empty every later hop. The seed is a
+    one-row JVM literal cast to the type of ``src``, so no Python list
+    reaches ``createDataFrame`` and no Python worker starts.
 
     Reference quirks preserved behind flags (SURVEY.md §7.4):
     - ``follow_dst_only``: the reference's loop appends only row["dst"]
@@ -112,24 +121,21 @@ def k_hop_neighborhood(
     """
     if hops < 1:
         raise ValueError(f"hops must be >= 1, got {hops}")
-    frontier = edges.sparkSession.createDataFrame([(seed_id,)], "id string")
+    seed = F.lit(seed_id).cast(edges.schema["src"].dataType).alias("id")
+    frontier = edges.sparkSession.range(1, numPartitions=1).select(seed)
     visited = frontier
+    hoppable = edges
+    if exclude_types_from_hop:
+        hoppable = edges.where(~F.col("type").isin(list(exclude_types_from_hop)))
     for _ in range(hops - 1):
-        hop_edges = edges.join(
-            frontier.withColumnRenamed("id", "src"), "src", "left_semi"
-        )
+        nxt = hoppable.where(F.col("src").isin(frontier)).select(F.col("dst").alias("id"))
         if not follow_dst_only:
-            back_edges = edges.join(
-                frontier.withColumnRenamed("id", "dst"), "dst", "left_semi"
-            )
-            hop_edges = hop_edges.unionByName(back_edges)
-        if exclude_types_from_hop:
-            hop_edges = hop_edges.where(~F.col("type").isin(list(exclude_types_from_hop)))
-        nxt = hop_edges.select(F.col("dst").alias("id"))
-        if not follow_dst_only:
-            nxt = nxt.unionByName(hop_edges.select(F.col("src").alias("id")))
+            back = hoppable.where(F.col("dst").isin(frontier)).select(F.col("src").alias("id"))
+            nxt = nxt.unionByName(back)
+        # distinct and disjoint from ``visited`` (bar null ids, which
+        # match nothing), so the union needs no distinct() of its own
         frontier = nxt.distinct().join(visited, "id", "left_anti")
-        visited = visited.unionByName(frontier).distinct()
+        visited = visited.unionByName(frontier)
     sub_edges = filter_edges_by_nodes(edges, visited)
     return Graph(vertices_from_edges(sub_edges), sub_edges)
 

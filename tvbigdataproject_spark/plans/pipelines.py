@@ -5,16 +5,24 @@ Reference behaviors reproduced (with file:line citations throughout);
 deliberate divergences, per SURVEY.md §7.4:
 - weights and similarity scores are numeric, not strings (the reference's
   five untyped UDFs defaulted to StringType, §1.4.1-3);
-- the BI report's disjunctive JC join is rewritten as a two-orientation
-  equi-join (same rows, hash join instead of BroadcastNestedLoopJoin);
+- the BI report's three join rounds, the last a disjunctive JC join,
+  are rewritten as one two-orientation union feeding one aggregate
+  (same rows, no BroadcastNestedLoopJoin);
 - no repartition(1) sinks, no driver-side collect loops, no GraphFrames.
 
 Lifetime: the reference builds its full graph once, in the
 RetweetTagsJaccardGraph constructor (:29-46), and exports it several
 ways. ``TweetGraphPipeline`` does the same per instance: the first
-graph artifact checkpoints the hashtag map and the distinct RT + HT +
-JC edge table, and every graph artifact reads those two leaves until
+graph artifact checkpoints the hashtag map and the RT + HT + JC edge
+table, and every graph artifact reads those two leaves until
 ``close()`` frees them. The per-edge-type methods stay lazy plans.
+
+Uniqueness the graph core relies on instead of exchanges: the map has
+one row per user id and a duplicate-free tag set per row; RT rows are
+one per (src, dst) after their groupBy-count, JC rows one per pair
+after ``pair_candidates``' groupBy, HT rows one per (user, tag) by the
+map's own invariant; and the three types differ in ``type``. So the
+edge table has no duplicate row without a final ``distinct()``.
 """
 
 from __future__ import annotations
@@ -47,8 +55,8 @@ class TweetGraphPipeline:
     methods (``retweet_edges``, ``user_hashtags``, ``hashtag_edges``,
     ``jaccard_edges``) and ``word_cloud_corpus`` return lazy plans over
     the tweets. ``full_graph``, ``bi_report`` and ``neighborhood`` read
-    the graph core instead: the hashtag map and the distinct edge
-    table, checkpointed once, on the first call to any of them, and
+    the graph core instead: the hashtag map and the edge table,
+    checkpointed once, on the first call to any of them, and
     held by the pipeline (``neighborhood`` also checkpoints its
     subgraph edges). Frames those three return stay valid until
     ``close()``, which frees every block the pipeline made; use the
@@ -87,7 +95,7 @@ class TweetGraphPipeline:
         self._core = None
 
     def _graph_core(self) -> tuple[DataFrame, DataFrame]:
-        """(hashtag map, distinct RT ∪ HT ∪ JC edges), both checkpointed
+        """(hashtag map, RT ∪ HT ∪ JC edges), both checkpointed
         in the pipeline's scope on first use — the reference's gFull,
         built once in its constructor (:29-46)."""
         if self._core is None:
@@ -160,11 +168,15 @@ class TweetGraphPipeline:
         return self._hashtag_edges(self.user_hashtags())
 
     def _hashtag_edges(self, mapping: DataFrame) -> DataFrame:
-        return (
-            mapping.select("id", F.explode("hts").alias("tag"))
-            .groupBy(F.col("id").alias("src"), F.col("tag").alias("dst"))
-            .agg(F.count(F.lit(1)).cast("double").alias("w"))
-            .withColumn("type", F.lit("HT"))
+        """The reference's explode + groupBy-count as a projection.
+        ``mapping`` is unique on ``id`` (a groupBy key) and each ``hts``
+        went through ``array_distinct`` (``normalize_tags``), so every
+        (id, tag) pair occurs once and its count is always 1."""
+        return mapping.select(
+            F.col("id").alias("src"),
+            F.explode("hts").alias("dst"),
+            F.lit(1.0).alias("w"),
+            F.lit("HT").alias("type"),
         )
 
     # --- Q3: Jaccard graph (reference :136-192) ---------------------------
@@ -206,78 +218,78 @@ class TweetGraphPipeline:
     # --- Q4: full graph (reference :37-46) --------------------------------
 
     def _graph_edges(self, mapping: DataFrame) -> DataFrame:
-        """Distinct RT ∪ HT ∪ JC edges, the HT and JC parts over
-        ``mapping`` (reference :39-46)."""
+        """RT ∪ HT ∪ JC edges, the HT and JC parts over ``mapping``
+        (reference :39-46). The reference's ``distinct()`` is dropped:
+        each part is unique on (src, dst) and the parts differ in
+        ``type``, so no row repeats (see the module docstring)."""
         return (
             self.retweet_edges()
             .unionByName(self._hashtag_edges(mapping))
             .unionByName(self._jaccard_edges(mapping))
-            .distinct()
         )
 
     def full_graph(self) -> Graph:
         """Union of RT + HT + JC edges and their induced vertices
-        (reference :39-46; .distinct() on both unions), read from the
-        checkpointed core."""
+        (reference :39-46; its ``.distinct()`` on the edges is a no-op
+        here, on the vertices it stays), read from the checkpointed
+        core."""
         edges = self._graph_core()[1]
         return Graph(vertices_from_edges(edges), edges)
 
     # --- Q5: BI report (reference :194-243) -------------------------------
 
     def bi_report(self) -> DataFrame:
-        """Per-user denormalized report: hashtags, who they retweeted,
-        who retweeted them, and their JC partners — as '[a,b,c]' strings.
+        """Per-user denormalized report: hashtags, who retweeted them,
+        whom they retweeted, and their JC partners — as '[a,b,c]' strings.
 
-        Reference :207-243. The final join there matches JC edges with a
-        disjunctive predicate ``(user==dst) | (user==src)`` which forces
-        a BroadcastNestedLoopJoin (:225-227); rewritten here by exploding
-        each JC edge into both orientations and equi-joining — identical
-        matches, hash join (SURVEY.md J5).
+        Reference :207-243 runs three join + groupBy rounds, the last
+        with a disjunctive ``(user==dst) | (user==src)`` JC predicate
+        that forces a BroadcastNestedLoopJoin (:225-227). Here the core's
+        RT and JC rows are unioned in both orientations, each row tagged
+        with its type and direction, and one ``groupBy(id)`` collects
+        the three partner sets with ``collect_set(when(...))``; one left
+        join puts them on the hashtag map (one row per user). A
+        self-retweet lands in both RT sets, as in the reference.
 
-        Reads the core: the RT and JC rows are the core's rows of that
-        type, since each type is unique on (src, dst) before the union
-        and ``distinct()`` cannot merge rows of different types.
+        Relies on the core's rows of each type being the rows of that
+        edge type: each type is unique on (src, dst), so the core holds
+        them without a ``distinct()`` (see the module docstring).
         """
         mapping, edges = self._graph_core()
-        rt = edges.where(F.col("type") == "RT")
-
-        # users I retweeted: I am dst in (src → dst = retweeter)... the
-        # reference joins mapping.id == rt.src first (:207-208): users
-        # whose posts I forwarded ⇒ collect src's partners as "retweeted
-        # users" per :212-213 semantics (collect_set of dst).
-        retweeted_of_me = (
-            mapping.join(rt, mapping.id == rt.src, "left")
-            .groupBy("id", "hts")
-            .agg(F.collect_set("dst").alias("retweeted_me"))
-        )
-        i_retweeted = (
-            retweeted_of_me.join(rt, retweeted_of_me.id == rt.dst, "left")
-            .groupBy("id", "hts", "retweeted_me")
-            .agg(F.collect_set("src").alias("i_retweeted"))
-        )
-
-        jc = edges.where(F.col("type") == "JC")
-        jc_both = jc.select(F.col("src").alias("id"), F.col("dst").alias("partner")).unionByName(
-            jc.select(F.col("dst").alias("id"), F.col("src").alias("partner"))
-        )
-        jc_partners = jc_both.groupBy("id").agg(F.collect_set("partner").alias("jc_partners"))
-
-        report = (
-            i_retweeted.join(jc_partners, "id", "left")
-            .withColumn("jc_partners", F.coalesce(F.col("jc_partners"), F.array()))
-            .select(
-                F.col("id").alias("user"),
-                # collect_set order is nondeterministic — the reference
-                # stringifies it as-is (bigdata/__init__.py:23, used at
-                # :237-240) so its CSV cell contents vary run to run;
-                # sorting first makes the report reproducible.
-                array_to_string(F.array_sort(F.col("hts"))).alias("hashtags"),
-                array_to_string(F.array_sort(F.col("retweeted_me"))).alias("retweeted_users"),
-                array_to_string(F.array_sort(F.col("i_retweeted"))).alias("retweeting_users"),
-                array_to_string(F.array_sort(F.col("jc_partners"))).alias("jaccard_users"),
+        ties = edges.where(F.col("type").isin("RT", "JC"))
+        # out=True: the row as stored (src → dst); out=False: reversed.
+        # An RT edge runs from the original author to the retweeter.
+        links = ties.select(
+            F.col("src").alias("id"), F.col("dst").alias("partner"), "type", F.lit(True).alias("out")
+        ).unionByName(
+            ties.select(
+                F.col("dst").alias("id"), F.col("src").alias("partner"), "type", F.lit(False).alias("out")
             )
         )
-        return report
+        is_rt = F.col("type") == "RT"
+        partner_sets = {
+            "retweeted_me": is_rt & F.col("out"),
+            "i_retweeted": is_rt & ~F.col("out"),
+            "jc_partners": F.col("type") == "JC",
+        }
+        per_user = links.groupBy("id").agg(
+            *[F.collect_set(F.when(cond, F.col("partner"))).alias(name) for name, cond in partner_sets.items()]
+        )
+
+        def listed(name: str):
+            # collect_set order is nondeterministic — the reference
+            # stringifies it as-is (bigdata/__init__.py:23, used at
+            # :237-240) so its CSV cell contents vary run to run;
+            # sorting first makes the report reproducible.
+            return array_to_string(F.array_sort(F.coalesce(F.col(name), F.array())))
+
+        return mapping.join(per_user, "id", "left").select(
+            F.col("id").alias("user"),
+            array_to_string(F.array_sort(F.col("hts"))).alias("hashtags"),
+            listed("retweeted_me").alias("retweeted_users"),
+            listed("i_retweeted").alias("retweeting_users"),
+            listed("jc_partners").alias("jaccard_users"),
+        )
 
     # --- Q6: word-cloud corpus (reference bigdata/__init__.py:73-94) ------
 
