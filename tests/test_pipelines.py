@@ -4,6 +4,7 @@ see SURVEY.md §2.11 for the reference composition each mirrors."""
 
 from __future__ import annotations
 
+import random
 from collections import defaultdict
 from itertools import combinations
 
@@ -11,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.graph import k_hop_neighborhood
-from tvbigdataproject_spark.operators.materialize import persistent_ids
+from tvbigdataproject_spark.operators.materialize import Scope, persistent_ids
 from tvbigdataproject_spark.plans import TweetGraphPipeline
 from tvbigdataproject_spark.schemas import TWEET_SCHEMA
 from tvbigdataproject_spark.sources.io import write_single_csv
@@ -419,3 +420,78 @@ def test_neighborhood_build_and_report_sink_job_fences(spark, tweets_df, tmp_pat
     # the map's shuffle, the partner aggregate's shuffle and broadcast,
     # the write
     assert len(sc.statusTracker().getJobIdsForGroup("fence_report_sink")) <= 4
+
+
+def test_full_graph_build_job_fence(spark, tweets_df):
+    sc = spark.sparkContext
+    with TweetGraphPipeline(spark, tweets=tweets_df) as p:
+        try:
+            sc.setJobGroup("fence_full_graph", "fence_full_graph")
+            p.full_graph()
+        finally:
+            sc._jsc.clearJobGroup()
+    # the map and edge checkpoints, JC as one self-join and one count:
+    # measured 6; JC through pair_candidates and two array joins took 9
+    assert len(sc.statusTracker().getJobIdsForGroup("fence_full_graph")) <= 6
+
+
+# --- JC against a plain-Python Jaccard ---------------------------------------
+
+# every positive one is the exact weight of some pair in the corpora
+THRESHOLDS = (0.0, 1 / 4, 1 / 3, 0.4, 1 / 2, 2 / 3)
+# ten tags after case and accent folding
+VOCAB = ["spark", "Spark", "café", "CAFE", "graph", "jvm", "icu", "tag", "join", "sql", "udf", "data"]
+
+
+def random_corpus(seed):
+    """Thirty users with one or two posts of one to four tags each;
+    some users retweet a post whose tags go to its author."""
+    rng = random.Random(seed)
+    records = []
+    for uid in range(1, 31):
+        for _ in range(rng.randint(1, 2)):
+            records.append(_tweet(uid, rng.sample(VOCAB, rng.randint(1, 4))))
+        if rng.random() < 0.2:
+            records.append(_tweet(uid, rt=_post(rng.randint(1, 30), rng.sample(VOCAB, 2))))
+    return records
+
+
+def python_jaccard(sets, threshold):
+    """Sorted (src, dst, w.hex()) JC rows over {id: tag set}: pairs
+    sharing at least two tags, the greater id as the source."""
+    rows = []
+    for a, b in combinations(sorted(sets), 2):
+        shared = len(sets[a] & sets[b])
+        w = shared / len(sets[a] | sets[b])
+        if shared >= 2 and w > threshold:
+            rows.append((b, a, w.hex()))
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "shuffle_hash"])
+def test_jaccard_edges_match_python_jaccard(spark, broadcast):
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(conf)
+    weights = set()
+    try:
+        if not broadcast:
+            spark.conf.set(conf, "-1")
+        for seed in range(5):
+            tweets = spark.createDataFrame(random_corpus(seed), TWEET_SCHEMA)
+            with Scope() as scope:
+                # the map as the core holds it: a checkpoint, which the
+                # broadcast gate measures
+                mapping = scope.checkpoint(TweetGraphPipeline(spark, tweets=tweets).user_hashtags())
+                sets = {r["id"]: set(r["hts"]) for r in mapping.collect()}
+                weights |= {float.fromhex(w) for _, _, w in python_jaccard(sets, -1.0)}
+                for t in THRESHOLDS:
+                    jc = TweetGraphPipeline(spark, tweets=tweets, jaccard_threshold=t)._jaccard_edges(mapping)
+                    plan = jc._jdf.queryExecution().executedPlan().toString()
+                    assert ("BroadcastHashJoin" in plan) is broadcast
+                    got = jc.collect()
+                    assert sorted((r["src"], r["dst"], r["w"].hex()) for r in got) == python_jaccard(sets, t), (seed, t)
+                    assert all(r["type"] == "JC" for r in got)
+    finally:
+        spark.conf.set(conf, before)
+    # the strict > is tested at a tie on every positive threshold
+    assert set(THRESHOLDS[1:]) <= weights

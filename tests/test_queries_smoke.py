@@ -31,3 +31,23 @@ def test_entry_contract(spark):
     qs, sqls = E.queries(), E.oracle_sql()
     assert set(sqls) <= set(qs)
     assert len(qs) == len(REGISTRY)
+
+
+def test_literal_tables_launch_no_python_worker(spark, monkeypatch):
+    # a classic createDataFrame over a Python list goes through
+    # SparkContext.parallelize and runs through Python workers; these
+    # queries build their few-row reference tables as VALUES literals
+    from pyspark import SparkContext
+
+    calls = []
+    real = SparkContext.parallelize
+
+    def spy(self, *args, **kwargs):
+        calls.append(args[:1])
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkContext, "parallelize", spy)
+    for name in ("null_safe_join_segments", "range_join_bands", "benford_price_audit"):
+        # built fresh, not from the session memo, so the build is spied on
+        assert REGISTRY[name].fn(spark, SF_DIR).count() > 0, name
+    assert calls == []

@@ -20,9 +20,12 @@ table, and every graph artifact reads those two leaves until
 Uniqueness the graph core relies on instead of exchanges: the map has
 one row per user id and a duplicate-free tag set per row; RT rows are
 one per (src, dst) after their groupBy-count, JC rows one per pair
-after ``pair_candidates``' groupBy, HT rows one per (user, tag) by the
-map's own invariant; and the three types differ in ``type``. So the
-edge table has no duplicate row without a final ``distinct()``.
+after the shared-tag count's groupBy, HT rows one per (user, tag) by
+the map's own invariant; and the three types differ in ``type``. So
+the edge table has no duplicate row without a final ``distinct()``.
+The same invariant makes JC's count exact: every (user, tag) row
+occurs once, so the join on the tag counts ``|A ∩ B|`` once per shared
+tag.
 """
 
 from __future__ import annotations
@@ -30,21 +33,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.functions import (
-    array_to_string,
-    cnt_distinct_elems,
-    cnt_intersection,
-    jaccard,
-    normalize_tags,
-)
+from tvbigdataproject_spark.functions import array_to_string, normalize_tags
 from tvbigdataproject_spark.functions.text import simple_clean
 from tvbigdataproject_spark.operators.graph import (
     Graph,
     k_hop_neighborhood,
-    pair_candidates,
     vertices_from_edges,
 )
-from tvbigdataproject_spark.operators.materialize import Scope
+from tvbigdataproject_spark.operators.materialize import Scope, fits_broadcast
+from tvbigdataproject_spark.operators.skew import shuffle_partition_count
 from tvbigdataproject_spark.sources.io import read_tweets
 
 
@@ -187,29 +184,44 @@ class TweetGraphPipeline:
         Reference mechanism: GraphFrames motif for "pairs sharing ≥2
         hashtags" (:158-165) → two joins to attach hashtag lists
         (:168-172) → string-typed jaccard UDF + threshold filter
-        (:177-183). Here: pair_candidates (self-join + count gate) →
-        attach sets → native double-typed jaccard → threshold.
-        The candidate gate is the reference's own algorithmic idea —
-        kept, with the motif machinery deleted.
+        (:177-183). Here: one self-join of the exploded map on the tag,
+        each side carrying its set size, and one count per pair. The
+        count is ``|A ∩ B|`` (each user's tags are distinct), the gate
+        keeps pairs sharing ≥ 2 tags — the reference's own algorithmic
+        idea, kept, with the motif machinery deleted — and
+        ``|A ∪ B| = |A| + |B| - |A ∩ B|``. Both are integers, so the
+        double weight is bit-identical to ``functions.jaccard`` over
+        the two arrays; the threshold filter stays strict ``>``.
         """
         return self._jaccard_edges(self.user_hashtags())
 
     def _jaccard_edges(self, mapping: DataFrame) -> DataFrame:
-        tag_edges = mapping.select("id", F.explode("hts").alias("tag"))
-        cands = pair_candidates(tag_edges, min_shared=2, src_col="id", item_col="tag")
-        a = mapping.select(F.col("id").alias("id_a"), F.col("hts").alias("hts_a"))
-        b = mapping.select(F.col("id").alias("id_b"), F.col("hts").alias("hts_b"))
-        # pair_candidates emits id_a < id_b; the reference's motif filter
-        # keeps c.id > d.id and exports src=c.id, dst=d.id (:164-185), so
-        # the greater id is the edge source.
-        scored = (
-            cands.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                F.col("id_b").alias("src"),
-                F.col("id_a").alias("dst"),
-                jaccard(F.col("hts_a"), F.col("hts_b")).alias("w"),
+        tags = mapping.select("id", F.size("hts").alias("n"), F.explode("hts").alias("tag"))
+        if fits_broadcast(mapping):
+            a, b = tags, F.broadcast(tags)
+        else:
+            # a hub tag fans out quadratically: pin the parallelism as
+            # pair_candidates does (see skew.shuffle_partition_count)
+            a = b = tags.repartition(shuffle_partition_count(tags), "tag").hint("SHUFFLE_HASH")
+        a, b = a.alias("a"), b.alias("b")
+        shared = (
+            a.join(b, (F.col("a.tag") == F.col("b.tag")) & (F.col("a.id") < F.col("b.id")))
+            .groupBy(
+                F.col("a.id").alias("id_a"),
+                F.col("b.id").alias("id_b"),
+                F.col("a.n").alias("n_a"),
+                F.col("b.n").alias("n_b"),
             )
+            .agg(F.count(F.lit(1)).alias("s"))
+            .where(F.col("s") >= 2)
+        )
+        # the reference's motif filter keeps c.id > d.id and exports
+        # src=c.id, dst=d.id (:164-185), so the greater id is the source
+        union = F.col("n_a") + F.col("n_b") - F.col("s")
+        scored = shared.select(
+            F.col("id_b").alias("src"),
+            F.col("id_a").alias("dst"),
+            (F.col("s").cast("double") / union.cast("double")).alias("w"),
         )
         return scored.where(F.col("w") > self.jaccard_threshold).withColumn(
             "type", F.lit("JC")

@@ -480,9 +480,9 @@ def benford_price_audit(spark, sf_dir):
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("observed"))
     )
-    exp = obs.sparkSession.createDataFrame(
-        [(d + 1, p) for d, p in enumerate(_BENFORD_PPM)], "digit int, ppm long"
-    )
+    # a JVM literal table (createDataFrame would start Python workers)
+    rows = ", ".join(f"({d + 1}, {p}L)" for d, p in enumerate(_BENFORD_PPM))
+    exp = obs.sparkSession.sql(f"SELECT * FROM VALUES {rows} AS exp(digit, ppm)")
     tot = obs.agg(F.sum("observed").cast("long").alias("total"))
     dev = F.coalesce(F.col("observed"), F.lit(0)) * 1000000 - F.col(
         "total"

@@ -169,16 +169,14 @@ def null_safe_join_segments(spark, sf_dir):
         .otherwise(F.col("c_mktsegment"))
         .alias("seg"),
     )
-    ref = spark.createDataFrame(
-        [
-            ("BUILDING", "b2b"),
-            ("AUTOMOBILE", "consumer"),
-            ("MACHINERY", "b2b"),
-            ("HOUSEHOLD", "consumer"),
-            ("FURNITURE", "consumer"),
-            (None, "unknown"),
-        ],
-        "seg string, label string",
+    # an inline VALUES table is a JVM literal; createDataFrame over a
+    # Python list would run a parallelize job through Python workers
+    ref = spark.sql(
+        """SELECT * FROM VALUES
+            ('BUILDING', 'b2b'), ('AUTOMOBILE', 'consumer'),
+            ('MACHINERY', 'b2b'), ('HOUSEHOLD', 'consumer'),
+            ('FURNITURE', 'consumer'), (CAST(NULL AS STRING), 'unknown')
+        AS ref(seg, label)"""
     )
     return (
         labeled.join(F.broadcast(ref), labeled.seg.eqNullSafe(ref.seg))

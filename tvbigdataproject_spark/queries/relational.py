@@ -506,9 +506,11 @@ def range_join_bands(spark, sf_dir):
     broadcast so the inequality join is a broadcast nested-loop over 3
     rows — the only sane physical shape for non-equi conditions."""
     part = read_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
-        [("budget", 0.0, 500.0), ("standard", 500.0, 1200.0), ("premium", 1200.0, 100000.0)],
-        "band string, lo double, hi double",
+    # a JVM literal table (createDataFrame would start Python workers)
+    bands = spark.sql(
+        """SELECT * FROM VALUES
+            ('budget', 0.0D, 500.0D), ('standard', 500.0D, 1200.0D), ('premium', 1200.0D, 100000.0D)
+        AS bands(band, lo, hi)"""
     )
     joined = part.join(
         F.broadcast(bands),

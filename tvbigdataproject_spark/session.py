@@ -12,6 +12,14 @@ factory is a vanilla builder with scale-minded defaults:
   environments (and match the DuckDB oracle).
 - shuffle partitions default small for local runs; on a real cluster pass
   shuffle_partitions≈2-3× total cores (AQE coalesces the excess).
+- ``spark.sql.icu.caseMappings.enabled=false``: ``lower``/``upper`` use
+  the JVM's case mapping, as the reference's Spark 3.5 did, instead of
+  loading ICU, whose first use costs about 1.5 s per JVM. On Spark 4.1
+  with Java 17 the two differ in ``lower()`` on exactly 67 code points:
+  letters added in Unicode 14-16 (U+1C89, U+2C2F, U+A7C0-U+A7DC,
+  U+10570-U+10595, U+10D50-U+10D65), which Java 17 leaves unchanged. None is
+  ASCII or in ``normalize_tags``' translate table, and the context cases
+  (final sigma, İ, ẞ, ǅ) agree; ``tests/test_session.py`` pins the set.
 """
 
 from __future__ import annotations
@@ -56,6 +64,8 @@ def get_spark(
         # Arrow for the few pandas-UDF paths (multimodal, optional NLP).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # JVM case mapping: no ICU load on the first lower() (docstring)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
