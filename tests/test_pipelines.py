@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.graph import k_hop_neighborhood
 from tvbigdataproject_spark.operators.materialize import Scope, persistent_ids
+from tvbigdataproject_spark.operators.skew import shuffle_partition_count
 from tvbigdataproject_spark.plans import TweetGraphPipeline
 from tvbigdataproject_spark.schemas import TWEET_SCHEMA
 from tvbigdataproject_spark.sources.io import write_single_csv
@@ -431,7 +432,8 @@ def test_full_graph_build_job_fence(spark, tweets_df):
         finally:
             sc._jsc.clearJobGroup()
     # the map and edge checkpoints, JC as one self-join and one count:
-    # measured 6; JC through pair_candidates and two array joins took 9
+    # measured 6; JC as a candidate distinct, a self-join and two array
+    # attach joins took 9
     assert len(sc.statusTracker().getJobIdsForGroup("fence_full_graph")) <= 6
 
 
@@ -468,30 +470,42 @@ def python_jaccard(sets, threshold):
     return sorted(rows)
 
 
-@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "shuffle_hash"])
-def test_jaccard_edges_match_python_jaccard(spark, broadcast):
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(conf)
+def join_partitions(df):
+    """(node name, partition count) of the join in ``df``'s executed
+    plan, read after AQE's runtime changes: a coalesced shuffle read
+    under the join shows as fewer partitions."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.endswith("Join"):
+            return name, node.outputPartitioning().numPartitions()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.finalPhysicalPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        else:
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    raise AssertionError("no join in the plan")
+
+
+def test_jaccard_edges_match_python_jaccard(spark):
     weights = set()
-    try:
-        if not broadcast:
-            spark.conf.set(conf, "-1")
-        for seed in range(5):
-            tweets = spark.createDataFrame(random_corpus(seed), TWEET_SCHEMA)
-            with Scope() as scope:
-                # the map as the core holds it: a checkpoint, which the
-                # broadcast gate measures
-                mapping = scope.checkpoint(TweetGraphPipeline(spark, tweets=tweets).user_hashtags())
-                sets = {r["id"]: set(r["hts"]) for r in mapping.collect()}
-                weights |= {float.fromhex(w) for _, _, w in python_jaccard(sets, -1.0)}
-                for t in THRESHOLDS:
-                    jc = TweetGraphPipeline(spark, tweets=tweets, jaccard_threshold=t)._jaccard_edges(mapping)
-                    plan = jc._jdf.queryExecution().executedPlan().toString()
-                    assert ("BroadcastHashJoin" in plan) is broadcast
-                    got = jc.collect()
-                    assert sorted((r["src"], r["dst"], r["w"].hex()) for r in got) == python_jaccard(sets, t), (seed, t)
-                    assert all(r["type"] == "JC" for r in got)
-    finally:
-        spark.conf.set(conf, before)
+    for seed in range(5):
+        tweets = spark.createDataFrame(random_corpus(seed), TWEET_SCHEMA)
+        with Scope() as scope:
+            # the map as the core holds it: a checkpoint (one partition
+            # here, so only a pinned exchange spreads the pair fan-out)
+            mapping = scope.checkpoint(TweetGraphPipeline(spark, tweets=tweets).user_hashtags())
+            sets = {r["id"]: set(r["hts"]) for r in mapping.collect()}
+            weights |= {float.fromhex(w) for _, _, w in python_jaccard(sets, -1.0)}
+            for t in THRESHOLDS:
+                jc = TweetGraphPipeline(spark, tweets=tweets, jaccard_threshold=t)._jaccard_edges(mapping)
+                got = jc.collect()
+                assert sorted((r["src"], r["dst"], r["w"].hex()) for r in got) == python_jaccard(sets, t), (seed, t)
+                assert all(r["type"] == "JC" for r in got)
+                # the tag self-join runs in shuffle_partition_count tasks
+                assert join_partitions(jc) == ("ShuffledHashJoin", shuffle_partition_count(jc)), (seed, t)
     # the strict > is tested at a tie on every positive threshold
     assert set(THRESHOLDS[1:]) <= weights

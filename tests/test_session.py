@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.functions.core import _TRANSLATE_FROM
+from tvbigdataproject_spark.session import tune_for_session
 
 ICU = "spark.sql.icu.caseMappings.enabled"
 
@@ -60,3 +61,13 @@ def test_jvm_and_icu_lower_differ_only_on_new_letters(spark):
 def test_get_spark_turns_icu_case_mapping_off(spark):
     # the suite's session comes from get_spark (conftest)
     assert spark.conf.get(ICU) == "false"
+
+
+def test_tune_for_session_turns_icu_case_mapping_off(spark):
+    # the driver harness's session starts with Spark's default (ICU on)
+    spark.conf.set(ICU, "true")
+    try:
+        tune_for_session(spark)
+        assert spark.conf.get(ICU) == "false"
+    finally:
+        spark.conf.set(ICU, "false")

@@ -146,6 +146,8 @@ def pair_candidates(
     src_col: str = "src",
     item_col: str = "dst",
     max_item_degree: int | None = None,
+    carry: str | None = None,
+    unique: bool = False,
 ) -> DataFrame:
     """Entity pairs sharing ≥ ``min_shared`` distinct items.
 
@@ -156,7 +158,12 @@ def pair_candidates(
     item plus a count gate produces the identical candidate set with
     hash joins.
 
-    Returns (id_a, id_b, shared) with id_a < id_b.
+    Returns (id_a, id_b, shared) with id_a < id_b. ``carry`` names a
+    column that is a function of the entity (e.g. its set size); it
+    rides through the join and comes back as ``<carry>_a`` and
+    ``<carry>_b``. ``unique=True`` says ``item_edges`` already has one
+    row per (entity, item), and skips the ``distinct()`` that makes
+    ``shared`` count distinct items.
 
     Scale note: a hub item with degree d contributes O(d²) pairs — the
     quadratic hazard the reference inherits too (SURVEY.md §7.4).
@@ -165,9 +172,12 @@ def pair_candidates(
     signal); AQE skew-join splitting handles the moderate skew below the
     cap.
     """
-    pairs_src = item_edges.select(
-        F.col(src_col).alias("ent"), F.col(item_col).alias("item")
-    ).distinct()
+    cols = [F.col(src_col).alias("ent"), F.col(item_col).alias("item")]
+    if carry is not None:
+        cols.append(F.col(carry).alias("carry"))
+    pairs_src = item_edges.select(*cols)
+    if not unique:
+        pairs_src = pairs_src.distinct()
     if max_item_degree is not None:
         keep = (
             pairs_src.groupBy("item")
@@ -179,6 +189,9 @@ def pair_candidates(
     nparts = shuffle_partition_count(pairs_src)
     a = pairs_src.repartition(nparts, "item").alias("a")
     b = pairs_src.repartition(nparts, "item").alias("b")
+    keys = [F.col("a.ent").alias("id_a"), F.col("b.ent").alias("id_b")]
+    if carry is not None:
+        keys += [F.col("a.carry").alias(f"{carry}_a"), F.col("b.carry").alias(f"{carry}_b")]
     return (
         # both sides are the full (entity, item) edge table: broadcast
         # would ship the corpus to every executor (and the driver) —
@@ -193,7 +206,7 @@ def pair_candidates(
             b.hint("SHUFFLE_HASH"),
             (F.col("a.item") == F.col("b.item")) & (F.col("a.ent") < F.col("b.ent")),
         )
-        .groupBy(F.col("a.ent").alias("id_a"), F.col("b.ent").alias("id_b"))
+        .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("shared"))
         .where(F.col("shared") >= min_shared)
     )

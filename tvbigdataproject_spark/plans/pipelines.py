@@ -38,10 +38,10 @@ from tvbigdataproject_spark.functions.text import simple_clean
 from tvbigdataproject_spark.operators.graph import (
     Graph,
     k_hop_neighborhood,
+    pair_candidates,
     vertices_from_edges,
 )
-from tvbigdataproject_spark.operators.materialize import Scope, fits_broadcast
-from tvbigdataproject_spark.operators.skew import shuffle_partition_count
+from tvbigdataproject_spark.operators.materialize import Scope
 from tvbigdataproject_spark.sources.io import read_tweets
 
 
@@ -185,7 +185,8 @@ class TweetGraphPipeline:
         hashtags" (:158-165) → two joins to attach hashtag lists
         (:168-172) → string-typed jaccard UDF + threshold filter
         (:177-183). Here: one self-join of the exploded map on the tag,
-        each side carrying its set size, and one count per pair. The
+        each side carrying its set size, and one count per pair
+        (``pair_candidates``, which pins the fan-out's parallelism). The
         count is ``|A ∩ B|`` (each user's tags are distinct), the gate
         keeps pairs sharing ≥ 2 tags — the reference's own algorithmic
         idea, kept, with the motif machinery deleted — and
@@ -197,31 +198,15 @@ class TweetGraphPipeline:
 
     def _jaccard_edges(self, mapping: DataFrame) -> DataFrame:
         tags = mapping.select("id", F.size("hts").alias("n"), F.explode("hts").alias("tag"))
-        if fits_broadcast(mapping):
-            a, b = tags, F.broadcast(tags)
-        else:
-            # a hub tag fans out quadratically: pin the parallelism as
-            # pair_candidates does (see skew.shuffle_partition_count)
-            a = b = tags.repartition(shuffle_partition_count(tags), "tag").hint("SHUFFLE_HASH")
-        a, b = a.alias("a"), b.alias("b")
-        shared = (
-            a.join(b, (F.col("a.tag") == F.col("b.tag")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n").alias("n_a"),
-                F.col("b.n").alias("n_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("s"))
-            .where(F.col("s") >= 2)
-        )
+        # one row per (id, tag) by the map's invariant: no distinct()
+        shared = pair_candidates(tags, src_col="id", item_col="tag", carry="n", unique=True)
         # the reference's motif filter keeps c.id > d.id and exports
         # src=c.id, dst=d.id (:164-185), so the greater id is the source
-        union = F.col("n_a") + F.col("n_b") - F.col("s")
+        union = F.col("n_a") + F.col("n_b") - F.col("shared")
         scored = shared.select(
             F.col("id_b").alias("src"),
             F.col("id_a").alias("dst"),
-            (F.col("s").cast("double") / union.cast("double")).alias("w"),
+            (F.col("shared").cast("double") / union.cast("double")).alias("w"),
         )
         return scored.where(F.col("w") > self.jaccard_threshold).withColumn(
             "type", F.lit("JC")

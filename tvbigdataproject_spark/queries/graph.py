@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.queries.registry import query
+from tvbigdataproject_spark.operators.graph import pair_candidates
 from tvbigdataproject_spark.operators.skew import shuffle_partition_count
 from tvbigdataproject_spark.sources import read_table
 
@@ -91,26 +92,15 @@ def pair_candidates_shared_parts(spark, sf_dir):
         # correct key-partitioned shuffle join.
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
-        .distinct()
     )
-    nparts = shuffle_partition_count(cp)
-    a = cp.repartition(nparts, "part").alias("a")
-    b = cp.repartition(nparts, "part").alias("b")
-    return (
-        # (cust, part) is corpus-sized on both sides — shuffle-hash, not
-        # an AQE broadcast, and the twin exchanges reuse. The explicit
-        # repartition-by-number pins 32-way parallelism on the pair
-        # fan-out: AQE coalesces by input bytes and is blind to join
-        # fan-out (this exact query: one task, 15+ min at sf1 — see
-        # skew.shuffle_partition_count)
-        a.hint("SHUFFLE_HASH")
-        .join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.part") == F.col("b.part")) & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b"))
-        .agg(F.count(F.lit(1)).alias("shared_parts"))
-        .where(F.col("shared_parts") >= 2)
+    # pair_candidates deduplicates (cust, part) and pins the pair
+    # fan-out's parallelism: AQE coalesces by input bytes and is blind
+    # to join fan-out (this exact query: one task, 15+ min at sf1 — see
+    # skew.shuffle_partition_count)
+    return pair_candidates(cp, src_col="cust", item_col="part").select(
+        F.col("id_a").alias("cust_a"),
+        F.col("id_b").alias("cust_b"),
+        F.col("shared").alias("shared_parts"),
     )
 
 

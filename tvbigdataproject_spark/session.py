@@ -20,6 +20,9 @@ factory is a vanilla builder with scale-minded defaults:
   U+10570-U+10595, U+10D50-U+10D65), which Java 17 leaves unchanged. None is
   ASCII or in ``normalize_tags``' translate table, and the context cases
   (final sigma, İ, ẞ, ǅ) agree; ``tests/test_session.py`` pins the set.
+  It is a runtime SQL conf, so ``tune_for_session`` sets it on the
+  driver harness's session too: the suite, the parity check and the
+  harness all run one case mapping.
 """
 
 from __future__ import annotations
@@ -97,6 +100,7 @@ def tune_for_session(spark: SparkSession, shuffle_partitions: int | None = None)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
