@@ -254,88 +254,6 @@ def _regression_verdict(
     return regress
 
 
-def _vs_r1(
-    timings: dict[str, float],
-    calib_sec: list[float],
-    probe: list[float],
-    repo: str = REPO,
-) -> dict:
-    """Project-baseline drift tracking (round-7 verdict item 6): median
-    ratio of this run's gate stats to the round-1 artifact over shared
-    queries. r1 carries no probe suite, so direct probe normalization
-    is impossible; the recorded ``host_ratio_vs_prev`` (this session's
-    probes vs the newest probed artifact) is the best machine-tracked
-    drift proxy — the r1..r6 sessions measured on equivalent-weather
-    hosts per the r6/r7 adjudications, so normalizing the raw median by
-    the current probe drift approximates the r1-anchored number the
-    judges have been computing by hand."""
-    out: dict = {"n_shared": 0}
-    try:
-        import glob as _glob
-        import re as _re
-        import statistics
-
-        from tools.bench_compare import _load_queries, host_ratio
-
-        r1 = os.path.join(repo, "BENCH_r01.json")
-        if not os.path.exists(r1):
-            return out
-        r1_q, _ = _load_queries(r1)
-        shared = sorted(set(r1_q) & set(timings))
-        ratios = [timings[k] / r1_q[k] for k in shared if r1_q[k] > 0]
-        if not ratios:
-            return out
-        out["n_shared"] = len(ratios)
-        out["median_ratio_raw"] = round(statistics.median(ratios), 3)
-        # Host anchor: the EARLIEST artifact carrying the Spark probe
-        # suite (r07 — the insensitive CPU calib is all r1-r6 ship, and
-        # the round-5 adjudication proved it blind to real drift).
-        # r07's own session was weather-inflated relative to the
-        # r1..r6-era host by a MEASURED factor — 1.406, the judge-
-        # accepted probe drift vs BENCH_r06 recorded in the r7
-        # adjudication (SCALE.md "host-drift adjudication") — so
-        # drift-vs-r1 chains as hr_vs_anchor * anchor's own drift.
-        ANCHOR_WEATHER_VS_R1 = {7: 1.406}
-        anchor, anchor_n = None, 10**9
-        for p in _glob.glob(os.path.join(repo, "BENCH_r*.json")):
-            m = _re.search(r"BENCH_r(\d+)\.json$", p)
-            if not m:
-                continue
-            try:
-                _, pp = _load_queries(p)
-            except ValueError:
-                continue
-            if pp.get("shuffle") and int(m.group(1)) < anchor_n:
-                anchor, anchor_n = pp, int(m.group(1))
-        if anchor:
-            cur_probe = {"calib": float(min(calib_sec))}
-            if probe and len(probe) == 2:
-                cur_probe["shuffle"], cur_probe["scan"] = map(float, probe)
-            hr = host_ratio(anchor, cur_probe)
-            if hr:
-                out["anchor_round"] = anchor_n
-                out["host_ratio_vs_anchor"] = round(hr, 3)
-                if anchor_n not in ANCHOR_WEATHER_VS_R1:
-                    # an unmapped anchor (r07 pruned, or an older
-                    # artifact gained probes) would silently chain the
-                    # wrong weather factor — omit the normalized
-                    # fields rather than fabricate them (round-8 advice)
-                    print(
-                        f"WARN vs_r1: anchor r{anchor_n:02d} has no "
-                        "weather factor; normalized fields omitted",
-                        file=sys.stderr,
-                    )
-                else:
-                    chain = hr * ANCHOR_WEATHER_VS_R1[anchor_n]
-                    out["host_ratio_vs_r1"] = round(chain, 3)
-                    out["median_ratio_normalized"] = round(
-                        out["median_ratio_raw"] / chain, 3
-                    )
-    except Exception as exc:  # tracking only — never fail the bench
-        print(f"WARN vs_r1 tracking failed: {exc!r}", file=sys.stderr)
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:] or HEADLINE
@@ -692,8 +610,6 @@ def main() -> None:
         # in-suite vs isolated reading for every flag that triggered
         # the end-of-session adjudication re-run
         "flag_adjudication": reflag,
-        # project-baseline drift, machine-tracked (r7 verdict item 6)
-        "vs_r1": _vs_r1(timings, [calib_start, calib_end], probe),
         "gate_queries": timings,
         "gate_line_omitted": omitted,
         "cold": cold,

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from tvbigdataproject_spark.operators.components import (
     canonical_survivors,
     connected_components,
+    label_propagation,
 )
 
 
@@ -148,7 +149,7 @@ def test_label_propagation_releases_checkpoint_blocks(spark):
     edges = spark.createDataFrame(
         und + [(b, a) for a, b in und], "src long, dst long"
     )
-    out = label_propagation(edges, rounds=4, checkpoint_interval=2)
+    out = label_propagation(edges, rounds=4)
     assert out.count() == 9
     after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before <= 1
@@ -265,24 +266,17 @@ def test_checkpoint_stats_do_not_compound(spark):
 def test_probe_columns_never_leak_and_spans_equal_per_round(spark):
     # r12 internals change: the convergence probe reads a carried
     # `_prev` column off the span checkpoint instead of joining old vs
-    # new labels. The carried column must never surface, and results
-    # must be identical at every checkpoint placement (interval 1 = the
-    # old per-round probing cadence).
+    # new labels. The carried column must never surface. (Results at
+    # every checkpoint placement: test_materialize's Scope.rounds tests.)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)],
         "src long, dst long",
     )
-    outs = []
-    for interval in (1, 2, 5):
-        # threshold 0: this test targets the DISTRIBUTED loop's probe
-        # internals; the default would take the r13 local endgame
-        df = connected_components(
-            edges, checkpoint_interval=interval, local_edge_threshold=0
-        )
-        assert df.columns == ["node", "label"], df.columns
-        outs.append(sorted(map(tuple, df.collect())))
-    assert outs[0] == outs[1] == outs[2]
-    assert outs[0] == [
+    # threshold 0: this test targets the DISTRIBUTED loop's probe
+    # internals; the default would take the r13 local endgame
+    df = connected_components(edges, local_edge_threshold=0)
+    assert df.columns == ["node", "label"], df.columns
+    assert sorted(map(tuple, df.collect())) == [
         (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20),
     ]
 
@@ -307,3 +301,53 @@ def test_local_endgame_matches_distributed_loop(spark):
         (1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7), (10, 10),
         (11, 10), (20, 20),
     ]
+
+
+# Job fences on the sf0.01 trade graph (local[4]): statusTracker jobs of
+# one call, pinned exactly at the counts measured before the round loop
+# moved into materialize.Scope.rounds, so a change of checkpoint cadence
+# shows either way (CC at one round per checkpoint runs FEWER jobs here:
+# its last-round probe stops sooner). The status store is fed by the
+# asynchronous listener bus, so it is drained before counting.
+def _fenced_jobs(spark, group, run):
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = run()
+        sc._jsc.clearJobGroup()
+        assert out.count() > 1
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_label_propagation_job_fence_on_trade_graph(spark):
+    from tvbigdataproject_spark.operators import trade_edges as te
+
+    bi = te.trade_edges_bi(spark, "/root/testdata/sf0.01")
+    try:
+        # start labels, then a 2-round and a 1-round span
+        jobs = _fenced_jobs(
+            spark, "test_lpa_job_fence", lambda: label_propagation(bi, rounds=3)
+        )
+        assert jobs == 15
+    finally:
+        te.release_trade_pairs(spark)
+
+
+def test_connected_components_job_fence_on_trade_graph(spark):
+    from tvbigdataproject_spark.operators import trade_edges as te
+
+    bi = te.trade_edges_bi(spark, "/root/testdata/sf0.01")
+    try:
+        # threshold 0: the distributed loop, 2-round spans with the
+        # span-end `_prev` probe
+        jobs = _fenced_jobs(
+            spark,
+            "test_cc_job_fence",
+            lambda: connected_components(bi.df, local_edge_threshold=0),
+        )
+        assert jobs == 33
+    finally:
+        te.release_trade_pairs(spark)

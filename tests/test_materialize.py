@@ -11,6 +11,7 @@ from tvbigdataproject_spark.operators import trade_edges as te
 from tvbigdataproject_spark.operators.materialize import (
     EdgeSet,
     Scope,
+    _blocks,
     checkpoint,
     fits_broadcast,
     local_solve_ok,
@@ -158,3 +159,87 @@ def test_fits_broadcast_reads_only_a_bare_checkpoints_stored_size(spark):
     finally:
         spark.conf.set(key, old)
         release(small)
+
+
+# Scope.rounds over a path 0-1-...-7 (both orientations): each round
+# every node takes the minimum label of itself and its neighbours, so
+# after r rounds node v holds max(0, v - r) — a deterministic step
+# whose result cannot depend on where the checkpoints fall.
+def _path_min_step(spark):
+    path = spark.range(7).selectExpr("id AS src", "id + 1 AS dst")
+    e = path.unionByName(path.selectExpr("dst AS src", "src AS dst"))
+
+    def step(plan, _r):
+        nbr = (
+            e.join(plan, e.src == plan.node)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("m"))
+        )
+        return plan.join(nbr, "node", "left").select(
+            "node", F.least("label", F.coalesce("m", "label")).alias("label")
+        )
+
+    return spark.range(8).selectExpr("id AS node", "id AS label"), step
+
+
+@pytest.mark.parametrize("every", [1, 2, 5])
+def test_rounds_result_is_independent_of_checkpoint_cadence(spark, every):
+    start, step = _path_min_step(spark)
+    with Scope() as s:
+        out, stopped = s.rounds(s.checkpoint(start), step, 5, every)
+        got = sorted(map(tuple, out.collect()))
+    assert not stopped
+    assert got == [(v, max(0, v - 5)) for v in range(8)]
+
+
+def test_rounds_probes_only_at_span_ends_and_returns_the_stop_flag(spark):
+    start, step = _path_min_step(spark)
+    steps, probes = [], []
+
+    def counted(plan, r):
+        steps.append(r)
+        return step(plan, r)
+
+    def stop(new, old, r):
+        probes.append((r, sorted(map(tuple, old.collect()))))
+        return r == 4
+
+    with Scope() as s:
+        first = s.checkpoint(start)
+        first_rows = sorted(map(tuple, first.collect()))
+        out, stopped = s.rounds(first, counted, 5, 2, stop)
+        assert stopped and steps == [1, 2, 3, 4]
+        assert [r for r, _ in probes] == [2, 4]
+        assert probes[0][1] == first_rows  # old = the superseded table
+        assert sorted(map(tuple, out.collect())) == [
+            (v, max(0, v - 4)) for v in range(8)
+        ]
+        probes.clear()
+        again = s.checkpoint(start)  # `first` was released as superseded
+        _, stopped = s.rounds(again, step, 5, 2, lambda n, o, r: probes.append(r))
+        assert not stopped and probes == [2, 4, 5]
+
+
+def test_rounds_keeps_only_the_final_state_and_leaks_nothing_on_error(spark):
+    sc = spark.sparkContext
+    start, step = _path_min_step(spark)
+    before = persistent_ids(sc)
+    with Scope() as s:
+        out, _ = s.rounds(s.checkpoint(start), step, 5, 2)
+        # every superseded table is released inside the loop, not on exit
+        created = persistent_ids(sc) - before
+        assert len(created) == 1 and created == _blocks(out)
+        kept = s.keep(out)
+    assert persistent_ids(sc) - before == created
+    release(kept)
+
+    def failing(plan, r):
+        if r == 3:
+            raise ValueError("mid-loop failure")
+        return step(plan, r)
+
+    before = persistent_ids(sc)
+    with pytest.raises(ValueError):
+        with Scope() as s:
+            s.rounds(s.checkpoint(start), failing, 5, 1)
+    assert persistent_ids(sc) - before == set()

@@ -154,3 +154,27 @@ def test_personalized_all_sources_outside_graph_raises(spark):
     ghosts = spark.createDataFrame([(99,)], "node long")
     with pytest.raises(ValueError, match="no source node"):
         pagerank(edges, n_iter=2, sources=ghosts)
+
+
+def test_pagerank_job_fence_on_trade_graph(spark):
+    # statusTracker jobs of one call on the sf0.01 trade graph
+    # (local[4]), pinned exactly at the count measured before the round
+    # loop moved into materialize.Scope.rounds: 4 iterations are a
+    # 3-round and a 1-round span, so a change of checkpoint cadence
+    # shows. The status store is fed by the asynchronous listener bus,
+    # so it is drained before counting.
+    from tvbigdataproject_spark.operators import trade_edges as te
+
+    sc = spark.sparkContext
+    bi = te.trade_edges_weighted_bi(spark, "/root/testdata/sf0.01")
+    group = "test_pagerank_job_fence"
+    try:
+        sc.setJobGroup(group, group)
+        out = pagerank(bi, n_iter=4)
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 29
+        assert out.count() > 1
+    finally:
+        sc._jsc.clearJobGroup()
+        te.release_trade_pairs(spark)

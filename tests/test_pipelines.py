@@ -286,25 +286,30 @@ def test_k_hop_neighborhood_matches_python_reference(spark, id_type, follow_dst_
     as_id = str if id_type == "string" else int
     edges = random_multigraph(7, as_id)
     assert len(set(edges)) < len(edges)
-    df = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}, w double, type string")
     # a seed with out-edges at every depth, and one absent from the
     # graph at one depth; the CLI passes the seed as a string whatever
     # the id type
     seed = next(s for s, _, _, t in edges if t == "RT")
     cases = [(seed, hops) for hops in range(1, 5)] + [(as_id(999), 3)]
-    for start, hops in cases:
-        for exclude in ((), ("HT",)):
-            g = k_hop_neighborhood(
-                df, str(start), hops=hops, follow_dst_only=follow_dst_only,
-                exclude_types_from_hop=exclude,
-            )
-            want_edges, want_ids = python_neighborhood(edges, start, hops, follow_dst_only, exclude)
-            case = (start, hops, exclude)
-            got = [tuple(r) for r in g.edges.collect()]
-            assert len(got) == len(set(got)), case  # duplicate input rows once
-            assert set(got) == want_edges, case
-            assert {r["id"] for r in g.vertices.collect()} == want_ids, case
-            assert g.vertices.schema["id"].dataType == df.schema["src"].dataType
+    with Scope() as scope:
+        # materialized once: every action below would otherwise replay
+        # the createDataFrame scan through a Python worker
+        df = scope.checkpoint(
+            spark.createDataFrame(edges, f"src {id_type}, dst {id_type}, w double, type string")
+        )
+        for start, hops in cases:
+            for exclude in ((), ("HT",)):
+                g = k_hop_neighborhood(
+                    df, str(start), hops=hops, follow_dst_only=follow_dst_only,
+                    exclude_types_from_hop=exclude,
+                )
+                want_edges, want_ids = python_neighborhood(edges, start, hops, follow_dst_only, exclude)
+                case = (start, hops, exclude)
+                got = [tuple(r) for r in g.edges.collect()]
+                assert len(got) == len(set(got)), case  # duplicate input rows once
+                assert set(got) == want_edges, case
+                assert {r["id"] for r in g.vertices.collect()} == want_ids, case
+                assert g.vertices.schema["id"].dataType == df.schema["src"].dataType
     # the reference itself: the absent seed's neighborhood is empty, and
     # some case above reaches past hop 1 through both tags and users
     assert python_neighborhood(edges, as_id(999), 3, False, ()) == (set(), set())

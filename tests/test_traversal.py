@@ -213,21 +213,6 @@ def test_luby_mis_zero_rounds_returns_empty_dataframe(spark):
     assert out.count() == 0
 
 
-def test_luby_mis_checkpoint_interval_is_wired_and_equivalent(spark):
-    from tvbigdataproject_spark.operators.traversal import luby_mis
-
-    und = [(i, i + 1) for i in range(1, 8)]
-    edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src long, dst long"
-    )
-    every = {(r.node, r.round) for r in luby_mis(edges, rounds=3).collect()}
-    spanned = {
-        (r.node, r.round)
-        for r in luby_mis(edges, rounds=3, checkpoint_interval=3).collect()
-    }
-    assert every == spanned
-
-
 def test_reachable_set_basic_and_cache_release(spark):
     from pyspark.sql import functions as F
 

@@ -282,48 +282,13 @@ def compare(
     }
 
 
-def quote_vs_r1(path: str) -> str:
-    """The ONE canonical sentence prose may quote for an artifact's
-    vs_r1 block — generated from the committed JSON so SCALE.md can
-    never drift from the numbers again (r11 verdict item 3: a 0.758
-    claim written against a superseded artifact survived a refresh)."""
-    with open(path) as fh:
-        d = json.load(fh)
-    v = d.get("vs_r1")
-    if not isinstance(v, dict):
-        return f"{os.path.basename(path)}: no vs_r1 block"
-    return (
-        f"{os.path.basename(path)}: raw median ratio vs r1 = "
-        f"{v.get('median_ratio_raw')}, normalized "
-        f"{v.get('median_ratio_normalized')} over the "
-        f"{v.get('n_shared')} shared queries (anchor r"
-        f"{v.get('anchor_round')}, host ratio vs anchor "
-        f"{v.get('host_ratio_vs_anchor')}, vs r1 "
-        f"{v.get('host_ratio_vs_r1')})"
-    )
-
-
 def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(
         description="Diff two bench artifacts for per-query regressions.",
     )
     ap.add_argument("paths", nargs="*", help="PREV.json CUR.json (default: newest BENCH_r*.json vs bench_detail.json)")
     ap.add_argument("--threshold", type=float, default=THRESHOLD)
-    ap.add_argument(
-        "--quote",
-        action="store_true",
-        help="print the canonical quotable vs_r1 line for the given "
-        "artifact (default: bench_detail_idle_*.json newest) and exit",
-    )
     ns = ap.parse_args(argv)
-    if ns.quote:
-        if ns.paths:
-            target = ns.paths[0]
-        else:
-            idles = sorted(glob.glob(os.path.join(REPO, "bench_detail_idle_*.json")))
-            target = idles[-1] if idles else os.path.join(REPO, "bench_detail.json")
-        print(quote_vs_r1(target))
-        return 0
     if len(ns.paths) == 2:
         prev_path, cur_path = ns.paths
     elif len(ns.paths) == 0:

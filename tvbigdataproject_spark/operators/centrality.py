@@ -37,6 +37,11 @@ from pyspark.sql import functions as F
 from tvbigdataproject_spark.operators.materialize import EdgeSet, Scope
 
 _BC_SCALE = 1 << 30
+# Rounds per forward-phase checkpoint: each round references the
+# previous visited plan three times (frontier, anti-join, union), so
+# in-span lineage grows ~3^k; 2 halves the checkpoint jobs without
+# plan blowup (the kcore_peel cadence).
+_FORWARD_EVERY = 2
 
 
 def brandes_betweenness(
@@ -45,7 +50,6 @@ def brandes_betweenness(
     max_hops: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Landmark-sampled betweenness: sum over the source sample of
     Brandes dependency scores, over shortest paths of length <=
@@ -61,9 +65,9 @@ def brandes_betweenness(
     Scale shape: the forward phase is multi-source BFS carrying an
     extra BIGINT sigma through a per-round join + anti-join +
     partial-agg over bfs_levels_multi's key (one frontier keyed by
-    (landmark, node), rounds = depth, eager-checkpoint lineage
-    truncation with deterministic block release). The backward phase
-    is one join per DEPTH LEVEL, descending: level-h nodes join their
+    (landmark, node), rounds = depth, checkpointed every
+    ``_FORWARD_EVERY`` = 2 rounds with deterministic block release).
+    The backward phase is one join per DEPTH LEVEL, descending: level-h nodes join their
     level-(h+1) successors' (sigma, delta) — every join keys on
     (landmark, node)-derived keys, so one partitioning serves all
     rounds; state is bounded by k * |reachable|, exactly the landmark
@@ -77,7 +81,7 @@ def brandes_betweenness(
     )
     with Scope() as s:
         e = s.edges(edges, src, dst).df
-        settled = _forward(s, e, start, max_hops, checkpoint_interval)
+        settled = _forward(s, e, start, max_hops)
         # One 1-row aggregate over the already-checkpointed settled
         # table serves two guards:
         # - the graph may be shallower than the hop budget (the forward
@@ -108,7 +112,7 @@ def brandes_betweenness(
         )
 
 
-def _forward(s, e, start, max_hops, checkpoint_interval):
+def _forward(s, e, start, max_hops):
     """BFS levels + shortest-path counts: (landmark, node, hop, sigma).
 
     A node first reached at hop h has sigma = sum of the sigmas of its
@@ -116,46 +120,29 @@ def _forward(s, e, start, max_hops, checkpoint_interval):
     path, so the anti-join against already-settled nodes before the
     partial-aggregated sigma sum is the whole algorithm.
     """
-    visited = s.checkpoint(start)
-    hop = 0
-    while hop < max_hops:
-        span = min(max(1, checkpoint_interval), max_hops - hop)
-        plan = visited
-        for _ in range(span):
-            hop += 1
-            frontier = plan.where(F.col("hop") == hop - 1)
-            nxt = (
-                frontier.join(e, frontier.node == e.src)
-                .select(
-                    "landmark", F.col("dst").alias("node"), "sigma"
-                )
-                .join(
-                    plan.select("landmark", "node"),
-                    ["landmark", "node"],
-                    "left_anti",
-                )
-                .groupBy("landmark", "node")
-                .agg(F.sum("sigma").alias("sigma"))
-                .select(
-                    "landmark",
-                    "node",
-                    F.lit(hop).cast("int").alias("hop"),
-                    "sigma",
-                )
-            )
-            plan = plan.unionByName(nxt)
-        stepped = s.checkpoint(plan)
-        s.release(visited)
-        visited = stepped
-        # convergence check at the span boundary (the materialized
-        # frontier makes the count one cheap block scan — the same
-        # pattern as connected_components): a graph shallower than
-        # max_hops must not keep re-checkpointing the full visited
-        # table through empty join rounds.
-        if hop < max_hops and not visited.where(
-            F.col("hop") == hop
-        ).head(1):
-            break
+
+    def step(plan: DataFrame, hop: int) -> DataFrame:
+        frontier = plan.where(F.col("hop") == hop - 1)
+        nxt = (
+            frontier.join(e, frontier.node == e.src)
+            .select("landmark", F.col("dst").alias("node"), "sigma")
+            .join(plan.select("landmark", "node"), ["landmark", "node"], "left_anti")
+            .groupBy("landmark", "node")
+            .agg(F.sum("sigma").alias("sigma"))
+            .select("landmark", "node", F.lit(hop).cast("int").alias("hop"), "sigma")
+        )
+        return plan.unionByName(nxt)
+
+    # convergence check at the span boundary (the materialized frontier
+    # makes the probe one cheap block scan): a graph shallower than
+    # max_hops must not keep re-checkpointing the full visited table
+    # through empty join rounds. The last hop needs no probe.
+    def frontier_empty(new: DataFrame, _old: DataFrame, hop: int) -> bool:
+        return hop < max_hops and not new.where(F.col("hop") == hop).head(1)
+
+    visited, _ = s.rounds(
+        s.checkpoint(start), step, max_hops, _FORWARD_EVERY, frontier_empty
+    )
     return visited
 
 

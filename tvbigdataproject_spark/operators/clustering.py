@@ -152,8 +152,8 @@ def _lloyd_loop(
         )
     )
     with Scope() as s:
-        packed = s.checkpoint(_pack_centroids(cents))
-        for _ in range(iters):
+
+        def step(packed: DataFrame, _r: int) -> DataFrame:
             assigned = _assign(quant, packed, id_col)
             # (cell, pos)-keyed update instead of `dim` explicit sum
             # columns: the wide form built a 64-sum + 64-floor-div
@@ -175,9 +175,7 @@ def _lloyd_loop(
                         F.collect_list(
                             F.struct(
                                 "pos",
-                                F.floor(
-                                    F.col("s").cast("double") / F.col("n")
-                                )
+                                F.floor(F.col("s").cast("double") / F.col("n"))
                                 .cast("long")
                                 .alias("val"),
                             )
@@ -196,10 +194,12 @@ def _lloyd_loop(
                 "cell",
                 F.coalesce("new_cv", "prev_cv").alias("cv"),
             )
-            new_packed = s.checkpoint(_pack_centroids(stepped))
-            # the new pack is materialized; the previous round's is done
-            s.release(packed)
-            packed = new_packed
+            return _pack_centroids(stepped)
+
+        # every round's pack is checkpointed and the previous one released
+        packed, _ = s.rounds(
+            s.checkpoint(_pack_centroids(cents)), step, iters, 1
+        )
         return s.keep(packed)
 
 

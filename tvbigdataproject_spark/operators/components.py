@@ -20,13 +20,14 @@ Design for 100 TB:
 - both join sides are corpus-sized, so the shuffle-hash strategy is
   pinned (a size misestimate must never broadcast a per-node table;
   tradeoff vs MERGE under heap pressure: operators/dedup.py docstring).
-- lineage is truncated with ``localCheckpoint`` every
-  ``checkpoint_interval`` rounds — without truncation the plan grows
+- lineage is truncated with ``localCheckpoint`` every ``_CC_EVERY`` = 2
+  rounds (``Scope.rounds``) — without truncation the plan grows
   per iteration and the driver, not the data, becomes the bottleneck;
   truncating *every* round instead pays a fixed materialization job per
   round, which dominates when rounds are cheap (measured ~1 s/round of
-  pure job overhead at bench scale — VERDICT r3). The interval
-  amortizes both: in-span lineage growth is linear and bounded by k.
+  pure job overhead at bench scale — VERDICT r3). A short span
+  amortizes both. The cadence is a constant, not a parameter: results
+  do not depend on it, only job counts and plan size do.
   On a real cluster prefer reliable ``checkpoint()`` with a checkpoint
   dir (localCheckpoint ties the result to executor lifetime).
 - each round's checkpoint is released **deterministically** once the
@@ -52,6 +53,15 @@ from tvbigdataproject_spark.operators.materialize import (
     local_frame,
     local_solve_ok,
 )
+
+# Rounds per checkpoint. CC (and SCC's forward coloring, the same
+# shape) reads the previous label plan a constant number of times per
+# round, so a 2-round span bounds the in-span lineage growth while
+# halving the fixed per-checkpoint cost.
+_CC_EVERY = 2
+# LPA reads the previous labels exactly once per round: in-span growth
+# is linear (the pagerank discipline, not the 3^k MIS/k-core one).
+_LPA_EVERY = 2
 
 
 def _cc_local(e: DataFrame) -> DataFrame:
@@ -97,7 +107,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_interval: int = 2,
     local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component is the
@@ -108,23 +117,18 @@ def connected_components(
     component minimum, so a clean exit is a correctness proof, not a
     heuristic stop).
 
-    ``checkpoint_interval`` amortizes the per-round fixed cost: the
-    label table is materialized (eager localCheckpoint) and convergence
-    is checked only every that-many rounds, so a span of k rounds costs
-    2 jobs instead of 2k. Lineage within a span grows linearly (each
-    round references the previous label plan a constant number of
-    times) and is truncated at the span boundary. The span-end
-    convergence check is exact, not delayed-by-up-to-k: labels are
-    monotone non-increasing, so "no change across the whole span" is
-    equivalent to "no change in any round of it". Results are
-    checkpoint-placement-independent; only job count changes.
+    The label table is materialized (eager localCheckpoint) and
+    convergence is checked every ``_CC_EVERY`` = 2 rounds, so a span
+    costs 2 jobs instead of 4; lineage is truncated at the span
+    boundary. The check reads the span's last round, which is exact:
+    a synchronous round that changes nothing is the fixpoint. Results
+    are checkpoint-placement-independent; only job count changes.
 
     Both paths are exact; which one runs is the ``local_solve_ok`` size
-    gate on the edge count. ``max_iter`` and ``checkpoint_interval``
-    bound only the distributed loop — below the gate the driver-local
-    union-find runs to the exact fixpoint and never raises; pass
-    ``local_edge_threshold=0`` to force the distributed loop and
-    restore the ``max_iter`` raise.
+    gate on the edge count. ``max_iter`` bounds only the distributed
+    loop — below the gate the driver-local union-find runs to the exact
+    fixpoint and never raises; pass ``local_edge_threshold=0`` to force
+    the distributed loop and restore the ``max_iter`` raise.
     """
     with Scope() as s:
         # materialize the (static) edge set once, in ONE orientation:
@@ -142,93 +146,80 @@ def connected_components(
         if local_solve_ok(e, local_edge_threshold):
             return _cc_local(e)
         sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        return _cc_loop(s, sym, max_iter, checkpoint_interval)
+        return _cc_loop(s, sym, max_iter)
 
 
-def _cc_loop(
-    s: Scope, sym: DataFrame, max_iter: int, checkpoint_interval: int
-) -> DataFrame:
+def _cc_loop(s: Scope, sym: DataFrame, max_iter: int) -> DataFrame:
     labels = s.checkpoint(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    rounds_done = 0
-    while rounds_done < max_iter:
-        span = min(max(1, checkpoint_interval), max_iter - rounds_done)
-        # Two r12 probe changes, both exact (synchronous deterministic
-        # update: a round that changes nothing IS the fixpoint, and the
-        # min-propagation fixpoint is the component minimum):
-        # (a) every round carries its PRE-round label as `_prev`, so
-        #     the span-end convergence check reads the freshly
-        #     checkpointed table alone (one cached-scan filter job)
-        #     instead of shuffle-joining the new and old label tables;
-        # (b) the criterion is "the LAST round changed nothing" rather
-        #     than "the whole span changed nothing" — a span whose
-        #     final round was already an identity terminates the loop
-        #     immediately instead of paying one more full confirm span
-        #     (at bench scale a span is ~10 fixed-cost jobs).
-        plan = labels
-        for _ in range(span):
-            # refresh _prev to THIS round's starting label
-            plan = plan.select(
-                "node", "label", F.col("label").alias("_prev")
+
+    def step(plan: DataFrame, _r: int) -> DataFrame:
+        # refresh _prev to THIS round's starting label
+        plan = plan.select("node", "label", F.col("label").alias("_prev"))
+        # min label over the neighborhood (node itself included below)
+        nbr_min = (
+            sym.hint("SHUFFLE_HASH")
+            .join(
+                plan.select(F.col("node").alias("b"), "label").hint(
+                    "SHUFFLE_HASH"
+                ),
+                "b",
             )
-            # min label over the neighborhood (node itself included below)
-            nbr_min = (
-                sym.hint("SHUFFLE_HASH")
-                .join(
-                    plan.select(F.col("node").alias("b"), "label").hint(
-                        "SHUFFLE_HASH"
-                    ),
-                    "b",
-                )
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            stepped = (
-                plan.hint("SHUFFLE_HASH")
-                .join(nbr_min.hint("SHUFFLE_HASH"), "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                    ).alias("label"),
-                    "_prev",
-                )
-            )
-            # pointer jumping: node -> label -> label(label), halves chain depth
-            parent = stepped.select(
-                F.col("node").alias("p_node"), F.col("label").alias("p_label")
-            )
-            plan = (
-                stepped.hint("SHUFFLE_HASH")
-                .join(
-                    parent.hint("SHUFFLE_HASH"),
-                    stepped.label == parent.p_node,
-                    "left",
-                )
-                .select(
-                    "node",
-                    F.coalesce("p_label", "label").alias("label"),
-                    "_prev",
-                )
-            )
-        jumped = s.checkpoint(plan)
-        rounds_done += span
-        changed = (
-            jumped.where(F.col("label") != F.col("_prev")).limit(1).count()
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("label").alias("nbr_label"))
         )
-        # the old span's checkpoint is dead the moment `changed` is
-        # computed — release it now instead of waiting for Python GC to
-        # reach the async ContextCleaner (O(spans) cached label tables
-        # on a long-lived session otherwise)
-        s.release(labels)
-        labels = jumped
-        if changed == 0:
-            # consumers see exactly (node, label); the carried _prev
-            # column is an internal of the convergence probe
-            return s.keep(labels).select("node", "label")
+        stepped = (
+            plan.hint("SHUFFLE_HASH")
+            .join(nbr_min.hint("SHUFFLE_HASH"), "node", "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+                ).alias("label"),
+                "_prev",
+            )
+        )
+        # pointer jumping: node -> label -> label(label), halves chain depth
+        parent = stepped.select(
+            F.col("node").alias("p_node"), F.col("label").alias("p_label")
+        )
+        return (
+            stepped.hint("SHUFFLE_HASH")
+            .join(
+                parent.hint("SHUFFLE_HASH"),
+                stepped.label == parent.p_node,
+                "left",
+            )
+            .select(
+                "node",
+                F.coalesce("p_label", "label").alias("label"),
+                "_prev",
+            )
+        )
+
+    # Two r12 probe changes, both exact (synchronous deterministic
+    # update: a round that changes nothing IS the fixpoint, and the
+    # min-propagation fixpoint is the component minimum):
+    # (a) every round carries its PRE-round label as `_prev`, so the
+    #     span-end convergence check reads the freshly checkpointed
+    #     table alone (one cached-scan filter job) instead of
+    #     shuffle-joining the new and old label tables;
+    # (b) the criterion is "the LAST round changed nothing" rather than
+    #     "the whole span changed nothing" — a span whose final round
+    #     was already an identity terminates the loop immediately
+    #     instead of paying one more full confirm span (at bench scale
+    #     a span is ~10 fixed-cost jobs).
+    def converged(new: DataFrame, _old: DataFrame, _r: int) -> bool:
+        return new.where(F.col("label") != F.col("_prev")).limit(1).count() == 0
+
+    labels, done = s.rounds(labels, step, max_iter, _CC_EVERY, converged)
+    if done:
+        # consumers see exactly (node, label); the carried _prev
+        # column is an internal of the convergence probe
+        return s.keep(labels).select("node", "label")
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -269,7 +260,6 @@ def label_propagation(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Bounded-round synchronous label-propagation community detection
     (Raghavan et al. 2007) over an undirected graph (feed a
@@ -291,10 +281,8 @@ def label_propagation(
     id, nothing is all-pairs, per-node window state is bounded by the
     node's distinct neighbor-label count. Hub skew lands on the
     (node, label) count groupBy, which partial-aggregates before the
-    shuffle. The labels table is checkpointed every
-    `checkpoint_interval` rounds with tracked release (each round
-    references the previous labels exactly once, so in-span lineage
-    growth is linear — the pagerank discipline, not the 3^k MIS one).
+    shuffle. The labels table is checkpointed every ``_LPA_EVERY`` = 2
+    rounds with tracked release (``Scope.rounds``).
 
     Bounded rounds are semantics, not a shortcut: synchronous LPA can
     oscillate on bipartite structure (two-coloring flip), so a
@@ -313,36 +301,31 @@ def label_propagation(
             .distinct()
             .select("node", F.col("node").alias("community"))
         )
-        done = 0
-        while done < rounds:
-            span = min(max(1, checkpoint_interval), rounds - done)
-            plan = labels
-            for _ in range(span):
-                done += 1
-                nb = plan.select(
-                    F.col("node").alias("nb_node"),
-                    F.col("community").alias("nb_label"),
+        w = Window.partitionBy("src").orderBy(
+            F.col("c").desc(), F.col("nb_label").asc()
+        )
+
+        def step(plan: DataFrame, _r: int) -> DataFrame:
+            nb = plan.select(
+                F.col("node").alias("nb_node"),
+                F.col("community").alias("nb_label"),
+            )
+            cnt = (
+                e.hint("SHUFFLE_HASH")
+                .join(nb.hint("SHUFFLE_HASH"), e.dst == nb.nb_node)
+                .groupBy("src", "nb_label")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            return (
+                cnt.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select(
+                    F.col("src").alias("node"),
+                    F.col("nb_label").alias("community"),
                 )
-                cnt = (
-                    e.hint("SHUFFLE_HASH")
-                    .join(nb.hint("SHUFFLE_HASH"), e.dst == nb.nb_node)
-                    .groupBy("src", "nb_label")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                )
-                w = Window.partitionBy("src").orderBy(
-                    F.col("c").desc(), F.col("nb_label").asc()
-                )
-                plan = (
-                    cnt.withColumn("rn", F.row_number().over(w))
-                    .where(F.col("rn") == 1)
-                    .select(
-                        F.col("src").alias("node"),
-                        F.col("nb_label").alias("community"),
-                    )
-                )
-            stepped = s.checkpoint(plan)
-            s.release(labels)
-            labels = stepped
+            )
+
+        labels, _ = s.rounds(labels, step, rounds, _LPA_EVERY)
         return s.keep(labels)
 
 
@@ -451,6 +434,52 @@ def _scc_local(rem_e: DataFrame, rem_n: DataFrame) -> DataFrame:
     return local_frame(
         rem_n.sparkSession, [(n, comp_of[n]) for n in adj], [("node", t), ("scc", t)]
     )
+
+
+def _forward_colors(
+    s: Scope, rem_e: DataFrame, rem_n: DataFrame, max_rounds: int
+) -> DataFrame:
+    """SCC phase 2: (node, color, ...) with color = min id over the
+    node's forward ancestors and itself, at the fixpoint.
+
+    Two r12 job-count cuts, both semantics-free: (a) rounds run in
+    ``_CC_EVERY``-round spans before each materialization (each round
+    references the previous color plan twice — the _cc_loop span
+    discipline); (b) every round carries the PRE-round color as
+    ``_mid``, so the convergence probe ("the last round changed
+    nothing" — exactly the per-round criterion, same round accounting)
+    is a cached-scan filter on the fresh checkpoint, not a shuffle join
+    of old vs new. Bowtie's 12-round coloring was ~84 of its 179
+    per-rep jobs before this."""
+    colors = s.checkpoint(rem_n.select("node", F.col("node").alias("color")))
+
+    def step(plan: DataFrame, _r: int) -> DataFrame:
+        plan = plan.select("node", "color")
+        incoming = (
+            rem_e.join(
+                plan.select(F.col("node").alias("s"), F.col("color").alias("c_in")),
+                "s",
+            )
+            .groupBy(F.col("d").alias("node"))
+            .agg(F.min("c_in").alias("c_min"))
+        )
+        return plan.join(incoming, "node", "left").select(
+            "node",
+            F.least(F.col("color"), F.coalesce("c_min", F.col("color"))).alias(
+                "color"
+            ),
+            F.col("color").alias("_mid"),
+        )
+
+    def converged(new: DataFrame, _old: DataFrame, _r: int) -> bool:
+        return not new.where(F.col("color") != F.col("_mid")).head(1)
+
+    colors, done = s.rounds(colors, step, max_rounds, _CC_EVERY, converged)
+    if not done:
+        raise RuntimeError(
+            f"scc: forward coloring did not converge in {max_rounds} rounds"
+        )
+    return colors
 
 
 def strongly_connected_components(
@@ -587,53 +616,8 @@ def strongly_connected_components(
             if not rem_n.head(1):
                 break
 
-            # 2. FORWARD COLOR to fixpoint (min over ancestors + self).
-            # Two r12 job-count cuts, both semantics-free: (a) rounds
-            # run in 2-round spans before each materialization (each
-            # round references the previous color plan twice, so
-            # in-span lineage growth is bounded at 2 rounds — the
-            # _cc_loop span discipline); (b) every round carries the
-            # PRE-round color as `_mid`, so the convergence probe
-            # ("the last round changed nothing" — exactly the old
-            # per-round criterion, same round accounting) is a cached-
-            # scan filter on the fresh checkpoint, not a shuffle join
-            # of old vs new. Bowtie's 12-round coloring was ~84 of its
-            # 179 per-rep jobs before this.
-            colors = s.checkpoint(rem_n.select("node", F.col("node").alias("color")))
-            rounds_left = max_rounds
-            while rounds_left > 0:
-                span = min(2, rounds_left)
-                rounds_left -= span
-                plan = colors.select("node", "color")
-                for _r in range(span):
-                    incoming = (
-                        rem_e.join(
-                            plan.select(
-                                F.col("node").alias("s"),
-                                F.col("color").alias("c_in"),
-                            ),
-                            "s",
-                        )
-                        .groupBy(F.col("d").alias("node"))
-                        .agg(F.min("c_in").alias("c_min"))
-                    )
-                    plan = plan.join(incoming, "node", "left").select(
-                        "node",
-                        F.least(
-                            F.col("color"), F.coalesce("c_min", F.col("color"))
-                        ).alias("color"),
-                        F.col("color").alias("_mid"),
-                    )
-                new_c = s.checkpoint(plan)
-                changed = new_c.where(F.col("color") != F.col("_mid")).head(1)
-                s.release(colors)
-                colors = new_c
-                if not changed:
-                    break
-            else:
-                raise RuntimeError(
-                    f"scc: forward coloring did not converge in {max_rounds} rounds"
-                )
+            # 2. FORWARD COLOR to fixpoint (min over ancestors + self)
+            colors = _forward_colors(s, rem_e, rem_n, max_rounds)
 
             # 3. BACKWARD SWEEP from the roots within same color
             member = m_ck = s.checkpoint(

@@ -14,6 +14,10 @@ owns that discipline:
 - ``Scope`` — a context manager that checkpoints, releases superseded
   frames, hands results to the caller with ``keep`` and, on exit
   (normal or exception), releases everything else it made.
+- ``Scope.rounds`` — the one round loop: a step per round, a
+  checkpoint every few rounds, an optional convergence probe, the
+  superseded table released. The checkpoint cadence is a constant at
+  each call site, chosen by how fast the step's lineage grows.
 - ``release(df)`` — frees a result an operator kept, later.
 - ``fits_broadcast(df)`` — whether a checkpoint's measured size is
   under the session's broadcast threshold, for frontier joins.
@@ -27,6 +31,7 @@ from __future__ import annotations
 
 import os
 import warnings
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -262,6 +267,38 @@ class Scope:
     def keep(self, df: DataFrame) -> DataFrame:
         self._held.pop(id(df), None)
         return df
+
+    def rounds(
+        self,
+        state: DataFrame,
+        step: Callable[[DataFrame, int], DataFrame],
+        n: int,
+        every: int,
+        stop: Callable[[DataFrame, DataFrame, int], bool] | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """The iterative tier's round loop: ``plan = step(plan, r)`` for
+        r = 1..n, starting from ``state``. The plan is checkpointed
+        after every ``every`` rounds and after round n, so lineage grows
+        for at most ``every`` rounds between truncations. After each
+        checkpoint ``stop(new, old, r)`` (when given) probes the fresh
+        table against the one it supersedes; then ``old`` is released
+        and, if ``stop`` returned true, the loop ends. Returns the last
+        checkpoint and whether ``stop`` fired. ``state`` is released
+        like any other superseded table (a no-op when this scope did
+        not checkpoint it)."""
+        r = 0
+        while r < n:
+            plan = state
+            for _ in range(min(every, n - r)):
+                r += 1
+                plan = step(plan, r)
+            new = self.checkpoint(plan)
+            stopped = stop is not None and stop(new, state, r)
+            self.release(state)
+            state = new
+            if stopped:
+                return state, True
+        return state, False
 
 
 # Edge-count gate for the driver-local solvers (0 disables). A constant

@@ -28,10 +28,10 @@ constants are literal doubles (0.85, 0.15) on both sides — never
 computed as 1 - d, which DuckDB would do in exact DECIMAL and Spark in
 double, diverging in the last bits.
 
-Scale notes (100 TB): lineage is truncated per round with eager
-localCheckpoint and the superseded round's blocks are released
-deterministically (operators/materialize.py's Scope — VERDICT r2
-item 5 discipline); on a real cluster prefer reliable
+Scale notes (100 TB): lineage is truncated every three rounds with
+eager localCheckpoint and the superseded span's blocks are released
+deterministically (operators/materialize.py's ``Scope.rounds`` —
+VERDICT r2 item 5 discipline); on a real cluster prefer reliable
 checkpoint() with a checkpoint dir. Skewed in-degree (celebrity nodes)
 is handled by the opt-in `salt_buckets` two-phase contribution sum —
 bitwise-identical to the unsalted path and off by default at bench
@@ -46,6 +46,10 @@ from pyspark.sql import functions as F
 from tvbigdataproject_spark.operators.materialize import EdgeSet, Scope
 
 _SCALE = 10**12
+# Rounds per checkpoint: each round references the previous rank plan
+# exactly once (join -> agg -> left join), so in-span lineage grows
+# linearly and the span can be longer than the 3^k k-core/MIS loops'.
+_EVERY = 3
 
 
 def pagerank(
@@ -56,7 +60,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    checkpoint_interval: int = 3,
     salt_buckets: int | None = None,
     sources: DataFrame | None = None,
 ) -> DataFrame:
@@ -83,12 +86,9 @@ def pagerank(
     parameter, not computed, for cross-engine bit-identity (see module
     docstring).
 
-    `checkpoint_interval` amortizes the fixed ~1 s/job materialization
-    cost: ranks are localCheckpointed every that-many rounds instead of
-    every round. Each round references the previous rank plan exactly
-    once (join → agg → left join), so in-span lineage grows linearly —
-    k can be higher here than in the self-referencing BFS/k-core loops.
-    Ranks are bitwise independent of checkpoint placement (the
+    Ranks are localCheckpointed every ``_EVERY`` = 3 rounds
+    (``Scope.rounds``), amortizing the fixed ~1 s/job materialization
+    cost. Ranks are bitwise independent of checkpoint placement (the
     scaled-integer sums are exact); only the job count changes.
 
     `salt_buckets` spreads each destination's contribution sum over
@@ -185,41 +185,31 @@ def pagerank(
                 .alias("rank"),
             )
         ranks = s.checkpoint(init)
-        rounds_done = 0
-        while rounds_done < n_iter:
-            span = min(max(1, checkpoint_interval), n_iter - rounds_done)
-            plan = ranks
-            for _ in range(span):
-                scaled = F.round(F.col("rank") * F.col("share") * _SCALE).cast(
-                    "long"
-                )
-                joined = shares.join(plan, shares.src == plan.node)
-                if salt_buckets:
-                    contrib = (
-                        joined.withColumn(
-                            "_salt",
-                            F.pmod(F.xxhash64("src"), F.lit(salt_buckets)),
-                        )
-                        .groupBy("dst", "_salt")
-                        .agg(F.sum(scaled).alias("_part"))
-                        .groupBy("dst")
-                        .agg((F.sum("_part") / float(_SCALE)).alias("contrib"))
+        scaled = F.round(F.col("rank") * F.col("share") * _SCALE).cast("long")
+
+        def step(plan: DataFrame, _r: int) -> DataFrame:
+            joined = shares.join(plan, shares.src == plan.node)
+            if salt_buckets:
+                contrib = (
+                    joined.withColumn(
+                        "_salt",
+                        F.pmod(F.xxhash64("src"), F.lit(salt_buckets)),
                     )
-                else:
-                    contrib = joined.groupBy("dst").agg(
-                        (F.sum(scaled) / float(_SCALE)).alias("contrib")
-                    )
-                plan = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-                    "node",
-                    (
-                        F.col("base")
-                        + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    ).alias("rank"),
+                    .groupBy("dst", "_salt")
+                    .agg(F.sum(scaled).alias("_part"))
+                    .groupBy("dst")
+                    .agg((F.sum("_part") / float(_SCALE)).alias("contrib"))
                 )
-            stepped = s.checkpoint(plan)
-            rounds_done += span
-            # the superseded span is dead the moment the new one is
-            # materialized — release it now, don't wait for GC
-            s.release(ranks)
-            ranks = stepped
+            else:
+                contrib = joined.groupBy("dst").agg(
+                    (F.sum(scaled) / float(_SCALE)).alias("contrib")
+                )
+            return nodes.join(contrib, nodes.node == contrib.dst, "left").select(
+                "node",
+                (
+                    F.col("base") + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
+                ).alias("rank"),
+            )
+
+        ranks, _ = s.rounds(ranks, step, n_iter, _EVERY)
         return s.keep(ranks)

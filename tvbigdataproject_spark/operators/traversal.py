@@ -49,6 +49,11 @@ from tvbigdataproject_spark.operators.materialize import (
     local_solve_ok,
 )
 
+# Rounds per checkpoint. A k-core round references the previous edge
+# plan three times (degree agg + both semi-joins), so in-span lineage
+# grows ~3^k: 2 halves the fixed per-job cost without plan blowup.
+_KCORE_EVERY = 2
+
 
 def _min_round(
     s: Scope,
@@ -177,7 +182,6 @@ def kcore_peel(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Bounded-round k-core peel: `rounds` iterations of "drop every
     node with degree < k, recompute degrees". Returns (node, deg) for
@@ -191,33 +195,23 @@ def kcore_peel(
     (degrees) + two semi-joins (filter both endpoints), all partitioned
     by node id; the edge set only shrinks, so per-round cost is
     monotonically decreasing. Lineage is truncated every
-    ``checkpoint_interval`` rounds (each round references the previous
-    edge plan three times — degree agg + both semi-joins — so in-span
-    lineage grows ~3^k; the default 2 halves the fixed per-job cost
-    without plan blowup) with the checkpoint-release discipline of
-    operators/components.py.
+    ``_KCORE_EVERY`` = 2 rounds (``Scope.rounds``).
     """
     with Scope() as s:
         e = s.edges(edges, src, dst).df
-        rounds_done = 0
-        while rounds_done < rounds:
-            span = min(max(1, checkpoint_interval), rounds - rounds_done)
-            plan = e
-            for _ in range(span):
-                keep = (
-                    plan.groupBy("src")
-                    .agg(F.count(F.lit(1)).alias("deg"))
-                    .where(F.col("deg") >= k)
-                    .select(F.col("src").alias("node"))
-                )
-                plan = (
-                    plan.join(keep, plan.src == keep.node, "left_semi")
-                    .join(keep, F.col("dst") == keep.node, "left_semi")
-                )
-            stepped = s.checkpoint(plan)
-            rounds_done += span
-            s.release(e)
-            e = stepped
+
+        def step(plan: DataFrame, _r: int) -> DataFrame:
+            keep = (
+                plan.groupBy("src")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .where(F.col("deg") >= k)
+                .select(F.col("src").alias("node"))
+            )
+            return plan.join(keep, plan.src == keep.node, "left_semi").join(
+                keep, F.col("dst") == keep.node, "left_semi"
+            )
+
+        e, _ = s.rounds(e, step, rounds, _KCORE_EVERY)
         s.keep(e)
     return e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -228,7 +222,6 @@ def triangle_corner_counts(
     pairs: DataFrame,
     a: str = "doc_a",
     b: str = "doc_b",
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-node triangle participation counts over an undirected graph
     given as unique (a, b) pairs. Returns (node, n_triangles) for every
@@ -243,20 +236,13 @@ def triangle_corner_counts(
 
     The oriented edge table is consumed three times (both wedge sides +
     the closing probe); only the wedge sides share a partitioning, so
-    Spark's exchange reuse cannot collapse the closing branch and the
-    upstream of `pairs` is recomputed once more. ``materialize=True``
-    caches the oriented table (``persist``, MEMORY_AND_DISK) so the pair
-    generator runs once and all three branches read the cache — use it
-    when the generator is expensive (e.g. a shingle self-join).
-    ``persist`` rather than an eager localCheckpoint, deliberately: it
-    keeps the operator lazy (plan-only callers — explain, tests — still
-    trigger no job), it dedupes all three references within the single
-    downstream action, and because this is a one-shot operator (not an
-    O(rounds) loop) the ContextCleaner releasing the blocks when the
-    result goes out of scope is sufficient — there is no accumulation
-    for the iterative tier's tracked-release discipline to prevent. In
-    production the near-dup pair table is a dedup output that already
-    exists on disk, and the default stays lazy for that case.
+    Spark's exchange reuse cannot collapse the closing branch. The
+    oriented table is therefore cached (``persist``, MEMORY_AND_DISK):
+    the pair generator runs once and all three branches read the
+    cache. ``persist`` rather than an eager localCheckpoint keeps the
+    operator lazy (plan-only callers trigger no job); this is a
+    one-shot operator, not an O(rounds) loop, so the ContextCleaner
+    releasing the blocks when the result goes out of scope is enough.
     """
     e = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct()
     deg = (
@@ -291,9 +277,7 @@ def triangle_corner_counts(
         F.when(u_lower, F.col("u")).otherwise(F.col("v")).alias("lo"),
         F.when(u_lower, F.col("v")).otherwise(F.col("u")).alias("hi"),
         F.when(u_lower, F.struct("dv", "v")).otherwise(F.struct(F.col("du").alias("dv"), F.col("u").alias("v"))).alias("hi_rank"),
-    ).select("lo", "hi", "hi_rank")
-    if materialize:
-        oriented = oriented.persist()
+    ).select("lo", "hi", "hi_rank").persist()
     x, y = oriented.alias("x"), oriented.alias("y")
     wedges = (
         x.hint("SHUFFLE_HASH")
@@ -391,7 +375,6 @@ def luby_mis(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_interval: int = 1,
 ) -> DataFrame:
     """Bounded-round Luby maximal-independent-set over an undirected
     graph (feed a bidirectional edge list). Returns (node, round) for
@@ -408,10 +391,10 @@ def luby_mis(
     run (the fixed-K reproducibility discipline of pagerank/kcore).
 
     Per round: one neighbor-min keyed agg + two anti-joins, all
-    node-id-partitioned; the active set only shrinks. Lineage is
-    truncated every `checkpoint_interval` rounds (each round references
-    the active plan three times, so in-span growth is ~3^k — keep the
-    interval small, as in kcore_peel; default 1 = truncate every round).
+    node-id-partitioned; the active set only shrinks. Both the active
+    and the selected set are checkpointed every round: each round
+    references the active plan three times, so in-span lineage would
+    grow ~3^k (the kcore_peel reasoning, with a span of one).
     """
     from tvbigdataproject_spark.functions.hashing import hex16_hash
 
@@ -423,14 +406,14 @@ def luby_mis(
     )
     with Scope() as s:
         e = s.edges(edges, src, dst).df
-        active = active_ck = s.checkpoint(
+        active = s.checkpoint(
             e.select(F.col("src").alias("node"))
             .distinct()
             .select("node", pkey.alias("pkey"))
         )
         # empty (node, round) frame with node's real type — so rounds=0
         # returns a DataFrame (not None) and unions stay type-stable
-        selected = selected_ck = active.select(
+        selected = active.select(
             "node", F.lit(0).cast("int").alias("round")
         ).where(F.lit(False))
         for r in range(1, rounds + 1):
@@ -452,25 +435,14 @@ def luby_mis(
                 .select(F.col("dst").alias("node"))
                 .distinct()
             )
-            nxt = (
+            stepped = s.checkpoint(selected.unionByName(sel))
+            nxt = s.checkpoint(
                 active.join(sel.select("node"), "node", "left_anti")
                 .join(removed, "node", "left_anti")
             )
-            out = selected.unionByName(sel)
-            if r % checkpoint_interval == 0 or r == rounds:
-                stepped = s.checkpoint(out)
-                nxt_cp = s.checkpoint(nxt)
-                s.release(active_ck)
-                s.release(selected_ck)
-                # the fresh checkpoints become the new ancestors the
-                # next un-checkpointed spans build on
-                active = active_ck = nxt_cp
-                selected = selected_ck = stepped
-            else:
-                # in-span round: keep the plan lazy; the last
-                # materialized ancestors (active_ck/selected_ck) must
-                # survive until the next truncation point
-                active, selected = nxt, out
+            s.release(active)
+            s.release(selected)
+            active, selected = nxt, stepped
         # the returned selected set stays materialized; everything else
         # is dead
         return s.keep(selected)
@@ -495,8 +467,9 @@ def dag_longest_path_levels(
     ``max_rounds`` guard raises, doubling as a cycle detector (levels
     on a cycle grow without bound).
 
-    Each round is one corpus-partitioned equi-join + groupBy-max with
-    eager tracked checkpointing (the connected_components discipline).
+    Each round is one corpus-partitioned equi-join + groupBy-max,
+    checkpointed every round (``Scope.rounds``); the convergence probe
+    joins the new levels to the old.
     """
     with Scope() as s:
         e = s.edges(edges, src, dst).df.select(
@@ -508,35 +481,33 @@ def dag_longest_path_levels(
             .distinct()
             .select("node", F.lit(0).cast("int").alias("level"))
         )
-        for _ in range(max_rounds):
+
+        def step(plan: DataFrame, _r: int) -> DataFrame:
             incoming = (
                 e.join(
-                    lvl.select(
-                        F.col("node").alias("s"), F.col("level").alias("lu")
-                    ),
+                    plan.select(F.col("node").alias("s"), F.col("level").alias("lu")),
                     "s",
                 )
                 .groupBy(F.col("d").alias("node"))
                 .agg((F.max("lu") + 1).alias("lin"))
             )
-            stepped = lvl.join(incoming, "node", "left").select(
+            return plan.join(incoming, "node", "left").select(
                 "node",
-                F.greatest(
-                    F.col("level"), F.coalesce("lin", F.col("level"))
-                ).alias("level"),
+                F.greatest(F.col("level"), F.coalesce("lin", F.col("level"))).alias(
+                    "level"
+                ),
             )
-            new_lvl = s.checkpoint(stepped)
-            changed = (
-                new_lvl.join(
-                    lvl.select("node", F.col("level").alias("old")), "node"
-                )
+
+        def converged(new: DataFrame, old: DataFrame, _r: int) -> bool:
+            return not (
+                new.join(old.select("node", F.col("level").alias("old")), "node")
                 .where(F.col("level") != F.col("old"))
                 .head(1)
             )
-            s.release(lvl)
-            lvl = new_lvl
-            if not changed:
-                return s.keep(lvl)
+
+        lvl, done = s.rounds(lvl, step, max_rounds, 1, converged)
+        if done:
+            return s.keep(lvl)
         raise RuntimeError(
             f"dag_longest_path_levels: no fixpoint in {max_rounds} rounds "
             "(deep DAG or a cycle — levels on a cycle grow without bound)"

@@ -187,7 +187,7 @@ def triangle_count_neardup(spark, sf_dir):
     )
     # the pair generator is the expensive shingle self-join — cache the
     # oriented edges so the closing branch doesn't recompute it
-    return triangle_corner_counts(pairs, a="doc_a", b="doc_b", materialize=True)
+    return triangle_corner_counts(pairs, a="doc_a", b="doc_b")
 
 
 @query(
@@ -257,12 +257,12 @@ def clustering_coeff_neardup(spark, sf_dir):
     """
     # the pair list feeds BOTH the triangle operator and the degree agg
     # — persist it so the expensive shingle self-join runs once (lazy
-    # persist, same one-shot rationale as triangle_corner_counts'
-    # materialize flag)
+    # persist, the same one-shot rationale as triangle_corner_counts'
+    # cached oriented table)
     pairs = ngram_jaccard_pairs(
         read_table(spark, sf_dir, "documents"), n=3, threshold=0.4
     ).persist()
-    tcount = triangle_corner_counts(pairs, a="doc_a", b="doc_b", materialize=True)
+    tcount = triangle_corner_counts(pairs, a="doc_a", b="doc_b")
     degs = (
         pairs.select(F.col("doc_a").alias("node"))
         .unionAll(pairs.select(F.col("doc_b").alias("node")))
