@@ -3,6 +3,7 @@ fixture from FIXTURES.md §A (hand-verifiable goldens in test_pipelines)."""
 
 from __future__ import annotations
 
+import itertools
 import sys
 
 import pytest
@@ -18,6 +19,25 @@ def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """(jobs, result) of ``fn()``: the Spark jobs it ran, counted under a
+    job group of its own. The status store is fed by the asynchronous
+    listener bus, so the bus is drained before counting; reading
+    ``statusTracker`` without that can count one job short."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 def _ht(tags):

@@ -392,7 +392,9 @@ def test_dbscan_multiprobe_partitioning_invariance(spark):
     assert base == shuf
 
 
-def test_two_level_probes_deterministic_and_high_recall_on_clusters(spark):
+def test_two_level_probes_deterministic_and_high_recall_on_clusters(
+    spark, monkeypatch
+):
     """Density-scaled routing path: two-level probes must be a pure
     function of the row (partitioning-invariant), stay within the
     routed group, and on geometrically clustered data lose little of
@@ -400,6 +402,7 @@ def test_two_level_probes_deterministic_and_high_recall_on_clusters(spark):
     applied to multi-probe blocking)."""
     from pyspark.sql import functions as F
 
+    from tvbigdataproject_spark.operators import similarity
     from tvbigdataproject_spark.operators.similarity import (
         cosine_pairs_multiprobe,
         nearest_cells_quantized,
@@ -412,14 +415,13 @@ def test_two_level_probes_deterministic_and_high_recall_on_clusters(spark):
     rows = [(int(i), [float(x) for x in X[i]]) for i in range(len(X))]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    tl = nearest_cells_quantized(emb, k=16, n_probes=2, two_level=True)
+    # the routed path below its crossover: the threshold at k
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_TWO_LEVEL_K", 16)
+        tl = nearest_cells_quantized(emb, k=16, n_probes=2)
+        tl_shuf = nearest_cells_quantized(emb.repartition(7), k=16, n_probes=2)
     base = {r.vec_id: list(r.cells) for r in tl.collect()}
-    shuf = {
-        r.vec_id: list(r.cells)
-        for r in nearest_cells_quantized(
-            emb.repartition(7), k=16, n_probes=2, two_level=True
-        ).collect()
-    }
+    shuf = {r.vec_id: list(r.cells) for r in tl_shuf.collect()}
     assert base == shuf
     # every probe list is non-empty and within the probe budget
     assert all(1 <= len(cells) <= 2 for cells in base.values())

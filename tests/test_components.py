@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
+
 from tvbigdataproject_spark.operators.components import (
     canonical_survivors,
     connected_components,
@@ -45,15 +47,14 @@ def test_self_loops_and_duplicate_edges_are_harmless(spark):
     assert got == {1: 1, 2: 1}
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
+    # SPARK_GRAFT_LOCAL_EDGES=0 pins the distributed path: the
+    # size-gated local union-find endgame (r13) solves any
+    # sub-threshold graph exactly and never hits max_iter
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
     try:
-        # local_edge_threshold=0 pins the distributed path: the
-        # size-gated local union-find endgame (r13) solves any
-        # sub-threshold graph exactly and never hits max_iter
         connected_components(
-            _edges(spark, [(i, i + 1) for i in range(1, 40)]),
-            max_iter=1,
-            local_edge_threshold=0,
+            _edges(spark, [(i, i + 1) for i in range(1, 40)]), max_iter=1
         )
     except RuntimeError as e:
         assert "converge" in str(e)
@@ -263,7 +264,7 @@ def test_checkpoint_stats_do_not_compound(spark):
         assert bits(cur) < 160, bits(cur)
 
 
-def test_probe_columns_never_leak_and_spans_equal_per_round(spark):
+def test_probe_columns_never_leak_and_spans_equal_per_round(spark, monkeypatch):
     # r12 internals change: the convergence probe reads a carried
     # `_prev` column off the span checkpoint instead of joining old vs
     # new labels. The carried column must never surface. (Results at
@@ -274,14 +275,15 @@ def test_probe_columns_never_leak_and_spans_equal_per_round(spark):
     )
     # threshold 0: this test targets the DISTRIBUTED loop's probe
     # internals; the default would take the r13 local endgame
-    df = connected_components(edges, local_edge_threshold=0)
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
+    df = connected_components(edges)
     assert df.columns == ["node", "label"], df.columns
     assert sorted(map(tuple, df.collect())) == [
         (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20),
     ]
 
 
-def test_local_endgame_matches_distributed_loop(spark):
+def test_local_endgame_matches_distributed_loop(spark, monkeypatch):
     # r13 size-gated driver-local union-find endgame: identical labels
     # to the distributed min-propagation fixpoint on a mixed graph
     # (two components, a chain, a self-loop, an isolated pair).
@@ -290,12 +292,8 @@ def test_local_endgame_matches_distributed_loop(spark):
         "src long, dst long",
     )
     local = sorted(map(tuple, connected_components(edges).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            connected_components(edges, local_edge_threshold=0).collect(),
-        )
-    )
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
+    dist = sorted(map(tuple, connected_components(edges).collect()))
     assert local == dist
     assert local == [
         (1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7), (10, 10),
@@ -307,19 +305,11 @@ def test_local_endgame_matches_distributed_loop(spark):
 # one call, pinned exactly at the counts measured before the round loop
 # moved into materialize.Scope.rounds, so a change of checkpoint cadence
 # shows either way (CC at one round per checkpoint runs FEWER jobs here:
-# its last-round probe stops sooner). The status store is fed by the
-# asynchronous listener bus, so it is drained before counting.
-def _fenced_jobs(spark, group, run):
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup(group, group)
-        out = run()
-        sc._jsc.clearJobGroup()
-        assert out.count() > 1
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+# its last-round probe stops sooner).
+def _fenced_jobs(spark, run):
+    jobs, out = count_jobs(spark, run)
+    assert out.count() > 1
+    return jobs
 
 
 def test_label_propagation_job_fence_on_trade_graph(spark):
@@ -328,26 +318,21 @@ def test_label_propagation_job_fence_on_trade_graph(spark):
     bi = te.trade_edges_bi(spark, "/root/testdata/sf0.01")
     try:
         # start labels, then a 2-round and a 1-round span
-        jobs = _fenced_jobs(
-            spark, "test_lpa_job_fence", lambda: label_propagation(bi, rounds=3)
-        )
+        jobs = _fenced_jobs(spark, lambda: label_propagation(bi, rounds=3))
         assert jobs == 15
     finally:
         te.release_trade_pairs(spark)
 
 
-def test_connected_components_job_fence_on_trade_graph(spark):
+def test_connected_components_job_fence_on_trade_graph(spark, monkeypatch):
     from tvbigdataproject_spark.operators import trade_edges as te
 
     bi = te.trade_edges_bi(spark, "/root/testdata/sf0.01")
     try:
         # threshold 0: the distributed loop, 2-round spans with the
         # span-end `_prev` probe
-        jobs = _fenced_jobs(
-            spark,
-            "test_cc_job_fence",
-            lambda: connected_components(bi.df, local_edge_threshold=0),
-        )
+        monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
+        jobs = _fenced_jobs(spark, lambda: connected_components(bi.df))
         assert jobs == 33
     finally:
         te.release_trade_pairs(spark)

@@ -51,7 +51,9 @@ def test_scope_releases_everything_on_error_and_keeps_what_it_hands_out(spark):
         foreign.unpersist()
 
 
-def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(spark):
+def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(
+    spark, monkeypatch
+):
     # an operator handed the session trade table must leave the cache's
     # blocks persisted and release everything it made except its
     # result; release(result) then returns the context to the cache
@@ -74,12 +76,18 @@ def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(spark):
     cache = persistent_ids(sc) - before
     assert cache  # the session table's checkpoint blocks
     src = spark.createDataFrame([(1,)], "node long")
+
+    def reach_distributed():
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
+            return reachable_masks(bi, src)
+
     runs = [
         lambda: bfs_levels(bi, source=1, max_hops=3),
         lambda: kcore_peel(bi, k=2, rounds=3),
         lambda: label_propagation(bi, rounds=3),
         lambda: luby_mis(bi, rounds=2),
-        lambda: reachable_masks(bi, src, local_edge_threshold=0),
+        reach_distributed,
         lambda: strongly_connected_components(bi),
     ]
     try:
@@ -133,11 +141,11 @@ def test_local_solve_gate_threshold_and_env(spark, monkeypatch):
     e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_EDGES", raising=False)
     assert local_solve_ok(e)  # 2 edges under the 1M default
-    assert local_solve_ok(e, 2) and not local_solve_ok(e, 1)
-    assert not local_solve_ok(e, 0)  # 0 disables
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "1")
-    assert not local_solve_ok(e)
-    assert local_solve_ok(e, 5)  # the argument wins over the env var
+    for threshold, ok in (("2", True), ("1", False), ("0", False)):  # 0 disables
+        monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", threshold)
+        assert local_solve_ok(e) is ok, threshold
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "not-a-number")
+    assert local_solve_ok(e)  # an unreadable setting falls back to the default
 
 
 def test_fits_broadcast_reads_only_a_bare_checkpoints_stored_size(spark):

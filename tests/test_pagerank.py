@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
+
 from tvbigdataproject_spark.operators.pagerank import pagerank
 
 
@@ -161,20 +163,13 @@ def test_pagerank_job_fence_on_trade_graph(spark):
     # (local[4]), pinned exactly at the count measured before the round
     # loop moved into materialize.Scope.rounds: 4 iterations are a
     # 3-round and a 1-round span, so a change of checkpoint cadence
-    # shows. The status store is fed by the asynchronous listener bus,
-    # so it is drained before counting.
+    # shows.
     from tvbigdataproject_spark.operators import trade_edges as te
 
-    sc = spark.sparkContext
     bi = te.trade_edges_weighted_bi(spark, "/root/testdata/sf0.01")
-    group = "test_pagerank_job_fence"
     try:
-        sc.setJobGroup(group, group)
-        out = pagerank(bi, n_iter=4)
-        sc._jsc.clearJobGroup()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 29
+        jobs, out = count_jobs(spark, lambda: pagerank(bi, n_iter=4))
+        assert jobs == 29
         assert out.count() > 1
     finally:
-        sc._jsc.clearJobGroup()
         te.release_trade_pairs(spark)

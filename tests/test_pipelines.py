@@ -11,6 +11,8 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
+
 from tvbigdataproject_spark.operators.graph import k_hop_neighborhood
 from tvbigdataproject_spark.operators.materialize import Scope, persistent_ids
 from tvbigdataproject_spark.operators.skew import shuffle_partition_count
@@ -409,37 +411,31 @@ def test_bi_report_matches_python_report_with_a_self_retweet(repeat_pipe):
 
 
 def test_neighborhood_build_and_report_sink_job_fences(spark, tweets_df, tmp_path):
-    sc = spark.sparkContext
     with TweetGraphPipeline(spark, tweets=tweets_df) as p:
         p.full_graph()  # the core, as the CLI's first graph artifact builds it
-        try:
-            sc.setJobGroup("fence_neighborhood", "fence_neighborhood")
-            p.neighborhood("1", hops=2)
-            sc.setJobGroup("fence_report_sink", "fence_report_sink")
-            write_single_csv(p.bi_report(), str(tmp_path / "report.csv"), sep=";", audit_null_cols=["user"])
-        finally:
-            sc._jsc.clearJobGroup()
+        hood_jobs, _ = count_jobs(spark, lambda: p.neighborhood("1", hops=2))
+        sink_jobs, _ = count_jobs(
+            spark,
+            lambda: write_single_csv(
+                p.bi_report(), str(tmp_path / "report.csv"), sep=";", audit_null_cols=["user"]
+            ),
+        )
     # two shuffles (the hop's distinct, the subgraph's), three
     # broadcasts (the seed for the hop and the anti-join, the visited
     # ids for the subgraph filter) and the checkpoint
-    assert len(sc.statusTracker().getJobIdsForGroup("fence_neighborhood")) <= 6
+    assert hood_jobs == 6
     # the map's shuffle, the partner aggregate's shuffle and broadcast,
     # the write
-    assert len(sc.statusTracker().getJobIdsForGroup("fence_report_sink")) <= 4
+    assert sink_jobs == 4
 
 
 def test_full_graph_build_job_fence(spark, tweets_df):
-    sc = spark.sparkContext
     with TweetGraphPipeline(spark, tweets=tweets_df) as p:
-        try:
-            sc.setJobGroup("fence_full_graph", "fence_full_graph")
-            p.full_graph()
-        finally:
-            sc._jsc.clearJobGroup()
+        jobs, _ = count_jobs(spark, p.full_graph)
     # the map and edge checkpoints, JC as one self-join and one count:
     # measured 6; JC as a candidate distinct, a self-join and two array
     # attach joins took 9
-    assert len(sc.statusTracker().getJobIdsForGroup("fence_full_graph")) <= 6
+    assert jobs == 6
 
 
 # --- JC against a plain-Python Jaccard ---------------------------------------

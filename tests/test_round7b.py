@@ -123,13 +123,37 @@ def _mk_emb(spark, vecs):
     )
 
 
+def _hof_argmax(emb, cent):
+    # reference assignment spelled out in the test: the JVM HOF cosine
+    # over every (vector, centroid) pair, argmax with the smallest-cid
+    # tie rule
+    from pyspark.sql import Window
+
+    from tvbigdataproject_spark.functions import cosine_similarity
+
+    c = cent.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
+    return {
+        r.vec_id: r.cid
+        for r in emb.crossJoin(c)
+        .select(
+            "vec_id",
+            "cid",
+            cosine_similarity(F.col("embedding"), F.col("c_emb")).alias("cos"),
+        )
+        .select("vec_id", "cid", F.row_number().over(w).alias("rn"))
+        .where(F.col("rn") == 1)
+        .collect()
+    }
+
+
 def test_assign_nearest_centroid_ties_to_smallest_cid(spark):
     # vec 2 is equidistant from centroids 0 and 1 -> cell 0
     emb = _mk_emb(spark, [[1, 0], [0, 1], [1, 1]])
     cent = emb.where(F.col("vec_id") < 2)
     got = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(emb, cent, kernel="hof").collect()
+        for r in assign_nearest_centroid(emb, cent).collect()
     }
     assert got == {0: 0, 1: 1, 2: 0}
 
@@ -149,9 +173,7 @@ def test_semdedup_prunes_dominated_not_greedy(spark):
     cent = emb.where(F.col("vec_id") < 1)  # single centroid -> one cell
     got = {
         r.vec_id
-        for r in semdedup_survivors(
-            emb, cent, threshold=0.9, kernel="hof"
-        ).collect()
+        for r in semdedup_survivors(emb, cent, threshold=0.9).collect()
     }
     assert got == {0}
 
@@ -176,49 +198,43 @@ def test_semdedup_survivor_set_respects_threshold(spark):
 
 
 def test_assign_arrow_matches_hof_and_ties(spark):
-    # the scan-local arrow strategy must reproduce the hof plan's
+    # the scan-local arrow argmax must reproduce the HOF reference's
     # assignment bit-for-bit, including the smallest-cid tie at vec 2
     emb = _mk_emb(spark, [[1, 0], [0, 1], [1, 1]])
     cent = emb.where(F.col("vec_id") < 2)
     got = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(emb, cent, kernel="arrow").collect()
+        for r in assign_nearest_centroid(emb, cent).collect()
     }
-    assert got == {0: 0, 1: 1, 2: 0}
+    assert got == _hof_argmax(emb, cent) == {0: 0, 1: 1, 2: 0}
 
 
 def test_assign_arrow_matches_hof_on_corpus(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cent = emb.where(F.col("vec_id") < 8)
-    hof = {
-        r.vec_id: r.cell
-        for r in assign_nearest_centroid(emb, cent, kernel="hof").collect()
-    }
     arrow = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(
-            emb.repartition(5), cent, kernel="arrow"
-        ).collect()
+        for r in assign_nearest_centroid(emb.repartition(5), cent).collect()
     }
-    assert arrow == hof
+    assert arrow == _hof_argmax(emb, cent)
 
 
-def test_assign_two_level_invariants(spark):
+def test_assign_two_level_invariants(spark, monkeypatch):
     # two-level routing is approximate vs flat but must stay total,
     # deterministic under repartitioning, and self-assign centroids
+    from tvbigdataproject_spark.operators import similarity
+
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cent = emb.where(F.col("vec_id") < 32)
+    # the routed path below its crossover: the threshold at k
+    monkeypatch.setattr(similarity, "_TWO_LEVEL_K", 32)
     a = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(
-            emb, cent, kernel="arrow", two_level=True
-        ).collect()
+        for r in assign_nearest_centroid(emb, cent).collect()
     }
     b = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(
-            emb.repartition(7), cent, kernel="arrow", two_level=True
-        ).collect()
+        for r in assign_nearest_centroid(emb.repartition(7), cent).collect()
     }
     assert a == b
     assert len(a) == emb.count()
@@ -230,11 +246,13 @@ def test_assign_two_level_invariants(spark):
         assert a[cid] == cid
 
 
-def test_assign_two_level_matches_flat_on_separated_clusters(spark):
+def test_assign_two_level_matches_flat_on_separated_clusters(spark, monkeypatch):
     # two orthogonal clusters whose LEADERS (the first two centroids)
     # are one per cluster: routing = cluster pick (cos ~1 vs ~0), and
     # each group holds exactly its cluster's centroids, so the
     # hierarchical answer equals the flat argmax on every point
+    from tvbigdataproject_spark.operators import similarity
+
     def pt(axis, e2, e3):
         v = [0.0] * 4
         v[axis] = 1.0
@@ -258,13 +276,12 @@ def test_assign_two_level_matches_flat_on_separated_clusters(spark):
     cent = emb.where(F.col("vec_id") < 4)
     flat = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(emb, cent, kernel="arrow").collect()
+        for r in assign_nearest_centroid(emb, cent).collect()
     }
+    monkeypatch.setattr(similarity, "_TWO_LEVEL_K", 4)
     routed = {
         r.vec_id: r.cell
-        for r in assign_nearest_centroid(
-            emb, cent, kernel="arrow", two_level=True
-        ).collect()
+        for r in assign_nearest_centroid(emb, cent).collect()
     }
     assert routed == flat
     # sanity: the clusters really split across cells of their own side

@@ -130,7 +130,7 @@ def test_200_node_path_trims_within_two_peels(spark):
     assert got == {i: i for i in range(n + 1)}
 
 
-def test_nonconvergence_raises_and_leaks_nothing(spark):
+def test_nonconvergence_raises_and_leaks_nothing(spark, monkeypatch):
     # Both error paths must unpersist every tracked checkpoint block
     # (r9 advice item): graph = 3-cycle + chord 1->3. Forward coloring
     # converges in 2 rounds but the backward sweep needs 3 (root 1 is
@@ -143,14 +143,13 @@ def test_nonconvergence_raises_and_leaks_nothing(spark):
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
     )
+    # threshold 0: the r13 local-Tarjan endgame would solve this
+    # sub-threshold graph without entering the phases
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
     for max_rounds, phase in ((1, "forward coloring"), (2, "backward sweep")):
         before = persistent_ids(sc)
         with pytest.raises(RuntimeError, match=phase):
-            # threshold 0: the r13 local-Tarjan endgame would solve
-            # this sub-threshold graph without entering the phases
-            strongly_connected_components(
-                e, max_rounds=max_rounds, local_edge_threshold=0
-            )
+            strongly_connected_components(e, max_rounds=max_rounds)
         leaked = persistent_ids(sc) - before
         assert not leaked, (phase, leaked)
 
@@ -212,7 +211,7 @@ def test_dag_levels_and_cycle_detection(spark):
         dag_longest_path_levels(cyc, max_rounds=10)
 
 
-def test_forward_color_span_probe_matches_old_round_accounting(spark):
+def test_forward_color_span_probe_matches_old_round_accounting(spark, monkeypatch):
     # r12 internals change: forward coloring runs 2-round spans with a
     # carried pre-round `_mid` color for the convergence probe. The
     # probe criterion ("the LAST round changed nothing") is the old
@@ -227,14 +226,15 @@ def test_forward_color_span_probe_matches_old_round_accounting(spark):
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
     )
-    out = strongly_connected_components(e, max_rounds=3, local_edge_threshold=0)
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
+    out = strongly_connected_components(e, max_rounds=3)
     assert out.columns == ["node", "scc"]
     assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (3, 1)]
     with pytest.raises(RuntimeError, match="forward coloring"):
-        strongly_connected_components(e, max_rounds=1, local_edge_threshold=0)
+        strongly_connected_components(e, max_rounds=1)
 
 
-def test_local_endgame_matches_distributed_phases(spark):
+def test_local_endgame_matches_distributed_phases(spark, monkeypatch):
     # r13 size-gated local-Tarjan endgame vs the distributed
     # FW-BW-Trim phases: identical (node, scc) on a graph that
     # exercises trim (the tail 4->5), coloring and the sweep
@@ -244,14 +244,8 @@ def test_local_endgame_matches_distributed_phases(spark):
         "src long, dst long",
     )
     local = sorted(map(tuple, strongly_connected_components(e).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            strongly_connected_components(
-                e, local_edge_threshold=0
-            ).collect(),
-        )
-    )
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
+    dist = sorted(map(tuple, strongly_connected_components(e).collect()))
     assert local == dist
     assert local == [
         (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 6), (7, 6),

@@ -61,24 +61,23 @@ def test_ivf_multi_assignment_dedupes_pairs(emb):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
-def test_two_level_assignment_contract(emb):
+def test_two_level_assignment_contract(emb, monkeypatch):
     # the unified attach_nearest_cells (round-8 verdict item 5): the
     # leader-routed path must (a) emit well-formed nearest-first cell
     # lists, (b) be partitioning-invariant (routing is row-local), and
     # (c) agree with the flat sweep for MOST vectors (it is approximate
     # only at group boundaries).
+    from tvbigdataproject_spark.operators import similarity as S
     from tvbigdataproject_spark.operators.similarity import (
         attach_nearest_cells,
         fit_ivf_centers,
     )
 
     centers = fit_ivf_centers(emb, n_cells=16, cache_key=("t2l", SF_DIR))
-    flat = attach_nearest_cells(
-        emb, centers, 2, out_col="cells", two_level=False
-    )
-    routed = attach_nearest_cells(
-        emb, centers, 2, out_col="cells", two_level=True
-    )
+    flat = attach_nearest_cells(emb, centers, 2, out_col="cells")
+    # the routed path below its crossover: the threshold at k
+    monkeypatch.setattr(S, "_TWO_LEVEL_K", 16)
+    routed = attach_nearest_cells(emb, centers, 2, out_col="cells")
     f = {r.vec_id: list(r.cells) for r in flat.collect()}
     g = {r.vec_id: list(r.cells) for r in routed.collect()}
     assert set(f) == set(g)
@@ -95,19 +94,20 @@ def test_two_level_assignment_contract(emb):
     shuf = {
         r.vec_id: list(r.cells)
         for r in attach_nearest_cells(
-            emb.repartition(7), centers, 2, out_col="cells", two_level=True
+            emb.repartition(7), centers, 2, out_col="cells"
         ).collect()
     }
     assert shuf == g
 
 
-def test_two_level_agreement_high_on_clustered_data(spark):
+def test_two_level_agreement_high_on_clustered_data(spark, monkeypatch):
     # the production regime (mirrors test_clustering's multiprobe bar):
     # on 10 tight Gaussian bundles the nearest-leader routing finds the
     # flat sweep's argmin cell almost always — geometric coherence is
     # exactly what routing exploits
     import numpy as np
 
+    from tvbigdataproject_spark.operators import similarity as S
     from tvbigdataproject_spark.operators.similarity import (
         attach_nearest_cells,
         fit_ivf_centers,
@@ -124,18 +124,9 @@ def test_two_level_agreement_high_on_clustered_data(spark):
         "vec_id long, embedding array<float>",
     )
     centers = fit_ivf_centers(emb, n_cells=16)
-    f = {
-        r.vec_id: r.cells[0]
-        for r in attach_nearest_cells(
-            emb, centers, 1, two_level=False
-        ).collect()
-    }
-    g = {
-        r.vec_id: r.cells[0]
-        for r in attach_nearest_cells(
-            emb, centers, 1, two_level=True
-        ).collect()
-    }
+    f = {r.vec_id: r.cells[0] for r in attach_nearest_cells(emb, centers, 1).collect()}
+    monkeypatch.setattr(S, "_TWO_LEVEL_K", 16)
+    g = {r.vec_id: r.cells[0] for r in attach_nearest_cells(emb, centers, 1).collect()}
     # measured 0.90 at k=16 (gs=4 -> only 4 leaders; top-2 routing
     # covers half the centroids — the coarsest regime the routing path
     # ever runs at, since the crossover only engages it at k >= 128
@@ -179,6 +170,39 @@ def test_ivf_recall_survives_two_level_routing(emb, truth):
     assert routed >= flat - 0.1, f"two-level {routed} vs flat {flat}"
 
 
+def test_two_level_rule_switches_at_the_centroid_count(emb, monkeypatch):
+    # every cell-assignment entry point routes two-level exactly when
+    # its centroid count k reaches _TWO_LEVEL_K: with the constant at
+    # k + 1 each returns the flat result bit-for-bit, at k the routed
+    # one. 32 centroids on the sf0.001 corpus, where the two differ.
+    from tvbigdataproject_spark.operators import similarity as S
+
+    k = 32
+    cent = emb.where(F.col("vec_id") < k)
+    runs = {
+        "nearest_cells_quantized": lambda: {
+            r.vec_id: tuple(r.cells)
+            for r in S.nearest_cells_quantized(emb, k=k, n_probes=2).collect()
+        },
+        "assign_nearest_centroid": lambda: {
+            r.vec_id: r.cell for r in S.assign_nearest_centroid(emb, cent).collect()
+        },
+        "semdedup_survivors": lambda: {
+            (r.vec_id, r.cell)
+            for r in S.semdedup_survivors(emb, cent, threshold=0.3).collect()
+        },
+    }
+    for name, run in runs.items():
+        got = {}
+        for threshold in (10**9, 1, k + 1, k):
+            monkeypatch.setattr(S, "_TWO_LEVEL_K", threshold)
+            got[threshold] = run()
+        flat, routed = got[10**9], got[1]
+        assert flat != routed, name  # the fixture tells the paths apart
+        assert got[k + 1] == flat, name
+        assert got[k] == routed, name
+
+
 def test_arrow_kernel_bitwise_equals_hof(emb):
     # the two scoring kernels must agree bit-for-bit (not approximately):
     # the DuckDB oracles spell out a sequential left-to-right float64
@@ -202,14 +226,31 @@ def test_arrow_kernel_bitwise_equals_hof(emb):
 
 
 def test_kernels_give_identical_topk(emb):
+    # cosine_topk (Arrow cosine) against a top-k spelled out in the test
+    # over the JVM HOF cosine: same scores, same ranks, same id tiebreak
+    from pyspark.sql import Window
+
+    from tvbigdataproject_spark.functions import cosine_similarity
+
     qs = emb.where(F.col("vec_id") < 10)
     arrow = {
         (r.q_vec_id, r.vec_id, r.cos, r.rn)
-        for r in cosine_topk(emb, qs, k=5, kernel="arrow").collect()
+        for r in cosine_topk(emb, qs, k=5).collect()
     }
+    q = qs.select(F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_emb"))
+    w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     hof = {
         (r.q_vec_id, r.vec_id, r.cos, r.rn)
-        for r in cosine_topk(emb, qs, k=5, kernel="hof").collect()
+        for r in emb.crossJoin(q)
+        .where(F.col("vec_id") != F.col("q_vec_id"))
+        .select(
+            "q_vec_id",
+            "vec_id",
+            cosine_similarity(F.col("q_emb"), F.col("embedding")).alias("cos"),
+        )
+        .select("*", F.row_number().over(w).alias("rn"))
+        .where(F.col("rn") <= 5)
+        .collect()
     }
     assert arrow == hof
 

@@ -7,6 +7,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
+
 from tvbigdataproject_spark.operators import traversal
 from tvbigdataproject_spark.operators.traversal import (
     bfs_levels,
@@ -213,61 +215,15 @@ def test_luby_mis_zero_rounds_returns_empty_dataframe(spark):
     assert out.count() == 0
 
 
-def test_reachable_set_basic_and_cache_release(spark):
-    from pyspark.sql import functions as F
-
-    from tvbigdataproject_spark.operators.traversal import reachable_set
-
-    # 1->2->3->4, 5->1, 6 isolated-ish (6->5 reversed-only edge 5 is
-    # not a source), plus a cycle 3->2 to exercise the visited guard
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 1), (3, 2), (6, 5)],
-        "src long, dst long",
-    )
-    sc = spark.sparkContext
-    before = len(sc._jsc.getPersistentRDDs().keySet().toArray())
-    srcs = spark.createDataFrame([(1,)], "node long")
-    got = {r.node for r in reachable_set(edges, srcs).collect()}
-    assert got == {1, 2, 3, 4}
-    # reversed edges: who reaches 1
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    up = {r.node for r in reachable_set(rev, srcs).collect()}
-    assert up == {1, 5, 6}
-    after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
-    # only the two returned visited sets may remain cached
-    assert after - before <= 2
-
-
-def test_reachable_set_max_rounds_raises(spark):
+def test_reachable_masks_fused_equals_two_sweeps(spark, monkeypatch):
     import pytest
 
-    from tvbigdataproject_spark.operators.traversal import reachable_set
+    from tvbigdataproject_spark.operators.traversal import reachable_masks
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(10)], "src long, dst long"
-    )
-    srcs = spark.createDataFrame([(0,)], "node long")
-    with pytest.raises(RuntimeError, match="reachable_set"):
-        # threshold 0 pins the distributed loop (the r13 local BFS
-        # endgame runs to the exact fixpoint, nothing to truncate)
-        reachable_set(chain, srcs, max_rounds=3, local_edge_threshold=0)
-
-
-def test_reachable_masks_fused_equals_two_sweeps(spark):
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from tvbigdataproject_spark.operators.traversal import (
-        reachable_masks,
-        reachable_set,
-    )
-
-    # same fixture as the reachable_set test: forward from 1 reaches
-    # {1,2,3,4}; reversed reaches {1,5,6}; only the source holds both
-    # bits (no non-source mutual reachability with 1 here)
+    # 1->2->3->4, 5->1, 6->5, plus a cycle 3->2 to exercise the visited
+    # guard: forward from 1 reaches {1,2,3,4}; reversed reaches
+    # {1,5,6}; only the source holds both bits (no non-source mutual
+    # reachability with 1 here)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 1), (3, 2), (6, 5)],
         "src long, dst long",
@@ -276,22 +232,12 @@ def test_reachable_masks_fused_equals_two_sweeps(spark):
     sc = spark.sparkContext
     before = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     masks = {r.node: r.mask for r in reachable_masks(edges, srcs).collect()}
-    fwd = {r.node for r in reachable_set(edges, srcs).collect()}
-    rev = {
-        r.node
-        for r in reachable_set(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ),
-            srcs,
-        ).collect()
-    }
-    assert {n for n, m in masks.items() if m & 1} == fwd
-    assert {n for n, m in masks.items() if m & 2} == rev
+    assert {n for n, m in masks.items() if m & 1} == {1, 2, 3, 4}
+    assert {n for n, m in masks.items() if m & 2} == {1, 5, 6}
     assert masks[1] == 3
     after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
-    # the three returned visited sets may remain cached, nothing else
-    assert after - before <= 3
+    # the returned visited set may remain cached, nothing else
+    assert after - before <= 1
 
     # a cycle through the source marks both bits on every cycle node
     cyc = spark.createDataFrame(
@@ -305,13 +251,16 @@ def test_reachable_masks_fused_equals_two_sweeps(spark):
         [(i, i + 1) for i in range(10)], "src long, dst long"
     )
     before = len(sc._jsc.getPersistentRDDs().keySet().toArray())
+    # 0 pins the distributed loop (the local BFS endgame runs to the
+    # exact fixpoint, nothing to truncate)
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
     with pytest.raises(RuntimeError, match="reachable_masks"):
-        reachable_masks(chain, srcs, max_rounds=2, local_edge_threshold=0)
+        reachable_masks(chain, srcs, max_rounds=2)
     after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     assert after <= before
 
 
-def test_reachable_masks_local_matches_distributed(spark):
+def test_reachable_masks_local_matches_distributed(spark, monkeypatch):
     # r13 size-gated local two-bit BFS endgame vs the distributed fused
     # sweep: identical (node, mask) on the two-sweep fixture.
     from tvbigdataproject_spark.operators.traversal import reachable_masks
@@ -324,37 +273,12 @@ def test_reachable_masks_local_matches_distributed(spark):
     local = {
         r.node: r.mask for r in reachable_masks(edges, srcs).collect()
     }
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "0")
     dist = {
-        r.node: r.mask
-        for r in reachable_masks(
-            edges, srcs, local_edge_threshold=0
-        ).collect()
+        r.node: r.mask for r in reachable_masks(edges, srcs).collect()
     }
     assert local == dist
     assert local == {1: 3, 2: 1, 3: 1, 4: 1, 5: 2, 6: 2}
-
-
-def test_reachable_set_local_matches_distributed(spark):
-    # size-gated local forward BFS endgame vs the distributed frontier
-    # loop: identical visited sets on the two-sweep fixture, along the
-    # edges and along their reverses.
-    from tvbigdataproject_spark.operators.traversal import reachable_set
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 1), (3, 2), (6, 5)],
-        "src long, dst long",
-    )
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    srcs = spark.createDataFrame([(1,)], "node long")
-    for graph, want in ((edges, {1, 2, 3, 4}), (rev, {1, 5, 6})):
-        local = {r.node for r in reachable_set(graph, srcs).collect()}
-        dist = {
-            r.node
-            for r in reachable_set(
-                graph, srcs, local_edge_threshold=0
-            ).collect()
-        }
-        assert local == dist == want
 
 
 def test_bfs_levels_and_sssp_keep_string_ids(spark):
@@ -459,17 +383,12 @@ def test_frontier_operators_match_python_reference(spark, monkeypatch, threshold
 def test_bfs_levels_job_fence_on_trade_graph(spark):
     from tvbigdataproject_spark.operators import trade_edges as te
 
-    sc = spark.sparkContext
     bi = te.trade_edges_bi(spark, "/root/testdata/sf0.01")
-    group = "test_bfs_levels_job_fence"
     try:
-        sc.setJobGroup(group, group)
-        out = bfs_levels(bi, 1, 3)
-        sc._jsc.clearJobGroup()
+        jobs, out = count_jobs(spark, lambda: bfs_levels(bi, 1, 3))
         # one start checkpoint, then per hop: frontier broadcast, the
         # min-aggregate's shuffle, the checkpoint
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+        assert jobs == 10
         assert out.count() > 1
     finally:
-        sc._jsc.clearJobGroup()
         te.release_trade_pairs(spark)

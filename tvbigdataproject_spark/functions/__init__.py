@@ -6,7 +6,6 @@ from tvbigdataproject_spark.functions.core import (  # noqa: F401
     normalize_tags,
 )
 from tvbigdataproject_spark.functions.text import (  # noqa: F401
-    char_ngrams,
     shingles,
     simple_clean,
     tokens,
@@ -16,7 +15,6 @@ from tvbigdataproject_spark.functions.hashing import (  # noqa: F401
     hex16_hash,
     hex_bits_hash,
     lsh_bands,
-    md5_seeded,
     minhash_signature,
 )
 from tvbigdataproject_spark.functions.text import simple_tokens  # noqa: F401

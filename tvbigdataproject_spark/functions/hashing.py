@@ -16,11 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_seeded(value: Column, seed: int) -> Column:
-    """Seeded md5 hex digest: md5(seed || ':' || value)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), value))
-
-
 def hex16_hash(value: Column) -> Column:
     """16-bit integer hash: first 4 hex chars of md5, as long.
 

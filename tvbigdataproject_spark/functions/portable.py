@@ -147,11 +147,6 @@ def plog_stages(src: str, out: str, p: str) -> list[list[str]]:
     ]
 
 
-def plog_cols(p: str) -> list[str]:
-    """Intermediate column names a plog application introduces."""
-    return [f"{p}{s}" for s in ("vd", "k", "pw2", "m0", "m", "ka", "t", "u")]
-
-
 def _exp_horner(r: str) -> str:
     """Degree-12 Taylor of e^r, fixed Horner association."""
     from math import factorial
@@ -184,10 +179,6 @@ def pexp_stages(src: str, out: str, p: str) -> list[list[str]]:
         [f"({src}) - {kd} * {_LN2} AS {r}"],
         [f"({_exp_horner(r)}) * ({pw}) AS {out}"],
     ]
-
-
-def pexp_cols(p: str) -> list[str]:
-    return [f"{p}{s}" for s in ("kf", "kd", "r")]
 
 
 # Abramowitz & Stegun 7.1.26 rational erf approximation: coefficients

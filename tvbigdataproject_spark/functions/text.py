@@ -71,20 +71,6 @@ def shingles(text: Column, n: int = 3, distinct: bool = True) -> Column:
     return word_shingles(simple_tokens(F.lower(text)), n=n, distinct=distinct)
 
 
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Character n-grams (distinct) — the unit for language-ID style
-    profiles."""
-
-    def body(s: Column) -> Column:
-        seq = F.sequence(F.lit(1), F.length(s) - (n - 1))
-        grams = F.transform(seq, lambda i: s.substr(i, F.lit(n)))
-        return F.array_distinct(
-            F.when(F.length(s) >= n, grams).otherwise(_empty_str_array())
-        )
-
-    return _bind(F.lower(text), body)
-
-
 def simple_clean(text: Column) -> Column:
     """Cheap native text cleaner: lowercase, strip non-alphanumerics,
     collapse whitespace.

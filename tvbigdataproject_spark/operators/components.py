@@ -107,7 +107,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component is the
     minimum node id reachable from the node (undirected).
@@ -127,8 +126,8 @@ def connected_components(
     Both paths are exact; which one runs is the ``local_solve_ok`` size
     gate on the edge count. ``max_iter`` bounds only the distributed
     loop — below the gate the driver-local union-find runs to the exact
-    fixpoint and never raises; pass ``local_edge_threshold=0`` to force
-    the distributed loop and restore the ``max_iter`` raise.
+    fixpoint and never raises; set ``SPARK_GRAFT_LOCAL_EDGES=0`` to
+    force the distributed loop and restore the ``max_iter`` raise.
     """
     with Scope() as s:
         # materialize the (static) edge set once, in ONE orientation:
@@ -143,7 +142,7 @@ def connected_components(
         # threshold the whole propagation loop — 2 jobs per span at best
         # — collapses to one cached count + one bounded collect + serial
         # union-find. Same labels.
-        if local_solve_ok(e, local_edge_threshold):
+        if local_solve_ok(e):
             return _cc_local(e)
         sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         return _cc_loop(s, sym, max_iter)
@@ -488,7 +487,6 @@ def strongly_connected_components(
     dst: str = "dst",
     max_peels: int = 30,
     max_rounds: int = 50,
-    local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """(node, scc) for every node of the DIRECTED graph; scc is the
     minimum node id of the node's strongly connected component —
@@ -528,8 +526,8 @@ def strongly_connected_components(
 
     Once a remainder passes the ``local_solve_ok`` size gate the peel
     hands it to the exact driver-local Tarjan, which never raises:
-    ``max_peels``/``max_rounds`` bound only the distributed phases. Pass
-    ``local_edge_threshold=0`` to force them and restore the raise.
+    ``max_peels``/``max_rounds`` bound only the distributed phases. Set
+    ``SPARK_GRAFT_LOCAL_EDGES=0`` to force them and restore the raise.
     """
     with Scope() as s:
         es = s.edges(edges, src, dst)
@@ -573,7 +571,7 @@ def strongly_connected_components(
             # bounded collect + one exact serial Tarjan. Same labels by
             # construction; the gate bounds driver memory the way the
             # broadcast threshold does.
-            if local_solve_ok(rem_e, local_edge_threshold):
+            if local_solve_ok(rem_e):
                 done.append(_scc_local(rem_e, rem_n))
                 break
             # 1. TRIM to fixpoint: no in-edge or no out-edge ->

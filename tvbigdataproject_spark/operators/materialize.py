@@ -307,16 +307,15 @@ class Scope:
 LOCAL_EDGES_DEFAULT = 1_000_000
 
 
-def local_solve_ok(
-    edges: DataFrame | EdgeSet, local_edge_threshold: int | None = None
-) -> bool:
+def local_solve_ok(edges: DataFrame | EdgeSet) -> bool:
     """True when ``edges`` is small enough to collect and solve on the
     driver (union-find, Tarjan, serial BFS) instead of running the
     distributed round loop: ``edges.count() <= threshold``. The
-    threshold is ``local_edge_threshold``, else the env var
-    ``SPARK_GRAFT_LOCAL_EDGES``, else ``LOCAL_EDGES_DEFAULT``; 0
-    disables the local path. Callers pass materialized edges, so the
-    count reads cached rows, not the upstream plan.
+    threshold is the deployment setting ``SPARK_GRAFT_LOCAL_EDGES``,
+    read at call time, else ``LOCAL_EDGES_DEFAULT``; 0 disables the
+    local path, which is how tests force the distributed loops. Callers
+    pass materialized edges, so the count reads cached rows, not the
+    upstream plan.
 
     Driver memory at the gate, measured: one local
     connected_components solve on a synthetic 1M-edge graph raises the
@@ -331,14 +330,11 @@ def local_solve_ok(
     after resetting it through /proc/self/clear_refs. Keep the gate at
     or below the driver memory you can spare for that.
     """
-    if local_edge_threshold is None:
-        try:
-            local_edge_threshold = int(
-                os.environ.get("SPARK_GRAFT_LOCAL_EDGES", LOCAL_EDGES_DEFAULT)
-            )
-        except ValueError:
-            local_edge_threshold = LOCAL_EDGES_DEFAULT
-    return local_edge_threshold > 0 and edges.count() <= local_edge_threshold
+    try:
+        threshold = int(os.environ.get("SPARK_GRAFT_LOCAL_EDGES", LOCAL_EDGES_DEFAULT))
+    except ValueError:
+        threshold = LOCAL_EDGES_DEFAULT
+    return threshold > 0 and edges.count() <= threshold
 
 
 def collect_edges(df: DataFrame, a: str = "src", b: str = "dst") -> list:

@@ -8,10 +8,17 @@ instantiations):
                      the candidate set to the probed cell(s)
   cosine_neardup_pairs  near-dup pairs blocked by cell
 
-Per-pair scoring goes through a selectable kernel (``_KERNELS``): the
-JVM-side zip_with/aggregate HOF form, or the bitwise-identical
-Arrow-batched numpy kernel that the quadratic pair paths default to —
-see functions/vectors.py for the equivalence argument.
+Every per-pair score is the Arrow-batched numpy cosine
+(functions/vectors.cosine_arrow): one Python fence per stage, then
+memory-bandwidth math, bitwise-identical to the JVM zip_with/aggregate
+form (functions/vectors.cosine_similarity — see functions/vectors.py
+for the equivalence argument). A/B at sf0.1 (2026-08-14, warm medians
+of 3): embed_neardup_pairs 3.51s -> 0.83s, embed_cosine_topk 1.01s ->
+0.50s against the HOF form, identical rows; sf1 numbers in SCALE.md.
+
+Cell assignment for the learned-IVF and SemDeDup family picks its path
+from the centroid count (``_TWO_LEVEL_K``): flat and exact below it,
+leader-routed two-level above it.
 """
 
 from __future__ import annotations
@@ -21,22 +28,7 @@ from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.skew import shuffle_partition_count
 
-from tvbigdataproject_spark.functions import cosine_arrow, cosine_similarity
-
-# Per-pair scoring kernel, selectable per call site. Both are
-# bit-identical (tests/test_similarity.py); they differ only in cost
-# model:
-#   "hof"   zip_with/aggregate — zero Python fences, but CodegenFallback
-#           interpreted eval per element: right when pair counts are
-#           modest or a Python fence is unacceptable in the plan.
-#   "arrow" Arrow-batched numpy (functions/vectors.cosine_arrow) — one
-#           Python fence per stage, then memory-bandwidth math: wins
-#           where the pair space is quadratic (near-dup joins,
-#           brute-force top-k sweeps). A/B at sf0.1 (2026-08-14, warm
-#           medians of 3): embed_neardup_pairs 3.51s -> 0.83s (4.2x),
-#           embed_cosine_topk 1.01s -> 0.50s (2.0x), identical rows;
-#           sf1 numbers in SCALE.md. Defaults follow that.
-_KERNELS = {"hof": cosine_similarity, "arrow": cosine_arrow}
+from tvbigdataproject_spark.functions import cosine_arrow
 
 
 def cosine_topk(
@@ -45,15 +37,13 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector (brute force).
 
     ``queries`` must be broadcast-sized (it is replicated to every
     corpus partition); ranking carries an id tiebreak so top-k is
     deterministic at any parallelism. The scoring sweep touches
-    |queries| x |corpus| pairs, so it defaults to the vectorized Arrow
-    kernel (see _KERNELS).
+    |queries| x |corpus| pairs, scored by the vectorized Arrow cosine.
     """
     q = queries.select(
         F.col(id_col).alias("q_vec_id"), F.col(vec_col).alias("q_emb")
@@ -64,7 +54,7 @@ def cosine_topk(
         .select(
             "q_vec_id",
             F.col(id_col).alias("vec_id"),
-            _KERNELS[kernel](F.col("q_emb"), F.col(vec_col)).alias("cos"),
+            cosine_arrow(F.col("q_emb"), F.col(vec_col)).alias("cos"),
         )
     )
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -80,7 +70,6 @@ def cell_pruned_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "label",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF-style top-k: candidates restricted to the query's coarse cell.
 
@@ -99,7 +88,7 @@ def cell_pruned_topk(
         .select(
             "q_vec_id",
             F.col(id_col).alias("vec_id"),
-            _KERNELS[kernel](F.col("q_emb"), F.col(vec_col)).alias("cos"),
+            cosine_arrow(F.col("q_emb"), F.col(vec_col)).alias("cos"),
         )
     )
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -241,10 +230,15 @@ def _nearest_cells(vec_col: str, centers: list[list[float]], n: int) -> Column:
     )
 
 
-# Crossover where leader-routed two-level assignment replaces the flat
-# per-row k-sweep in attach_nearest_cells (measured on the sf0.1
-# embeddings corpus — SCALE.md round 9: flat is fine to ~100 cells,
-# diverges linearly in k above; two-level stays ~flat in k).
+# Centroid count at which every cell-assignment entry point
+# (attach_nearest_cells, nearest_cells_quantized, assign_nearest_centroid
+# and through it semdedup_survivors) replaces the flat, exact per-row
+# k-sweep with leader-routed two-level scoring, O(sqrt(k)) per row and
+# approximate at group boundaries. k is driver-known at each entry
+# point, so the rule costs no job. SCALE.md brackets it: the
+# attach_nearest_cells ladder is even at k=64 and routed wins 1.6x at
+# k=128; the multiprobe ladder's routed 1.53 s beats flat's ~2.3 s warm
+# at k=160; the SemDeDup ladder's flat wins at k=80, routed at k=800.
 _TWO_LEVEL_K = 128
 
 
@@ -254,7 +248,6 @@ def attach_nearest_cells(
     n: int,
     vec_col: str = "embedding",
     out_col: str = "cells",
-    two_level: bool | None = None,
 ) -> DataFrame:
     """Attach ``out_col`` = the ``n`` nearest learned-centroid cell ids
     (array<int>, nearest-first, ties -> lower cell) to every row —
@@ -262,11 +255,11 @@ def attach_nearest_cells(
     (round-8 verdict: ivf_topk inlined a flat O(N*k) sweep while the
     measured O(N*sqrt(k)) routing lived only in the quantized path).
 
-    - k < ``_TWO_LEVEL_K`` (or two_level=False): the flat inlined-
-      literal expression (_nearest_cells) — EXACT n-nearest by unit-
-      sphere distance; one scan-local expression, no broadcast at all.
-    - k >= ``_TWO_LEVEL_K`` (or two_level=True): leader-routed
-      two-level scoring, O(sqrt(k)) per row: ~sqrt(k) strided leaders
+    - k < ``_TWO_LEVEL_K``: the flat inlined-literal expression
+      (_nearest_cells) — EXACT n-nearest by unit-sphere distance; one
+      scan-local expression, no broadcast at all.
+    - k >= ``_TWO_LEVEL_K``: leader-routed two-level scoring,
+      O(sqrt(k)) per row: ~sqrt(k) strided leaders
       are scored first, candidates are the two nearest leaders' member
       groups (union ~2*sqrt(k) centroids), top-n within. Centroid ->
       nearest-leader membership is computed ONCE driver-side (the
@@ -289,9 +282,7 @@ def attach_nearest_cells(
     import math
 
     k = len(centers)
-    if two_level is None:
-        two_level = k >= _TWO_LEVEL_K
-    if not two_level:
+    if k < _TWO_LEVEL_K:
         return df.withColumn(out_col, _nearest_cells(vec_col, centers, n))
 
     gs = max(1, math.isqrt(k))
@@ -384,7 +375,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     cache_key: object = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Learned-IVF approximate top-k: KMeans cells, corpus-side
     multi-assignment, query-side multi-probe.
@@ -448,7 +438,7 @@ def ivf_topk(
         .select(
             "q_vec_id",
             "vec_id",
-            _KERNELS[kernel](F.col("q_emb"), F.col("emb")).alias("cos"),
+            cosine_arrow(F.col("q_emb"), F.col("emb")).alias("cos"),
         )
         .distinct()
     )
@@ -465,7 +455,6 @@ def cosine_neardup_pairs(
     vec_col: str = "embedding",
     cell_col: str = "label",
     salt_buckets: int = 8,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Embedding-space near-duplicate pairs (cos ≥ threshold), blocked by
     the coarse cell so the pair space is per-cell, not global.
@@ -475,10 +464,8 @@ def cosine_neardup_pairs(
     100x larger and AQE coalesced the join to ONE task for 25+ minutes:
 
     - **Salted pair parallelism.** The join's output is quadratic per
-      cell while its *input* is tiny — per-pair scoring cost, not input
-      bytes, dominates (with the default Arrow kernel the per-pair cost
-      is vectorized numpy; with kernel="hof" it is interpreted
-      CodegenFallback eval and ~an order of magnitude worse). The
+      cell while its *input* is tiny — per-pair scoring cost (vectorized
+      numpy in the Arrow cosine), not input bytes, dominates. The
       a-side is salted into `salt_buckets` hash buckets and the b-side
       replicated across them, turning each cell's pair space into
       `salt_buckets` independent tasks. Each pair still appears exactly
@@ -522,7 +509,7 @@ def cosine_neardup_pairs(
             & (F.col("vec_a") < F.col("vec_b")),
         )
     )
-    cos = _KERNELS[kernel](F.col("emb_a"), F.col("emb_b"))
+    cos = cosine_arrow(F.col("emb_a"), F.col("emb_b"))
     return pairs.where(cos >= threshold).select("vec_a", "vec_b", cos.alias("cos"))
 
 
@@ -533,7 +520,6 @@ def nearest_cells_quantized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_col: str = "cells",
-    two_level: bool = False,
 ) -> DataFrame:
     """Multi-probe geometric cell assignment: for every vector, the
     ``n_probes`` nearest of ``k`` md5-seeded centroids by EXACT integer
@@ -554,10 +540,10 @@ def nearest_cells_quantized(
     k-element sort_array + slice, all JVM-side. The corpus never
     shuffles.
 
-    ``two_level=True`` is the DENSITY-SCALED path (the SemDeDup-study
-    discipline, SCALE.md): when k scales with the corpus, the flat
-    per-row k-element sweep is O(N*k) — super-linear by construction.
-    Two-level routing scores ~sqrt(k) group LEADERS first (the
+    From k = ``_TWO_LEVEL_K`` centroids up this runs the DENSITY-SCALED
+    path (the SemDeDup-study discipline, SCALE.md): when k scales with
+    the corpus, the flat per-row k-element sweep is O(N*k) —
+    super-linear by construction. Two-level routing scores ~sqrt(k) group LEADERS first (the
     lowest-cell centroid of each contiguous ceil(sqrt(k))-sized cell
     group), then takes the top-p within the routed group only —
     O(N*sqrt(k)) per decade instead of O(N*k). APPROXIMATE w.r.t. the
@@ -567,8 +553,6 @@ def nearest_cells_quantized(
     leader cell). n_probes is capped by the group size.
     """
     import math
-
-    from pyspark.sql import Window
 
     from tvbigdataproject_spark.operators.clustering import quantize_vectors
 
@@ -606,7 +590,7 @@ def nearest_cells_quantized(
             p,
         )
 
-    if not two_level:
+    if k < _TWO_LEVEL_K:
         top = top_of(F.col("_cents"), n_probes)
         return (
             quant.crossJoin(F.broadcast(packed))
@@ -717,7 +701,6 @@ def cosine_pairs_multiprobe(
     vec_col: str = "embedding",
     cells_col: str = "cells",
     salt_buckets: int = 8,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """cosine_neardup_pairs over MULTI-PROBE cell membership: ``cells_
     col`` is an array of cell ids per vector (nearest_cells_quantized),
@@ -766,84 +749,8 @@ def cosine_pairs_multiprobe(
             == F.array_min(F.array_intersect("cells_a", "cells_b"))
         )
     )
-    cos = _KERNELS[kernel](F.col("emb_a"), F.col("emb_b"))
+    cos = cosine_arrow(F.col("emb_a"), F.col("emb_b"))
     return pairs.where(cos >= threshold).select("vec_a", "vec_b", cos.alias("cos"))
-
-
-def assign_nearest_centroid(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    kernel: str = "arrow",
-    two_level: bool = False,
-) -> DataFrame:
-    """Nearest-centroid cell assignment: for every corpus vector, the
-    argmax-cosine centroid (ties -> smallest centroid id, so the
-    assignment is total and engine-independent).
-
-    ``centroids`` must be bounded (the k-means assignment-step shape:
-    at 100 TB the corpus never moves, each partition scores
-    |centroids| candidates per vector and keeps one). Unlike
-    cosine_topk, self-pairs are kept: a centroid drawn from the corpus
-    assigns to itself at cos = 1.
-
-    Two strategies, bitwise-identical results (same sequential-fold
-    cosine, same tie rule — pinned by tests/test_round7b.py):
-
-    - kernel="arrow" (default, THE scale path): the centroid table is
-      collected once (bounded, the fit_ivf_centers precedent), shipped
-      as a task broadcast, and each corpus partition runs a vectorized
-      argmax over the (dim, k) matrix inside ONE mapInPandas stage —
-      one output row per input row, NO per-(vector, centroid) row
-      blowup and NO shuffle. The earlier crossJoin+window form was
-      measured 5.3x/decade super-linear on the density-scaled SemDeDup
-      ladder (k grows with the corpus, so N x k exploded rows AND the
-      argmax window shuffled them); this form restored 1.0x/decade —
-      see SCALE.md.
-    - kernel="hof": crossJoin(broadcast centroids) + argmax window,
-      zero Python fences. Right when k is a small constant and a
-      Python stage is unacceptable in the plan; its window shuffles
-      N x k rows, so never use it where k scales with density.
-
-    ``two_level=True`` (arrow only) routes hierarchically: nearest of
-    ~sqrt(k) leader centroids first, then argmax within that leader's
-    member group — O(N*sqrt(k)) instead of O(N*k) scoring. This is the
-    IVF/hierarchical-k-means standard for density-scaled k (flat
-    scoring is quadratic when k grows with the corpus — the ladder's
-    measured residual), and it is APPROXIMATE w.r.t. the flat argmax:
-    a vector near a group boundary can land in the neighbor cell. It
-    stays deterministic and partitioning-independent (routing is fixed
-    driver-side; per-row decisions are row-local), and a centroid
-    still self-assigns at cos = 1 (every centroid is a member of its
-    own leader's group).
-
-    Returns (id_col, cell, vec_col) — the embedding is carried through
-    so downstream per-cell passes need no join back to the corpus.
-    """
-    if kernel == "arrow":
-        return _assign_nearest_scan(
-            corpus, centroids, id_col, vec_col, two_level=two_level
-        )
-    if two_level:
-        raise ValueError("two_level routing requires kernel='arrow'")
-    c = centroids.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("c_emb")
-    )
-    scored = corpus.crossJoin(F.broadcast(c)).select(
-        id_col,
-        "cid",
-        vec_col,
-        _KERNELS[kernel](F.col(vec_col), F.col("c_emb")).alias("cos"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        scored.select(
-            id_col, vec_col, "cid", F.row_number().over(w).alias("rn")
-        )
-        .where(F.col("rn") == 1)
-        .select(id_col, F.col("cid").alias("cell"), vec_col)
-    )
 
 
 def _fold_cos(vt, cmat, cnorm):
@@ -871,21 +778,52 @@ def _fold_norms(cmat):
     return np.sqrt(cb2)
 
 
-def _assign_nearest_scan(
+def assign_nearest_centroid(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    two_level: bool = False,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Scan-local nearest-centroid argmax (see assign_nearest_centroid).
+    """Nearest-centroid cell assignment: for every corpus vector, the
+    argmax-cosine centroid (ties -> smallest centroid id, so the
+    assignment is total and engine-independent).
+
+    ``centroids`` must be bounded (the k-means assignment-step shape:
+    at 100 TB the corpus never moves, each partition scores
+    |centroids| candidates per vector and keeps one). Unlike
+    cosine_topk, self-pairs are kept: a centroid drawn from the corpus
+    assigns to itself at cos = 1.
+
+    Scale shape: the centroid table is collected once (bounded, the
+    fit_ivf_centers precedent), shipped as a task broadcast, and each
+    corpus partition runs a vectorized argmax over the (dim, k) matrix
+    inside ONE mapInPandas stage — one output row per input row, NO
+    per-(vector, centroid) row blowup and NO shuffle. The earlier
+    crossJoin+window form was measured 5.3x/decade super-linear on the
+    density-scaled SemDeDup ladder (k grows with the corpus, so N x k
+    exploded rows AND the argmax window shuffled them); this form
+    restored 1.0x/decade — see SCALE.md.
 
     Exactness: per (vector, centroid) the cosine is the SAME strict
     sequential left fold as functions/vectors.cosine_arrow, and
     centroids are scored in ascending-cid order with numpy's first-max
-    argmax, which IS the smallest-cid tie rule. With ``two_level`` the
-    first-max rule applies per stage (leader pick, then in-group pick),
-    and group member lists stay in ascending-cid order.
+    argmax, which IS the smallest-cid tie rule.
+
+    From k = ``_TWO_LEVEL_K`` centroids up (k is the length of the
+    collected table, so the rule costs no job) the assignment routes
+    hierarchically: nearest of ~sqrt(k) leader centroids first, then
+    argmax within that leader's member group — O(N*sqrt(k)) instead of
+    O(N*k) scoring, the IVF/hierarchical-k-means standard for
+    density-scaled k. It is APPROXIMATE w.r.t. the flat argmax: a
+    vector near a group boundary can land in the neighbor cell. It
+    stays deterministic and partitioning-independent (routing is fixed
+    driver-side; per-row decisions are row-local; the first-max rule
+    applies per stage and member lists stay in ascending-cid order),
+    and a centroid still self-assigns at cos = 1 (every centroid is a
+    member of its own leader's group).
+
+    Returns (id_col, cell, vec_col) — the embedding is carried through
+    so downstream per-cell passes need no join back to the corpus.
     """
     import math
 
@@ -906,8 +844,8 @@ def _assign_nearest_scan(
     cnorm = _fold_norms(cmat)
 
     groups = None
-    if two_level:
-        k = cmat.shape[1]
+    k = cmat.shape[1]
+    if k >= _TWO_LEVEL_K:
         b = max(1, math.isqrt(k - 1) + 1)  # ceil(sqrt(k))
         lead = np.ascontiguousarray(cmat[:, :b])  # first b by cid
         lnorm = cnorm[:b]
@@ -966,8 +904,6 @@ def semdedup_survivors(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
-    two_level: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic pruning (Abbas et al. 2023): cluster by
     nearest centroid, then inside each cluster drop every vector that
@@ -982,18 +918,13 @@ def semdedup_survivors(
     shuffles); the within-cluster pair space rides
     cosine_neardup_pairs' salted shuffle-hash join, so cluster count
     should scale with corpus density exactly as IVF cell count does —
-    and at density-scaled k pass ``two_level=True`` so the sweep is
-    O(N*sqrt(k)) hierarchical routing, not the quadratic flat argmax
-    (the SemDeDup ladder's measured residual, SCALE.md).
+    and from ``_TWO_LEVEL_K`` centroids up assign_nearest_centroid's
+    sweep is O(N*sqrt(k)) hierarchical routing, not the quadratic flat
+    argmax (the SemDeDup ladder's measured residual, SCALE.md).
     Returns survivors as (id_col, cell).
     """
     assigned = assign_nearest_centroid(
-        corpus,
-        centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        kernel=kernel,
-        two_level=two_level,
+        corpus, centroids, id_col=id_col, vec_col=vec_col
     )
     pruned = (
         cosine_neardup_pairs(
@@ -1002,7 +933,6 @@ def semdedup_survivors(
             id_col=id_col,
             vec_col=vec_col,
             cell_col="cell",
-            kernel=kernel,
         )
         .select(F.col("vec_b").alias(id_col))
         .distinct()

@@ -112,12 +112,6 @@ def quality_metrics(text: Column, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
     }
 
 
-def token_count(text: Column, pattern: str = " ") -> Column:
-    """Whitespace token count (see queries/textstats.py::text_token_stats
-    for the full stats bundle with its oracle)."""
-    return F.size(F.split(text, pattern))
-
-
 def stopword_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
     ws = F.split(F.lower(text), " ")
     def member(w):

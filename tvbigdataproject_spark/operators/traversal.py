@@ -514,19 +514,17 @@ def dag_longest_path_levels(
         )
 
 
-def _bfs_masks_local(edge_rows, src_rows, bits: int = 3) -> dict:
+def _bfs_masks_local(edge_rows, src_rows) -> dict:
     """(node -> mask) fixpoint of the fused bidirectional sweep, serial:
     bit 1 propagates along the edges, bit 2 along their reverses,
-    sources start (and stay) at ``bits`` — exactly reachable_masks'
-    invariant (per-bit-per-node visitation, OR-accumulated). ``bits=1``
-    is the forward-only sweep reachable_set needs."""
+    sources start (and stay) at 3 — exactly reachable_masks'
+    invariant (per-bit-per-node visitation, OR-accumulated)."""
     fwd: dict = {}
     rev: dict = {}
     for s, d in edge_rows:
         fwd.setdefault(s, []).append(d)
-        if bits & 2:
-            rev.setdefault(d, []).append(s)
-    mask: dict = {n: bits for n in src_rows}
+        rev.setdefault(d, []).append(s)
+    mask: dict = {n: 3 for n in src_rows}
     frontier = list(mask)
     while frontier:
         nxt: dict = {}
@@ -551,73 +549,12 @@ def _source_ids(sources: DataFrame) -> list:
     return [r[0] for r in sources.select("node").distinct().collect()]
 
 
-def reachable_set(
-    edges: DataFrame | EdgeSet,
-    sources: DataFrame,
-    max_rounds: int = 50,
-    src: str = "src",
-    dst: str = "dst",
-    local_edge_threshold: int | None = None,
-) -> DataFrame:
-    """All nodes reachable from ANY node of ``sources`` (a one-column
-    DataFrame, column ``node``), sources included — the plain
-    multi-source reachability primitive (bfs_levels_multi without the
-    per-landmark key: when only MEMBERSHIP matters, carrying the
-    landmark multiplies frontier memory by |sources| for nothing).
-    Used by the bow-tie decomposition (IN = reaches core under the
-    reversed edges, OUT = reached from core).
-
-    Each round is one frontier equi-join + anti-join against the
-    visited set, eagerly checkpointed with tracked release; the loop
-    stops at the empty-frontier fixpoint (round count = eccentricity
-    of the source set, not max_rounds). ``max_rounds`` raises rather
-    than return a silently truncated set.
-
-    Below the ``local_solve_ok`` edge gate a serial driver-side BFS
-    returns the same set and never raises: ``max_rounds`` bounds only
-    the distributed loop. Pass ``local_edge_threshold=0`` to force that
-    loop and restore the raise.
-    """
-    with Scope() as s:
-        e = s.edges(edges, src, dst).df
-        # r13 size-gated driver-local endgame (components._scc_local
-        # rationale): a sub-threshold graph's whole frontier loop —
-        # O(eccentricity) full-barrier rounds of 3 jobs each — collapses
-        # to one count + one bounded collect + a serial BFS. Same
-        # visited set by construction.
-        if local_solve_ok(e, local_edge_threshold):
-            mask = _bfs_masks_local(collect_edges(e), _source_ids(sources), bits=1)
-            return local_frame(
-                e.sparkSession,
-                [(n,) for n in mask],
-                [("node", sources.schema["node"].dataType)],
-            )
-        visited = frontier = s.checkpoint(sources.select("node").distinct())
-        for _ in range(max_rounds):
-            nxt = s.checkpoint(
-                frontier.join(e, frontier.node == e.src)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited, "node", "left_anti")
-            )
-            if nxt.limit(1).count() == 0:
-                return s.keep(visited)
-            new_vis = s.checkpoint(visited.unionByName(nxt))
-            s.release(visited)
-            s.release(frontier)
-            visited, frontier = new_vis, nxt
-        raise RuntimeError(
-            f"reachable_set: frontier not empty after {max_rounds} rounds"
-        )
-
-
 def reachable_masks(
     edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_rounds: int = 50,
     src: str = "src",
     dst: str = "dst",
-    local_edge_threshold: int | None = None,
 ) -> DataFrame:
     """(node, mask) for every node reachable from ``sources`` in either
     edge direction, in ONE frontier loop: mask bit 1 = reachable FROM
@@ -625,9 +562,9 @@ def reachable_masks(
     along the REVERSED edges (i.e. the node reaches the sources).
     Sources carry mask 3.
 
-    This is the fused twin of two reachable_set calls (r9 verdict item
-    5): the bow-tie decomposition ran independent forward and reversed
-    sweeps, and on an iterative frontier loop the dominant cost is
+    This fuses two single-direction reachability sweeps (r9 verdict
+    item 5): the bow-tie decomposition ran independent forward and
+    reversed sweeps, and on an iterative frontier loop the dominant cost is
     rounds x fixed job latency — not per-round data. Tagging each edge
     with a direction bit (forward edges b=1, reversed copies b=2) and
     letting a frontier row (node, newbits) expand only across edges
@@ -643,8 +580,8 @@ def reachable_masks(
 
     Below the ``local_solve_ok`` edge gate a serial two-bit BFS on the
     driver returns the same (node, mask) rows and never raises:
-    ``max_rounds`` bounds only the distributed loop. Pass
-    ``local_edge_threshold=0`` to force that loop and restore the
+    ``max_rounds`` bounds only the distributed loop. Set
+    ``SPARK_GRAFT_LOCAL_EDGES=0`` to force that loop and restore the
     raise.
     """
     with Scope() as s:
@@ -661,7 +598,7 @@ def reachable_masks(
         # probe + checkpoint) jobs — collapses to one count + one
         # bounded collect + a serial two-bit BFS. Identical (node, mask)
         # fixpoint.
-        if local_solve_ok(base, local_edge_threshold):
+        if local_solve_ok(base):
             mask = _bfs_masks_local(collect_edges(base), _source_ids(sources))
             return local_frame(
                 base.sparkSession,

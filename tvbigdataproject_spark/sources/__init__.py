@@ -2,7 +2,6 @@ from tvbigdataproject_spark.sources.io import (  # noqa: F401
     read_orc,
     read_table,
     read_table_spread,
-    read_tables,
     read_tweets,
     save_graph,
     scan_spread,

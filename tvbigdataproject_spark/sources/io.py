@@ -98,10 +98,6 @@ def _first_parquet_file(path: str) -> str:
     raise FileNotFoundError(f"no *.parquet file under {path}")
 
 
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(read_table(spark, sf_dir, n) for n in names)
-
-
 def read_table_spread(
     spark: SparkSession, sf_dir: str, name: str, *keys: str
 ) -> DataFrame:
