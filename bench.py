@@ -418,22 +418,45 @@ def main() -> None:
     spread: dict[str, list[float]] = {}
     suspect: list[str] = []
     sc = spark.sparkContext
+    # queries whose rep left a table in the CacheManager after
+    # release_session_caches: a later plan over the same inputs would
+    # read it instead of the parquet inputs
+    cache_leaks: list[str] = []
+
+    def _fresh(last: str | None) -> None:
+        """Release the session's tables before a rep and check that the
+        CacheManager is empty; a table still cached is charged to the
+        query that ran ``last``, named on stderr and cleared."""
+        release_session_caches(spark)
+        if spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            return
+        if last not in cache_leaks:
+            cache_leaks.append(last)
+            print(
+                f"WARN {last}: left a cached table after "
+                "release_session_caches",
+                file=sys.stderr,
+            )
+        spark.catalog.clearCache()
+
+    last = None
     _probe_tick(-1)
     for qi, name in enumerate(names):
         fn = REGISTRY[name].fn
         runs = []
         for i in range(1 + reps):
             # every timed rep computes from the parquet inputs: the
-            # engine's session-scoped memos (shared trade-edge table,
-            # IVF centroid/index caches) are released BEFORE the timer
-            # starts, so no rep inherits another's derived tables
-            release_session_caches(spark)
+            # session registry's tables (shared trade edges, IVF index,
+            # lazy persists) and the IVF centroids are released BEFORE
+            # the timer starts, so no rep inherits another's tables
+            _fresh(last)
             # job-group tag links this rep's jobs/stages in the event
             # log so stage_attr can attribute a flagged query's time
             sc.setJobGroup(f"{name}#rep{i}", name)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+            last = name
         # release the query's accumulated broadcast/shuffle state before
         # the next measurement — in one long session those blocks are
         # freed only on driver GC, and the resulting heap pressure was a
@@ -464,6 +487,7 @@ def main() -> None:
             )
         if (qi + 1) % PROBE_EVERY == 0:
             _probe_tick(qi)
+    _fresh(last)
     _probe_tick(len(names) - 1)
 
     calib_end = _calibrate()
@@ -503,13 +527,14 @@ def main() -> None:
         for name in fresh:
             runs = []
             for i in range(1 + reps):
-                release_session_caches(spark)  # same fresh-rep contract
+                _fresh(last)  # same fresh-rep contract
                 sc.setJobGroup(f"{name}#adj{i}", name)
                 t0 = time.perf_counter()
                 REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 runs.append(time.perf_counter() - t0)
+                last = name
             spark.sparkContext._jvm.System.gc()
             iso = round(min(runs[1:]), 3)
             reflag[name] = {"in_suite": timings[name], "isolated": iso}
@@ -621,6 +646,7 @@ def main() -> None:
         "spread": spread,
         "warm_reps": reps,
         "suspect_inversions": suspect,
+        "cache_leaks": cache_leaks,
     }
     # A flag alone ("query X got slower") isn't actionable: attribute
     # each flagged query's time to its stages from the event log, so

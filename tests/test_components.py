@@ -13,6 +13,7 @@ from tvbigdataproject_spark.operators.components import (
     connected_components,
     label_propagation,
 )
+from tvbigdataproject_spark.session import release_session_caches
 
 
 def _edges(spark, pairs):
@@ -321,7 +322,7 @@ def test_label_propagation_job_fence_on_trade_graph(spark):
         jobs = _fenced_jobs(spark, lambda: label_propagation(bi, rounds=3))
         assert jobs == 15
     finally:
-        te.release_trade_pairs(spark)
+        release_session_caches(spark)
 
 
 def test_connected_components_job_fence_on_trade_graph(spark, monkeypatch):
@@ -335,4 +336,4 @@ def test_connected_components_job_fence_on_trade_graph(spark, monkeypatch):
         jobs = _fenced_jobs(spark, lambda: connected_components(bi.df))
         assert jobs == 33
     finally:
-        te.release_trade_pairs(spark)
+        release_session_caches(spark)

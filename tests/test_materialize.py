@@ -1,12 +1,19 @@
-"""The iterative tier's materialization layer (operators/materialize.py):
-the Scope ownership contract, release() of kept results, the typed
-EdgeSet and the one local-solve gate."""
+"""The materialization layer (operators/materialize.py): the Scope
+ownership contract, the session registry, release() of kept results,
+the typed EdgeSet and the one local-solve gate."""
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
+
+import tvbigdataproject_spark
+from tvbigdataproject_spark.operators import materialize
 from tvbigdataproject_spark.operators import trade_edges as te
 from tvbigdataproject_spark.operators.materialize import (
     EdgeSet,
@@ -18,6 +25,7 @@ from tvbigdataproject_spark.operators.materialize import (
     persistent_ids,
     release,
 )
+from tvbigdataproject_spark.session import release_session_caches
 
 SF = "/root/testdata/sf0.001"
 
@@ -69,7 +77,7 @@ def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(
     )
 
     sc = spark.sparkContext
-    te.release_trade_pairs(spark)
+    release_session_caches(spark)
     before = persistent_ids(sc)
     bi = te.trade_edges_bi(spark, SF)
     n_edges = bi.count()
@@ -104,7 +112,7 @@ def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(
             assert cache <= persistent_ids(sc)
         assert bi.count() == n_edges  # still served from the cache
     finally:
-        te.release_trade_pairs(spark)
+        release_session_caches(spark)
 
 
 def test_dag_levels_cycle_raise_leaks_nothing(spark):
@@ -134,7 +142,7 @@ def test_trade_edge_sets_have_no_duplicate_pairs(spark, producer):
         dups = es.df.groupBy("src", "dst").count().where("count > 1").count()
         assert es.count() > 0 and dups == 0
     finally:
-        te.release_trade_pairs(spark)
+        release_session_caches(spark)
 
 
 def test_local_solve_gate_threshold_and_env(spark, monkeypatch):
@@ -251,3 +259,129 @@ def test_rounds_keeps_only_the_final_state_and_leaks_nothing_on_error(spark):
         with Scope() as s:
             s.rounds(s.checkpoint(start), failing, 5, 1)
     assert persistent_ids(sc) - before == set()
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def test_scope_persist_is_lazy_and_released_on_exit(spark):
+    cm = _cache_manager(spark)
+    spark.catalog.clearCache()
+    with Scope() as s:
+        jobs, df = count_jobs(
+            spark, lambda: s.persist(spark.range(10).selectExpr("id * 3 AS x"))
+        )
+        assert jobs == 0 and not cm.isEmpty() and df.is_cached
+        assert df.count() == 10
+    assert cm.isEmpty() and not df.is_cached
+
+
+def test_only_materialize_persists_checkpoints_or_releases():
+    # one owner for every materialized table: DataFrame persist, cache,
+    # localCheckpoint and unpersist are called in operators/materialize.py
+    # only; the library goes through a Scope (``with Scope() as s:
+    # s.persist(df)``), ``checkpoint`` or the session registry
+    raw = {"persist", "cache", "localCheckpoint", "unpersist"}
+    root = Path(tvbigdataproject_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "operators" / "materialize.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        scopes = {
+            item.optional_vars.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.With)
+            for item in node.items
+            if isinstance(item.context_expr, ast.Call)
+            and getattr(item.context_expr.func, "id", None) == "Scope"
+            and isinstance(item.optional_vars, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in raw
+            ):
+                continue
+            recv = node.func.value
+            if node.func.attr == "persist" and getattr(recv, "id", None) in scopes:
+                continue  # Scope.persist
+            offenders.append(
+                f"{path.relative_to(root)}:{node.lineno} .{node.func.attr}("
+            )
+    assert offenders == []
+
+
+def _ivf(spark):
+    from tvbigdataproject_spark.operators.similarity import ivf_topk
+    from tvbigdataproject_spark.sources import read_table
+
+    emb = read_table(spark, SF, "embeddings")
+    return ivf_topk(
+        emb, emb.where("vec_id < 3"), k=5, cache_key=("test-ivf-index", SF)
+    )
+
+
+def _ivf_key():
+    (key,) = [k for k in materialize._SESSION if k[1] == "ivf_index"]
+    return key
+
+
+def test_ivf_index_entry_is_released_and_rebuilt(spark):
+    sc, cm = spark.sparkContext, _cache_manager(spark)
+    release_session_caches(spark)
+    spark.catalog.clearCache()
+    before = persistent_ids(sc)
+    first = sorted(map(tuple, _ivf(spark).collect()))
+    created = persistent_ids(sc) - before
+    assert created and not cm.isEmpty()  # the persisted inverted lists
+    key = _ivf_key()
+    held = materialize._SESSION[key][0]
+    _ivf(spark)
+    assert materialize._SESSION[key][0] is held  # a hit reuses the index
+    release_session_caches(spark)
+    assert cm.isEmpty() and not persistent_ids(sc) & created
+    assert sorted(map(tuple, _ivf(spark).collect())) == first
+    assert materialize._SESSION[_ivf_key()][0] is not held
+    release_session_caches(spark)
+
+
+def test_ivf_index_dead_context_entry_dropped_not_released(spark):
+    cm = _cache_manager(spark)
+    release_session_caches(spark)
+    live = _ivf(spark)
+    key = _ivf_key()
+    # an entry from a "previous" context holding the live index: its
+    # release would uncache the live table
+    stale = ("app-from-a-previous-life",) + key[1:]
+    materialize._SESSION[stale] = materialize._SESSION[key]
+    te.trade_pairs(spark, SF)  # any registry call sweeps stale entries
+    assert stale not in materialize._SESSION
+    assert not cm.isEmpty() and materialize._SESSION[key][0].is_cached
+    assert live.count() > 0
+    release_session_caches(spark)
+
+
+def test_clustering_coeff_reruns_from_its_inputs_after_release(spark):
+    # the query's lazy persists (its pair list, triangle_corner_counts'
+    # oriented table) belong to the session: after release_session_caches
+    # the CacheManager is empty and a second run repeats the first's
+    # jobs instead of reading a table the first one left cached
+    from tvbigdataproject_spark.queries import REGISTRY
+
+    fn = REGISTRY["clustering_coeff_neardup"].fn
+    cm = _cache_manager(spark)
+    spark.catalog.clearCache()
+    runs = []
+    for _ in range(2):
+        runs.append(
+            count_jobs(spark, lambda: sorted(map(tuple, fn(spark, SF).collect())))
+        )
+        assert not cm.isEmpty()
+        release_session_caches(spark)
+        assert cm.isEmpty()
+    (jobs_a, rows_a), (jobs_b, rows_b) = runs
+    assert jobs_a == jobs_b and rows_a == rows_b and rows_a
+

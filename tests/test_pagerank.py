@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from conftest import count_jobs
 
 from tvbigdataproject_spark.operators.pagerank import pagerank
+from tvbigdataproject_spark.session import release_session_caches
 
 
 def _bidirectional(spark, pairs):
@@ -172,4 +173,4 @@ def test_pagerank_job_fence_on_trade_graph(spark):
         assert jobs == 29
         assert out.count() > 1
     finally:
-        te.release_trade_pairs(spark)
+        release_session_caches(spark)

@@ -1,25 +1,28 @@
-"""Session-scoped shared trade edge cache (operators/trade_edges.py):
+"""Session-scoped shared trade edge tables (operators/trade_edges.py),
+entries of the session registry in operators/materialize.py:
 materialize-once reuse, deterministic release, and the
-applicationId-keyed stash that replaced Katz's latest-wins global
-(ADVICE r11: RDD ids are context-scoped ints, so entries from a dead
-context must be dropped, never unpersisted against the live one)."""
+applicationId-keyed registry (RDD ids are context-scoped ints, so
+entries from a dead context must be dropped, never released against
+the live one)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators import materialize
 from tvbigdataproject_spark.operators import trade_edges as te
-from tvbigdataproject_spark.operators.materialize import persistent_ids
+from tvbigdataproject_spark.operators.materialize import persistent_ids, release
+from tvbigdataproject_spark.session import release_session_caches
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(autouse=True)
 def _clean_cache(spark):
-    te.release_trade_pairs(spark)
+    release_session_caches(spark)
     yield
-    te.release_trade_pairs(spark)
+    release_session_caches(spark)
 
 
 def test_pairs_match_direct_build(spark):
@@ -66,22 +69,26 @@ def test_release_frees_blocks_and_rebuilds(spark):
     created = persistent_ids(sc) - before
     assert created  # the build persisted checkpoint blocks
     n = a.count()
-    te.release_trade_pairs(spark)
+    release_session_caches(spark)
     assert not (persistent_ids(sc) & created)  # all released
     b = te.trade_pairs(spark, SF)  # a fresh build, not the dead frame
     assert b is not a and b.count() == n
 
 
 def test_dead_context_entries_dropped_not_unpersisted(spark):
+    sc = spark.sparkContext
+    before = persistent_ids(sc)
     live = te.trade_pairs(spark, SF)
-    # plant a fake entry from a "previous" context whose frame reads
-    # the live blocks — releasing it would free them, the bug class
-    # ADVICE r11 named
-    te._CACHE[("app-from-a-previous-life", "/x", "distinct")] = live
-    te.trade_pairs(spark, SF)  # any call sweeps stale entries
-    assert ("app-from-a-previous-life", "/x", "distinct") not in te._CACHE
+    blocks = persistent_ids(sc) - before
+    # plant an entry from a "previous" context whose release would free
+    # the live blocks — the bug class the applicationId key prevents
+    stale = ("app-from-a-previous-life", "trade_pairs", "/x")
+    materialize._SESSION[stale] = (live, lambda: release(live))
+    te.trade_pairs(spark, SF)  # any registry call sweeps stale entries
+    assert stale not in materialize._SESSION
     # the LIVE context's blocks survived the sweep (no cross-context
-    # unpersist) — the cached frame still answers without recompute
+    # release) — the cached frame still answers without recompute
+    assert blocks and blocks <= persistent_ids(sc)
     assert live.count() > 0
 
 

@@ -17,6 +17,7 @@ from tvbigdataproject_spark.operators.traversal import (
     sssp_bounded,
     triangle_corner_counts,
 )
+from tvbigdataproject_spark.session import release_session_caches
 
 
 def _edges(spark, pairs):
@@ -391,4 +392,4 @@ def test_bfs_levels_job_fence_on_trade_graph(spark):
         assert jobs == 10
         assert out.count() > 1
     finally:
-        te.release_trade_pairs(spark)
+        release_session_caches(spark)

@@ -1,6 +1,5 @@
 from tvbigdataproject_spark.operators.graph import (  # noqa: F401
     Graph,
-    degrees,
     filter_edges_by_nodes,
     k_hop_neighborhood,
     pair_candidates,

@@ -301,18 +301,12 @@ def _ngram_pair_counts(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.4,
-) -> DataFrame:
-    """Approximate near-dup pairs: MinHash signatures (computed in the
-    scan stage, zero shuffles), banded LSH bucket join for candidates,
-    candidate-local exact-Jaccard verify."""
+def _minhash_candidates(
+    df: DataFrame, text_col: str, id_col: str, n: int, num_hashes: int, bands: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(shingled docs, (doc_id, sig) MinHash signatures, (doc_a, doc_b)
+    LSH candidate pairs): signatures computed in the scan stage, zero
+    shuffles; candidates from the banded bucket self-join."""
     rows_per_band = num_hashes // bands
     with_sh = _shingled(df, text_col, id_col, n)
     sig = with_sh.select(
@@ -333,6 +327,24 @@ def minhash_lsh_pairs(
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
+    )
+    return with_sh, sig, cand
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    num_hashes: int = 8,
+    bands: int = 4,
+    threshold: float = 0.4,
+) -> DataFrame:
+    """Approximate near-dup pairs: MinHash signatures (computed in the
+    scan stage, zero shuffles), banded LSH bucket join for candidates,
+    candidate-local exact-Jaccard verify."""
+    with_sh, _, cand = _minhash_candidates(
+        df, text_col, id_col, n, num_hashes, bands
     )
     return _score_pairs(cand, with_sh, threshold)
 

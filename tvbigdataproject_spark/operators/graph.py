@@ -31,13 +31,6 @@ class Graph:
     vertices: DataFrame
     edges: DataFrame
 
-    def filter_edges(self, condition) -> "Graph":
-        """Subgraph by edge predicate (reference G3: g.filterEdges with a
-        string-concatenated SQL filter, RetweetTagsJaccardGraph.py:262-263
-        — here a bound Column expression, no injection surface)."""
-        e = self.edges.where(condition)
-        return Graph(vertices_from_edges(e), e)
-
 
 def vertices_from_edges(edges: DataFrame) -> DataFrame:
     """Induced vertex set: src ∪ dst, distinct (reference G5:
@@ -49,24 +42,7 @@ def vertices_from_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def degrees(edges: DataFrame) -> DataFrame:
-    """Per-vertex in/out degree and strength (weighted degree)."""
-    out_d = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_degree"), F.sum("w").alias("out_strength")
-    )
-    in_d = edges.groupBy(F.col("dst").alias("id")).agg(
-        F.count(F.lit(1)).alias("in_degree"), F.sum("w").alias("in_strength")
-    )
-    return (
-        out_d.join(in_d, "id", "full")
-        .na.fill(0, ["out_degree", "in_degree"])
-        .na.fill(0.0, ["out_strength", "in_strength"])
-    )
-
-
-def filter_edges_by_nodes(
-    edges: DataFrame, node_ids: DataFrame, types: list[str] | None = None
-) -> DataFrame:
+def filter_edges_by_nodes(edges: DataFrame, node_ids: DataFrame) -> DataFrame:
     """Distinct edges incident to any node in ``node_ids`` (a 1-column
     frame).
 
@@ -78,10 +54,7 @@ def filter_edges_by_nodes(
     The ``distinct()`` makes repeated input rows come back once.
     """
     ids = node_ids.select(node_ids.columns[0])
-    out = edges.where(F.col("src").isin(ids) | F.col("dst").isin(ids)).distinct()
-    if types is not None:
-        out = out.where(F.col("type").isin(types))
-    return out
+    return edges.where(F.col("src").isin(ids) | F.col("dst").isin(ids)).distinct()
 
 
 def k_hop_neighborhood(

@@ -1,35 +1,47 @@
-"""The iterative tier's one materialization layer.
+"""The one place tables are materialized and released: two verbs and
+two owners, nothing else.
 
-Every iterative graph operator (CC, SCC, BFS, k-core, SSSP, MIS, LPA,
-PageRank, MST, betweenness) truncates lineage with an eager
-``localCheckpoint`` and frees the superseded blocks the moment the next
-round is materialized. A checkpointed DataFrame's backing RDD lives
-outside the cacheManager, so without explicit release it is freed only
-when Python GC happens to reach the async ContextCleaner — O(rounds)
-tables cached nondeterministically on a long-lived session. This module
-owns that discipline:
+- ``checkpoint`` — an eager ``localCheckpoint`` that cuts lineage (with
+  the stats-ceiling rebuild below). Its blocks live outside the
+  CacheManager; unreleased, they wait for Python GC to reach the async
+  ContextCleaner.
+- ``persist`` — a lazy cache that lets several consumers share one
+  computation. The CacheManager holds it until an explicit release, and
+  every later plan with the same inputs reads the cached copy.
 
-- ``checkpoint(df)`` — eager tracked checkpoint with the stats-ceiling
-  rebuild; the caller owns the blocks.
-- ``Scope`` — a context manager that checkpoints, releases superseded
-  frames, hands results to the caller with ``keep`` and, on exit
-  (normal or exception), releases everything else it made.
-- ``Scope.rounds`` — the one round loop: a step per round, a
-  checkpoint every few rounds, an optional convergence probe, the
-  superseded table released. The checkpoint cadence is a constant at
-  each call site, chosen by how fast the step's lineage grows.
-- ``release(df)`` — frees a result an operator kept, later.
-- ``fits_broadcast(df)`` — whether a checkpoint's measured size is
-  under the session's broadcast threshold, for frontier joins.
-- ``EdgeSet`` — rows already materialized and unique on (src, dst);
-  operators use it as given instead of deduplicating and checkpointing.
-- ``local_solve_ok`` — the one size gate for driver-local endgames,
-  with ``collect_edges`` / ``local_frame`` for the solvers' I/O.
+- ``Scope`` — owns what one call (or pipeline) makes: it releases
+  superseded frames, hands results to the caller with ``keep`` and, on
+  exit (normal or exception), releases everything else it made.
+  ``Scope.rounds`` is the iterative tier's one round loop (a step per
+  round, a checkpoint every few rounds, an optional convergence probe).
+- the session registry — owns tables that outlive the call that built
+  them: ``session_table`` builds a keyed table once per (SparkContext,
+  key); ``session_persist`` holds a lazy persist whose consumers run
+  after the call returns. ``release_session`` (through
+  ``session.release_session_caches``) frees them all: a deployment
+  amortizes a build across queries, a benchmark rep must not.
+
+  Entries are keyed by ``sc.applicationId``: RDD ids are small
+  sequential ints scoped to a SparkContext, so an entry that survived a
+  context restart could release unrelated RDDs in the new context.
+  Entries of another application id are dropped, never released. A
+  lock guards the registry; a build runs outside it, and a lost build
+  race releases the loser's checkpoint and reuses the winner (a
+  persisted loser is the winner's own cache entry: the CacheManager
+  keys on the plan).
+
+``checkpoint(df)`` is ``keep(checkpoint(df))`` of a one-frame scope;
+``release(df)`` frees such a result later. Beside the verbs:
+``fits_broadcast`` (a checkpoint's measured size against the broadcast
+threshold), ``EdgeSet`` (rows materialized and unique on (src, dst))
+and ``local_solve_ok``, the one size gate for driver-local endgames,
+with ``collect_edges`` / ``local_frame`` for the solvers' I/O.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import warnings
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -125,6 +137,22 @@ def checkpoint(df: DataFrame) -> DataFrame:
     return _checkpoint_tracked(df)[0]
 
 
+# The two verbs, each returning the materialized frame and the callable
+# that releases it.
+_Held = tuple[DataFrame, Callable[[], None]]
+
+
+def _checkpointed(df: DataFrame) -> _Held:
+    out, ids = _checkpoint_tracked(df)
+    sc = df.sparkSession.sparkContext
+    return out, lambda: _unpersist_ids(sc, ids)
+
+
+def _persisted(df: DataFrame) -> _Held:
+    out = df.persist()
+    return out, lambda: out.unpersist()
+
+
 def _persisted_under(leaf, persisted: set[int]) -> int | None:
     """Id of the persisted RDD a LogicalRDD ``leaf`` reads: its own RDD,
     or — after the stats rebuild — the one under a narrow map over it."""
@@ -215,17 +243,18 @@ class EdgeSet:
 
 
 class Scope:
-    """Owns the checkpoints an operator (or a pipeline) makes.
+    """Owns the tables an operator (or a pipeline) makes.
 
-    ``checkpoint`` materializes and records a frame; ``release`` frees a
-    recorded frame (anything it did not checkpoint is left alone);
-    ``keep`` hands a recorded frame to the caller. On exit — normal or
-    exception — or on ``close()``, every frame still recorded is
-    released, so an error mid-loop leaks no blocks.
+    ``checkpoint`` materializes and records a frame, ``persist`` caches
+    and records one lazily; ``release`` frees a recorded frame (anything
+    it did not make is left alone); ``keep`` hands a recorded frame to
+    the caller. On exit — normal or exception — or on ``close()``, every
+    frame still recorded is released, so an error mid-loop leaks no
+    blocks.
     """
 
     def __init__(self) -> None:
-        self._held: dict[int, tuple[DataFrame, set[int]]] = {}
+        self._held: dict[int, _Held] = {}
 
     def __enter__(self) -> Scope:
         return self
@@ -234,14 +263,21 @@ class Scope:
         self.close()
 
     def close(self) -> None:
-        for df, ids in self._held.values():
-            _unpersist_ids(df.sparkSession.sparkContext, ids)
+        for _, free in self._held.values():
+            free()
         self._held.clear()
 
+    def _hold(self, held: _Held) -> DataFrame:
+        self._held[id(held[0])] = held
+        return held[0]
+
     def checkpoint(self, df: DataFrame) -> DataFrame:
-        out, ids = _checkpoint_tracked(df)
-        self._held[id(out)] = (out, ids)
-        return out
+        return self._hold(_checkpointed(df))
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """``df`` cached lazily: no job runs here; the first action over
+        it fills the cache and later ones read it, until release."""
+        return self._hold(_persisted(df))
 
     def edges(
         self, edges: DataFrame | EdgeSet, src: str = "src", dst: str = "dst"
@@ -262,7 +298,7 @@ class Scope:
     def release(self, df: DataFrame) -> None:
         held = self._held.pop(id(df), None)
         if held is not None:
-            _unpersist_ids(df.sparkSession.sparkContext, held[1])
+            held[1]()
 
     def keep(self, df: DataFrame) -> DataFrame:
         self._held.pop(id(df), None)
@@ -299,6 +335,73 @@ class Scope:
             if stopped:
                 return state, True
         return state, False
+
+
+# (applicationId, *key) -> the session's tables and their releases
+_LOCK = threading.RLock()
+_SESSION: dict[tuple, _Held] = {}
+
+
+def _live_app(spark) -> str:
+    """The live context's application id, after dropping — without
+    release — every entry another context left."""
+    app = spark.sparkContext.applicationId
+    with _LOCK:
+        for stale in [k for k in _SESSION if k[0] != app]:
+            del _SESSION[stale]
+    return app
+
+
+def session_table(
+    spark,
+    key: tuple,
+    build: Callable[[], DataFrame],
+    persist: bool = False,
+) -> DataFrame:
+    """The table ``build()`` makes, materialized once per (SparkContext,
+    ``key``) and handed to every later caller as the same frame until
+    ``release_session``. It is materialized when built: checkpointed
+    (lineage cut), or with ``persist`` cached and filled by a count, so
+    its plan keeps the build's operators over the cached rows."""
+    full = (_live_app(spark), *key)
+    with _LOCK:
+        hit = _SESSION.get(full)
+    if hit is not None:
+        return hit[0]
+    # build outside the lock (it runs a job); a concurrent duplicate
+    # build is benign — the loser is released below
+    if persist:
+        held = _persisted(build())
+        held[0].count()
+    else:
+        held = _checkpointed(build())
+    with _LOCK:
+        won = _SESSION.setdefault(full, held)
+    if won is not held and not persist:
+        held[1]()
+    return won[0]
+
+
+def session_persist(df: DataFrame) -> DataFrame:
+    """``df`` cached lazily and owned by the session: for a table whose
+    consumers run after the building call has returned, so no scope
+    can release it. ``release_session`` frees it."""
+    app = _live_app(df.sparkSession)
+    held = _persisted(df)
+    with _LOCK:
+        _SESSION[(app, "persist", id(held[0]))] = held
+    return held[0]
+
+
+def release_session(spark) -> None:
+    """Release every table the session registry holds for this context
+    (and drop any other context's entries unreleased)."""
+    app = spark.sparkContext.applicationId
+    with _LOCK:
+        mine = [held for k, held in _SESSION.items() if k[0] == app]
+        _SESSION.clear()
+    for _, free in mine:
+        free()
 
 
 # Edge-count gate for the driver-local solvers (0 disables). A constant

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators.materialize import Scope
+
 
 def skyline_2d(
     df: DataFrame,
@@ -74,7 +76,7 @@ def skyline_2d(
         # cache and the chosen finisher reads it back, instead of the
         # naive shape (count pass + an uncached recompute during the
         # finisher, i.e. two full input scans per invocation). The
-        # finisher result is then eagerly pinned via localCheckpoint
+        # finisher result is then eagerly pinned by a checkpoint
         # (it is at most the front, usually far smaller) so the
         # candidate cache can be released deterministically rather
         # than waiting on GC + the async ContextCleaner — bench-style
@@ -82,16 +84,14 @@ def skyline_2d(
         # front per invocation. Net: the guarded path executes at
         # construction time, exactly one phase-1 pass, nothing left
         # cached but the small checkpointed result.
-        candidates = candidates.persist()
-        try:
+        with Scope() as s:
+            candidates = s.persist(candidates)
             degenerate = candidates.count() > broadcast_limit
             if degenerate:
                 result = _skyline_2d_window(candidates, minimize, maximize)
             else:
                 result = _dominance_anti_join(candidates, minimize, maximize, cols)
-            out = result.localCheckpoint(eager=True)
-        finally:
-            candidates.unpersist()
+            out = s.keep(s.checkpoint(result))
         # observable path choice for tests / plan audits (the eager
         # checkpoint hides the finisher from the returned frame's plan)
         out.skyline_finisher = "window" if degenerate else "broadcast"

@@ -21,19 +21,12 @@ sf_dir) and hands out cheap projections of the checkpointed rows:
   side under the same bytes-per-task criterion AQE applies, because an
   ungated hint OOM'd the 16g JVM at c100 (SCALE.md r11 ladder); past
   the gate the sort-merge join (spills, never OOMs) takes over.
-- the materialization is an eager tracked checkpoint
-  (operators/materialize.py). Consumers get lazy projections/unions
-  over the checkpointed RDD, so an iterative operator's per-round scan
-  reads materialized rows — no join recompute, and no per-query
-  re-materialization either. The edge views are ``EdgeSet``s: the
-  pairs are distinct by construction, so operators read them as given
-  instead of deduplicating and re-checkpointing them.
-- the cache is keyed by ``sc.applicationId`` (ADVICE r11: RDD ids are
-  small sequential ints scoped to a SparkContext, so a stash that
-  survives a context restart could release unrelated RDDs in the new
-  context — entries from a different application id are dropped, never
-  released against the live context) and guarded by a lock; a lost
-  build race releases the loser's blocks and reuses the winner.
+- each pair table is a session-registry checkpoint
+  (``materialize.session_table``). Consumers get lazy projections/unions
+  over its rows, so an iterative operator's per-round scan reads
+  materialized rows — no join recompute, no per-query
+  re-materialization. The edge views are ``EdgeSet``s: the pairs are
+  distinct by construction, so operators read them as given.
 
 At 100 TB the same shape holds: the pair table is orders-of-magnitude
 smaller than lineitem (bounded by |customers| x |suppliers| active
@@ -46,21 +39,12 @@ ladder measured bucketed-by-src dropping 2 of 3 per-round exchanges,
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.materialize import (
-    EdgeSet,
-    checkpoint,
-    release,
-)
+from tvbigdataproject_spark.operators.materialize import EdgeSet, session_table
 from tvbigdataproject_spark.sources import read_table
-
-_LOCK = threading.RLock()
-# (applicationId, abspath(sf_dir), variant) -> checkpointed df
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _joined_pairs(spark, sf_dir: str):
@@ -86,38 +70,13 @@ def _joined_pairs(spark, sf_dir: str):
     )
 
 
-def _cached(spark, sf_dir: str, variant: str, build) -> DataFrame:
-    sc = spark.sparkContext
-    app = sc.applicationId
-    key = (app, os.path.abspath(sf_dir), variant)
-    with _LOCK:
-        for stale in [k for k in _CACHE if k[0] != app]:
-            # dead-context entries: drop WITHOUT release — their RDD
-            # ids are meaningless (and dangerous) in the live context
-            del _CACHE[stale]
-        hit = _CACHE.get(key)
-        if hit is not None:
-            return hit
-    # build outside the lock (it runs a job); a concurrent duplicate
-    # build is benign — the loser's blocks are released below
-    ck = checkpoint(build(spark, sf_dir))
-    with _LOCK:
-        again = _CACHE.get(key)
-        if again is not None:
-            release(ck)
-            return again
-        _CACHE[key] = ck
-        return ck
-
-
 def trade_pairs(spark, sf_dir: str) -> DataFrame:
     """Distinct (o_custkey, l_suppkey) trade pairs, materialized once
     per (SparkContext, sf_dir) and reused by every caller."""
-    return _cached(
+    return session_table(
         spark,
-        sf_dir,
-        "distinct",
-        lambda sp, d: _joined_pairs(sp, d).distinct(),
+        ("trade_pairs", os.path.abspath(sf_dir)),
+        lambda: _joined_pairs(spark, sf_dir).distinct(),
     )
 
 
@@ -126,11 +85,10 @@ def trade_pair_counts(spark, sf_dir: str) -> DataFrame:
     the weighted variant pagerank / personalized-pagerank / sssp key
     on. Same one-shuffle cost as the distinct (a keyed partial-agg
     count instead of a dedup), cached separately."""
-    return _cached(
+    return session_table(
         spark,
-        sf_dir,
-        "counts",
-        lambda sp, d: _joined_pairs(sp, d)
+        ("trade_pair_counts", os.path.abspath(sf_dir)),
+        lambda: _joined_pairs(spark, sf_dir)
         .groupBy("o_custkey", "l_suppkey")
         .agg(F.count(F.lit(1)).alias("n")),
     )
@@ -179,15 +137,3 @@ def trade_edges_weighted_bi(spark, sf_dir: str) -> EdgeSet:
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
         )
     )
-
-
-def release_trade_pairs(spark) -> None:
-    """Release this context's cached pair tables (tests / bench
-    teardown; entries otherwise live for the session, by design)."""
-    sc = spark.sparkContext
-    app = sc.applicationId
-    with _LOCK:
-        for k in [k for k in _CACHE if k[0] == app]:
-            release(_CACHE.pop(k))
-        for k in [k for k in _CACHE if k[0] != app]:
-            del _CACHE[k]

@@ -47,6 +47,7 @@ from tvbigdataproject_spark.operators.materialize import (
     fits_broadcast,
     local_frame,
     local_solve_ok,
+    session_persist,
 )
 
 # Rounds per checkpoint. A k-core round references the previous edge
@@ -239,10 +240,11 @@ def triangle_corner_counts(
     Spark's exchange reuse cannot collapse the closing branch. The
     oriented table is therefore cached (``persist``, MEMORY_AND_DISK):
     the pair generator runs once and all three branches read the
-    cache. ``persist`` rather than an eager localCheckpoint keeps the
-    operator lazy (plan-only callers trigger no job); this is a
-    one-shot operator, not an O(rounds) loop, so the ContextCleaner
-    releasing the blocks when the result goes out of scope is enough.
+    cache. ``persist`` rather than an eager checkpoint keeps the
+    operator lazy (plan-only callers trigger no job). The CacheManager
+    holds the table until an explicit release (the ContextCleaner never
+    frees it), so it is a session-registry persist, freed by
+    ``session.release_session_caches``.
     """
     e = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct()
     deg = (
@@ -277,7 +279,8 @@ def triangle_corner_counts(
         F.when(u_lower, F.col("u")).otherwise(F.col("v")).alias("lo"),
         F.when(u_lower, F.col("v")).otherwise(F.col("u")).alias("hi"),
         F.when(u_lower, F.struct("dv", "v")).otherwise(F.struct(F.col("du").alias("dv"), F.col("u").alias("v"))).alias("hi_rank"),
-    ).select("lo", "hi", "hi_rank").persist()
+    )
+    oriented = session_persist(oriented.select("lo", "hi", "hi_rank"))
     x, y = oriented.alias("x"), oriented.alias("y")
     wedges = (
         x.hint("SHUFFLE_HASH")

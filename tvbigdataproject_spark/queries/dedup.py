@@ -640,36 +640,11 @@ def minhash_estimate_error(spark, sf_dir):
     candidate pair costs O(signature + shingle intersect), so the audit
     is no heavier than the verify step the LSH pipeline already runs.
     """
-    from tvbigdataproject_spark.functions.hashing import (
-        lsh_bands,
-        minhash_signature,
-    )
-
-    from tvbigdataproject_spark.operators.dedup import _shingled
+    from tvbigdataproject_spark.operators.dedup import _minhash_candidates
 
     docs = read_table(spark, sf_dir, "documents")
-    with_sh = _shingled(docs, "text", "doc_id", 3)
-    sig = with_sh.select(
-        "doc_id", minhash_signature(F.col("shs"), num_hashes=8).alias("sig")
-    )
-    band_df = sig.select(
-        "doc_id",
-        F.explode(lsh_bands(F.col("sig"), bands=4, rows_per_band=2)).alias(
-            "bk"
-        ),
-    )
-    cand = (
-        band_df.alias("a")
-        .hint("SHUFFLE_HASH")
-        .join(
-            band_df.alias("b").hint("SHUFFLE_HASH"),
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+    with_sh, sig, cand = _minhash_candidates(
+        docs, "text", "doc_id", n=3, num_hashes=8, bands=4
     )
     sig_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))

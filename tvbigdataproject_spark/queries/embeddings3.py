@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators.materialize import checkpoint
 from tvbigdataproject_spark.queries.registry import query
 from tvbigdataproject_spark.sources import read_table
 
@@ -346,14 +347,12 @@ def embed_pca_power_iteration(spark, sf_dir):
         )
     )
     mx = cn.agg(F.max(F.abs(F.col("cnum"))).alias("mm"))
-    c2 = (
-        cn.crossJoin(F.broadcast(mx))
-        .select(
+    c2 = checkpoint(
+        cn.crossJoin(F.broadcast(mx)).select(
             "i",
             "j",
             F.expr(f"CAST((cnum * {_PCA_FX}) div mm AS BIGINT)").alias("c"),
         )
-        .localCheckpoint()
     )
     w = c2.select("i").distinct().select(
         "i", F.lit(1).cast("long").alias("w")

@@ -19,6 +19,7 @@ from tvbigdataproject_spark.operators.clustering import (
     QUANT_SCALE,
     quantize_vectors,
 )
+from tvbigdataproject_spark.operators.materialize import Scope
 from tvbigdataproject_spark.queries.registry import query
 from tvbigdataproject_spark.sources import read_table
 
@@ -117,9 +118,11 @@ def kcenter_coreset_embeddings(spark, sf_dir):
     # ROUND-(r-1) table once instead of replaying the whole chain from
     # the quantized scan (one-scan-per-round contract); the superseded
     # cache is released only after its successor has materialized.
-    cur = q.select("vec_id", "qv", dist_to(seed["qv"]).alias("dmin")).persist()
-    hold = None
-    try:
+    with Scope() as s:
+        cur = s.persist(
+            q.select("vec_id", "qv", dist_to(seed["qv"]).alias("dmin"))
+        )
+        hold = None
         for r in range(2, _KC_K + 1):
             top = (
                 cur.orderBy(F.col("dmin").desc(), "vec_id")
@@ -127,20 +130,17 @@ def kcenter_coreset_embeddings(spark, sf_dir):
                 .collect()[0]
             )
             if hold is not None:
-                hold.unpersist()
-                hold = None
+                s.release(hold)
             selected.append((r, int(top["vec_id"]), int(top["dmin"])))
             if r < _KC_K:
-                nxt = cur.select(
-                    "vec_id",
-                    "qv",
-                    F.least("dmin", dist_to(top["qv"])).alias("dmin"),
-                ).persist()
+                nxt = s.persist(
+                    cur.select(
+                        "vec_id",
+                        "qv",
+                        F.least("dmin", dist_to(top["qv"])).alias("dmin"),
+                    )
+                )
                 hold, cur = cur, nxt
-    finally:
-        if hold is not None:
-            hold.unpersist()
-        cur.unpersist()
     return spark.createDataFrame(
         selected, "sel_round int, vec_id long, radius2 long"
     ).orderBy("sel_round")

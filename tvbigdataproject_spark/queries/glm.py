@@ -37,6 +37,7 @@ from tvbigdataproject_spark.functions.portable import (
     plog_stages,
     sql_wrap_stages,
 )
+from tvbigdataproject_spark.operators.materialize import Scope
 from tvbigdataproject_spark.queries.registry import query
 from tvbigdataproject_spark.sources import read_table
 
@@ -219,12 +220,13 @@ def logistic_irls_fit(spark, sf_dir):
         "CAST(0 AS DOUBLE) AS b1",
         "CAST(0 AS DOUBLE) AS b2",
     )
-    for it in range(3):
-        rows = feats.crossJoin(F.broadcast(beta))
+
+    def step(prev, r):
+        rows = feats.crossJoin(F.broadcast(prev))
         rows = rows.selectExpr("*", _ROW_Z)
         rows = apply_stages(
             rows,
-            pexp_stages("CAST(0 AS DOUBLE) - zz", "_ez", f"_i{it}_"),
+            pexp_stages("CAST(0 AS DOUBLE) - zz", "_ez", f"_i{r - 1}_"),
         )
         rows = rows.selectExpr("*", _ROW_POST[0])
         rows = rows.selectExpr("*", *_ROW_WR)
@@ -234,16 +236,19 @@ def logistic_irls_fit(spark, sf_dir):
             F.max("b2").alias("b2"),
             *[F.expr(e) for e in _sum_exprs()],
         )
-        # eager-checkpoint the ONE-ROW beta between steps (the
-        # embed_pca_power_iteration convention): without the barrier
-        # the three unrolled kernel ladders nest into one plan whose
-        # analysis/codegen dominates wall time; with it each step is a
-        # small independent job and values are bit-identical
-        beta = sums.selectExpr(
+        return sums.selectExpr(
             _STEP_OUT[0].replace(" AS nb0", " AS b0"),
             _STEP_OUT[1].replace(" AS nb1", " AS b1"),
             _STEP_OUT[2].replace(" AS nb2", " AS b2"),
-        ).localCheckpoint(eager=True)
+        )
+
+    # eager-checkpoint the ONE-ROW beta after every step (the
+    # embed_pca_power_iteration convention): without the barrier the
+    # three unrolled kernel ladders nest into one plan whose
+    # analysis/codegen dominates wall time; with it each step is a
+    # small independent job and values are bit-identical
+    with Scope() as s:
+        beta = s.keep(s.rounds(beta, step, n=3, every=1)[0])
     rows = feats.crossJoin(F.broadcast(beta))
     rows = rows.selectExpr("*", _ROW_Z)
     rows = apply_stages(

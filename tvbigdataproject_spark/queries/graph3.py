@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.dedup import ngram_jaccard_pairs
+from tvbigdataproject_spark.operators.materialize import session_persist
 from tvbigdataproject_spark.operators.traversal import (
     bfs_levels,
     kcore_peel,
@@ -256,12 +257,13 @@ def clustering_coeff_neardup(spark, sf_dir):
     keyed agg over the pair list, one final equi-join on node id.
     """
     # the pair list feeds BOTH the triangle operator and the degree agg
-    # — persist it so the expensive shingle self-join runs once (lazy
-    # persist, the same one-shot rationale as triangle_corner_counts'
-    # cached oriented table)
-    pairs = ngram_jaccard_pairs(
-        read_table(spark, sf_dir, "documents"), n=3, threshold=0.4
-    ).persist()
+    # — persist it so the expensive shingle self-join runs once (a lazy
+    # session-owned persist, like triangle_corner_counts' oriented table)
+    pairs = session_persist(
+        ngram_jaccard_pairs(
+            read_table(spark, sf_dir, "documents"), n=3, threshold=0.4
+        )
+    )
     tcount = triangle_corner_counts(pairs, a="doc_a", b="doc_b")
     degs = (
         pairs.select(F.col("doc_a").alias("node"))

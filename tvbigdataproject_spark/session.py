@@ -76,19 +76,18 @@ def get_spark(
 
 
 def release_session_caches(spark: SparkSession) -> None:
-    """Release every session-scoped derived-table cache the engine keeps
-    (shared trade-edge checkpoints, IVF centroid/index memos).
-
-    The library memoizes these because a deployment amortizes an index
-    or edge-table build across many queries — but a BENCHMARK rep must
-    compute from the parquet inputs, so bench.py calls this after every
-    timed rep. Cheap (a few unpersist RPCs) when nothing is cached.
+    """Release every table the session registry in
+    ``operators/materialize.py`` holds (shared trade edges, the IVF
+    index, session-owned persists) and forget the memoized IVF
+    centroids. A deployment amortizes those builds across queries, but
+    a BENCHMARK rep must compute from the parquet inputs, so bench.py
+    calls this before every timed rep. Cheap when nothing is cached.
     """
-    from tvbigdataproject_spark.operators.similarity import release_ivf_caches
-    from tvbigdataproject_spark.operators.trade_edges import release_trade_pairs
+    from tvbigdataproject_spark.operators import similarity
+    from tvbigdataproject_spark.operators.materialize import release_session
 
-    release_trade_pairs(spark)
-    release_ivf_caches()
+    release_session(spark)
+    similarity._CENTER_CACHE.clear()
 
 
 def tune_for_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:

@@ -24,6 +24,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators.materialize import Scope
+
 
 def write_batch_idempotent(df: DataFrame, batch_id: int, path: str) -> None:
     """Idempotent single-batch write: replace exactly this batch's
@@ -182,8 +184,8 @@ def incremental_dedup_batch_handler(store_path: str, out_path: str):
                 F.col("h.content_hash").isNotNull().alias("seen_before"),
             )
         # one pass, two sinks: flagged rows + this batch's novel digests
-        flagged.persist()
-        try:
+        with Scope() as s:
+            flagged = s.persist(flagged)
             write_batch_idempotent(flagged, batch_id, out_path)
             novel = (
                 flagged.where(~F.col("seen_before"))
@@ -191,8 +193,6 @@ def incremental_dedup_batch_handler(store_path: str, out_path: str):
                 .distinct()
             )
             write_batch_idempotent(novel, batch_id, store_path)
-        finally:
-            flagged.unpersist()
 
     return handle
 
