@@ -259,6 +259,10 @@ def main() -> None:
     names = sys.argv[1:] or HEADLINE
 
     from tvbigdataproject_spark.queries import REGISTRY
+    from tvbigdataproject_spark.operators.materialize import (
+        _unpersist_ids,
+        persistent_ids,
+    )
     from tvbigdataproject_spark.session import get_spark, release_session_caches
 
     # no console progress bars: the gate artifact is parsed from this
@@ -418,26 +422,34 @@ def main() -> None:
     spread: dict[str, list[float]] = {}
     suspect: list[str] = []
     sc = spark.sparkContext
-    # queries whose rep left a table in the CacheManager after
-    # release_session_caches: a later plan over the same inputs would
-    # read it instead of the parquet inputs
+    # queries whose rep left a table in the CacheManager, or persisted
+    # RDDs (checkpoint blocks), after release_session_caches: a later
+    # plan over the same inputs would read the table instead of the
+    # parquet inputs, and the blocks would pile up until the JVM GC
     cache_leaks: list[str] = []
+    # the persisted RDDs alive after the previous release: anything
+    # beyond them after the next one is the last query's
+    settled = persistent_ids(sc)
 
     def _fresh(last: str | None) -> None:
         """Release the session's tables before a rep and check that the
-        CacheManager is empty; a table still cached is charged to the
-        query that ran ``last``, named on stderr and cleared."""
+        CacheManager is empty and no RDD the last rep persisted is left;
+        a leak is charged to the query that ran ``last``, named on
+        stderr and freed."""
+        nonlocal settled
         release_session_caches(spark)
-        if spark._jsparkSession.sharedState().cacheManager().isEmpty():
-            return
-        if last not in cache_leaks:
-            cache_leaks.append(last)
-            print(
-                f"WARN {last}: left a cached table after "
-                "release_session_caches",
-                file=sys.stderr,
-            )
-        spark.catalog.clearCache()
+        left = persistent_ids(sc) - settled
+        if left or not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            if last not in cache_leaks:
+                cache_leaks.append(last)
+                print(
+                    f"WARN {last}: left a cached table or persisted RDDs "
+                    "after release_session_caches",
+                    file=sys.stderr,
+                )
+            spark.catalog.clearCache()
+            _unpersist_ids(sc, left)
+        settled = persistent_ids(sc)
 
     last = None
     _probe_tick(-1)

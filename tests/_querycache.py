@@ -9,9 +9,18 @@ per pytest session; the audits and the smoke counts read the same
 DataFrame (identical plan, identical result). Test-harness only: the
 library itself never memoizes query results, and the bench releases all
 session caches before every timed rep.
+
+``release_session_caches`` invalidates every result frame returned
+before it (the session registry owns the blocks behind them), and any
+test may call it. So a memo entry records the registry's keys when it
+was built, and is rebuilt once one of them is gone: an entry is only
+ever served while every session table and kept result it could read
+is still held.
 """
 
 from __future__ import annotations
+
+from tvbigdataproject_spark.operators import materialize
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,10 +29,12 @@ _DF_CACHE: dict = {}
 
 def registry_df(spark, name: str, sf_dir: str = SF_DIR):
     """The (lazily built, session-memoized) DataFrame of a registered
-    query at ``sf_dir``."""
+    query at ``sf_dir``, rebuilt after a release of the session."""
     from tvbigdataproject_spark.queries import REGISTRY
 
     key = (id(spark), name, sf_dir)
-    if key not in _DF_CACHE:
-        _DF_CACHE[key] = REGISTRY[name].fn(spark, sf_dir)
-    return _DF_CACHE[key]
+    hit = _DF_CACHE.get(key)
+    if hit is None or not hit[1] <= materialize._SESSION.keys():
+        df = REGISTRY[name].fn(spark, sf_dir)
+        hit = _DF_CACHE[key] = (df, set(materialize._SESSION))
+    return hit[0]

@@ -160,21 +160,21 @@ def test_label_propagation_releases_checkpoint_blocks(spark):
 def test_community_modularity_releases_all_but_result(spark):
     # the query rides the SESSION-SCOPED shared edge table (r12,
     # operators/trade_edges.py — cached once per context by design)
-    # and checkpoints LPA's internal tables; everything the CALL
-    # creates must be released before returning — only the one-row
-    # result checkpoint may remain per invocation. Warm the shared
-    # table first so the delta measures per-invocation growth only.
-    from tvbigdataproject_spark.operators.trade_edges import trade_edges_bi
+    # and checkpoints LPA's rounds; the superseded rounds are released
+    # inside the call, and the edge table and the final labels the
+    # result reads belong to the session registry: after
+    # release_session_caches nothing the calls made is left persisted.
+    from tvbigdataproject_spark.operators.materialize import persistent_ids
     from tvbigdataproject_spark.queries.registry import REGISTRY
 
     sc = spark.sparkContext
-    trade_edges_bi(spark, "/root/testdata/sf0.001").count()
-    before = len(sc._jsc.getPersistentRDDs().keySet().toArray())
+    release_session_caches(spark)
+    before = persistent_ids(sc)
     for _ in range(2):
         df = REGISTRY["community_modularity"].fn(spark, "/root/testdata/sf0.001")
         assert df.count() == 1
-    after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
-    assert after - before <= 2
+    release_session_caches(spark)
+    assert persistent_ids(sc) == before
 
 
 def test_community_modularity_spares_foreign_caches(spark):

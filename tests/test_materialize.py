@@ -1,10 +1,12 @@
 """The materialization layer (operators/materialize.py): the Scope
-ownership contract, the session registry, release() of kept results,
+ownership contract, the session registry (which owns kept results),
 the typed EdgeSet and the one local-solve gate."""
 
 from __future__ import annotations
 
 import ast
+import gc
+import weakref
 from pathlib import Path
 
 import pytest
@@ -18,12 +20,10 @@ from tvbigdataproject_spark.operators import trade_edges as te
 from tvbigdataproject_spark.operators.materialize import (
     EdgeSet,
     Scope,
-    _blocks,
-    checkpoint,
     fits_broadcast,
     local_solve_ok,
     persistent_ids,
-    release,
+    session_checkpoint,
 )
 from tvbigdataproject_spark.session import release_session_caches
 
@@ -51,10 +51,11 @@ def test_scope_releases_everything_on_error_and_keeps_what_it_hands_out(spark):
         assert kept.count() == 7 and foreign.is_cached
         created = persistent_ids(sc) - before
         assert len(created) == 1  # only the kept frame's blocks
-        # release() frees a kept result through any projection of it
-        release(kept.select(F.col("id").alias("x")).where("x > 2"))
-        assert not persistent_ids(sc) & created
-        assert foreign.count() == 3
+        # the kept result belongs to the session registry: its release
+        # frees the kept blocks and never a user's persist()
+        release_session_caches(spark)
+        assert persistent_ids(sc) - before == set()
+        assert foreign.is_cached and foreign.count() == 3
     finally:
         foreign.unpersist()
 
@@ -64,7 +65,8 @@ def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(
 ):
     # an operator handed the session trade table must leave the cache's
     # blocks persisted and release everything it made except its
-    # result; release(result) then returns the context to the cache
+    # result, which the session registry owns: release_session_caches
+    # then frees the results and the cache alike
     from tvbigdataproject_spark.operators.components import (
         label_propagation,
         strongly_connected_components,
@@ -78,7 +80,7 @@ def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(
 
     sc = spark.sparkContext
     release_session_caches(spark)
-    before = persistent_ids(sc)
+    start = before = persistent_ids(sc)
     bi = te.trade_edges_bi(spark, SF)
     n_edges = bi.count()
     cache = persistent_ids(sc) - before
@@ -105,14 +107,11 @@ def test_operators_over_borrowed_edge_set_free_only_their_own_blocks(
             out.count()
             alive = persistent_ids(sc)
             assert cache <= alive  # the borrowed blocks survive
-            created = alive - before
-            assert len(created) <= 1  # at most the result's own
-            release(out)
-            assert not persistent_ids(sc) & created
-            assert cache <= persistent_ids(sc)
+            assert len(alive - before) <= 1  # at most the result's own
         assert bi.count() == n_edges  # still served from the cache
     finally:
         release_session_caches(spark)
+    assert persistent_ids(sc) - start == set()
 
 
 def test_dag_levels_cycle_raise_leaks_nothing(spark):
@@ -159,7 +158,9 @@ def test_local_solve_gate_threshold_and_env(spark, monkeypatch):
 def test_fits_broadcast_reads_only_a_bare_checkpoints_stored_size(spark):
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    small = checkpoint(spark.range(100).selectExpr("id AS node"))
+    before = persistent_ids(spark.sparkContext)
+    s = Scope()
+    small = s.checkpoint(spark.range(100).selectExpr("id AS node"))
     try:
         assert fits_broadcast(small)
         # a lazy plan and anything built over a checkpoint have no
@@ -174,7 +175,8 @@ def test_fits_broadcast_reads_only_a_bare_checkpoints_stored_size(spark):
         assert not fits_broadcast(small)
     finally:
         spark.conf.set(key, old)
-        release(small)
+        s.close()
+    assert persistent_ids(spark.sparkContext) - before == set()
 
 
 # Scope.rounds over a path 0-1-...-7 (both orientations): each round
@@ -244,10 +246,16 @@ def test_rounds_keeps_only_the_final_state_and_leaks_nothing_on_error(spark):
         out, _ = s.rounds(s.checkpoint(start), step, 5, 2)
         # every superseded table is released inside the loop, not on exit
         created = persistent_ids(sc) - before
-        assert len(created) == 1 and created == _blocks(out)
+        assert len(created) == 1
         kept = s.keep(out)
     assert persistent_ids(sc) - before == created
-    release(kept)
+    # the one block left is the kept final state's: releasing the
+    # session frees it, and rows read before the release are its rows
+    assert sorted(map(tuple, kept.collect())) == [
+        (v, max(0, v - 5)) for v in range(8)
+    ]
+    release_session_caches(spark)
+    assert persistent_ids(sc) - before == set()
 
     def failing(plan, r):
         if r == 3:
@@ -281,7 +289,7 @@ def test_only_materialize_persists_checkpoints_or_releases():
     # one owner for every materialized table: DataFrame persist, cache,
     # localCheckpoint and unpersist are called in operators/materialize.py
     # only; the library goes through a Scope (``with Scope() as s:
-    # s.persist(df)``), ``checkpoint`` or the session registry
+    # s.persist(df)``) or the session registry
     raw = {"persist", "cache", "localCheckpoint", "unpersist"}
     root = Path(tvbigdataproject_spark.__file__).parent
     offenders = []
@@ -385,3 +393,56 @@ def test_clustering_coeff_reruns_from_its_inputs_after_release(spark):
     (jobs_a, rows_a), (jobs_b, rows_b) = runs
     assert jobs_a == jobs_b and rows_a == rows_b and rows_a
 
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "bfs_hops_trade",
+        "ipf_raking_weights",
+        "minhash_scurve_design",
+        "community_modularity",
+        "skyline_parts",
+        "kmeans_lloyd_assign",
+    ],
+)
+def test_query_blocks_are_freed_by_the_session_release(spark, name):
+    # each of these returns a plan over checkpoint blocks; the session
+    # registry owns them, so releasing the session with the result
+    # still alive returns the context to its state before the call
+    from tvbigdataproject_spark.queries import REGISTRY
+
+    sc = spark.sparkContext
+    release_session_caches(spark)
+    before = persistent_ids(sc)
+    df = REGISTRY[name].fn(spark, SF)
+    df.write.format("noop").mode("overwrite").save()
+    release_session_caches(spark)
+    assert persistent_ids(sc) == before
+
+
+def test_kept_frame_is_freed_by_the_release_and_not_held_by_the_registry(spark):
+    sc = spark.sparkContext
+    release_session_caches(spark)
+    before = persistent_ids(sc)
+    with Scope() as s:
+        kept = s.keep(s.checkpoint(spark.range(5)))
+    created = persistent_ids(sc) - before
+    assert len(created) == 1 and kept.count() == 5
+    release_session_caches(spark)
+    assert persistent_ids(sc) - before == set()
+
+    # never released: the registry keeps only the release, so the
+    # frame dies with its last reference and the ContextCleaner can
+    # reach its blocks
+    with Scope() as s:
+        kept = s.keep(s.checkpoint(spark.range(5)))
+    ref = weakref.ref(kept)
+    assert any(
+        k[0] == sc.applicationId and held[0] is None
+        for k, held in materialize._SESSION.items()
+    )
+    del kept
+    gc.collect()
+    assert ref() is None
+    release_session_caches(spark)

@@ -249,6 +249,7 @@ def test_nested_loop_joins_only_where_intended(spark):
         "cvm_doclen_lang",            # one-row pooled-total attach
         "entropy_rate_markov",        # one-row type-count attach
         "graph_reciprocity",          # one-row edge-total attach
+        "community_conductance",      # one-row total-volume attach
         "huber_irls_location",        # one-row iterate attach (x3 rounds)
         "hurst_rs_daily",             # bounded per-scale leg attaches
         "isotonic_weekly_trend",      # one-row PAVA state attach

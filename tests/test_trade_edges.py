@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators import materialize
 from tvbigdataproject_spark.operators import trade_edges as te
-from tvbigdataproject_spark.operators.materialize import persistent_ids, release
+from tvbigdataproject_spark.operators.materialize import persistent_ids
 from tvbigdataproject_spark.session import release_session_caches
 
 SF = "/root/testdata/sf0.001"
@@ -83,7 +83,10 @@ def test_dead_context_entries_dropped_not_unpersisted(spark):
     # plant an entry from a "previous" context whose release would free
     # the live blocks — the bug class the applicationId key prevents
     stale = ("app-from-a-previous-life", "trade_pairs", "/x")
-    materialize._SESSION[stale] = (live, lambda: release(live))
+    materialize._SESSION[stale] = (
+        live,
+        lambda: materialize._unpersist_ids(sc, blocks),
+    )
     te.trade_pairs(spark, SF)  # any registry call sweeps stale entries
     assert stale not in materialize._SESSION
     # the LIVE context's blocks survived the sweep (no cross-context

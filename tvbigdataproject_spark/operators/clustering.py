@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.materialize import Scope, release
+from tvbigdataproject_spark.operators.materialize import Scope
 
 QUANT_SCALE = 1 << 20  # dyadic: float * 2^20 is exact in double
 
@@ -342,11 +342,9 @@ def dbscan_cosine(
                 F.coalesce("core_cluster", "border_cluster").alias("cluster"),
             )
         )
-        # one small row per vector: materialize the verdict, then every
-        # upstream block (quadratic pairs, CC labels) is dead
-        out = s.keep(s.checkpoint(out))
-        release(clusters)
-        return out
+        # one small row per vector: materialize the verdict, so the
+        # scope's upstream blocks (the quadratic pairs) are dead
+        return s.keep(s.checkpoint(out))
 
 
 def pq_codebook_pack(

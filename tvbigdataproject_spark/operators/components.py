@@ -37,8 +37,10 @@ Design for 100 TB:
   long-lived session that leaves O(rounds) label tables cached
   nondeterministically. Every operator runs inside a
   ``materialize.Scope``, which releases each superseded checkpoint
-  explicitly and everything else on exit (tests/test_components.py
-  asserts no growth over a deep-chain multi-round run).
+  explicitly and everything else on exit, except the returned labels:
+  ``keep`` hands those to the session registry, which
+  ``release_session_caches`` frees (tests/test_components.py asserts
+  no growth over a deep-chain multi-round run).
 """
 
 from __future__ import annotations

@@ -3,23 +3,33 @@ two owners, nothing else.
 
 - ``checkpoint`` — an eager ``localCheckpoint`` that cuts lineage (with
   the stats-ceiling rebuild below). Its blocks live outside the
-  CacheManager; unreleased, they wait for Python GC to reach the async
-  ContextCleaner.
+  CacheManager, so they need an owner that releases them.
 - ``persist`` — a lazy cache that lets several consumers share one
   computation. The CacheManager holds it until an explicit release, and
   every later plan with the same inputs reads the cached copy.
 
 - ``Scope`` — owns what one call (or pipeline) makes: it releases
-  superseded frames, hands results to the caller with ``keep`` and, on
-  exit (normal or exception), releases everything else it made.
-  ``Scope.rounds`` is the iterative tier's one round loop (a step per
-  round, a checkpoint every few rounds, an optional convergence probe).
-- the session registry — owns tables that outlive the call that built
-  them: ``session_table`` builds a keyed table once per (SparkContext,
-  key); ``session_persist`` holds a lazy persist whose consumers run
-  after the call returns. ``release_session`` (through
-  ``session.release_session_caches``) frees them all: a deployment
-  amortizes a build across queries, a benchmark rep must not.
+  superseded frames and, on exit (normal or exception), everything else
+  it made, except the results it hands to the session registry with
+  ``keep``. ``Scope.rounds`` is the iterative tier's one round loop (a
+  step per round, a checkpoint every few rounds, an optional
+  convergence probe).
+- the session registry — owns everything that outlives the call that
+  built it: ``session_table`` builds a keyed table once per
+  (SparkContext, key); ``session_persist`` and ``session_checkpoint``
+  hold a table whose consumers run after the call returns; and
+  ``Scope.keep`` moves a result's release here. ``release_session``
+  (through ``session.release_session_caches``) frees them all: a
+  deployment amortizes a build across queries, a benchmark rep must
+  not. So ``release_session_caches`` invalidates every result frame
+  returned before it: a frame that reads a released checkpoint cannot
+  be recomputed, and one that read a released persist recomputes from
+  its inputs.
+
+  An entry for a kept result or a session checkpoint holds only its
+  release (the SparkContext and the RDD ids), never the frame: in a
+  session that never releases (the driver contract, the CLI) a dead
+  frame's blocks are still freed by the ContextCleaner.
 
   Entries are keyed by ``sc.applicationId``: RDD ids are small
   sequential ints scoped to a SparkContext, so an entry that survived a
@@ -30,12 +40,11 @@ two owners, nothing else.
   persisted loser is the winner's own cache entry: the CacheManager
   keys on the plan).
 
-``checkpoint(df)`` is ``keep(checkpoint(df))`` of a one-frame scope;
-``release(df)`` frees such a result later. Beside the verbs:
-``fits_broadcast`` (a checkpoint's measured size against the broadcast
-threshold), ``EdgeSet`` (rows materialized and unique on (src, dst))
-and ``local_solve_ok``, the one size gate for driver-local endgames,
-with ``collect_edges`` / ``local_frame`` for the solvers' I/O.
+Beside the verbs: ``fits_broadcast`` (a checkpoint's measured size
+against the broadcast threshold), ``EdgeSet`` (rows materialized and
+unique on (src, dst)) and ``local_solve_ok``, the one size gate for
+driver-local endgames, with ``collect_edges`` / ``local_frame`` for the
+solvers' I/O.
 """
 
 from __future__ import annotations
@@ -86,9 +95,15 @@ _STATS_BITLEN_CEILING = 96
 _STATS_REBUILD_WARNED = False
 
 
-def _checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint(eager) + the ids of the RDDs it persisted, so the
-    caller can release them the moment they stop being needed."""
+# The two verbs, each returning the materialized frame and the callable
+# that releases it.
+_Held = tuple[DataFrame, Callable[[], None]]
+
+
+def _checkpointed(df: DataFrame) -> _Held:
+    """localCheckpoint(eager) and the release of exactly the RDDs it
+    persisted; the release holds the context and the ids, not the
+    frame."""
     sc = df.sparkSession.sparkContext
     before = persistent_ids(sc)
     out = df.localCheckpoint(eager=True)
@@ -128,23 +143,7 @@ def _checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, set[int]]:
                     RuntimeWarning,
                     stacklevel=3,
                 )
-    return out, persistent_ids(sc) - before
-
-
-def checkpoint(df: DataFrame) -> DataFrame:
-    """Eagerly materialized ``df`` whose blocks the caller owns: they
-    live until ``release`` (or the ContextCleaner) frees them."""
-    return _checkpoint_tracked(df)[0]
-
-
-# The two verbs, each returning the materialized frame and the callable
-# that releases it.
-_Held = tuple[DataFrame, Callable[[], None]]
-
-
-def _checkpointed(df: DataFrame) -> _Held:
-    out, ids = _checkpoint_tracked(df)
-    sc = df.sparkSession.sparkContext
+    ids = persistent_ids(sc) - before
     return out, lambda: _unpersist_ids(sc, ids)
 
 
@@ -167,20 +166,6 @@ def _persisted_under(leaf, persisted: set[int]) -> int | None:
 
 def _is_rdd_leaf(plan) -> bool:
     return plan.getClass().getSimpleName() == "LogicalRDD"
-
-
-def _blocks(df: DataFrame) -> set[int]:
-    """Ids of the persisted RDDs behind ``df``'s checkpoint leaves."""
-    persisted = persistent_ids(df.sparkSession.sparkContext)
-    found: set[int] = set()
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    while leaves.hasNext():
-        leaf = leaves.next()
-        if _is_rdd_leaf(leaf):
-            rdd_id = _persisted_under(leaf, persisted)
-            if rdd_id is not None:
-                found.add(rdd_id)
-    return found
 
 
 def fits_broadcast(df: DataFrame) -> bool:
@@ -213,14 +198,6 @@ def fits_broadcast(df: DataFrame) -> bool:
     return rdd_id is not None and stored[rdd_id] <= threshold
 
 
-def release(df: DataFrame) -> None:
-    """Free the checkpoint blocks ``df`` reads — the way to drop a result
-    an operator kept for its caller once it is no longer needed. Call it
-    only on frames whose checkpoints are yours (not on a projection of
-    a shared table such as the session trade edges)."""
-    _unpersist_ids(df.sparkSession.sparkContext, _blocks(df))
-
-
 @dataclass(frozen=True)
 class EdgeSet:
     """Edge rows that are already materialized and unique on their
@@ -247,10 +224,11 @@ class Scope:
 
     ``checkpoint`` materializes and records a frame, ``persist`` caches
     and records one lazily; ``release`` frees a recorded frame (anything
-    it did not make is left alone); ``keep`` hands a recorded frame to
-    the caller. On exit — normal or exception — or on ``close()``, every
-    frame still recorded is released, so an error mid-loop leaks no
-    blocks.
+    it did not make is left alone); ``keep`` hands a recorded frame's
+    release to the session registry, so the frame outlives the scope
+    until ``release_session``. On exit — normal or exception — or on
+    ``close()``, every frame still recorded is released, so an error
+    mid-loop leaks no blocks.
     """
 
     def __init__(self) -> None:
@@ -301,7 +279,9 @@ class Scope:
             held[1]()
 
     def keep(self, df: DataFrame) -> DataFrame:
-        self._held.pop(id(df), None)
+        held = self._held.pop(id(df), None)
+        if held is not None:
+            _own(df.sparkSession, held[1])
         return df
 
     def rounds(
@@ -337,9 +317,10 @@ class Scope:
         return state, False
 
 
-# (applicationId, *key) -> the session's tables and their releases
+# (applicationId, *key) -> (the table session_table hands out, else
+# None; its release)
 _LOCK = threading.RLock()
-_SESSION: dict[tuple, _Held] = {}
+_SESSION: dict[tuple, tuple[DataFrame | None, Callable[[], None]]] = {}
 
 
 def _live_app(spark) -> str:
@@ -350,6 +331,14 @@ def _live_app(spark) -> str:
         for stale in [k for k in _SESSION if k[0] != app]:
             del _SESSION[stale]
     return app
+
+
+def _own(spark, free: Callable[[], None]) -> None:
+    """Make ``free`` a registry entry, keyed by the callable itself (the
+    entry keeps it alive, so its id stays unique)."""
+    app = _live_app(spark)
+    with _LOCK:
+        _SESSION[(app, "owned", id(free))] = (None, free)
 
 
 def session_table(
@@ -386,11 +375,18 @@ def session_persist(df: DataFrame) -> DataFrame:
     """``df`` cached lazily and owned by the session: for a table whose
     consumers run after the building call has returned, so no scope
     can release it. ``release_session`` frees it."""
-    app = _live_app(df.sparkSession)
-    held = _persisted(df)
-    with _LOCK:
-        _SESSION[(app, "persist", id(held[0]))] = held
-    return held[0]
+    out, free = _persisted(df)
+    _own(df.sparkSession, free)
+    return out
+
+
+def session_checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` checkpointed now and owned by the session: the eager form
+    of ``session_persist``, for a table that backs a returned plan.
+    ``release_session`` frees it."""
+    out, free = _checkpointed(df)
+    _own(df.sparkSession, free)
+    return out
 
 
 def release_session(spark) -> None:

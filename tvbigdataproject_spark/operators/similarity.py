@@ -26,7 +26,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.materialize import Scope, checkpoint, session_table
+from tvbigdataproject_spark.operators.materialize import (
+    Scope,
+    session_checkpoint,
+    session_table,
+)
 from tvbigdataproject_spark.operators.skew import shuffle_partition_count
 
 from tvbigdataproject_spark.functions import cosine_arrow
@@ -298,7 +302,7 @@ def attach_nearest_cells(
         "_entries array<struct<key:int, "
         "value:array<struct<cell:int, cv:array<double>, c2:double>>>>",
     )
-    pack = checkpoint(pack.select("_leaders", F.map_from_entries("_entries").alias("_gmap")))
+    pack = session_checkpoint(pack.select("_leaders", F.map_from_entries("_entries").alias("_gmap")))
 
     v = F.col(vec_col).cast("array<double>")
     dot_of = lambda c: F.aggregate(  # noqa: E731
@@ -644,7 +648,7 @@ def nearest_cells_quantized(
             ),
         )
     )
-    packed_map = checkpoint(grouped.select(gmap.alias("_gmap"), F.col("_leaders")))
+    packed_map = session_checkpoint(grouped.select(gmap.alias("_gmap"), F.col("_leaders")))
     # route to the TOP-2 leaders, not one: the flat top-p's nearest
     # cells straddle a leader boundary often enough that single-group
     # routing measured only 0.65 pair recall vs flat on clustered data;

@@ -78,12 +78,12 @@ def skyline_2d(
         # finisher, i.e. two full input scans per invocation). The
         # finisher result is then eagerly pinned by a checkpoint
         # (it is at most the front, usually far smaller) so the
-        # candidate cache can be released deterministically rather
-        # than waiting on GC + the async ContextCleaner — bench-style
-        # repeated construction would otherwise accumulate one cached
-        # front per invocation. Net: the guarded path executes at
-        # construction time, exactly one phase-1 pass, nothing left
-        # cached but the small checkpointed result.
+        # candidate cache is released when the scope exits; the
+        # result's blocks belong to the session registry, which
+        # release_session_caches frees. Net: the guarded path executes
+        # at construction time, exactly one phase-1 pass, nothing left
+        # cached, and the small checkpointed result owned by the
+        # session.
         with Scope() as s:
             candidates = s.persist(candidates)
             degenerate = candidates.count() > broadcast_limit

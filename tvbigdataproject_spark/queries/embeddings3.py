@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.materialize import checkpoint
+from tvbigdataproject_spark.operators.materialize import session_checkpoint
 from tvbigdataproject_spark.queries.registry import query
 from tvbigdataproject_spark.sources import read_table
 
@@ -347,7 +347,7 @@ def embed_pca_power_iteration(spark, sf_dir):
         )
     )
     mx = cn.agg(F.max(F.abs(F.col("cnum"))).alias("mm"))
-    c2 = checkpoint(
+    c2 = session_checkpoint(
         cn.crossJoin(F.broadcast(mx)).select(
             "i",
             "j",

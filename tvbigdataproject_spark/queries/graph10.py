@@ -90,7 +90,6 @@ def community_conductance(spark, sf_dir):
     broadcast, and a TakeOrdered top-{k}.
     """
     from tvbigdataproject_spark.operators.components import label_propagation
-    from tvbigdataproject_spark.operators.materialize import checkpoint, release
     from tvbigdataproject_spark.operators.trade_edges import trade_edges_bi
 
     # shared session-scoped edge table (operators/trade_edges.py, r12)
@@ -111,7 +110,7 @@ def community_conductance(spark, sf_dir):
         )
     )
     tot = vol.agg(F.sum("vol").cast("long").alias("t_deg"))
-    out = (
+    return (
         vol.crossJoin(F.broadcast(tot))
         .selectExpr(
             "community",
@@ -123,11 +122,6 @@ def community_conductance(spark, sf_dir):
         .orderBy(F.col("vol").desc(), "community")
         .limit(_CD_TOPK)
     )
-    # pin the bounded result, then release every checkpoint this query
-    # created (the community_modularity cleanup discipline)
-    pinned = checkpoint(out)
-    release(lab)
-    return pinned
 
 
 community_conductance.__doc__ = community_conductance.__doc__.format(

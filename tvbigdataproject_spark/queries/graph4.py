@@ -430,13 +430,12 @@ def community_modularity(spark, sf_dir):
     without materialization each re-derives the lineitem-orders
     join + distinct from the scan (measured 5.5 s -> the build done
     once at sf0.1; exchange reuse does not fire across the
-    differently-shaped branches). LPA's internal checkpoints are
-    released before returning (the one-row result is pinned eagerly,
-    then LPA's kept labels are released); the edge table itself stays
-    cached for the next graph query.
+    differently-shaped branches). LPA releases its superseded rounds
+    before returning; its final labels, which the returned plan reads,
+    belong to the session registry like the edge table, and
+    ``release_session_caches`` frees both.
     """
     from tvbigdataproject_spark.operators.components import label_propagation
-    from tvbigdataproject_spark.operators.materialize import checkpoint, release
 
     # the edge list rides the session-scoped shared checkpoint
     # (operators/trade_edges.py, r12): materialized once per
@@ -491,7 +490,7 @@ def community_modularity(spark, sf_dir):
     den = (F.col("total_degree") * F.col("total_degree")).alias(
         "modularity_den"
     )
-    result = g.select(
+    return g.select(
         "communities",
         "intra_edges",
         "total_degree",
@@ -505,15 +504,6 @@ def community_modularity(spark, sf_dir):
             / (F.col("total_degree") * F.col("total_degree")).cast("double")
         ).alias("modularity"),
     )
-    # the result is ONE row; pin it eagerly so LPA's final labels — the
-    # one table this query checkpointed; the shared edge list belongs
-    # to the session cache — can be released NOW instead of accruing
-    # on a long-lived session (bench alone constructs this query 5x
-    # per run). release() touches only the labels' own blocks, never a
-    # concurrent query's or a user's persist().
-    out = checkpoint(result)
-    release(lab)
-    return out
 
 
 _ED_HOPS = 4  # deep enough that >=90% of reachable pairs resolve

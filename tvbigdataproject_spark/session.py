@@ -78,10 +78,12 @@ def get_spark(
 def release_session_caches(spark: SparkSession) -> None:
     """Release every table the session registry in
     ``operators/materialize.py`` holds (shared trade edges, the IVF
-    index, session-owned persists) and forget the memoized IVF
-    centroids. A deployment amortizes those builds across queries, but
-    a BENCHMARK rep must compute from the parquet inputs, so bench.py
-    calls this before every timed rep. Cheap when nothing is cached.
+    index, session-owned persists and checkpoints, the results operators
+    kept) and forget the memoized IVF centroids. A deployment amortizes
+    those builds across queries, but a BENCHMARK rep must compute from
+    the parquet inputs, so bench.py calls this before every timed rep.
+    Every result frame returned before the call is invalid after it.
+    Cheap when nothing is cached.
     """
     from tvbigdataproject_spark.operators import similarity
     from tvbigdataproject_spark.operators.materialize import release_session
