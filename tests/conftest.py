@@ -5,10 +5,13 @@ from __future__ import annotations
 
 import itertools
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so a copy of the repo tests its
+# own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tvbigdataproject_spark.schemas import TWEET_SCHEMA  # noqa: E402
 from tvbigdataproject_spark.session import get_spark  # noqa: E402

@@ -1,5 +1,6 @@
 """operators/bloom.py — build/probe correctness, the no-false-negative
-guarantee, mergeability-by-OR, and dense-layout determinism."""
+guarantee, mergeability-by-OR, and dense-layout determinism; and the
+registered bloom_contamination_probe on an empty benchmark."""
 
 from __future__ import annotations
 
@@ -10,6 +11,10 @@ from tvbigdataproject_spark.operators.bloom import (
     bloom_might_contain,
     bloom_summary,
 )
+from tvbigdataproject_spark.queries.registry import REGISTRY
+from tvbigdataproject_spark.sources import read_table
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def _build(spark, groups):
@@ -85,3 +90,18 @@ def test_groups_build_independent_filters(spark):
         # group b never saw "a-only"; fp chance over a 2-key filter is
         # negligible (8/8192 bits set)
         assert got == expect
+
+
+def test_batch_probe_empty_benchmark_keeps_all_docs(spark, tmp_path):
+    # the registered BATCH query on a corpus where NO doc_id % 97 == 0:
+    # the unconditional-filter-row fix must keep every doc (previously
+    # the empty build emptied the cross join while the oracle kept all)
+    sf = str(tmp_path / "sf_nobench")
+    docs = read_table(spark, SF_DIR, "documents").where(
+        F.col("doc_id") % 97 != 0
+    )
+    n = docs.count()
+    docs.write.parquet(f"{sf}/documents.parquet")
+    rows = REGISTRY["bloom_contamination_probe"].fn(spark, sf).collect()
+    assert len(rows) == n
+    assert all(r.n_hits == 0 for r in rows)

@@ -1,12 +1,14 @@
 """The materialization layer (operators/materialize.py): the Scope
 ownership contract, the session registry (which owns kept results),
-the typed EdgeSet and the one local-solve gate."""
+the typed EdgeSet and the one local-solve gate; and the source scans
+of the library tree."""
 
 from __future__ import annotations
 
 import ast
 import gc
 import weakref
+from collections import defaultdict
 from pathlib import Path
 
 import pytest
@@ -28,6 +30,7 @@ from tvbigdataproject_spark.operators.materialize import (
 from tvbigdataproject_spark.session import release_session_caches
 
 SF = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_scope_releases_everything_on_error_and_keeps_what_it_hands_out(spark):
@@ -320,6 +323,67 @@ def test_only_materialize_persists_checkpoints_or_releases():
                 f"{path.relative_to(root)}:{node.lineno} .{node.func.attr}("
             )
     assert offenders == []
+
+
+def test_tests_import_the_package_of_their_own_checkout():
+    # the persist scan reads the tree of the imported package, so a copy
+    # of the repo must import its own package
+    assert Path(tvbigdataproject_spark.__file__).resolve().is_relative_to(REPO)
+
+
+def _defined_names(stmt) -> set[str]:
+    """Names a top-level statement defines: a def, a class or an
+    UPPER_CASE constant."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return {stmt.name}
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return {t.id for t in targets if isinstance(t, ast.Name) and t.id.isupper()}
+    return set()
+
+
+def test_every_public_library_name_is_used_outside_tests():
+    # no surface that only tests reach: every public top-level def, class
+    # and UPPER_CASE constant of the library outside queries/ is named
+    # (Name, Attribute or import alias) by code that runs: the package
+    # minus its __init__ re-exports, tools/, perfbench/, bench.py or
+    # __spark_entry__.py. A name's own definition does not count.
+    exempt = {
+        # the reference's spaCy-lemmatized word-cloud tier; spaCy is not
+        # installed, so nothing runs it, and tests/test_spacy_golden.py
+        # pins its output
+        "clean_text_spacy",
+    }
+    pkg = REPO / "tvbigdataproject_spark"
+    users = [p for p in pkg.rglob("*.py") if p.name != "__init__.py"]
+    users += list((REPO / "tools").rglob("*.py"))
+    users += [p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.parts]
+    users += [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    uses = defaultdict(set)  # name -> {file} | {(file, "own")}
+    for path in users:
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            own = _defined_names(stmt)
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name.rpartition(".")[2]
+                else:
+                    continue
+                uses[name].add((path, "own") if name in own else path)
+    unused = []
+    for path in sorted(pkg.rglob("*.py")):
+        if "queries" in path.relative_to(pkg).parts:
+            continue
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            for name in sorted(_defined_names(stmt)):
+                if name.startswith("_") or name in exempt:
+                    continue
+                if not uses[name] - {(path, "own")}:
+                    unused.append(f"{path.relative_to(REPO)}:{stmt.lineno} {name}")
+    assert not unused, "reached by tests or by nothing:\n" + "\n".join(unused)
 
 
 def _ivf(spark):

@@ -23,6 +23,12 @@ def test_query_runs(spark, name):
     assert df.count() >= 0
 
 
+def test_event_window_queries_are_oracle_checked():
+    # the event-window queries are part of the oracle suite
+    for name in ("tumbling_window_agg", "sliding_window_agg", "sessionize_events"):
+        assert REGISTRY[name].sql is not None
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as E
 

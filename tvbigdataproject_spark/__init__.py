@@ -13,7 +13,6 @@ Layout:
   functions   — native Column-expression library (no Python UDFs on hot paths)
   operators   — relational / graph / dedup / similarity / text / multimodal
   plans       — the reference's end-to-end pipelines (Q1-Q7) recomposed
-  streaming   — Structured Streaming surface over event tables
 """
 
 __version__ = "0.1.0"

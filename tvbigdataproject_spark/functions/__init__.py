@@ -1,14 +1,10 @@
 from tvbigdataproject_spark.functions.core import (  # noqa: F401
     array_to_string,
-    cnt_distinct_elems,
-    cnt_intersection,
-    jaccard,
     normalize_tags,
 )
 from tvbigdataproject_spark.functions.text import (  # noqa: F401
     shingles,
     simple_clean,
-    tokens,
     word_shingles,
 )
 from tvbigdataproject_spark.functions.hashing import (  # noqa: F401

@@ -6,8 +6,9 @@ StringType (SURVEY.md §1.4.1). Each one is a BatchEvalPython fence in the
 physical plan: rows serialize JVM→Python per batch and whole-stage codegen
 splits around it. Everything below is a pure Catalyst expression — it
 inlines into codegen, keeps columns numeric, and lets predicate pushdown
-see through (e.g. a Jaccard threshold filter now lands on a DoubleType
-column instead of a string compare, fixing RetweetTagsJaccardGraph.py:183).
+see through (e.g. the tweet pipeline's Jaccard threshold filter in
+plans/pipelines.py lands on a DoubleType column instead of a string
+compare, fixing RetweetTagsJaccardGraph.py:183).
 """
 
 from __future__ import annotations
@@ -33,33 +34,6 @@ def normalize_tags(tags: Column) -> Column:
     joined = F.array_join(tags, ",")
     folded = F.translate(F.lower(joined), _TRANSLATE_FROM, _TRANSLATE_TO)
     return F.array_sort(F.array_distinct(F.split(folded, ",")))
-
-
-def jaccard(xs: Column, ys: Column) -> Column:
-    """|x ∩ y| / |x ∪ y| as DoubleType.
-
-    Replaces the reference's ``jaccard`` Python UDF which returned the
-    ratio as a *string* (reference: bigdata/__init__.py:25; SURVEY.md
-    §1.4.1-2). Set semantics via array_distinct so inputs need not be
-    pre-deduped.
-    """
-    xd, yd = F.array_distinct(xs), F.array_distinct(ys)
-    inter = F.size(F.array_intersect(xd, yd)).cast("double")
-    union = F.size(F.array_union(xd, yd)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def cnt_distinct_elems(xs: Column) -> Column:
-    """Distinct-element count of an array, as IntegerType.
-
-    Replaces ``cntElemts`` (reference: bigdata/__init__.py:26 —
-    ``len(set(x))``, *not* array length)."""
-    return F.size(F.array_distinct(xs))
-
-
-def cnt_intersection(xs: Column, ys: Column) -> Column:
-    """|set(x) ∩ set(y)| (reference: bigdata/__init__.py:27)."""
-    return F.size(F.array_intersect(F.array_distinct(xs), F.array_distinct(ys)))
 
 
 def array_to_string(xs: Column) -> Column:

@@ -32,12 +32,6 @@ def _empty_str_array() -> Column:
     return F.array().cast("array<string>")
 
 
-def tokens(text: Column, pattern: str = r"\s+") -> Column:
-    """Split text into tokens. Default whitespace split; pass a BPE-ish
-    pattern for subword-style counting."""
-    return F.split(text, pattern)
-
-
 def simple_tokens(text: Column) -> Column:
     """Single-space split — matches the oracle's ``string_split(text, ' ')``
     exactly (the synthetic documents are single-space separated)."""

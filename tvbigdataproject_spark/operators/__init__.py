@@ -10,7 +10,6 @@ from tvbigdataproject_spark.operators.components import (  # noqa: F401
     connected_components,
 )
 from tvbigdataproject_spark.operators.dedup import (  # noqa: F401
-    exact_dedup,
     exact_dedup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -23,7 +22,6 @@ from tvbigdataproject_spark.operators.similarity import (  # noqa: F401
     cosine_topk,
 )
 from tvbigdataproject_spark.operators.textstats import (  # noqa: F401
-    clean_text,
     clean_text_spacy,
     spacy_available,
 )

@@ -45,14 +45,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """The deduplicated rows themselves (first id per content group)."""
-    keep = exact_dedup_groups(df, text_col, id_col).select(
-        F.col("keep_doc_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
 def _shingled(
     df: DataFrame, text_col: str, id_col: str, n: int, spread: bool = True
 ) -> DataFrame:

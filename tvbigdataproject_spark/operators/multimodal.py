@@ -29,14 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -5,8 +5,8 @@ The scoring/counting operators are thin, documented wrappers over the
 native expressions exercised (and oracle-checked) in
 queries/textstats.py. The cleaner has two tiers:
 
-- ``clean_text`` (default): functions.text.simple_clean — pure Catalyst,
-  stays in codegen, the 100 TB path.
+- the default: ``functions.text.simple_clean`` — pure Catalyst, stays
+  in codegen, the 100 TB path.
 - ``clean_text_spacy``: a pandas_udf batching a per-executor-cached
   spaCy pipeline — faithful to the reference's lemmatizer
   (bigdata/__init__.py:28,31-47: tokenize → lemmatize → keep
@@ -21,13 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from tvbigdataproject_spark.functions.text import simple_clean
-
-
-def clean_text(text: Column) -> Column:
-    """Native cleaner (lowercase, strip, collapse) — the default path."""
-    return simple_clean(text)
 
 
 def spacy_available() -> bool:
@@ -47,8 +40,8 @@ def clean_text_spacy(text: Column) -> Column:
     """
     if not spacy_available():
         raise ImportError(
-            "spaCy is not installed in this environment; use clean_text() "
-            "(native) instead"
+            "spaCy is not installed in this environment; use "
+            "functions.text.simple_clean() (native) instead"
         )
 
     from pyspark.sql.functions import pandas_udf
@@ -110,10 +103,3 @@ def quality_metrics(text: Column, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
         "distinct_ratio": n_distinct / n_tokens,
         "quality_score": score,
     }
-
-
-def stopword_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
-    ws = F.split(F.lower(text), " ")
-    def member(w):
-        return w.isin(*stopwords)
-    return F.size(F.filter(ws, member)).cast("double") / F.size(ws)

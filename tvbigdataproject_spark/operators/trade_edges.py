@@ -30,10 +30,10 @@ sf_dir) and hands out cheap projections of the checkpointed rows:
 
 At 100 TB the same shape holds: the pair table is orders-of-magnitude
 smaller than lineitem (bounded by |customers| x |suppliers| active
-pairs), and on a real cluster the session-scoped checkpoint becomes a
-bucketed table (``sources/io.py::write_bucketed``; the r11 3-layout
-ladder measured bucketed-by-src dropping 2 of 3 per-round exchanges,
-42% faster at c100).
+pairs), and on a real cluster the session-scoped checkpoint could
+become a table bucketed by src (``DataFrameWriter.bucketBy``; the r11
+3-layout ladder measured that layout dropping 2 of 3 per-round
+exchanges, 42% faster at c100).
 """
 
 from __future__ import annotations

@@ -191,8 +191,9 @@ class TweetGraphPipeline:
         keeps pairs sharing ≥ 2 tags — the reference's own algorithmic
         idea, kept, with the motif machinery deleted — and
         ``|A ∪ B| = |A| + |B| - |A ∩ B|``. Both are integers, so the
-        double weight is bit-identical to ``functions.jaccard`` over
-        the two arrays; the threshold filter stays strict ``>``.
+        weight is one double division of two exact integers, the same
+        bits as ``len(A & B) / len(A | B)`` in Python; the threshold
+        filter stays strict ``>``.
         """
         return self._jaccard_edges(self.user_hashtags())
 

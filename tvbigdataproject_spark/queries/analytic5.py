@@ -151,8 +151,8 @@ def clamped_inventory_balance(spark, sf_dir):
     parallel across users; per-group work is events-per-user, which is
     bounded by entity activity, not by corpus size. This is the shape
     applyInPandasWithState uses in streaming — same state, same keying
-    (streaming/stateful.py) — demonstrated here as a batch operator
-    with a recursive-CTE oracle proving the sequential semantics.
+    — run here as a batch operator with a recursive-CTE oracle proving
+    the sequential semantics.
     """
     ev = read_table(spark, sf_dir, "events")
     return (

@@ -1238,8 +1238,7 @@ def watermark_lateness_profile(spark, sf_dir):
     geometric seconds bands (floor(log2(sec+1))) — the empirical
     distribution that sizes ``withWatermark``: the delay must cover the
     lateness mass you refuse to drop, and every extra band grows state
-    retention. The registered streaming queries use '2 hours'; this
-    query is where such a number comes FROM.
+    retention. This query is where such a number comes FROM.
 
     Arrival order: the synthetic feed is PERFECTLY ordered by
     event_id (zero late events — verified at every SF), so the profile

@@ -158,10 +158,10 @@ def jaccard_user_similarity(spark, sf_dir):
     """Jaccard similarity edges (Q3/D3) over users' event-type sets.
 
     Candidate pairs come from a shared-element join (never a cross join),
-    then the native array jaccard (functions/core.py — the rewrite of the
-    reference's string-returning UDF, bigdata/__init__.py:25) scores each
-    pair. Same candidate-gate-then-score shape as the reference's motif →
-    jaccard pipeline (RetweetTagsJaccardGraph.py:158-183).
+    then each pair is scored from integer counts, a numeric rewrite of
+    the reference's string-returning UDF (bigdata/__init__.py:25). Same
+    candidate-gate-then-score shape as the reference's motif → jaccard
+    pipeline (RetweetTagsJaccardGraph.py:158-183).
     """
     ev = read_table(spark, sf_dir, "events")
     # count-based set similarity: one groupBy builds each user's
@@ -170,9 +170,7 @@ def jaccard_user_similarity(spark, sf_dir):
     # shared-element self-join, so |A∩B| comes from the join's group
     # counts and |A|,|B| need no sizes table and no re-join — the plan
     # is one groupBy + one self-equi-join + one groupBy, two fewer
-    # shuffles than the sizes-join formulation at any scale. (The
-    # array-valued jaccard() Column function is the same formula and is
-    # exercised by the Q3 tweet pipeline and its golden/property tests.)
+    # shuffles than the sizes-join formulation at any scale.
     ut = (
         ev.groupBy("user_id")
         .agg(F.collect_set("event_type").alias("types"))

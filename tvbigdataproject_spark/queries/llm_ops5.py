@@ -138,7 +138,7 @@ def ngram_novelty_score(spark, sf_dir):
 
     Scale shape — two deliberate choices over the naive join-back:
     (1) grams shuffle as 60-bit md5-prefix digests, never strings
-    (digest-only shuffle, same discipline as exact_dedup); the oracle
+    (digest-only shuffle, same discipline as exact_dedup_groups); the oracle
     hashes identically, so any collision affects both engines the same
     way and the comparison stays exact. (2) there is NO gram-keyed
     join back to the corpus: per-doc gram counts and per-doc

@@ -1,10 +1,9 @@
 """Temporal operators over the events table: tumbling windows,
 sessionization, as-of joins (SURVEY.md §2.10 batch-equivalents + J8).
 
-These are the batch twins of the streaming surface in
-tvbigdataproject_spark/streaming/ — same window semantics
-(F.window / F.session_window) so a pipeline can move between batch and
-Structured Streaming without rewriting its aggregations.
+The windows are built with F.window / F.session_window, the same
+functions Structured Streaming uses, so a pipeline can move between
+batch and streaming without rewriting its aggregations.
 """
 
 from __future__ import annotations
@@ -30,8 +29,8 @@ from tvbigdataproject_spark.sources import read_table
     tags=("temporal", "window"),
 )
 def tumbling_window_agg(spark, sf_dir):
-    """Tumbling 1-hour window aggregation via F.window — identical code
-    runs under readStream with a watermark (streaming/events.py)."""
+    """Tumbling 1-hour window aggregation via F.window — the same
+    expression would run under readStream with a watermark."""
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -95,7 +94,7 @@ def sliding_window_agg(spark, sf_dir):
 )
 def sessionize_events(spark, sf_dir):
     """Sessionization with a 30-minute inactivity gap via
-    F.session_window — the batch twin of streaming session windows. The
+    F.session_window, the function streaming session windows use. The
     oracle derives the same sessions with gaps-and-islands SQL."""
     ev = read_table(spark, sf_dir, "events")
     return (
@@ -183,9 +182,7 @@ def interval_join_view_click(spark, sf_dir):
     """Equi + interval join (attribution shape): each view matched to
     the same user's clicks within the following 30 minutes. The equi
     key keeps it a hash join with a residual time predicate — unlike
-    the pure range join (range_join_bands) no nested loop is needed.
-    Streaming twin: streaming/events.py::streaming_view_click_join
-    (same body, watermarked state expiry)."""
+    the pure range join (range_join_bands) no nested loop is needed."""
     ev = read_table(spark, sf_dir, "events")
     views = ev.where(F.col("event_type") == "view").select(
         "user_id", F.col("ts").alias("view_ts")

@@ -39,24 +39,6 @@ TWEET_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Graph tables — the engine's property-graph shape
-# (reference coerces everything into (id) / (src,dst,w,type):
-#  RetweetTagsJaccardGraph.py:39-46). Weight is numeric here; the
-#  reference's string-typed weights are a UDF accident (SURVEY.md §1.4).
-# ---------------------------------------------------------------------------
-
-VERTEX_SCHEMA = T.StructType([T.StructField("id", T.StringType(), False)])
-
-EDGE_SCHEMA = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("w", T.DoubleType(), False),
-        T.StructField("type", T.StringType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # TESTDATA star schema (TESTDATA.md / FIXTURES.md §B) — parquet embeds its
 # schema so no inference happens, but binding these keeps reads honest and
 # documents the surface for planners.
@@ -162,8 +144,6 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
         ]
     ),
 }
-
-TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
 
 # events.props is a JSON object; its parsed shape.
 EVENT_PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])

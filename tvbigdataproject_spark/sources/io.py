@@ -280,68 +280,3 @@ def save_graph(
         write_parquet(edges, e_path)
         write_parquet(vertices, v_path)
     return None
-
-
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """ORC sink (zlib by default) — the columnar alternative for
-    Hive-ecosystem consumers; same partitioned-directory contract as
-    write_parquet (never repartition(1) — reference anti-pattern,
-    RetweetTagsJaccardGraph.py:242)."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """ORC scan; pass an explicit schema in production paths (the
-    no-inference rule applies to every format, not just JSON)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a BUCKETED (hash-clustered) parquet table.
-
-    Bucketing is the storage-side half of the co-located-join
-    contract: two tables bucketed by the same key into the same bucket
-    count join WITHOUT a shuffle (Catalyst proves the children's
-    output partitioning satisfies the join's distribution requirement
-    and drops both Exchanges — asserted in
-    tests/test_bucketed_join.py). At 100 TB this converts every
-    repeated fact-fact join on the bucket key from a full-network
-    shuffle into a local zip of pre-sorted buckets — the single
-    biggest repeatable-ETL saving Spark offers. ``sort_cols``
-    additionally pre-sorts within each bucket so the join degenerates
-    to a streaming merge with no per-task sort.
-
-    Bucketed writes go through the session catalog (``saveAsTable`` —
-    bucket metadata lives in the table definition; a plain
-    ``.parquet(path)`` write cannot record it).
-    """
-    writer = (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back through the catalog (the bucket
-    spec only survives the catalog path — reading the parquet files
-    directly degrades to an unbucketed scan)."""
-    return spark.table(table)
