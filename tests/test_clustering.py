@@ -258,14 +258,20 @@ def test_multiprobe_cells_match_python_model(spark):
     t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     ids = t.column("vec_id").to_pylist()
     vecs = t.column("embedding").to_pylist()
-    want = _py_probes(ids, vecs, k=16, p=2)
-
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    got = {
-        r.vec_id: list(r.cells)
-        for r in nearest_cells_quantized(emb, k=16, n_probes=2).collect()
-    }
-    assert got == want
+
+    def probes(df, k):
+        return {
+            r.vec_id: list(r.cells)
+            for r in nearest_cells_quantized(df, k=k, n_probes=2).collect()
+        }
+
+    # exact at every centroid count, 160 included
+    for k in (16, 160):
+        want = _py_probes(ids, vecs, k=k, p=2)
+        assert probes(emb, k) == want, k
+    # the probes are a pure function of the row
+    assert probes(emb.repartition(7), 160) == want
 
 
 def test_label_blocking_recall_is_the_sampling_floor(spark):
@@ -390,50 +396,3 @@ def test_dbscan_multiprobe_partitioning_invariance(spark):
         )
     )
     assert base == shuf
-
-
-def test_two_level_probes_deterministic_and_high_recall_on_clusters(
-    spark, monkeypatch
-):
-    """Density-scaled routing path: two-level probes must be a pure
-    function of the row (partitioning-invariant), stay within the
-    routed group, and on geometrically clustered data lose little of
-    the flat top-p's pair recall (the SemDeDup two-level contract,
-    applied to multi-probe blocking)."""
-    from pyspark.sql import functions as F
-
-    from tvbigdataproject_spark.operators import similarity
-    from tvbigdataproject_spark.operators.similarity import (
-        cosine_pairs_multiprobe,
-        nearest_cells_quantized,
-    )
-
-    rng = np.random.default_rng(11)
-    centers = rng.normal(size=(10, 64))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    X = np.repeat(centers, 40, axis=0) + rng.normal(scale=0.15, size=(400, 64))
-    rows = [(int(i), [float(x) for x in X[i]]) for i in range(len(X))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    # the routed path below its crossover: the threshold at k
-    with monkeypatch.context() as m:
-        m.setattr(similarity, "_TWO_LEVEL_K", 16)
-        tl = nearest_cells_quantized(emb, k=16, n_probes=2)
-        tl_shuf = nearest_cells_quantized(emb.repartition(7), k=16, n_probes=2)
-    base = {r.vec_id: list(r.cells) for r in tl.collect()}
-    shuf = {r.vec_id: list(r.cells) for r in tl_shuf.collect()}
-    assert base == shuf
-    # every probe list is non-empty and within the probe budget
-    assert all(1 <= len(cells) <= 2 for cells in base.values())
-
-    flat_pairs = _pair_set(
-        cosine_pairs_multiprobe(
-            nearest_cells_quantized(emb, k=16, n_probes=2), threshold=0.5
-        )
-    )
-    tl_pairs = _pair_set(cosine_pairs_multiprobe(tl, threshold=0.5))
-    # two-level probes a subset of cells near the routed group: recall
-    # vs the flat pair set stays high on clustered data (measured, see
-    # SCALE.md round-8 multiprobe study)
-    recall = len(tl_pairs & flat_pairs) / max(len(flat_pairs), 1)
-    assert recall > 0.75, recall

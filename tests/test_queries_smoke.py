@@ -53,7 +53,15 @@ def test_literal_tables_launch_no_python_worker(spark, monkeypatch):
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(SparkContext, "parallelize", spy)
-    for name in ("null_safe_join_segments", "range_join_bands", "benford_price_audit"):
+    for name in (
+        "null_safe_join_segments",
+        "range_join_bands",
+        "benford_price_audit",
+        "query_likelihood_dirichlet",
+        "blocklist_hits",
+        "rich_club_coefficient",
+        "ridge_path_qty_discount",
+    ):
         # built fresh, not from the session memo, so the build is spied on
         assert REGISTRY[name].fn(spark, SF_DIR).count() > 0, name
     assert calls == []

@@ -1,15 +1,28 @@
-"""Learned-IVF quality contract: recall against the exact brute-force
-baseline, and exactness when every cell is probed. (The registered query
-embed_ivf_learned_topk is rows-only in the driver check — KMeans
-centroids are Spark-internal — so this is where its answers are held to
-a standard.)"""
+"""Similarity search contracts. Learned IVF: recall against the exact
+brute-force baseline, and exactness when every cell is probed. (The
+registered query embed_ivf_learned_topk is rows-only in the driver
+check — KMeans centroids are Spark-internal — so this is where its
+answers are held to a standard.) Cell assignment: exact against a
+reference at every centroid count. Plus the round-7 additions' hand-
+verifiable micro-fixtures: SCD2 build, bigram-LM document scoring, and
+SemDeDup semantic pruning (the full-corpus value gate is check_parity).
+"""
 
 from __future__ import annotations
+
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.similarity import cosine_topk, ivf_topk
+from tvbigdataproject_spark.operators.similarity import (
+    assign_nearest_centroid,
+    cosine_topk,
+    ivf_topk,
+    semdedup_survivors,
+)
+from tvbigdataproject_spark.queries.llm_ops10 import lm_bigram_doc_scores
+from tvbigdataproject_spark.queries.scd import scd2_user_state
 from tvbigdataproject_spark.sources import read_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -61,146 +74,64 @@ def test_ivf_multi_assignment_dedupes_pairs(emb):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
-def test_two_level_assignment_contract(emb, monkeypatch):
-    # the unified attach_nearest_cells (round-8 verdict item 5): the
-    # leader-routed path must (a) emit well-formed nearest-first cell
-    # lists, (b) be partitioning-invariant (routing is row-local), and
-    # (c) agree with the flat sweep for MOST vectors (it is approximate
-    # only at group boundaries).
-    from tvbigdataproject_spark.operators import similarity as S
+def test_ivf_cells_exact_at_160_centroids(emb):
+    # both cell attaches of ivf_topk (corpus side ka, query side nprobe)
+    # are the exact nearest cells at any centroid count: with every
+    # vector as a query and k above any candidate count, the answer is
+    # exactly the pairs whose cells, by the flat sweep, meet
     from tvbigdataproject_spark.operators.similarity import (
-        attach_nearest_cells,
+        _nearest_cells,
+        fit_ivf_centers,
+    )
+
+    key = ("ivf160", SF_DIR)
+    centers = fit_ivf_centers(emb, n_cells=160, cache_key=key)
+    assert len(centers) == 160
+    near = {
+        r.vec_id: list(r.cells)
+        for r in emb.select(
+            "vec_id", _nearest_cells("embedding", centers, 3).alias("cells")
+        ).collect()
+    }
+    want = {
+        (q, v)
+        for q in near
+        for v in near
+        if v != q and set(near[v]) & set(near[q][:2])
+    }
+    got = {
+        (r.q_vec_id, r.vec_id)
+        for r in ivf_topk(
+            emb, emb, k=len(near), nprobe=2, n_cells=160, ka=3, cache_key=key
+        ).collect()
+    }
+    assert got == want
+
+
+def test_cell_attach_well_formed_and_partition_invariant(emb):
+    # n distinct in-range cells per vector, nearest first, and the same
+    # lists under any partitioning (the attach is row-local)
+    from tvbigdataproject_spark.operators.similarity import (
+        _nearest_cells,
         fit_ivf_centers,
     )
 
     centers = fit_ivf_centers(emb, n_cells=16, cache_key=("t2l", SF_DIR))
-    flat = attach_nearest_cells(emb, centers, 2, out_col="cells")
-    # the routed path below its crossover: the threshold at k
-    monkeypatch.setattr(S, "_TWO_LEVEL_K", 16)
-    routed = attach_nearest_cells(emb, centers, 2, out_col="cells")
-    f = {r.vec_id: list(r.cells) for r in flat.collect()}
-    g = {r.vec_id: list(r.cells) for r in routed.collect()}
-    assert set(f) == set(g)
-    for cells in g.values():
-        assert len(cells) == 2 and len(set(cells)) == 2
-        assert all(0 <= c < 16 for c in cells)
-    # nearest-cell agreement on the near-uniform synthetic sphere (the
-    # WORST case for any geometric routing — cells are arbitrary here,
-    # cf. the no-cosine-signal label finding in SCALE.md) still has to
-    # clear a floor; the production-regime bar is the clustered-data
-    # test below
-    agree = sum(1 for k in f if f[k][0] == g[k][0]) / len(f)
-    assert agree >= 0.6, f"nearest-cell agreement {agree}"
-    shuf = {
-        r.vec_id: list(r.cells)
-        for r in attach_nearest_cells(
-            emb.repartition(7), centers, 2, out_col="cells"
-        ).collect()
-    }
-    assert shuf == g
 
-
-def test_two_level_agreement_high_on_clustered_data(spark, monkeypatch):
-    # the production regime (mirrors test_clustering's multiprobe bar):
-    # on 10 tight Gaussian bundles the nearest-leader routing finds the
-    # flat sweep's argmin cell almost always — geometric coherence is
-    # exactly what routing exploits
-    import numpy as np
-
-    from tvbigdataproject_spark.operators import similarity as S
-    from tvbigdataproject_spark.operators.similarity import (
-        attach_nearest_cells,
-        fit_ivf_centers,
-    )
-
-    rng = np.random.default_rng(7)
-    bundles = rng.normal(size=(10, 64))
-    bundles /= np.linalg.norm(bundles, axis=1, keepdims=True)
-    X = np.repeat(bundles, 40, axis=0) + rng.normal(
-        scale=0.15, size=(400, 64)
-    )
-    emb = spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in range(len(X))],
-        "vec_id long, embedding array<float>",
-    )
-    centers = fit_ivf_centers(emb, n_cells=16)
-    f = {r.vec_id: r.cells[0] for r in attach_nearest_cells(emb, centers, 1).collect()}
-    monkeypatch.setattr(S, "_TWO_LEVEL_K", 16)
-    g = {r.vec_id: r.cells[0] for r in attach_nearest_cells(emb, centers, 1).collect()}
-    # measured 0.90 at k=16 (gs=4 -> only 4 leaders; top-2 routing
-    # covers half the centroids — the coarsest regime the routing path
-    # ever runs at, since the crossover only engages it at k >= 128
-    # where sqrt(k) leaders are far finer)
-    agree = sum(1 for k in f if f[k] == g[k]) / len(f)
-    assert agree >= 0.85, f"clustered nearest-cell agreement {agree}"
-
-
-def test_ivf_recall_survives_two_level_routing(emb, truth):
-    # force the scale path (routing on below the crossover) and hold it
-    # to the FLAT path's recall at identical params: routing is allowed
-    # to cost a little recall at group boundaries, never a regime. The
-    # absolute numbers are low for BOTH at n_cells=16/nprobe=2 on this
-    # near-uniform corpus (flat 0.68, two-level 0.66 measured) — the
-    # corpus has no cluster structure to exploit; the relative contract
-    # is the meaningful one.
-    qs = emb.where(F.col("vec_id") < 10)
-    from tvbigdataproject_spark.operators import similarity as S
-
-    exact = {
-        (r.q_vec_id, r.vec_id) for r in cosine_topk(emb, qs, k=5).collect()
-    }
-
-    def run():
-        got = {
-            (r.q_vec_id, r.vec_id)
-            for r in ivf_topk(
-                emb, qs, k=5, nprobe=2, n_cells=16, ka=3
+    def cells(df):
+        return {
+            r.vec_id: list(r.cells)
+            for r in df.select(
+                "vec_id", _nearest_cells("embedding", centers, 2).alias("cells")
             ).collect()
         }
-        return len(got & exact) / len(exact)
 
-    orig = S._TWO_LEVEL_K
-    try:
-        S._TWO_LEVEL_K = 10**9  # flat everywhere
-        flat = run()
-        S._TWO_LEVEL_K = 1  # route everything two-level
-        routed = run()
-    finally:
-        S._TWO_LEVEL_K = orig
-    assert routed >= flat - 0.1, f"two-level {routed} vs flat {flat}"
-
-
-def test_two_level_rule_switches_at_the_centroid_count(emb, monkeypatch):
-    # every cell-assignment entry point routes two-level exactly when
-    # its centroid count k reaches _TWO_LEVEL_K: with the constant at
-    # k + 1 each returns the flat result bit-for-bit, at k the routed
-    # one. 32 centroids on the sf0.001 corpus, where the two differ.
-    from tvbigdataproject_spark.operators import similarity as S
-
-    k = 32
-    cent = emb.where(F.col("vec_id") < k)
-    runs = {
-        "nearest_cells_quantized": lambda: {
-            r.vec_id: tuple(r.cells)
-            for r in S.nearest_cells_quantized(emb, k=k, n_probes=2).collect()
-        },
-        "assign_nearest_centroid": lambda: {
-            r.vec_id: r.cell for r in S.assign_nearest_centroid(emb, cent).collect()
-        },
-        "semdedup_survivors": lambda: {
-            (r.vec_id, r.cell)
-            for r in S.semdedup_survivors(emb, cent, threshold=0.3).collect()
-        },
-    }
-    for name, run in runs.items():
-        got = {}
-        for threshold in (10**9, 1, k + 1, k):
-            monkeypatch.setattr(S, "_TWO_LEVEL_K", threshold)
-            got[threshold] = run()
-        flat, routed = got[10**9], got[1]
-        assert flat != routed, name  # the fixture tells the paths apart
-        assert got[k + 1] == flat, name
-        assert got[k] == routed, name
+    base = cells(emb)
+    assert len(base) == emb.count()
+    for c in base.values():
+        assert len(c) == 2 and len(set(c)) == 2
+        assert all(0 <= x < 16 for x in c)
+    assert cells(emb.repartition(7)) == base
 
 
 def test_arrow_kernel_bitwise_equals_hof(emb):
@@ -297,3 +228,254 @@ def test_embed_covariance_partials_partition_invariant(spark):
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
     assert rows1 == rows2
+
+
+# ---------------------------------------------------------------- scd2
+
+
+def test_scd2_hand_example(spark, tmp_path):
+    # user 1: a a b a  -> 3 runs (a x2, b, a); user 2: single event.
+    # Written via pyarrow with timestamp[us] to match the generated
+    # events.parquet layout (read_table sniffs the footer time unit).
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        (1, datetime(2024, 1, 1, 0, 0), 1, "a", 0.0, "{}"),
+        (2, datetime(2024, 1, 1, 0, 1), 1, "a", 0.0, "{}"),
+        (3, datetime(2024, 1, 1, 0, 2), 1, "b", 0.0, "{}"),
+        (4, datetime(2024, 1, 1, 0, 3), 1, "a", 0.0, "{}"),
+        (5, datetime(2024, 1, 1, 0, 0), 2, "x", 0.0, "{}"),
+    ]
+    t = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([r[4] for r in rows], pa.float64()),
+            "props": pa.array([r[5] for r in rows], pa.string()),
+        }
+    )
+    d = str(tmp_path / "sf")
+    (tmp_path / "sf" / "events.parquet").mkdir(parents=True)
+    pq.write_table(t, d + "/events.parquet/part-0.parquet")
+    out = sorted(
+        scd2_user_state(spark, d).collect(),
+        key=lambda r: (r.user_id, r.valid_from),
+    )
+    u1 = [r for r in out if r.user_id == 1]
+    assert [r.event_type for r in u1] == ["a", "b", "a"]
+    assert [r.n_events for r in u1] == [2, 1, 1]
+    # intervals tile: valid_to of row i == valid_from of row i+1
+    assert u1[0].valid_to == u1[1].valid_from
+    assert u1[1].valid_to == u1[2].valid_from
+    assert [r.is_current for r in u1] == [False, False, True]
+    u2 = [r for r in out if r.user_id == 2]
+    assert len(u2) == 1 and u2[0].is_current and u2[0].valid_to is None
+
+
+def test_scd2_exactly_one_current_per_user(spark):
+    out = scd2_user_state(spark, SF_DIR)
+    per_user = out.groupBy("user_id").agg(
+        F.sum(F.col("is_current").cast("int")).alias("n_current")
+    )
+    bad = per_user.where(F.col("n_current") != 1).count()
+    assert bad == 0
+
+
+# ------------------------------------------------------------ bigram LM
+
+
+def test_lm_bigram_hand_example(spark, tmp_path):
+    # corpus: "a b" x3 and "a c" x1 -> p(b|a)=3/4, p(c|a)=1/4
+    rows = [
+        (1, "a b", "en", "s", 3),
+        (2, "a b", "en", "s", 3),
+        (3, "a b", "en", "s", 3),
+        (4, "a c", "en", "s", 3),
+        (5, "a b a c", "en", "s", 7),
+    ]
+    # doc 5 bigrams: (a,b) (b,a) (c after a): p(b|a)=cnt(a,b)/cnt(a as head)
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    d = str(tmp_path / "sf")
+    df.write.parquet(d + "/documents.parquet")
+    out = {r.doc_id: r for r in lm_bigram_doc_scores(spark, d).collect()}
+    scale = 1 << 30
+    # heads: a appears as w1 in docs 1-4 once each + doc5 twice = 6;
+    # cnt(a,b)=4 (docs 1-3 + doc5), cnt(a,c)=2 (doc4 + doc5), cnt(b,a)=1
+    p_ab = (4 * scale) // 6
+    p_ac = (2 * scale) // 6
+    p_ba = (1 * scale) // 1
+    assert out[1].n_bigrams == 1 and out[1].lm_score_scaled == p_ab
+    assert out[4].lm_score_scaled == p_ac
+    assert out[5].n_bigrams == 3
+    assert out[5].lm_score_scaled == p_ab + p_ba + p_ac
+    assert out[5].avg_p_scaled == (p_ab + p_ba + p_ac) // 3
+
+
+def test_lm_bigram_probabilities_sum_to_one_per_context(spark):
+    # sum over w2 of floor(cnt2 * S / cnt1) is within vocab-size of S,
+    # and the per-doc average probability never exceeds S
+    out = lm_bigram_doc_scores(spark, SF_DIR)
+    scale = 1 << 30
+    assert out.where(F.col("avg_p_scaled") > scale).count() == 0
+    assert out.where(F.col("avg_p_scaled") < 0).count() == 0
+
+
+# ------------------------------------------------------------- semdedup
+
+
+def _mk_emb(spark, vecs):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>, label int",
+    )
+
+
+def _hof_argmax(emb, cent):
+    # reference assignment spelled out in the test: the JVM HOF cosine
+    # over every (vector, centroid) pair, argmax with the smallest-cid
+    # tie rule
+    from pyspark.sql import Window
+
+    from tvbigdataproject_spark.functions import cosine_similarity
+
+    c = cent.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cid"))
+    return {
+        r.vec_id: r.cid
+        for r in emb.crossJoin(c)
+        .select(
+            "vec_id",
+            "cid",
+            cosine_similarity(F.col("embedding"), F.col("c_emb")).alias("cos"),
+        )
+        .select("vec_id", "cid", F.row_number().over(w).alias("rn"))
+        .where(F.col("rn") == 1)
+        .collect()
+    }
+
+
+def test_assign_nearest_centroid_ties_to_smallest_cid(spark):
+    # vec 2 is equidistant from centroids 0 and 1 -> cell 0
+    emb = _mk_emb(spark, [[1, 0], [0, 1], [1, 1]])
+    cent = emb.where(F.col("vec_id") < 2)
+    got = {
+        r.vec_id: r.cell
+        for r in assign_nearest_centroid(emb, cent).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 0}
+
+
+def test_semdedup_prunes_dominated_not_greedy(spark):
+    # one cell; A(0)~B(1) close, B~C(2) close, A!~C:
+    # dominated-by-earlier prunes BOTH B (by A) and C (by B), unlike the
+    # sequential greedy scan which would keep C (B was already gone) —
+    # the documented semantics difference.
+    import math
+
+    def unit(theta):
+        return [math.cos(theta), math.sin(theta)]
+
+    # cos 25deg ~ 0.906 >= 0.9; cos 50deg ~ 0.64 < 0.9
+    emb = _mk_emb(spark, [unit(0.0), unit(25 * math.pi / 180), unit(50 * math.pi / 180)])
+    cent = emb.where(F.col("vec_id") < 1)  # single centroid -> one cell
+    got = {
+        r.vec_id
+        for r in semdedup_survivors(emb, cent, threshold=0.9).collect()
+    }
+    assert got == {0}
+
+
+def test_semdedup_survivor_set_respects_threshold(spark):
+    # every surviving pair in the same cell is BELOW the threshold
+    from tvbigdataproject_spark.operators.similarity import (
+        cosine_neardup_pairs,
+    )
+    from tvbigdataproject_spark.sources import read_table
+
+    emb = read_table(spark, SF_DIR, "embeddings")
+    cent = emb.where(F.col("vec_id") < 8)
+    surv = semdedup_survivors(emb, cent, threshold=0.3)
+    joined = surv.join(
+        emb.select("vec_id", "embedding"), "vec_id"
+    )
+    violations = cosine_neardup_pairs(
+        joined, threshold=0.3, cell_col="cell"
+    ).count()
+    assert violations == 0
+
+
+def test_assign_arrow_matches_hof_and_ties(spark):
+    # the scan-local arrow argmax must reproduce the HOF reference's
+    # assignment bit-for-bit, including the smallest-cid tie at vec 2
+    emb = _mk_emb(spark, [[1, 0], [0, 1], [1, 1]])
+    cent = emb.where(F.col("vec_id") < 2)
+    got = {
+        r.vec_id: r.cell
+        for r in assign_nearest_centroid(emb, cent).collect()
+    }
+    assert got == _hof_argmax(emb, cent) == {0: 0, 1: 1, 2: 0}
+
+
+def test_assign_arrow_matches_hof_on_corpus(spark):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cent = emb.where(F.col("vec_id") < 8)
+    arrow = {
+        r.vec_id: r.cell
+        for r in assign_nearest_centroid(emb.repartition(5), cent).collect()
+    }
+    assert arrow == _hof_argmax(emb, cent)
+
+
+def test_assign_exact_at_160_centroids(spark):
+    # the assignment is the exact argmax at any centroid count: 160
+    # centroids on the sf0.001 corpus, any partitioning, against the
+    # HOF reference; total, and every centroid assigns to itself
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cent = emb.where(F.col("vec_id") < 160)
+    got = {
+        r.vec_id: r.cell
+        for r in assign_nearest_centroid(emb.repartition(7), cent).collect()
+    }
+    assert got == _hof_argmax(emb, cent)
+    assert len(got) == emb.count()
+    cent_ids = {r.vec_id for r in cent.select("vec_id").collect()}
+    assert len(cent_ids) == 160
+    assert all(got[cid] == cid for cid in cent_ids)
+
+
+def test_assign_separated_clusters_stay_on_their_side(spark):
+    # two orthogonal clusters of two centroids each: every point lands
+    # in a cell of its own cluster
+    def pt(axis, e2, e3):
+        v = [0.0] * 4
+        v[axis] = 1.0
+        v[2] += e2
+        v[3] += e3
+        return v
+
+    vecs = [
+        pt(0, 0, 0),        # c0: cluster A
+        pt(1, 0, 0),        # c1: cluster B
+        pt(0, 0.05, 0),     # c2: cluster A
+        pt(1, 0.05, 0),     # c3: cluster B
+        pt(0, 0.01, 0.02),  # A points
+        pt(0, -0.02, 0.01),
+        pt(0, 0.04, 0.01),
+        pt(1, 0.01, 0.02),  # B points
+        pt(1, -0.02, 0.01),
+        pt(1, 0.04, 0.01),
+    ]
+    emb = _mk_emb(spark, vecs)
+    cent = emb.where(F.col("vec_id") < 4)
+    flat = {
+        r.vec_id: r.cell
+        for r in assign_nearest_centroid(emb, cent).collect()
+    }
+    assert flat == _hof_argmax(emb, cent)
+    assert {flat[i] for i in (4, 5, 6)} <= {0, 2}
+    assert {flat[i] for i in (7, 8, 9)} <= {1, 3}

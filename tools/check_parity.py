@@ -21,10 +21,13 @@ import math
 import sys
 import time
 from datetime import date, datetime
+from pathlib import Path
 
 import duckdb
 
-REPO = "/root/repo"
+# the checkout this script belongs to, so a copy of the repo checks its
+# own package
+REPO = str(Path(__file__).resolve().parents[1])
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 

@@ -38,7 +38,7 @@ any iteration count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.materialize import Scope
@@ -68,21 +68,49 @@ def _pack_centroids(cents: DataFrame) -> DataFrame:
     )
 
 
-def _assign(quant: DataFrame, packed: DataFrame, id_col: str) -> DataFrame:
-    """Scan-local argmin assignment: broadcast the one-row centroid
-    pack, per row reduce the k-element array. Ties -> lower cell
-    (array_min on struct(dist, cell) is lexicographic)."""
-    dist_of = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("qv"), c["cv"], lambda a, b: (a - b) * (a - b)),
+def _seed_pack(quant: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The packed seed centroids: the ``k`` quantized vectors with the
+    smallest (md5(id), id), numbered 0..k-1 in that order."""
+    seed_order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+    # row_number's single-partition window runs over exactly k rows
+    # (post-limit), so the unpartitioned window is bounded by design
+    w = Window.orderBy(*seed_order)
+    seeds = (
+        quant.orderBy(*seed_order)
+        .limit(k)  # TakeOrdered: no full sort at any corpus size
+        .select(
+            (F.row_number().over(w) - 1).cast("int").alias("cell"),
+            F.col("qv").alias("cv"),
+        )
+    )
+    return _pack_centroids(seeds)
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Exact integer squared distance of two BIGINT arrays."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(dist_of(c).alias("d"), c["cell"].alias("cell")),
-        )
+
+
+def _ranked_cells(cents: Column) -> Column:
+    """Per packed centroid, struct(d, cell) with d its squared distance
+    to the row's ``qv``: struct order is lexicographic, so the min (or
+    the sorted head) is nearest-first with ties -> lower cell."""
+    return F.transform(
+        cents,
+        lambda c: F.struct(
+            _sq_dist(F.col("qv"), c["cv"]).alias("d"), c["cell"].alias("cell")
+        ),
     )
+
+
+def _assign(quant: DataFrame, packed: DataFrame, id_col: str) -> DataFrame:
+    """Scan-local argmin assignment: broadcast the one-row centroid
+    pack, per row reduce the k-element array."""
+    best = F.array_min(_ranked_cells(F.col("cents")))
     return (
         quant.crossJoin(F.broadcast(packed))
         .withColumn("_best", best)
@@ -138,19 +166,6 @@ def kmeans_lloyd(
 def _lloyd_loop(
     quant: DataFrame, k: int, iters: int, dim: int, id_col: str
 ) -> DataFrame:
-
-    seed_order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
-    # row_number's single-partition window runs over exactly k rows
-    # (post-limit), so the unpartitioned window is bounded by design
-    w = Window.orderBy(*seed_order)
-    cents = (
-        quant.orderBy(*seed_order)
-        .limit(k)  # TakeOrdered: no full sort at any corpus size
-        .select(
-            (F.row_number().over(w) - 1).cast("int").alias("cell"),
-            F.col("qv").alias("cv"),
-        )
-    )
     with Scope() as s:
 
         def step(packed: DataFrame, _r: int) -> DataFrame:
@@ -198,7 +213,7 @@ def _lloyd_loop(
 
         # every round's pack is checkpointed and the previous one released
         packed, _ = s.rounds(
-            s.checkpoint(_pack_centroids(cents)), step, iters, 1
+            s.checkpoint(_seed_pack(quant, k, id_col)), step, iters, 1
         )
         return s.keep(packed)
 
@@ -353,26 +368,14 @@ def pq_codebook_pack(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """One-row packed PQ codebook: ``cents`` = array<struct<cw, cv>>
-    sorted by codeword id, where the codewords are the ``n_codes``
-    md5-lowest vectors' QUANTIZED forms (the kmeans_lloyd seeding rule
-    — deterministic, oracle-replayable). Shared by pq_assign (encode)
-    and pq_adc_topk (search) so both sides score against the identical
-    codebook."""
+    """One-row packed PQ codebook: ``cents`` = array<struct<cell, cv>>
+    sorted by codeword id (``cell``), where the codewords are the
+    ``n_codes`` md5-lowest vectors' QUANTIZED forms (the kmeans_lloyd
+    seeding rule — deterministic, oracle-replayable). Shared by
+    pq_assign (encode) and pq_adc_topk (search) so both sides score
+    against the identical codebook."""
     quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    seed_order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
-    w = Window.orderBy(*seed_order)
-    seeds = (
-        quant.orderBy(*seed_order)
-        .limit(n_codes)  # TakeOrdered; the window below sees n_codes rows
-        .select(
-            (F.row_number().over(w) - 1).cast("int").alias("cw"),
-            F.col("qv").alias("cv"),
-        )
-    )
-    return seeds.agg(
-        F.sort_array(F.collect_list(F.struct("cw", "cv"))).alias("cents")
-    )
+    return _seed_pack(quant, n_codes, id_col)
 
 
 def pq_assign(
@@ -412,22 +415,15 @@ def pq_assign(
 
     def best(s: int):
         lo = s * sub + 1  # slice() is 1-based
-
-        def dist_of(c):
-            return F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("qv"), lo, sub),
-                    F.slice(c["cv"], lo, sub),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-
         return F.array_min(
             F.transform(
                 F.col("cents"),
-                lambda c: F.struct(dist_of(c).alias("d"), c["cw"].alias("cw")),
+                lambda c: F.struct(
+                    _sq_dist(
+                        F.slice(F.col("qv"), lo, sub), F.slice(c["cv"], lo, sub)
+                    ).alias("d"),
+                    c["cell"].alias("cw"),
+                ),
             )
         )
 
@@ -494,21 +490,14 @@ def pq_adc_topk(
 
     def lut(s: int):
         lo = s * sub + 1
-
-        def dist_of(c):
-            return F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("qv"), lo, sub),
-                    F.slice(c["cv"], lo, sub),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-
-        # cents is sorted by cw (dense 0..n_codes-1), so position cw+1
-        # IS codeword cw — the LUT indexes directly by code
-        return F.transform(F.col("cents"), dist_of)
+        # cents is sorted by codeword id (dense 0..n_codes-1), so
+        # position id+1 IS codeword id — the LUT indexes directly by code
+        return F.transform(
+            F.col("cents"),
+            lambda c: _sq_dist(
+                F.slice(F.col("qv"), lo, sub), F.slice(c["cv"], lo, sub)
+            ),
+        )
 
     probes_lut = pq.crossJoin(F.broadcast(packed)).select(
         "q_vec_id", *[lut(s).alias(f"lut{s}") for s in range(n_sub)]

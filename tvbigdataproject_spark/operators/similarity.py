@@ -16,9 +16,10 @@ for the equivalence argument). A/B at sf0.1 (2026-08-14, warm medians
 of 3): embed_neardup_pairs 3.51s -> 0.83s, embed_cosine_topk 1.01s ->
 0.50s against the HOF form, identical rows; sf1 numbers in SCALE.md.
 
-Cell assignment for the learned-IVF and SemDeDup family picks its path
-from the centroid count (``_TWO_LEVEL_K``): flat and exact below it,
-leader-routed two-level above it.
+Cell assignment for the learned-IVF and SemDeDup family is one flat,
+exact sweep: every row is scored against every centroid
+(_nearest_cells, nearest_cells_quantized, assign_nearest_centroid), so
+the answer is the true nearest cell at any centroid count.
 """
 
 from __future__ import annotations
@@ -26,11 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.operators.materialize import (
-    Scope,
-    session_checkpoint,
-    session_table,
+from tvbigdataproject_spark.operators.clustering import (
+    _ranked_cells,
+    _seed_pack,
+    quantize_vectors,
 )
+from tvbigdataproject_spark.operators.materialize import Scope, session_table
 from tvbigdataproject_spark.operators.skew import shuffle_partition_count
 
 from tvbigdataproject_spark.functions import cosine_arrow
@@ -221,139 +223,6 @@ def _nearest_cells(vec_col: str, centers: list[list[float]], n: int) -> Column:
     )
 
 
-# Centroid count at which every cell-assignment entry point
-# (attach_nearest_cells, nearest_cells_quantized, assign_nearest_centroid
-# and through it semdedup_survivors) replaces the flat, exact per-row
-# k-sweep with leader-routed two-level scoring, O(sqrt(k)) per row and
-# approximate at group boundaries. k is driver-known at each entry
-# point, so the rule costs no job. SCALE.md brackets it: the
-# attach_nearest_cells ladder is even at k=64 and routed wins 1.6x at
-# k=128; the multiprobe ladder's routed 1.53 s beats flat's ~2.3 s warm
-# at k=160; the SemDeDup ladder's flat wins at k=80, routed at k=800.
-_TWO_LEVEL_K = 128
-
-
-def attach_nearest_cells(
-    df: DataFrame,
-    centers: list[list[float]],
-    n: int,
-    vec_col: str = "embedding",
-    out_col: str = "cells",
-) -> DataFrame:
-    """Attach ``out_col`` = the ``n`` nearest learned-centroid cell ids
-    (array<int>, nearest-first, ties -> lower cell) to every row —
-    the ONE cell-assignment kernel for the learned-IVF family
-    (round-8 verdict: ivf_topk inlined a flat O(N*k) sweep while the
-    measured O(N*sqrt(k)) routing lived only in the quantized path).
-
-    - k < ``_TWO_LEVEL_K``: the flat inlined-literal expression
-      (_nearest_cells) — EXACT n-nearest by unit-sphere distance; one
-      scan-local expression, no broadcast at all.
-    - k >= ``_TWO_LEVEL_K``: leader-routed two-level scoring,
-      O(sqrt(k)) per row: ~sqrt(k) strided leaders
-      are scored first, candidates are the two nearest leaders' member
-      groups (union ~2*sqrt(k) centroids), top-n within. Centroid ->
-      nearest-leader membership is computed ONCE driver-side (the
-      centers list is already driver-local) and shipped as a one-row
-      localCheckpoint'ed broadcast pack — the corpus never shuffles,
-      and per-row work references the routing result through map
-      lookups so Catalyst cannot re-evaluate it per element (the
-      CollapseProject hazard measured in nearest_cells_quantized).
-      APPROXIMATE w.r.t. the flat sweep (boundary vectors may probe a
-      neighbor group) but deterministic and partitioning-independent.
-
-    Ranking matches the flat path's metric — unit-sphere squared
-    distance — via the expanded form d2 = 1 + |c|^2 - 2*(v.c)/|v|
-    (KMeans centroids are MEANS of unit vectors, so |c| varies and a
-    plain dot-product rank would disagree): |c|^2 is precomputed
-    driver-side into the pack, and |v| is let-bound ONCE per row with
-    the transform-over-singleton trick so Catalyst cannot re-evaluate
-    the norm fold per candidate (the CollapseProject HOF hazard).
-    """
-    import math
-
-    k = len(centers)
-    if k < _TWO_LEVEL_K:
-        return df.withColumn(out_col, _nearest_cells(vec_col, centers, n))
-
-    gs = max(1, math.isqrt(k))
-    leader_cells = [i for i in range(k) if i % gs == 0]
-    # nearest-leader membership, driver-side (k x sqrt(k) float ops)
-    groups: dict[int, list[int]] = {lc: [] for lc in leader_cells}
-    for j, c in enumerate(centers):
-        best_lc, best_d = None, None
-        for lc in leader_cells:
-            d = sum((a - b) * (a - b) for a, b in zip(c, centers[lc]))
-            if best_d is None or d < best_d:
-                best_lc, best_d = lc, d
-        groups[best_lc].append(j)
-
-    def _ent(j: int):
-        cv = [float(x) for x in centers[j]]
-        return (j, cv, float(sum(x * x for x in cv)))
-
-    spark = df.sparkSession
-    pack = spark.createDataFrame(
-        [(
-            [_ent(lc) for lc in leader_cells],
-            [(lc, [_ent(j) for j in members]) for lc, members in groups.items()],
-        )],
-        "_leaders array<struct<cell:int, cv:array<double>, c2:double>>, "
-        "_entries array<struct<key:int, "
-        "value:array<struct<cell:int, cv:array<double>, c2:double>>>>",
-    )
-    pack = session_checkpoint(pack.select("_leaders", F.map_from_entries("_entries").alias("_gmap")))
-
-    v = F.col(vec_col).cast("array<double>")
-    dot_of = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(v, c["cv"], lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(v, v, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-    def cells_of(nn):
-        # score = |c|^2 - 2*(v.c)/|v| — orders exactly as unit-sphere d2
-        def top_of(arr, p):
-            return F.transform(
-                F.slice(
-                    F.sort_array(
-                        F.transform(
-                            arr,
-                            lambda c: F.struct(
-                                (c["c2"] - 2.0 * dot_of(c) / nn).alias("d"),
-                                c["cell"].alias("cell"),
-                            ),
-                        )
-                    ),
-                    1,
-                    p,
-                ),
-                lambda s: s["cell"],
-            )
-
-        routed2 = top_of(F.col("_leaders"), 2)
-        cands = F.flatten(
-            F.transform(
-                routed2, lambda cell: F.element_at(F.col("_gmap"), cell)
-            )
-        )
-        return top_of(cands, n)
-
-    out = F.element_at(F.transform(F.array(nrm), cells_of), 1)
-    return (
-        df.crossJoin(F.broadcast(pack))
-        .withColumn(out_col, out)
-        .drop("_leaders", "_gmap")
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -382,27 +251,21 @@ def ivf_topk(
 
     Plan shape at scale: one sampled KMeans fit, memoized per corpus
     when ``cache_key`` is set (see fit_ivf_centers); both cell
-    assignments go through attach_nearest_cells — scan-local flat
-    sweep below the measured crossover (_TWO_LEVEL_K), leader-routed
-    O(N*sqrt(k)) two-level scoring above it (no shuffle, no window
-    either way); the candidate join is a hash equi-join on cell with
-    the query side broadcast; the corpus side stays partitioned and is
-    touched once.
+    assignments are the exact scan-local sweep of _nearest_cells (no
+    shuffle, no window); the candidate join is a hash equi-join on cell
+    with the query side broadcast; the corpus side stays partitioned
+    and is touched once.
     """
     centers = fit_ivf_centers(
         corpus, n_cells=n_cells, vec_col=vec_col, seed=seed, cache_key=cache_key
     )
 
     def index() -> DataFrame:
-        return attach_nearest_cells(
-            corpus.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb")
-            ),
-            centers,
-            ka,
-            vec_col="emb",
-            out_col="_cells",
-        ).select("vec_id", "emb", F.explode("_cells").alias("cell"))
+        return corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("emb"),
+            F.explode(_nearest_cells(vec_col, centers, ka)).alias("cell"),
+        )
 
     # materialized inverted lists: steady-state queries skip the
     # corpus-wide assignment scan, same as any built ANN index
@@ -412,15 +275,11 @@ def ivf_topk(
         if cache_key is None
         else session_table(corpus.sparkSession, key, index, persist=True)
     )
-    probes = attach_nearest_cells(
-        queries.select(
-            F.col(id_col).alias("q_vec_id"), F.col(vec_col).alias("q_emb")
-        ),
-        centers,
-        nprobe,
-        vec_col="q_emb",
-        out_col="_cells",
-    ).select("q_vec_id", "q_emb", F.explode("_cells").alias("cell"))
+    probes = queries.select(
+        F.col(id_col).alias("q_vec_id"),
+        F.col(vec_col).alias("q_emb"),
+        F.explode(_nearest_cells(vec_col, centers, nprobe)).alias("cell"),
+    )
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("q_vec_id"))
@@ -526,157 +385,15 @@ def nearest_cells_quantized(
     Scale shape: one-row packed-centroid broadcast against a corpus
     scan (the kmeans_lloyd assignment shape); the per-row top-p is a
     k-element sort_array + slice, all JVM-side. The corpus never
-    shuffles.
-
-    From k = ``_TWO_LEVEL_K`` centroids up this runs the DENSITY-SCALED
-    path (the SemDeDup-study discipline, SCALE.md): when k scales with
-    the corpus, the flat per-row k-element sweep is O(N*k) —
-    super-linear by construction. Two-level routing scores ~sqrt(k) group LEADERS first (the
-    lowest-cell centroid of each contiguous ceil(sqrt(k))-sized cell
-    group), then takes the top-p within the routed group only —
-    O(N*sqrt(k)) per decade instead of O(N*k). APPROXIMATE w.r.t. the
-    flat top-p (a vector near a group boundary probes only its routed
-    group) but deterministic and partitioning-independent: routing is
-    a pure function of the row (integer distances, ties -> lower
-    leader cell). n_probes is capped by the group size.
+    shuffles. Every row is scored against all k centroids, so the
+    probes are exact at any k (O(N*k) work).
     """
-    import math
-
-    from tvbigdataproject_spark.operators.clustering import quantize_vectors
-
     quant = quantize_vectors(corpus, vec_col)
-    seed_order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
-    w = Window.orderBy(*seed_order)
-    cents = (
-        quant.orderBy(*seed_order)
-        .limit(k)
-        .select(
-            (F.row_number().over(w) - 1).cast("int").alias("cell"),
-            F.col("qv").alias("cv"),
-        )
-    )
-    packed = cents.agg(
-        F.sort_array(F.collect_list(F.struct("cell", "cv"))).alias("_cents")
-    )
-    dist_of = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("qv"), c["cv"], lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-    def top_of(arr, p):
-        return F.slice(
-            F.sort_array(
-                F.transform(
-                    arr,
-                    lambda c: F.struct(
-                        dist_of(c).alias("d"), c["cell"].alias("cell")
-                    ),
-                )
-            ),
-            1,
-            p,
-        )
-
-    if k < _TWO_LEVEL_K:
-        top = top_of(F.col("_cents"), n_probes)
-        return (
-            quant.crossJoin(F.broadcast(packed))
-            .withColumn(out_col, F.transform(top, lambda s: s["cell"]))
-            .drop("qv", "_cents")
-        )
-
-    # ~sqrt(k) leaders (the gs-strided seed cells); every centroid
-    # belongs to its NEAREST leader's group — geometric coherence is
-    # what makes routing lose little recall (grouping by cell-id RANGES
-    # was measured at 0.655 pair recall vs flat on clustered data; the
-    # nearest-leader grouping restores it — tests/test_clustering.py).
-    # The membership is computed ONCE inside the packed one-row table
-    # (centroid-to-leader integer distances), not per corpus row.
-    gs = max(1, math.isqrt(k))
-    cdist = lambda cv, lv: F.aggregate(  # noqa: E731
-        F.zip_with(cv, lv, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    leaders_of = lambda cents: F.filter(  # noqa: E731
-        cents, lambda c: c["cell"] % gs == 0
-    )
-    grouped = packed.select(
-        F.col("_cents"),
-        leaders_of(F.col("_cents")).alias("_leaders"),
-    ).select(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                c["cell"].alias("cell"),
-                c["cv"].alias("cv"),
-                F.array_min(
-                    F.transform(
-                        F.col("_leaders"),
-                        lambda l: F.struct(
-                            cdist(c["cv"], l["cv"]).alias("d"),
-                            l["cell"].alias("cell"),
-                        ),
-                    )
-                )["cell"].alias("g"),
-            ),
-        ).alias("_cents"),
-        F.col("_leaders"),
-    )
-    # Reshape to (leader -> member array) MAP form and MATERIALIZE the
-    # one-row pack (localCheckpoint, the kmeans pack convention) so the
-    # k x sqrt(k) x dim membership computation runs exactly once.
-    #
-    # Per-row plan-shape hazard, measured on the density ladder at
-    # c10/k=160: expressing the candidate set as
-    # filter(cents, c -> array_contains(routed2, c.g)) ran 18.9s vs
-    # flat's 2.0s — CollapseProject substitutes the routing expression
-    # into the filter LAMBDA, re-evaluating the sqrt(k)-leader scoring
-    # once per ARRAY ELEMENT (k x sqrt(k) per row). The map form
-    # references the routing result once: flatten(transform(routed2,
-    # cell -> gmap[cell])) — two map lookups per row, routing runs
-    # once even if Catalyst inlines it.
-    gmap = F.map_from_entries(
-        F.transform(
-            F.col("_leaders"),
-            lambda l: F.struct(
-                l["cell"].alias("key"),
-                F.filter(
-                    F.col("_cents"), lambda c: c["g"] == l["cell"]
-                ).alias("value"),
-            ),
-        )
-    )
-    packed_map = session_checkpoint(grouped.select(gmap.alias("_gmap"), F.col("_leaders")))
-    # route to the TOP-2 leaders, not one: the flat top-p's nearest
-    # cells straddle a leader boundary often enough that single-group
-    # routing measured only 0.65 pair recall vs flat on clustered data;
-    # probing the union of the two nearest leaders' groups restores
-    # 0.94 while staying O(sqrt(k)) per row (2 groups of ~sqrt(k)).
-    routed2 = F.transform(
-        F.slice(
-            F.sort_array(
-                F.transform(
-                    F.col("_leaders"),
-                    lambda c: F.struct(
-                        dist_of(c).alias("d"), c["cell"].alias("cell")
-                    ),
-                )
-            ),
-            1,
-            2,
-        ),
-        lambda s: s["cell"],
-    )
-    cands = F.flatten(
-        F.transform(routed2, lambda cell: F.element_at(F.col("_gmap"), cell))
-    )
-    top = top_of(cands, n_probes)
+    top = F.slice(F.sort_array(_ranked_cells(F.col("cents"))), 1, n_probes)
     return (
-        quant.crossJoin(F.broadcast(packed_map))
+        quant.crossJoin(F.broadcast(_seed_pack(quant, k, id_col)))
         .withColumn(out_col, F.transform(top, lambda s: s["cell"]))
-        .drop("qv", "_gmap", "_leaders")
+        .drop("qv", "cents")
     )
 
 
@@ -792,26 +509,12 @@ def assign_nearest_centroid(
     Exactness: per (vector, centroid) the cosine is the SAME strict
     sequential left fold as functions/vectors.cosine_arrow, and
     centroids are scored in ascending-cid order with numpy's first-max
-    argmax, which IS the smallest-cid tie rule.
-
-    From k = ``_TWO_LEVEL_K`` centroids up (k is the length of the
-    collected table, so the rule costs no job) the assignment routes
-    hierarchically: nearest of ~sqrt(k) leader centroids first, then
-    argmax within that leader's member group — O(N*sqrt(k)) instead of
-    O(N*k) scoring, the IVF/hierarchical-k-means standard for
-    density-scaled k. It is APPROXIMATE w.r.t. the flat argmax: a
-    vector near a group boundary can land in the neighbor cell. It
-    stays deterministic and partitioning-independent (routing is fixed
-    driver-side; per-row decisions are row-local; the first-max rule
-    applies per stage and member lists stay in ascending-cid order),
-    and a centroid still self-assigns at cos = 1 (every centroid is a
-    member of its own leader's group).
+    argmax, which IS the smallest-cid tie rule. Every vector is scored
+    against all k centroids, so the assignment is exact at any k.
 
     Returns (id_col, cell, vec_col) — the embedding is carried through
     so downstream per-cell passes need no join back to the corpus.
     """
-    import math
-
     import numpy as np
     from pyspark.sql.types import StructField, StructType
 
@@ -828,52 +531,24 @@ def assign_nearest_centroid(
     )  # (dim, k); float32 -> float64 widening is exact
     cnorm = _fold_norms(cmat)
 
-    groups = None
-    k = cmat.shape[1]
-    if k >= _TWO_LEVEL_K:
-        b = max(1, math.isqrt(k - 1) + 1)  # ceil(sqrt(k))
-        lead = np.ascontiguousarray(cmat[:, :b])  # first b by cid
-        lnorm = cnorm[:b]
-        # route every centroid to its nearest leader (driver-side,
-        # k x b — bounded); members stay in ascending-cid order
-        route = np.argmax(_fold_cos(cmat, lead, lnorm), axis=1)
-        member_idx = [np.where(route == g)[0] for g in range(b)]
-        groups = (lead, lnorm, member_idx)
-
     base = corpus.select(id_col, vec_col)
     out_schema = StructType(
         list(base.schema.fields[:1])
         + [StructField("cell", centroids.schema[id_col].dataType, False)]
         + list(base.schema.fields[1:])
     )
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (cids, cmat, cnorm, groups)
-    )
+    bc = corpus.sparkSession.sparkContext.broadcast((cids, cmat, cnorm))
 
     def assign(batches):
-        k_cids, k_cmat, k_cnorm, k_groups = bc.value
+        k_cids, k_cmat, k_cnorm = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             vt = np.ascontiguousarray(
                 np.stack(pdf[vec_col].to_numpy()).T, dtype=np.float64
             )  # (dim, n)
-            if k_groups is None:
-                cos = _fold_cos(vt, k_cmat, k_cnorm)
-                best = np.argmax(cos, axis=1)  # first max = smallest cid
-            else:
-                lead, lnorm, member_idx = k_groups
-                # an empty leader group is unreachable: group g is empty
-                # only when leader g duplicates an earlier leader, and
-                # then first-max argmax can never select g for any row
-                gidx = np.argmax(_fold_cos(vt, lead, lnorm), axis=1)
-                best = np.empty(vt.shape[1], dtype=np.int64)
-                for g in np.unique(gidx):
-                    rows = np.where(gidx == g)[0]
-                    m = member_idx[g]
-                    sub = np.ascontiguousarray(vt[:, rows])
-                    cos_g = _fold_cos(sub, k_cmat[:, m], k_cnorm[m])
-                    best[rows] = m[np.argmax(cos_g, axis=1)]
+            cos = _fold_cos(vt, k_cmat, k_cnorm)
+            best = np.argmax(cos, axis=1)  # first max = smallest cid
             out = pdf[[pdf.columns[0], vec_col]].copy()
             out.insert(1, "cell", k_cids[best])
             yield out
@@ -902,11 +577,10 @@ def semdedup_survivors(
     Scale shape: assignment is a broadcast sweep (corpus never
     shuffles); the within-cluster pair space rides
     cosine_neardup_pairs' salted shuffle-hash join, so cluster count
-    should scale with corpus density exactly as IVF cell count does —
-    and from ``_TWO_LEVEL_K`` centroids up assign_nearest_centroid's
-    sweep is O(N*sqrt(k)) hierarchical routing, not the quadratic flat
-    argmax (the SemDeDup ladder's measured residual, SCALE.md).
-    Returns survivors as (id_col, cell).
+    should scale with corpus density exactly as IVF cell count does.
+    The assignment sweep is exact and O(N*k); a caller whose centroid
+    count grows with the corpus pays that product (the SemDeDup ladder
+    in SCALE.md measured it). Returns survivors as (id_col, cell).
     """
     assigned = assign_nearest_centroid(
         corpus, centroids, id_col=id_col, vec_col=vec_col

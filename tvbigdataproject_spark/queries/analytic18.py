@@ -892,11 +892,9 @@ def ridge_path_qty_discount(spark, sf_dir):
         cov("s1y", "s1", "sy").alias("c1y"),
         cov("s2y", "s2", "sy").alias("c2y"),
     )
-    lams = F.broadcast(
-        spark.createDataFrame(
-            [(v,) for v in _RIDGE_LAMBDAS], "lam double"
-        )
-    )
+    # a JVM literal table (createDataFrame would start Python workers)
+    rows = ", ".join(f"({v!r}D)" for v in _RIDGE_LAMBDAS)
+    lams = F.broadcast(spark.sql(f"SELECT * FROM VALUES {rows} AS lams(lam)"))
     return (
         covs.crossJoin(lams)
         .selectExpr(*_RIDGE_SELECT.split(", "))

@@ -1165,7 +1165,8 @@ def rich_club_coefficient(spark, sf_dir):
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
-    ks = e0.sparkSession.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "k int")
+    # a JVM literal table (createDataFrame would start Python workers)
+    ks = spark.sql("SELECT * FROM VALUES (1), (2), (4), (8), (16) AS ks(k)")
     # histogram form: the corpus-sized tables join only EQUI (degree
     # attaches); the non-equi k-ladder touches bounded histograms.
     # The pre-histogram form ran the ladder against the full degree

@@ -288,10 +288,11 @@ def dbscan_kmeans_cells(spark, sf_dir):
     on this isotropic corpus).
 
     Scale shape: assignment is a one-row packed-centroid broadcast
-    (corpus never shuffles); candidates ride the salted AQE-proof
-    shuffle-hash pair join, deduped scan-locally by the min-shared-cell
-    rule (no DISTINCT shuffle on the Spark side — the oracle's
-    DISTINCT is the same set by construction); components run on
+    (corpus never shuffles), every vector scored against all 16 cells,
+    so its probes are the exact 2 nearest; candidates ride the salted
+    AQE-proof shuffle-hash pair join, deduped scan-locally by the
+    min-shared-cell rule (no DISTINCT shuffle on the Spark side — the
+    oracle's DISTINCT is the same set by construction); components run on
     core-core edges only.
     """
     from tvbigdataproject_spark.operators.clustering import dbscan_cosine

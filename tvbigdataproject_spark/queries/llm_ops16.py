@@ -127,9 +127,9 @@ def query_likelihood_dirichlet(spark, sf_dir):
     tf = qt.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     ctf = qt.groupBy("term").agg(F.count(F.lit(1)).alias("ctf"))
     st = toks.agg(F.count(F.lit(1)).alias("tot"))
-    terms = F.broadcast(
-        spark.createDataFrame([(t,) for t in _QL_TERMS], "term string")
-    )
+    # a JVM literal table (createDataFrame would start Python workers)
+    rows = ", ".join(f"('{t}')" for t in _QL_TERMS)
+    terms = F.broadcast(spark.sql(f"SELECT * FROM VALUES {rows} AS terms(term)"))
     per = (
         dl.crossJoin(terms)
         .join(tf, ["doc_id", "term"], "left")

@@ -231,7 +231,9 @@ def blocklist_hits(spark, sf_dir):
     aggregates both take map-side partials.
     """
     docs = read_table(spark, sf_dir, "documents")
-    bl = spark.createDataFrame([(t,) for t in _BLOCKLIST], "term string")
+    # a JVM literal table (createDataFrame would start Python workers)
+    rows = ", ".join(f"('{t}')" for t in _BLOCKLIST)
+    bl = spark.sql(f"SELECT * FROM VALUES {rows} AS bl(term)")
     toks = docs.select(
         "doc_id",
         "source",

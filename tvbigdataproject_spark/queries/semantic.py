@@ -76,8 +76,9 @@ def semdedup_prune(spark, sf_dir):
     (vec_id, cell) set — the rows a training pipeline would keep.
 
     Scale shape: the centroid sweep ships the bounded centroid matrix
-    to every partition and argmaxes scan-locally in one mapInPandas
-    stage (one output row per corpus row — no per-(vector, centroid)
+    to every partition and argmaxes scan-locally over all 8 centroids
+    in one mapInPandas stage, so each cell is the exact nearest one
+    (one output row per corpus row — no per-(vector, centroid)
     row blowup, no shuffle; the earlier crossJoin+window form measured
     5.3x/decade super-linear on the density-scaled ladder, SCALE.md);
     within-cluster pruning rides the salted shuffle-hash pair join of
