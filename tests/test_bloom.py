@@ -19,8 +19,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _build(spark, groups):
     rows = [(g, k) for g, keys in groups.items() for k in keys]
-    df = spark.createDataFrame(rows, "grp string, s string")
-    return bloom_build(df, group_col="grp", key_col="s")
+    df = spark.createDataFrame(rows, "source string, s string")
+    return bloom_build(df, group_col="source", key_col="s")
 
 
 def test_no_false_negatives(spark):
@@ -70,7 +70,7 @@ def test_summary_popcount_and_dense_layout(spark):
     filt = _build(spark, {"a": ["only-key"]})
     vec = filt.collect()[0]["filter"]
     assert len(vec) == 128  # dense, zero-filled
-    s = bloom_summary(filt, group_col="grp").collect()[0]
+    s = bloom_summary(filt).collect()[0]
     # one key sets at most 4 bits (fewer on position collisions)
     assert 1 <= s["n_set_bits"] <= 4
     assert s["n_set_bits"] == sum(bin(x & (2**64 - 1)).count("1") for x in vec)
@@ -78,7 +78,7 @@ def test_summary_popcount_and_dense_layout(spark):
 
 def test_groups_build_independent_filters(spark):
     filt = _build(spark, {"a": ["shared", "a-only"], "b": ["shared"]})
-    by_grp = {r["grp"]: r["filter"] for r in filt.collect()}
+    by_grp = {r["source"]: r["filter"] for r in filt.collect()}
     probe = spark.createDataFrame([("a-only",)], "s string")
     for grp, expect in (("a", 1), ("b", 0)):
         one = spark.createDataFrame([(by_grp[grp],)], "filter array<long>")

@@ -1,5 +1,6 @@
 """Integer-exact Lloyd k-means: bitwise equality vs a pure-Python
-model, partitioning invariance, and the empty-cell carry rule."""
+model, partitioning invariance, and the empty-cell carry rule; PQ
+assignment and per-label dispersion against pure-Python models."""
 
 from __future__ import annotations
 
@@ -396,3 +397,109 @@ def test_dbscan_multiprobe_partitioning_invariance(spark):
         )
     )
     assert base == shuf
+
+
+# ------------------------------------------------------------------ PQ
+
+
+def test_pq_assign_matches_python_model(spark):
+    from tvbigdataproject_spark.operators.clustering import (
+        QUANT_SCALE,
+        pq_assign,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    rows = emb.select("vec_id", "embedding").collect()
+
+    def half_away(v: float) -> int:
+        # Spark HALF_UP / DuckDB round(): half away from zero —
+        # Python's round() is half-EVEN and disagrees on exact ties
+        import math
+
+        return int(math.copysign(math.floor(abs(v) + 0.5), v))
+
+    qv = {
+        r.vec_id: [
+            half_away(float(x) * QUANT_SCALE) for x in r.embedding
+        ]
+        for r in rows
+    }
+
+    def md5key(i):
+        return (hashlib.md5(str(i).encode()).hexdigest(), i)
+
+    seeds = sorted(qv, key=md5key)[:16]
+    books = [qv[i] for i in seeds]  # codeword id = md5 rank
+
+    def assign(v):
+        codes, errs = [], []
+        for s in range(4):
+            lo = s * 16
+            best = min(
+                (
+                    (
+                        sum(
+                            (v[j] - cw[j]) ** 2
+                            for j in range(lo, lo + 16)
+                        ),
+                        ci,
+                    )
+                    for ci, cw in enumerate(books)
+                ),
+            )
+            errs.append(best[0])
+            codes.append(best[1])
+        return codes, sum(errs)
+
+    got = {
+        r.vec_id: ((r.code0, r.code1, r.code2, r.code3), r.err_total)
+        for r in pq_assign(emb).collect()
+    }
+    assert len(got) == len(qv)
+    for vid, v in qv.items():
+        codes, err = assign(v)
+        assert got[vid] == (tuple(codes), err), vid
+
+
+def test_pq_assign_invariant_to_partitioning(spark):
+    from tvbigdataproject_spark.operators.clustering import pq_assign
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    a = sorted(map(tuple, pq_assign(emb).collect()))
+    b = sorted(map(tuple, pq_assign(emb.repartition(7)).collect()))
+    assert a == b
+
+
+# -------------------------------------------- label dispersion
+
+
+def test_label_dispersion_matches_python(spark):
+    from tvbigdataproject_spark.queries.registry import REGISTRY
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
+    by_label: dict = {}
+    for r in emb:
+        q = [int(_half_away(float(x) * (1 << 20))) for x in r.embedding]
+        by_label.setdefault(r.label, []).append(q)
+    want = {}
+    for lb, vecs in by_label.items():
+        n = len(vecs)
+        cent = [
+            int(__import__("math").floor(sum(v[i] for v in vecs) / n))
+            for i in range(64)
+        ]
+        tot = sum(
+            sum((v[i] - cent[i]) ** 2 for i in range(64)) for v in vecs
+        )
+        want[lb] = (n, tot, tot // n)
+    got = {
+        r.label: (r.n, r.total_disp, r.avg_disp)
+        for r in REGISTRY["embed_label_dispersion"].fn(spark, SF_DIR).collect()
+    }
+    assert got == want
+
+
+def _half_away(v: float) -> int:
+    import math
+
+    return int(math.copysign(math.floor(abs(v) + 0.5), v))

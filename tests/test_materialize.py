@@ -155,7 +155,8 @@ def test_local_solve_gate_threshold_and_env(spark, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", threshold)
         assert local_solve_ok(e) is ok, threshold
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_EDGES", "not-a-number")
-    assert local_solve_ok(e)  # an unreadable setting falls back to the default
+    with pytest.raises(ValueError, match="SPARK_GRAFT_LOCAL_EDGES='not-a-number'"):
+        local_solve_ok(e)  # an unreadable setting is an error, not the default
 
 
 def test_fits_broadcast_reads_only_a_bare_checkpoints_stored_size(spark):
@@ -342,6 +343,17 @@ def _defined_names(stmt) -> set[str]:
     return set()
 
 
+def _user_files() -> list[Path]:
+    """The code that runs: the package minus its __init__ re-exports,
+    tools/, perfbench/ (without its tests), bench.py and
+    __spark_entry__.py."""
+    pkg = REPO / "tvbigdataproject_spark"
+    users = [p for p in pkg.rglob("*.py") if p.name != "__init__.py"]
+    users += list((REPO / "tools").rglob("*.py"))
+    users += [p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.parts]
+    return users + [REPO / "bench.py", REPO / "__spark_entry__.py"]
+
+
 def test_every_public_library_name_is_used_outside_tests():
     # no surface that only tests reach: every public top-level def, class
     # and UPPER_CASE constant of the library outside queries/ is named
@@ -355,12 +367,8 @@ def test_every_public_library_name_is_used_outside_tests():
         "clean_text_spacy",
     }
     pkg = REPO / "tvbigdataproject_spark"
-    users = [p for p in pkg.rglob("*.py") if p.name != "__init__.py"]
-    users += list((REPO / "tools").rglob("*.py"))
-    users += [p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.parts]
-    users += [REPO / "bench.py", REPO / "__spark_entry__.py"]
     uses = defaultdict(set)  # name -> {file} | {(file, "own")}
-    for path in users:
+    for path in _user_files():
         for stmt in ast.parse(path.read_text(), str(path)).body:
             own = _defined_names(stmt)
             for node in ast.walk(stmt):
@@ -384,6 +392,95 @@ def test_every_public_library_name_is_used_outside_tests():
                 if not uses[name] - {(path, "own")}:
                     unused.append(f"{path.relative_to(REPO)}:{stmt.lineno} {name}")
     assert not unused, "reached by tests or by nothing:\n" + "\n".join(unused)
+
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _defaulted(fn, method: bool) -> list[tuple[str, int | None]]:
+    """(name, position) of each parameter of ``fn`` with a default; the
+    position counts from the first argument a caller passes (after
+    ``self``), and is None for a keyword-only parameter."""
+    a = fn.args
+    pos = (a.posonlyargs + a.args)[int(method):]
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def test_every_library_option_is_set_outside_tests():
+    # no option that only tests set: every defaulted parameter of a
+    # public function, public method or public class's constructor
+    # outside queries/ is passed, by keyword or by position, by some
+    # call in the code that runs (the public-name guard's files). Calls
+    # match by the called name; a *args call passes every position and
+    # a **kwargs call every keyword.
+    exempt = {
+        # non-convergence bounds that raise: fault detection
+        "strongly_connected_components(max_peels)",
+        "strongly_connected_components(max_rounds)",
+        "boruvka_msf(max_rounds)",
+        "dag_longest_path_levels(max_rounds)",
+        "reachable_masks(max_rounds)",
+        # deployment settings
+        "get_spark(shuffle_partitions)",
+        "tune_for_session(shuffle_partitions)",
+        # seams where a test hands in its own session or tweet table
+        "main(spark)",
+        "TweetGraphPipeline(tweets)",
+    }
+    pkg = REPO / "tvbigdataproject_spark"
+    params = []  # (file:line, called name, parameter, position)
+    for path in sorted(pkg.rglob("*.py")):
+        if "queries" in path.relative_to(pkg).parts:
+            continue
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(stmt, _DEFS + (ast.ClassDef,)) or stmt.name[0] == "_":
+                continue
+            where = f"{path.relative_to(REPO)}:{{}}"
+            if isinstance(stmt, _DEFS):
+                params += [
+                    (where.format(stmt.lineno), stmt.name, n, i)
+                    for n, i in _defaulted(stmt, False)
+                ]
+            else:
+                for fn in stmt.body:
+                    if not isinstance(fn, _DEFS):
+                        continue
+                    if fn.name == "__init__":
+                        called = stmt.name
+                    elif fn.name.startswith("_"):
+                        continue
+                    else:
+                        called = fn.name
+                    static = any(
+                        getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list
+                    )
+                    params += [
+                        (where.format(fn.lineno), called, n, i)
+                        for n, i in _defaulted(fn, not static)
+                    ]
+    keywords = defaultdict(set)  # called name -> keywords passed (None: **)
+    positions = defaultdict(int)  # called name -> most positional args passed
+    for path in _user_files():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            keywords[name] |= {k.arg for k in node.keywords}
+            n = len(node.args)
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                n = 1 << 30
+            positions[name] = max(positions[name], n)
+    unset = [
+        f"{where} {called}({name})"
+        for where, called, name, i in params
+        if f"{called}({name})" not in exempt
+        and not keywords[called] & {name, None}
+        and not (i is not None and positions[called] > i)
+    ]
+    assert not unset, "set by tests or by nothing:\n" + "\n".join(unset)
 
 
 def _ivf(spark):

@@ -7,11 +7,11 @@ from __future__ import annotations
 from tvbigdataproject_spark.operators.dedup import max_dup_spans
 
 
-def _spans(spark, rows, n=3, **kw):
+def _spans(spark, rows, n=3):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     return {
         (r.doc_id, r.span_start, r.span_end, r.n_tokens, r.n_grams)
-        for r in max_dup_spans(df, n=n, **kw).collect()
+        for r in max_dup_spans(df, n=n).collect()
     }
 
 
@@ -61,15 +61,6 @@ def test_touching_coverage_merges_across_gram_gap(spark):
     ]
     got = _spans(spark, rows, n=3)
     assert (1, 1, 6, 6, 2) in got
-
-
-def test_min_tokens_filters_short_spans(spark):
-    rows = [
-        (1, "x1 a b c d y1"),
-        (2, "x2 a b c d y2"),
-    ]
-    assert _spans(spark, rows, n=3, min_tokens=5) == set()
-    assert len(_spans(spark, rows, n=3, min_tokens=4)) == 2
 
 
 def test_whole_doc_duplicate_spans_everything(spark):

@@ -5,13 +5,10 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.operators.multimodal import (
     attach_fake_payload,
-    decode_image,
     extract_features,
     resize_images,
     sample_frames,
@@ -44,51 +41,6 @@ def test_feature_schema_is_declared(spark):
         "struct<doc_id:bigint,media_type:string,n_bytes:bigint,"
         "sha256:string,width:int,height:int>"
     )
-
-
-def _pil_available() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    _pil_available(), reason="Pillow present: the real tier runs instead"
-)
-def test_real_decoder_raises_without_pillow():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-
-@pytest.mark.skipif(
-    not _pil_available(),
-    reason="Pillow not installed (optional real-decode tier; FIXTURES.md D)",
-)
-def test_real_decoder_pil_tier(spark):
-    # a 1x1 PNG, bytes hand-checked; the pil tier must return real dims
-    # through the SAME mapInPandas plumbing the stub uses
-    import base64
-
-    png = base64.b64decode(
-        "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR4"
-        "2mNk+M9QDwADhgGAWjR9awAAAABJRU5ErkJggg=="
-    )
-    assert decode_image(png) == (1, 1)
-    media = spark.createDataFrame(
-        [(1, "image/png", bytearray(png))],
-        "doc_id long, media_type string, payload binary",
-    )
-    row = extract_features(media, decoder="pil").collect()[0]
-    assert (row["width"], row["height"]) == (1, 1)
-
-
-def test_unknown_decoder_rejected(spark):
-    docs = read_table(spark, SF_DIR, "documents").limit(1)
-    with pytest.raises(ValueError, match="unknown decoder"):
-        extract_features(attach_fake_payload(docs), decoder="magic")
 
 
 def test_resize_ground_truth(spark):

@@ -153,7 +153,6 @@ def test_q6_word_cloud_corpus(pipe):
     assert "quoting" in texts
     assert len(texts) == 12
     assert texts.count("") == 1  # T9: null text, no retweet
-    assert len(pipe.word_cloud_corpus(drop_empty=True).collect()) == 11
 
 
 def check_neighborhood(g):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.operators import sequence
 from tvbigdataproject_spark.operators.sequence import global_row_numbers
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -27,28 +28,28 @@ def test_matches_global_rank(spark):
     )
     got = {
         r.o_orderkey: r.seq
-        for r in global_row_numbers(orders, "o_orderkey", 256).collect()
+        for r in global_row_numbers(orders, "o_orderkey").collect()
     }
     assert got == _expected(spark)
 
 
-def test_invariant_to_partitioning_and_bucket_width(spark):
+def test_invariant_to_partitioning_and_bucket_width(spark, monkeypatch):
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey"
     )
     a = sorted(
-        map(tuple, global_row_numbers(orders, "o_orderkey", 256).collect())
+        map(tuple, global_row_numbers(orders, "o_orderkey").collect())
     )
+    # 13 buckets over the 1500-key domain derive width 116, which does
+    # not divide it evenly — uneven buckets must not perturb the
+    # numbering (the within-bucket rank repairs them)
+    monkeypatch.setattr(sequence, "_TARGET_BUCKETS", 13)
     b = sorted(
         map(
             tuple,
-            global_row_numbers(
-                orders.repartition(13), "o_orderkey", 997
-            ).collect(),
+            global_row_numbers(orders.repartition(13), "o_orderkey").collect(),
         )
     )
-    # 997 does not divide the key domain evenly — uneven buckets must
-    # not perturb the numbering (the within-bucket rank repairs them)
     assert a == b
 
 
@@ -57,7 +58,7 @@ def test_no_single_partition_global_sort(spark):
         "o_orderkey"
     )
     plan = (
-        global_row_numbers(orders, "o_orderkey", 256)
+        global_row_numbers(orders, "o_orderkey")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -84,21 +85,23 @@ def test_sparse_keys_stay_contiguous(spark):
     )
     got = sorted(
         (r.k, r.seq)
-        for r in global_row_numbers(df, "k", 64).collect()
+        for r in global_row_numbers(df, "k").collect()
     )
     assert got == [(5, 1), (7, 2), (100_000, 3), (999_999, 4)]
 
 
-def test_auto_bucket_width_bounds_bucket_count(spark):
+def test_auto_bucket_width_bounds_bucket_count(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     # sparse wide domain: 1000 keys spread over [0, 4e9) — a fixed
-    # width-1024 bucketing would make ~4M buckets; auto mode must cap
-    # the bucket table near target_buckets while numbering stays exact
+    # width-1024 bucketing would make ~4M buckets; the derived width
+    # must cap the bucket table near _TARGET_BUCKETS while numbering
+    # stays exact
     df = spark.range(1000).select(
         (F.col("id") * 4_000_000).alias("k")
     )
-    out = global_row_numbers(df, "k", target_buckets=64)
+    monkeypatch.setattr(sequence, "_TARGET_BUCKETS", 64)
+    out = global_row_numbers(df, "k")
     rows = sorted((r.k, r.seq) for r in out.collect())
     assert [s for _, s in rows] == list(range(1, 1001))
     # the derived width puts all 1000 present keys into <= ~64 buckets

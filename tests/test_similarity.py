@@ -90,7 +90,7 @@ def test_ivf_cells_exact_at_160_centroids(emb):
     near = {
         r.vec_id: list(r.cells)
         for r in emb.select(
-            "vec_id", _nearest_cells("embedding", centers, 3).alias("cells")
+            "vec_id", _nearest_cells(centers, 3).alias("cells")
         ).collect()
     }
     want = {
@@ -122,7 +122,7 @@ def test_cell_attach_well_formed_and_partition_invariant(emb):
         return {
             r.vec_id: list(r.cells)
             for r in df.select(
-                "vec_id", _nearest_cells("embedding", centers, 2).alias("cells")
+                "vec_id", _nearest_cells(centers, 2).alias("cells")
             ).collect()
         }
 

@@ -1,4 +1,5 @@
-"""Unit tests for operators/traversal.py on hand-verifiable graphs."""
+"""Unit tests for operators/traversal.py on hand-verifiable graphs, and
+the k-truss support of queries/graph7.py on a hand graph."""
 
 from __future__ import annotations
 
@@ -393,3 +394,31 @@ def test_bfs_levels_job_fence_on_trade_graph(spark):
         assert out.count() > 1
     finally:
         release_session_caches(spark)
+
+
+# ------------------------------------------------------------- k-truss
+
+
+def test_ktruss_support_and_peel_on_hand_graph(spark):
+    from tvbigdataproject_spark.queries.graph7 import _support
+
+    # triangle 1-2-3 plus pendant edge 3-4 plus a second triangle 3-5-6
+    # sharing only node 3: the pendant edge dies in peel 1, both
+    # triangles survive with support 1 each edge
+    edges = [(1, 2), (1, 3), (2, 3), (3, 4), (3, 5), (3, 6), (5, 6)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    sup = {
+        (r.doc_a, r.doc_b): r.support for r in _support(pairs).collect()
+    }
+    # zero-support edges never appear in the wedge-join output
+    assert (3, 4) not in sup
+    for e in [(1, 2), (1, 3), (2, 3), (3, 5), (3, 6), (5, 6)]:
+        assert sup[e] == 1, e
+    # peel: survivors of support >= 1 are the two triangles
+    e1 = [e for e, s in sup.items() if s >= 1]
+    p1 = spark.createDataFrame(e1, "doc_a long, doc_b long")
+    sup2 = {
+        (r.doc_a, r.doc_b): r.support for r in _support(p1).collect()
+    }
+    assert set(sup2) == set(e1)
+    assert all(s == 1 for s in sup2.values())

@@ -35,34 +35,28 @@ K_HASHES = 4
 _WORDS = M_BITS // 64
 
 
-def bloom_positions(key: Column, k: int = K_HASHES, m_bits: int = M_BITS) -> Column:
-    """Array of k bit positions for a key (deterministic, md5-portable:
-    position_i = hex16(md5(key + '#' + i)) mod m_bits)."""
-    return F.array(
-        *[
-            F.pmod(
-                hex16_hash(F.concat(key, F.lit(f"#{i}"))), F.lit(m_bits)
-            )
-            for i in range(1, k + 1)
-        ]
-    )
+def _position(key: Column, i: int) -> Column:
+    return F.pmod(hex16_hash(F.concat(key, F.lit(f"#{i}"))), F.lit(M_BITS))
+
+
+def bloom_positions(key: Column) -> Column:
+    """Array of K_HASHES bit positions for a key (deterministic,
+    md5-portable: position_i = hex16(md5(key + '#' + i)) mod M_BITS)."""
+    return F.array(*[_position(key, i) for i in range(1, K_HASHES + 1)])
 
 
 def bloom_build(
     keyed: DataFrame,
     group_col: str = "source",
     key_col: str = "s",
-    k: int = K_HASHES,
-    m_bits: int = M_BITS,
 ) -> DataFrame:
     """One Bloom filter per group over the key column: returns
-    (group, filter) with filter as a dense array<long> of m_bits/64
-    words. Plan: explode k positions -> bit_or per (group, word) ->
-    map-assemble the dense array (no distinct, no ordered collect)."""
-    words = m_bits // 64
+    (group, filter) with filter as a dense array<long> of M_BITS/64
+    words. Plan: explode K_HASHES positions -> bit_or per (group, word)
+    -> map-assemble the dense array (no distinct, no ordered collect)."""
     pos = keyed.select(
         F.col(group_col).alias("grp"),
-        F.explode(bloom_positions(F.col(key_col), k, m_bits)).alias("p"),
+        F.explode(bloom_positions(F.col(key_col))).alias("p"),
     )
     # PySpark's shiftleft() only takes a Python-int bit count; the SQL
     # function accepts a column — call it directly
@@ -81,7 +75,7 @@ def bloom_build(
         F.map_from_entries(F.collect_list(F.struct("w", "v"))).alias("mp")
     )
     dense = F.transform(
-        F.sequence(F.lit(0).cast("long"), F.lit(words - 1).cast("long")),
+        F.sequence(F.lit(0).cast("long"), F.lit(_WORDS - 1).cast("long")),
         lambda w: F.coalesce(F.element_at(F.col("mp"), w), F.lit(0).cast("long")),
     )
     return assembled.select(
@@ -89,9 +83,9 @@ def bloom_build(
     )
 
 
-def bloom_summary(filters: DataFrame, group_col: str = "source") -> DataFrame:
-    """(group, n_set_bits, filter_md5): the value-checkable digest of
-    each filter — popcount plus an md5 over the canonical
+def bloom_summary(filters: DataFrame) -> DataFrame:
+    """(source, n_set_bits, filter_md5): the value-checkable digest of
+    each per-source filter — popcount plus an md5 over the canonical
     comma-joined word list (dense zero-filled layout makes the string
     deterministic)."""
     n_bits = F.aggregate(
@@ -101,21 +95,19 @@ def bloom_summary(filters: DataFrame, group_col: str = "source") -> DataFrame:
     )
     canon = F.concat_ws(",", F.transform(F.col("filter"), lambda x: x.cast("string")))
     return filters.select(
-        group_col,
+        "source",
         n_bits.alias("n_set_bits"),
         F.md5(canon).alias("filter_md5"),
     )
 
 
-def bloom_might_contain(
-    filter_col: Column, key: Column, k: int = K_HASHES, m_bits: int = M_BITS
-) -> Column:
-    """True iff all k of the key's bits are set in the filter (the
+def bloom_might_contain(filter_col: Column, key: Column) -> Column:
+    """True iff all K_HASHES of the key's bits are set in the filter (the
     one-sided membership test: false positives possible, false
     negatives impossible)."""
     cond = None
-    for i in range(1, k + 1):
-        p = F.pmod(hex16_hash(F.concat(key, F.lit(f"#{i}"))), F.lit(m_bits))
+    for i in range(1, K_HASHES + 1):
+        p = _position(key, i)
         w = (p / 64).cast("long")
         b = F.pmod(p, F.lit(64)).cast("int")
         hit = (

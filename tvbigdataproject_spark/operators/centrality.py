@@ -48,8 +48,6 @@ def brandes_betweenness(
     edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Landmark-sampled betweenness: sum over the source sample of
     Brandes dependency scores, over shortest paths of length <=
@@ -80,7 +78,7 @@ def brandes_betweenness(
         F.lit(1).cast("long").alias("sigma"),
     )
     with Scope() as s:
-        e = s.edges(edges, src, dst).df
+        e = s.edges(edges).df
         settled = _forward(s, e, start, max_hops)
         # One 1-row aggregate over the already-checkpointed settled
         # table serves two guards:

@@ -46,12 +46,11 @@ from tvbigdataproject_spark.operators.materialize import Scope
 QUANT_SCALE = 1 << 20  # dyadic: float * 2^20 is exact in double
 
 
-def quantize_vectors(
-    df: DataFrame, vec_col: str = "embedding", out_col: str = "qv"
-) -> DataFrame:
-    """Scan-local BIGINT quantization of a float-array column."""
+def quantize_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """``df`` with ``qv``: the scan-local BIGINT quantization of the
+    float-array column ``vec_col``."""
     return df.withColumn(
-        out_col,
+        "qv",
         F.transform(
             F.col(vec_col),
             lambda x: F.round(x.cast("double") * F.lit(float(QUANT_SCALE)))
@@ -68,10 +67,10 @@ def _pack_centroids(cents: DataFrame) -> DataFrame:
     )
 
 
-def _seed_pack(quant: DataFrame, k: int, id_col: str) -> DataFrame:
+def _seed_pack(quant: DataFrame, k: int) -> DataFrame:
     """The packed seed centroids: the ``k`` quantized vectors with the
-    smallest (md5(id), id), numbered 0..k-1 in that order."""
-    seed_order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+    smallest (md5(vec_id), vec_id), numbered 0..k-1 in that order."""
+    seed_order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
     # row_number's single-partition window runs over exactly k rows
     # (post-limit), so the unpartitioned window is bounded by design
     w = Window.orderBy(*seed_order)
@@ -107,7 +106,7 @@ def _ranked_cells(cents: Column) -> Column:
     )
 
 
-def _assign(quant: DataFrame, packed: DataFrame, id_col: str) -> DataFrame:
+def _assign(quant: DataFrame, packed: DataFrame) -> DataFrame:
     """Scan-local argmin assignment: broadcast the one-row centroid
     pack, per row reduce the k-element array."""
     best = F.array_min(_ranked_cells(F.col("cents")))
@@ -115,7 +114,7 @@ def _assign(quant: DataFrame, packed: DataFrame, id_col: str) -> DataFrame:
         quant.crossJoin(F.broadcast(packed))
         .withColumn("_best", best)
         .select(
-            id_col,
+            "vec_id",
             "qv",
             F.col("_best.cell").alias("cell"),
             F.col("_best.d").alias("dist_q"),
@@ -128,16 +127,14 @@ def kmeans_lloyd_centroids(
     k: int,
     iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The Lloyd loop alone: returns the ONE-row packed centroid table
     (array<struct<cell, cv>>) after exactly ``iters`` rounds — the
     checkpointed broadcastable form `_assign` consumes. Exposed so
     quality metrics (silhouette) can score against the same centroids
     kmeans_lloyd assigns with, without re-deriving the loop."""
-    quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    return _lloyd_loop(quant, k, iters, dim, id_col)
+    quant = quantize_vectors(corpus).select("vec_id", "qv")
+    return _lloyd_loop(quant, k, iters, dim)
 
 
 def kmeans_lloyd(
@@ -145,31 +142,27 @@ def kmeans_lloyd(
     k: int,
     iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exactly `iters` synchronous Lloyd rounds from the md5-seeded
-    centroids; returns (id_col, cell, dist_q) — the final assignment
+    centroids; returns (vec_id, cell, dist_q) — the final assignment
     and its integer squared distance. Fixed rounds are semantics (the
     bounded-round oracle discipline), not a convergence shortcut.
 
     A cell that loses all members keeps its previous centroid
     (coalesce on the cell spine), so k never silently shrinks.
     """
-    quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    packed = _lloyd_loop(quant, k, iters, dim, id_col)
+    quant = quantize_vectors(corpus).select("vec_id", "qv")
+    packed = _lloyd_loop(quant, k, iters, dim)
     # the returned (lazy) plan reads only the final checkpointed pack;
     # it stays persisted — one k-row blob, the operator's live output
-    return _assign(quant, packed, id_col).select(id_col, "cell", "dist_q")
+    return _assign(quant, packed).select("vec_id", "cell", "dist_q")
 
 
-def _lloyd_loop(
-    quant: DataFrame, k: int, iters: int, dim: int, id_col: str
-) -> DataFrame:
+def _lloyd_loop(quant: DataFrame, k: int, iters: int, dim: int) -> DataFrame:
     with Scope() as s:
 
         def step(packed: DataFrame, _r: int) -> DataFrame:
-            assigned = _assign(quant, packed, id_col)
+            assigned = _assign(quant, packed)
             # (cell, pos)-keyed update instead of `dim` explicit sum
             # columns: the wide form built a 64-sum + 64-floor-div
             # expression tree whose per-round ANALYSIS dominated the
@@ -213,7 +206,7 @@ def _lloyd_loop(
 
         # every round's pack is checkpointed and the previous one released
         packed, _ = s.rounds(
-            s.checkpoint(_seed_pack(quant, k, id_col)), step, iters, 1
+            s.checkpoint(_seed_pack(quant, k)), step, iters, 1
         )
         return s.keep(packed)
 
@@ -222,12 +215,9 @@ def dbscan_cosine(
     emb: DataFrame,
     threshold: float = 0.2,
     min_pts: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
     cells_col: str | None = None,
 ) -> DataFrame:
-    """Distributed DBSCAN over an embedding column with cosine
+    """Distributed DBSCAN over the ``embedding`` column with cosine
     similarity >= ``threshold`` as the eps-neighborhood relation,
     blocked by the coarse cell (same neighbor contract as
     cosine_neardup_pairs — at 100 TB the cell bound keeps the pair
@@ -240,9 +230,9 @@ def dbscan_cosine(
     approximates unblocked DBSCAN depends entirely on whether the
     cells are GEOMETRIC:
 
-    - ``cell_col`` (default): block by an existing column. If that
-      column is uncorrelated with embedding geometry (the testdata's
-      ``label`` is: its within-cell and cross-cell cosine
+    - default (no ``cells_col``): block by the ``label`` column. If
+      that column is uncorrelated with embedding geometry (the
+      testdata's ``label`` is: its within-cell and cross-cell cosine
       distributions are identical), same-cell blocking keeps ~1/cells
       of the true neighbor mass — measured 0.095 pair recall at 10
       labels — i.e. it degrades to uniform pair sampling.
@@ -289,20 +279,10 @@ def dbscan_cosine(
 
     if cells_col is not None:
         raw_pairs = cosine_pairs_multiprobe(
-            emb,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            cells_col=cells_col,
+            emb, threshold=threshold, cells_col=cells_col
         )
     else:
-        raw_pairs = cosine_neardup_pairs(
-            emb,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            cell_col=cell_col,
-        )
+        raw_pairs = cosine_neardup_pairs(emb, threshold=threshold)
     with Scope() as s:
         pairs = s.checkpoint(raw_pairs.select("vec_a", "vec_b"))
         nbrs = pairs.unionByName(
@@ -345,7 +325,7 @@ def dbscan_cosine(
             .agg(F.min("nbr_cluster").alias("border_cluster"))
         )
         out = (
-            emb.select(F.col(id_col).alias("vec_id"))
+            emb.select("vec_id")
             .join(clusters, "vec_id", "left")
             .join(border, "vec_id", "left")
             .select(
@@ -362,20 +342,15 @@ def dbscan_cosine(
         return s.keep(s.checkpoint(out))
 
 
-def pq_codebook_pack(
-    corpus: DataFrame,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_codebook_pack(corpus: DataFrame, n_codes: int = 16) -> DataFrame:
     """One-row packed PQ codebook: ``cents`` = array<struct<cell, cv>>
     sorted by codeword id (``cell``), where the codewords are the
     ``n_codes`` md5-lowest vectors' QUANTIZED forms (the kmeans_lloyd
     seeding rule — deterministic, oracle-replayable). Shared by
     pq_assign (encode) and pq_adc_topk (search) so both sides score
     against the identical codebook."""
-    quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    return _seed_pack(quant, n_codes, id_col)
+    quant = quantize_vectors(corpus).select("vec_id", "qv")
+    return _seed_pack(quant, n_codes)
 
 
 def pq_assign(
@@ -383,8 +358,6 @@ def pq_assign(
     n_sub: int = 4,
     n_codes: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization code assignment: split each vector into
     ``n_sub`` contiguous subvectors and encode each against a
@@ -399,7 +372,7 @@ def pq_assign(
     index trains each codebook with kmeans_lloyd on the subvectors;
     the assignment plan below is identical either way).
 
-    Returns (id_col, code0..code{n_sub-1}, err_total): per-subspace
+    Returns (vec_id, code0..code{n_sub-1}, err_total): per-subspace
     argmin codeword ids (ties -> lower id, via lexicographic struct
     min) and the exact total squared quantization error.
 
@@ -410,8 +383,8 @@ def pq_assign(
     kmeans_lloyd_assign plan shape.
     """
     sub = dim // n_sub
-    quant = quantize_vectors(corpus, vec_col).select(id_col, "qv")
-    packed = pq_codebook_pack(corpus, n_codes=n_codes, id_col=id_col, vec_col=vec_col)
+    quant = quantize_vectors(corpus).select("vec_id", "qv")
+    packed = pq_codebook_pack(corpus, n_codes=n_codes)
 
     def best(s: int):
         lo = s * sub + 1  # slice() is 1-based
@@ -428,7 +401,7 @@ def pq_assign(
         )
 
     joined = quant.crossJoin(F.broadcast(packed)).select(
-        id_col,
+        "vec_id",
         *[best(s).alias(f"_b{s}") for s in range(n_sub)],
     )
     err_total = None
@@ -436,7 +409,7 @@ def pq_assign(
         d = F.col(f"_b{s}.d")
         err_total = d if err_total is None else err_total + d
     return joined.select(
-        id_col,
+        "vec_id",
         *[
             F.col(f"_b{s}.cw").cast("int").alias(f"code{s}")
             for s in range(n_sub)
@@ -452,8 +425,6 @@ def pq_adc_topk(
     n_sub: int = 4,
     n_codes: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k search — how an IVF-PQ index
     actually ANSWERS queries (Jégou et al. 2011 §IV): the corpus is
@@ -463,7 +434,7 @@ def pq_adc_topk(
     codeword; a candidate's distance is then n_sub table lookups, not a
     dim-wide arithmetic pass.
 
-    Returns (q_vec_id, id_col, adc, rn) — top ``k`` per probe by
+    Returns (q_vec_id, vec_id, adc, rn) — top ``k`` per probe by
     (adc, id), self-pairs excluded. ADC distance approximates the true
     distance (that is the storage/accuracy trade PQ makes); exactness
     here means the SCORING replays bit-for-bit in a SQL oracle: integer
@@ -477,16 +448,11 @@ def pq_adc_topk(
     candidate rows.
     """
     sub = dim // n_sub
-    codes = pq_assign(
-        corpus, n_sub=n_sub, n_codes=n_codes, dim=dim,
-        id_col=id_col, vec_col=vec_col,
-    ).drop("err_total")
-    packed = pq_codebook_pack(
-        corpus, n_codes=n_codes, id_col=id_col, vec_col=vec_col
+    codes = pq_assign(corpus, n_sub=n_sub, n_codes=n_codes, dim=dim).drop(
+        "err_total"
     )
-    pq = quantize_vectors(probes, vec_col).select(
-        F.col(id_col).alias("q_vec_id"), "qv"
-    )
+    packed = pq_codebook_pack(corpus, n_codes=n_codes)
+    pq = quantize_vectors(probes).select(F.col("vec_id").alias("q_vec_id"), "qv")
 
     def lut(s: int):
         lo = s * sub + 1
@@ -508,10 +474,10 @@ def pq_adc_topk(
         adc = term if adc is None else adc + term
     scored = (
         codes.crossJoin(F.broadcast(probes_lut))
-        .where(F.col(id_col) != F.col("q_vec_id"))
-        .select("q_vec_id", id_col, adc.cast("long").alias("adc"))
+        .where(F.col("vec_id") != F.col("q_vec_id"))
+        .select("q_vec_id", "vec_id", adc.cast("long").alias("adc"))
     )
-    w = Window.partitionBy("q_vec_id").orderBy("adc", id_col)
+    w = Window.partitionBy("q_vec_id").orderBy("adc", "vec_id")
     return scored.select(
-        "q_vec_id", id_col, "adc", F.row_number().over(w).alias("rn")
+        "q_vec_id", "vec_id", "adc", F.row_number().over(w).alias("rn")
     ).where(F.col("rn") <= k)

@@ -259,8 +259,6 @@ def canonical_survivors(
 def label_propagation(
     edges: DataFrame | EdgeSet,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Bounded-round synchronous label-propagation community detection
     (Raghavan et al. 2007) over an undirected graph (feed a
@@ -296,7 +294,7 @@ def label_propagation(
     with Scope() as s:
         # an EdgeSet (e.g. the session trade table) is read as given;
         # anything else is deduped and checkpointed once
-        e = s.edges(edges, src, dst).df
+        e = s.edges(edges).df
         labels = s.checkpoint(
             e.select(F.col("src").alias("node"))
             .distinct()
@@ -335,15 +333,14 @@ def best_of_cluster_survivors(
     pair_edges: DataFrame,
     quality_col: str,
     id_col: str = "doc_id",
-    src: str = "doc_a",
-    dst: str = "doc_b",
 ) -> DataFrame:
     """Quality-aware dedup verdict: (id, component, keep) where keep is
     true iff the document has the cluster's MAXIMUM ``quality_col``
     (ties to the smallest id; singletons always keep). Production
     pipelines keep the best copy of a duplicate cluster — longest /
     highest-quality-scored — not the arbitrary minimum id
-    (canonical_survivors is that simpler min-id form).
+    (canonical_survivors is that simpler min-id form). ``pair_edges``
+    holds (doc_a, doc_b) pairs, as the pair operators emit them.
 
     Plan: components over the pair graph (iterative, checkpointed),
     one corpus-sized left join on the id, then a per-cluster argmax
@@ -353,7 +350,7 @@ def best_of_cluster_survivors(
     """
     from pyspark.sql import Window
 
-    comp = connected_components(pair_edges, src=src, dst=dst).select(
+    comp = connected_components(pair_edges, src="doc_a", dst="doc_b").select(
         F.col("node").alias(id_col), F.col("label").alias("component")
     )
     out_component = F.coalesce(F.col("component"), F.col(id_col))
@@ -485,8 +482,6 @@ def _forward_colors(
 
 def strongly_connected_components(
     edges: DataFrame | EdgeSet,
-    src: str = "src",
-    dst: str = "dst",
     max_peels: int = 30,
     max_rounds: int = 50,
 ) -> DataFrame:
@@ -532,7 +527,7 @@ def strongly_connected_components(
     ``SPARK_GRAFT_LOCAL_EDGES=0`` to force them and restore the raise.
     """
     with Scope() as s:
-        es = s.edges(edges, src, dst)
+        es = s.edges(edges)
         # self-edges never matter to an SCC: a narrow filter over the
         # materialized rows (the node table below still sees them, so a
         # self-loop-only node is its own singleton SCC)

@@ -9,6 +9,8 @@ instantiations and the per-operator scale notes):
   minhash_lsh_pairs    MinHash+LSH candidates, candidate-local verify
   simhash_pairs        SimHash + pigeonhole banding (never a cross join)
 
+Each reads a document table's ``doc_id`` and ``text`` columns.
+
 On the SHUFFLE_HASH pins (here and in operators/components.py,
 operators/graph.py, operators/similarity.py, queries/graph.py): every
 corpus×corpus join in this engine pins SHUFFLE_HASH as a *measured
@@ -34,20 +36,20 @@ from tvbigdataproject_spark.functions import lsh_bands, minhash_signature, shing
 from tvbigdataproject_spark.functions.hashing import hex_bits_hash
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(text_hash, keep_doc_id, n_copies): group by content digest, keep
-    the minimum id. Hash before shuffling so the exchange carries 32-byte
-    digests, not document bodies."""
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
+    """(text_hash, keep_doc_id, n_copies) over the (doc_id, text) rows:
+    group by content digest, keep the minimum id. Hash before shuffling
+    so the exchange carries 32-byte digests, not document bodies."""
     return (
-        df.select(F.md5(text_col).alias("text_hash"), F.col(id_col).alias("doc_id"))
+        df.select(F.md5("text").alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def _shingled(
-    df: DataFrame, text_col: str, id_col: str, n: int, spread: bool = True
-) -> DataFrame:
+def _shingled(df: DataFrame, n: int, spread: bool = True) -> DataFrame:
+    """(doc_id, shs): the distinct word ``n``-gram shingles of each
+    document's ``text``; documents without one are dropped."""
     # restore row parallelism before the per-document shingling work:
     # on the single-row-group TESTDATA files the scan is ONE task, and
     # shingles() (split + n-gram zip + array_distinct per document) ran
@@ -64,10 +66,10 @@ def _shingled(
     if spread:
         from tvbigdataproject_spark.sources import scan_spread
 
-        df = scan_spread(df.select(id_col, text_col), id_col)
-    return df.select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), n).alias("shs")
-    ).where(F.size("shs") > 0)
+        df = scan_spread(df.select("doc_id", "text"), "doc_id")
+    return df.select("doc_id", shingles(F.col("text"), n).alias("shs")).where(
+        F.size("shs") > 0
+    )
 
 
 def _score_pairs(cand: DataFrame, with_sh: DataFrame, threshold: float) -> DataFrame:
@@ -93,8 +95,6 @@ def _score_pairs(cand: DataFrame, with_sh: DataFrame, threshold: float) -> DataF
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.4,
 ) -> DataFrame:
@@ -111,7 +111,7 @@ def ngram_jaccard_pairs(
     at corpus scale that is two fewer full shuffles than the
     sizes-table formulation.
     """
-    inter = _ngram_pair_counts(df, text_col, id_col, n)
+    inter = _ngram_pair_counts(df, n)
     scored = inter.select(
         "doc_a",
         "doc_b",
@@ -122,8 +122,6 @@ def ngram_jaccard_pairs(
 
 def ngram_containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
@@ -137,7 +135,7 @@ def ngram_containment_pairs(
     expression differs, so the plan shape (one self-equi-join + one
     groupBy) and its scale properties are identical.
     """
-    inter = _ngram_pair_counts(df, text_col, id_col, n)
+    inter = _ngram_pair_counts(df, n)
     scored = inter.select(
         "doc_a",
         "doc_b",
@@ -148,8 +146,6 @@ def ngram_containment_pairs(
 
 def ngram_jaccard_pairs_prefix(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.4,
 ) -> DataFrame:
@@ -205,7 +201,7 @@ def ngram_jaccard_pairs_prefix(
     """
     from pyspark.sql import Window
 
-    with_sh = _shingled(df, text_col, id_col, n)
+    with_sh = _shingled(df, n)
     sh = with_sh.select(
         "doc_id", F.size("shs").alias("n_sh"), F.explode("shs").alias("s")
     )
@@ -258,14 +254,12 @@ def ngram_jaccard_pairs_prefix(
     return _score_pairs(cand, with_sh, threshold)
 
 
-def _ngram_pair_counts(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
+def _ngram_pair_counts(df: DataFrame, n: int) -> DataFrame:
     """Candidate pairs with (na, nb, i) set-size/intersection counts —
     the shared core of the Jaccard and containment scorers."""
     # spread=False: this path is join-bound (the explode feeds the
     # shingle self-join's own exchange); see _shingled.
-    with_sh = _shingled(df, text_col, id_col, n, spread=False)
+    with_sh = _shingled(df, n, spread=False)
     sh = with_sh.select(
         "doc_id", F.size("shs").alias("n_sh"), F.explode("shs").alias("s")
     )
@@ -294,13 +288,13 @@ def _ngram_pair_counts(
 
 
 def _minhash_candidates(
-    df: DataFrame, text_col: str, id_col: str, n: int, num_hashes: int, bands: int
+    df: DataFrame, n: int, num_hashes: int, bands: int
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(shingled docs, (doc_id, sig) MinHash signatures, (doc_a, doc_b)
     LSH candidate pairs): signatures computed in the scan stage, zero
     shuffles; candidates from the banded bucket self-join."""
     rows_per_band = num_hashes // bands
-    with_sh = _shingled(df, text_col, id_col, n)
+    with_sh = _shingled(df, n)
     sig = with_sh.select(
         "doc_id", minhash_signature(F.col("shs"), num_hashes=num_hashes).alias("sig")
     )
@@ -325,8 +319,6 @@ def _minhash_candidates(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
@@ -335,19 +327,16 @@ def minhash_lsh_pairs(
     """Approximate near-dup pairs: MinHash signatures (computed in the
     scan stage, zero shuffles), banded LSH bucket join for candidates,
     candidate-local exact-Jaccard verify."""
-    with_sh, _, cand = _minhash_candidates(
-        df, text_col, id_col, n, num_hashes, bands
-    )
+    with_sh, _, cand = _minhash_candidates(df, n, num_hashes, bands)
     return _score_pairs(cand, with_sh, threshold)
 
 
 SIMHASH_BITS = 32
 
 
-def simhash_values(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, simhash): 32-bit SimHash over whitespace tokens,
+def simhash_values(df: DataFrame) -> DataFrame:
+    """(doc_id, simhash): 32-bit SimHash over the whitespace tokens of
+    ``text``,
     frequency-weighted (standard SimHash: a token voting k times moves
     the majority by k — on corpora with a small shared vocabulary,
     distinct-token sketches collapse to near-identical values and the
@@ -366,7 +355,7 @@ def simhash_values(
     """
     from tvbigdataproject_spark.functions.text import _bind
 
-    toks = F.split(F.lower(text_col), " ")
+    toks = F.split(F.lower("text"), " ")
 
     def body(hs: Column) -> Column:
         n = F.size(hs)
@@ -382,15 +371,11 @@ def simhash_values(
         return sim
 
     hashes = F.transform(toks, lambda t: hex_bits_hash(t, 8))
-    return df.select(
-        F.col(id_col).alias("doc_id"), _bind(hashes, body).alias("simhash")
-    )
+    return df.select("doc_id", _bind(hashes, body).alias("simhash"))
 
 
 def simhash_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 2,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming ≤ max_hamming) via pigeonhole banding: the
@@ -423,10 +408,8 @@ def simhash_pairs(
     # (single-task scans otherwise — the _shingled rationale)
     from tvbigdataproject_spark.sources import scan_spread
 
-    df = scan_spread(df.select(id_col, text_col), id_col)
-    sim = simhash_values(
-        df.where(F.col(text_col).isNotNull()), text_col, id_col
-    ).select("doc_id", F.coalesce(F.col("simhash"), F.lit(0)).alias("simhash"))
+    df = scan_spread(df.select("doc_id", "text"), "doc_id")
+    sim = simhash_values(df.where(F.col("text").isNotNull())).select("doc_id", F.coalesce(F.col("simhash"), F.lit(0)).alias("simhash"))
     banded = sim.select(
         "doc_id",
         "simhash",
@@ -467,7 +450,6 @@ def max_dup_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    min_tokens: int | None = None,
 ) -> DataFrame:
     """Cross-document MAXIMAL repeated spans — the upgrade of the
     fixed-granularity dup-span signal to what production substring
@@ -529,16 +511,13 @@ def max_dup_spans(
         (F.max("pos") + n).cast("long").alias("span_end"),
         F.count(F.lit(1)).alias("n_grams"),
     )
-    out = spans.select(
+    return spans.select(
         "doc_id",
         "span_start",
         "span_end",
         (F.col("span_end") - F.col("span_start") + 1).alias("n_tokens"),
         "n_grams",
     )
-    if min_tokens is not None:
-        out = out.where(F.col("n_tokens") >= min_tokens)
-    return out
 
 
 def apply_span_removal(

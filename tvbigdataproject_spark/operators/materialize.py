@@ -202,8 +202,7 @@ def fits_broadcast(df: DataFrame) -> bool:
 class EdgeSet:
     """Edge rows that are already materialized and unique on their
     ``src`` and ``dst`` columns, plus any payload columns (a weight).
-    Operators read an EdgeSet through those two column names whatever
-    their ``src``/``dst`` arguments say.
+    Operators read every edge set through those two column names.
 
     Operators take ``DataFrame | EdgeSet``: a plain DataFrame is
     deduplicated and checkpointed before the first round, an EdgeSet is
@@ -257,21 +256,13 @@ class Scope:
         it fills the cache and later ones read it, until release."""
         return self._hold(_persisted(df))
 
-    def edges(
-        self, edges: DataFrame | EdgeSet, src: str = "src", dst: str = "dst"
-    ) -> EdgeSet:
+    def edges(self, edges: DataFrame | EdgeSet) -> EdgeSet:
         """``edges`` as an EdgeSet with exactly the columns (src, dst):
         an EdgeSet's rows as given (payload columns dropped), a
         DataFrame's deduplicated and checkpointed here."""
         if isinstance(edges, EdgeSet):
             return EdgeSet(edges.df.select("src", "dst"))
-        return EdgeSet(
-            self.checkpoint(
-                edges.select(
-                    F.col(src).alias("src"), F.col(dst).alias("dst")
-                ).distinct()
-            )
-        )
+        return EdgeSet(self.checkpoint(edges.select("src", "dst").distinct()))
 
     def release(self, df: DataFrame) -> None:
         held = self._held.pop(id(df), None)
@@ -412,8 +403,9 @@ def local_solve_ok(edges: DataFrame | EdgeSet) -> bool:
     distributed round loop: ``edges.count() <= threshold``. The
     threshold is the deployment setting ``SPARK_GRAFT_LOCAL_EDGES``,
     read at call time, else ``LOCAL_EDGES_DEFAULT``; 0 disables the
-    local path, which is how tests force the distributed loops. Callers
-    pass materialized edges, so the count reads cached rows, not the
+    local path, which is how tests force the distributed loops; a value
+    that is not an integer raises ``ValueError``. Callers pass
+    materialized edges, so the count reads cached rows, not the
     upstream plan.
 
     Driver memory at the gate, measured: one local
@@ -429,10 +421,13 @@ def local_solve_ok(edges: DataFrame | EdgeSet) -> bool:
     after resetting it through /proc/self/clear_refs. Keep the gate at
     or below the driver memory you can spare for that.
     """
+    raw = os.environ.get("SPARK_GRAFT_LOCAL_EDGES", LOCAL_EDGES_DEFAULT)
     try:
-        threshold = int(os.environ.get("SPARK_GRAFT_LOCAL_EDGES", LOCAL_EDGES_DEFAULT))
+        threshold = int(raw)
     except ValueError:
-        threshold = LOCAL_EDGES_DEFAULT
+        raise ValueError(
+            f"SPARK_GRAFT_LOCAL_EDGES={raw!r} is not an integer edge count"
+        ) from None
     return threshold > 0 and edges.count() <= threshold
 
 

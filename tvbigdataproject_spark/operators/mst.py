@@ -26,13 +26,12 @@ from tvbigdataproject_spark.operators.materialize import Scope
 
 def boruvka_msf(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     weight: str = "w",
     max_rounds: int = 25,
 ) -> DataFrame:
     """(u, v, w) edge list of the minimum spanning FOREST of the
-    undirected graph (one tree per connected component). Edges are
+    undirected graph (one tree per connected component) over the
+    (src, dst) columns of ``edges``, weighted by ``weight``. Edges are
     canonicalized u < v and deduplicated keeping the minimum weight;
     selection order is the total order (w, u, v).
 
@@ -49,8 +48,8 @@ def boruvka_msf(
     """
     canon = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
             F.col(weight).alias("w"),
         )
         .where(F.col("u") != F.col("v"))

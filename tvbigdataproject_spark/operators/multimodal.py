@@ -7,12 +7,12 @@ typed metadata; decode / feature-extract / resize / frame-sample run as
 columnar batches (no per-row pickling), and the output schema is
 declared up front so Catalyst can keep planning around the stage.
 
-The actual media decoding is STUBBED here (no image/audio libs in this
-environment): ``extract_features`` computes real, deterministic
-byte-level features (size, sha256, a fake width/height derived from the
-digest) through the same batch plumbing a cv2/PIL decoder would use —
-swap `_decode_stub` for a real decoder and nothing else changes.
-``decode_image`` raises NotImplementedError by design.
+The media decoding is STUBBED: ``extract_features`` computes real,
+deterministic byte-level features (size, sha256, a fake width/height
+derived from the digest) through the same batch plumbing a cv2/PIL
+decoder would use, so every multimodal query's output is
+environment-independent and oracle-replayable. A real decoder would
+replace ``_decode_stub`` and nothing else.
 
 Scale notes: mapInPandas processes a partition as an iterator of
 batches, so memory is bounded by spark.sql.execution.arrow
@@ -53,35 +53,6 @@ def attach_fake_payload(docs: DataFrame) -> DataFrame:
         F.lit("image/fake").alias("media_type"),
         F.encode("text", "UTF-8").alias("payload"),
     )
-
-
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """Real decoder tier: (width, height) via Pillow when it is
-    importable — the optional-dependency pattern of the spaCy text
-    cleaner (operators/textstats.py::clean_text_spacy). This container
-    ships no image library, so the import guard raises with the honest
-    message; on a Pillow-equipped cluster the same code path runs
-    unmodified (tests/test_multimodal.py guard-skips its test the same
-    way the spaCy tier does).
-
-    The REGISTERED multimodal queries keep ``decoder="stub"`` so their
-    output is environment-independent and oracle-replayable; the real
-    tier is an explicit opt-in (extract_features(decoder="pil")), never
-    a silent environment-dependent fallback — a query whose results
-    change with the worker image is a correctness bug, not a feature.
-    """
-    try:
-        from PIL import Image  # noqa: PLC0415
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "media decoding requires Pillow, not present in this "
-            "container; extract_features defaults to the deterministic "
-            "_decode_stub (FIXTURES.md section D)"
-        ) from exc
-    import io
-
-    with Image.open(io.BytesIO(payload)) as im:
-        return int(im.width), int(im.height)
 
 
 def _decode_stub(payload: bytes) -> tuple[int, int]:
@@ -178,24 +149,17 @@ def sample_frames(media: DataFrame, frame_bytes: int = 16, every: int = 4) -> Da
     return media.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
-def extract_features(media: DataFrame, decoder: str = "stub") -> DataFrame:
-    """Byte + decode features via mapInPandas over Arrow batches.
-
-    ``decoder="stub"`` (default) derives deterministic fake dimensions
-    from the payload digest — environment-independent, oracle-
-    replayable, what every registered query uses. ``decoder="pil"``
-    opts into the real Pillow tier (decode_image) on clusters that
-    ship it; same schema, same batching, real pixels."""
-    if decoder not in ("stub", "pil"):
-        raise ValueError(f"unknown decoder {decoder!r}")
-    decode = _decode_stub if decoder == "stub" else decode_image
+def extract_features(media: DataFrame) -> DataFrame:
+    """Byte + decode features via mapInPandas over Arrow batches. The
+    dimensions are ``_decode_stub``'s deterministic fakes derived from
+    the payload digest."""
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in it:
             payloads = pdf["payload"]
-            dims = [decode(bytes(p)) for p in payloads]
+            dims = [_decode_stub(bytes(p)) for p in payloads]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

@@ -32,10 +32,7 @@ Scale notes (100 TB): lineage is truncated every three rounds with
 eager localCheckpoint and the superseded span's blocks are released
 deterministically (operators/materialize.py's ``Scope.rounds`` —
 VERDICT r2 item 5 discipline); on a real cluster prefer reliable
-checkpoint() with a checkpoint dir. Skewed in-degree (celebrity nodes)
-is handled by the opt-in `salt_buckets` two-phase contribution sum —
-bitwise-identical to the unsalted path and off by default at bench
-scales (see the function docstring).
+checkpoint() with a checkpoint dir.
 """
 
 from __future__ import annotations
@@ -57,15 +54,12 @@ def pagerank(
     n_iter: int = 3,
     damping: float = 0.85,
     base_num: float = 0.15,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    salt_buckets: int | None = None,
     sources: DataFrame | None = None,
 ) -> DataFrame:
     """Ranks for every node appearing as a source in `edges` (feed a
     bidirectional edge list for undirected semantics — then the src set
-    IS the node set). Returns (node, rank).
+    IS the node set), weighted by the edges' ``w`` column. Returns
+    (node, rank).
 
     `sources` switches to PERSONALIZED PageRank: a one-column (`node`)
     DataFrame of teleport targets. Init and teleport mass concentrate
@@ -90,19 +84,6 @@ def pagerank(
     (``Scope.rounds``), amortizing the fixed ~1 s/job materialization
     cost. Ranks are bitwise independent of checkpoint placement (the
     scaled-integer sums are exact); only the job count changes.
-
-    `salt_buckets` spreads each destination's contribution sum over
-    that many reducers (two-phase: groupBy(dst, salt) partials, then
-    groupBy(dst) of at most `salt_buckets` partial rows) — the
-    mitigation for celebrity nodes whose in-degree makes one reducer
-    the straggler, same shape as salted_type_counts. The salt is a
-    deterministic hash of the *source* id, so it is stable under
-    retries and varies within a hot destination. Because the partials
-    are scaled-integer (exact, associative) sums, the salted result is
-    bitwise identical to the unsalted one at any bucket count
-    (tests/test_pagerank.py proves it on a ~1e5-in-degree hub). Off by
-    default: the extra shuffle stage only pays for itself under real
-    skew.
     """
     # The input plan may be arbitrarily expensive (a join chain, a
     # near-dup pair generator) — materialize it ONCE. Without this every
@@ -115,14 +96,10 @@ def pagerank(
     # materialize (r13).
     with Scope() as s:
         if isinstance(edges, EdgeSet):
-            e = edges.df.select("src", "dst", F.col(weight).cast("double").alias("w"))
+            e = edges.df.select("src", "dst", F.col("w").cast("double").alias("w"))
         else:
             e = s.checkpoint(
-                edges.select(
-                    F.col(src).alias("src"),
-                    F.col(dst).alias("dst"),
-                    F.col(weight).cast("double").alias("w"),
-                )
+                edges.select("src", "dst", F.col("w").cast("double").alias("w"))
             )
         # out-weights double as the node set (the node set IS the src
         # set — see docstring), so one grouped materialization serves
@@ -188,22 +165,11 @@ def pagerank(
         scaled = F.round(F.col("rank") * F.col("share") * _SCALE).cast("long")
 
         def step(plan: DataFrame, _r: int) -> DataFrame:
-            joined = shares.join(plan, shares.src == plan.node)
-            if salt_buckets:
-                contrib = (
-                    joined.withColumn(
-                        "_salt",
-                        F.pmod(F.xxhash64("src"), F.lit(salt_buckets)),
-                    )
-                    .groupBy("dst", "_salt")
-                    .agg(F.sum(scaled).alias("_part"))
-                    .groupBy("dst")
-                    .agg((F.sum("_part") / float(_SCALE)).alias("contrib"))
-                )
-            else:
-                contrib = joined.groupBy("dst").agg(
-                    (F.sum(scaled) / float(_SCALE)).alias("contrib")
-                )
+            contrib = (
+                shares.join(plan, shares.src == plan.node)
+                .groupBy("dst")
+                .agg((F.sum(scaled) / float(_SCALE)).alias("contrib"))
+            )
             return nodes.join(contrib, nodes.node == contrib.dst, "left").select(
                 "node",
                 (

@@ -63,10 +63,8 @@ def pii_redact(text: Column) -> Column:
     return cur
 
 
-def pii_scan(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, per-class counts, n_pii total, redacted_md5): the detection
+def pii_scan(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, per-class counts, n_pii total, redacted_md5): the detection
     report plus a digest of the scrubbed text — the digest lets an
     oracle (or a downstream audit) value-check full redaction without
     shipping document bodies through the comparison."""
@@ -75,7 +73,7 @@ def pii_scan(
     for c in counts.values():
         total = c if total is None else total + c
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         *[v.alias(k) for k, v in counts.items()],
         total.alias("n_pii"),
         F.md5(pii_redact(F.col(text_col))).alias("redacted_md5"),

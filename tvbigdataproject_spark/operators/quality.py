@@ -21,13 +21,10 @@ from pyspark.sql import functions as F
 
 
 def with_quality_observation(
-    df: DataFrame,
-    null_cols: list[str] | None = None,
-    numeric_col: str | None = None,
+    df: DataFrame, null_cols: list[str] | None = None
 ) -> tuple[DataFrame, Observation]:
-    """Attach standard quality counters to ``df``: total rows, per-column
-    null counts (``nulls_<col>``), and min/max of ``numeric_col`` if
-    given. Returns (observed_df, observation); run ANY action on the
+    """Attach standard quality counters to ``df``: total rows and
+    per-column null counts (``nulls_<col>``). Returns (observed_df, observation); run ANY action on the
     returned frame, then read ``observation.get`` — a dict — at zero
     extra scan cost.
 
@@ -40,7 +37,4 @@ def with_quality_observation(
         metrics.append(
             F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}")
         )
-    if numeric_col is not None:
-        metrics.append(F.min(numeric_col).alias(f"min_{numeric_col}"))
-        metrics.append(F.max(numeric_col).alias(f"max_{numeric_col}"))
     return df.observe(obs, *metrics), obs

@@ -34,35 +34,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Buckets the key domain is split into: the width is derived from the
+# observed key span so the bucket table stays about this size.
+_TARGET_BUCKETS = 4096
 
-def global_row_numbers(
-    df: DataFrame,
-    key: str,
-    bucket_width: int | None = None,
-    out_col: str = "seq",
-    target_buckets: int = 4096,
-) -> DataFrame:
-    """Append ``out_col`` = the 1-based global rank of ``key`` (which
+
+def global_row_numbers(df: DataFrame, key: str) -> DataFrame:
+    """Append ``seq`` = the 1-based global rank of ``key`` (which
     must be unique — ties would make the numbering ambiguous on any
     engine). Exact on any partitioning; one corpus shuffle.
 
-    ``bucket_width`` must scale with the KEY DOMAIN, not the row count:
+    The bucket width must scale with the KEY DOMAIN, not the row count:
     buckets come only from keys present in the data, but a sparse/wide
     domain (surrogate keys at large SF) still yields span/width buckets
     — a fixed small width inflates both the offsets broadcast and the
-    single-task offsets window. Default (None) derives the width from
-    the observed min/max key so the bucket table stays ~``target_
-    buckets`` rows at ANY scale, at the cost of one extra map-side-
-    aggregated scan. The numbering itself is exact for any width."""
-    if bucket_width is None:
-        lo, hi = df.agg(
-            F.min(F.col(key).cast("long")), F.max(F.col(key).cast("long"))
-        ).first()
-        span = (int(hi) - int(lo) + 1) if lo is not None else 1
-        bucket_width = max(1, -(-span // int(target_buckets)))
-    base = df.withColumn(
-        "_b", F.floor(F.col(key).cast("long") / F.lit(int(bucket_width)))
-    )
+    single-task offsets window. So the width is derived from the
+    observed min/max key, keeping the bucket table at ~``_TARGET_BUCKETS``
+    rows at ANY scale, at the cost of one extra map-side-aggregated
+    scan. The numbering itself is exact for any width."""
+    lo, hi = df.agg(
+        F.min(F.col(key).cast("long")), F.max(F.col(key).cast("long"))
+    ).first()
+    span = (int(hi) - int(lo) + 1) if lo is not None else 1
+    width = max(1, -(-span // _TARGET_BUCKETS))
+    base = df.withColumn("_b", F.floor(F.col(key).cast("long") / F.lit(width)))
     counts = base.groupBy("_b").agg(F.count(F.lit(1)).alias("_n"))
     # bounded: one row per bucket; rowsBetween(-inf, -1) = preceding mass
     w_off = Window.orderBy("_b").rowsBetween(
@@ -78,7 +73,7 @@ def global_row_numbers(
     return (
         base.join(F.broadcast(offsets), "_b")
         .withColumn(
-            out_col, F.col("_off") + F.row_number().over(w_local).cast("long")
+            "seq", F.col("_off") + F.row_number().over(w_local).cast("long")
         )
         .drop("_b", "_off")
     )

@@ -8,6 +8,9 @@ instantiations):
                      the candidate set to the probed cell(s)
   cosine_neardup_pairs  near-dup pairs blocked by cell
 
+Every operator reads an embedding table's ``vec_id`` and ``embedding``
+columns.
+
 Every per-pair score is the Arrow-batched numpy cosine
 (functions/vectors.cosine_arrow): one Python fence per stage, then
 memory-bandwidth math, bitwise-identical to the JVM zip_with/aggregate
@@ -45,8 +48,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector (brute force).
 
@@ -56,15 +57,15 @@ def cosine_topk(
     |queries| x |corpus| pairs, scored by the vectorized Arrow cosine.
     """
     q = queries.select(
-        F.col(id_col).alias("q_vec_id"), F.col(vec_col).alias("q_emb")
+        F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_emb")
     )
     scored = (
         corpus.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != F.col("q_vec_id"))
+        .where(F.col("vec_id") != F.col("q_vec_id"))
         .select(
             "q_vec_id",
-            F.col(id_col).alias("vec_id"),
-            cosine_arrow(F.col("q_emb"), F.col(vec_col)).alias("cos"),
+            "vec_id",
+            cosine_arrow(F.col("q_emb"), F.col("embedding")).alias("cos"),
         )
     )
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -77,28 +78,26 @@ def cell_pruned_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
 ) -> DataFrame:
     """IVF-style top-k: candidates restricted to the query's coarse cell.
 
-    The cell id here is a precomputed column; in a full IVF build it is
-    the nearest-centroid assignment from a k-means pass — the plan shape
-    (equi-join on cell, per-cell scan) is identical either way.
+    The cell id here is the precomputed ``label`` column; in a full IVF
+    build it is the nearest-centroid assignment from a k-means pass —
+    the plan shape (equi-join on cell, per-cell scan) is identical
+    either way.
     """
     q = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(cell_col).alias("q_cell"),
-        F.col(vec_col).alias("q_emb"),
+        F.col("vec_id").alias("q_vec_id"),
+        F.col("label").alias("q_cell"),
+        F.col("embedding").alias("q_emb"),
     )
     scored = (
-        corpus.join(F.broadcast(q), F.col(cell_col) == F.col("q_cell"))
-        .where(F.col(id_col) != F.col("q_vec_id"))
+        corpus.join(F.broadcast(q), F.col("label") == F.col("q_cell"))
+        .where(F.col("vec_id") != F.col("q_vec_id"))
         .select(
             "q_vec_id",
-            F.col(id_col).alias("vec_id"),
-            cosine_arrow(F.col("q_emb"), F.col(vec_col)).alias("cos"),
+            "vec_id",
+            cosine_arrow(F.col("q_emb"), F.col("embedding")).alias("cos"),
         )
     )
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -107,7 +106,13 @@ def cell_pruned_topk(
     ).where(F.col("rn") <= k)
 
 
-# Fitted coarse-quantizer centroids, keyed by (cache_key, params). An
+# The IVF fit: KMeans seed and iteration cap, and the sample size above
+# which the fit runs on a seeded sample instead of the whole corpus.
+_IVF_SEED = 42
+_IVF_MAX_ITER = 10
+_IVF_SAMPLE_TARGET = 4096
+
+# Fitted coarse-quantizer centroids, keyed by (cache_key, n_cells). An
 # index build is amortized across queries in any real deployment — the
 # centroids are a few KB of driver memory, so caching them is free and
 # saves a multi-job KMeans fit per call. session.release_session_caches
@@ -125,21 +130,19 @@ _CENTER_CACHE: dict[tuple, list[list[float]]] = {}
 def fit_ivf_centers(
     corpus: DataFrame,
     n_cells: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 10,
-    sample_target: int = 4096,
     cache_key: object = None,
 ) -> list[list[float]]:
     """Learn an IVF coarse quantizer: seeded KMeans (public
-    pyspark.ml.clustering.KMeans) over the L2-normalized corpus vectors.
+    pyspark.ml.clustering.KMeans, seed ``_IVF_SEED``, at most
+    ``_IVF_MAX_ITER`` iterations) over the L2-normalized ``embedding``
+    vectors of the corpus.
 
     Normalizing first makes the euclidean cells cosine-aligned (on the
     unit sphere d² = 2 - 2cos), matching the metric the scorer uses.
     Returns the centroid list (n_cells × dim floats — driver-sized by
     construction; the fit is the distributed pass).
 
-    Scale design: the fit runs on a seeded sample of ~``sample_target``
+    Scale design: the fit runs on a seeded sample of ~``_IVF_SAMPLE_TARGET``
     vectors, not the full corpus — a coarse quantizer needs cluster
     *shape*, not every point, and KMeans iterations over 100 TB would
     dominate the query. Corpora at or below the target are fitted whole
@@ -149,7 +152,7 @@ def fit_ivf_centers(
     once per session — the index-build amortization every real ANN
     system does.
     """
-    key = (cache_key, n_cells, vec_col, seed, max_iter, sample_target)
+    key = (cache_key, n_cells)
     if cache_key is not None and key in _CENTER_CACHE:
         return _CENTER_CACHE[key]
 
@@ -159,16 +162,18 @@ def fit_ivf_centers(
 
     fit_input = corpus
     n = corpus.count()
-    if n > sample_target:
+    if n > _IVF_SAMPLE_TARGET:
         # oversample slightly so the expected sample stays ≥ target
         fit_input = corpus.sample(
-            withReplacement=False, fraction=min(1.0, 1.2 * sample_target / n), seed=seed
+            withReplacement=False,
+            fraction=min(1.0, 1.2 * _IVF_SAMPLE_TARGET / n),
+            seed=_IVF_SEED,
         )
     raw = fit_input.withColumn(
-        "__raw", array_to_vector(F.col(vec_col).cast("array<double>"))
+        "__raw", array_to_vector(F.col("embedding").cast("array<double>"))
     )
     feats = Normalizer(inputCol="__raw", outputCol="__features", p=2.0).transform(raw)
-    # r13: materialize the ≤~sample_target-row normalized sample ONCE
+    # r13: materialize the ≤~_IVF_SAMPLE_TARGET-row normalized sample ONCE
     # (eager localCheckpoint, tracked release) before handing it to the
     # fit — the ml KMeans init/iteration passes then read a tiny cached
     # table instead of replaying the parquet scan + sample + normalize
@@ -177,7 +182,7 @@ def fit_ivf_centers(
     # bit-identical centroids.
     with Scope() as s:
         model = KMeans(
-            k=n_cells, seed=seed, maxIter=max_iter,
+            k=n_cells, seed=_IVF_SEED, maxIter=_IVF_MAX_ITER,
             featuresCol="__features", predictionCol="__cell",
         ).fit(s.checkpoint(feats.select("__features")))
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
@@ -186,8 +191,9 @@ def fit_ivf_centers(
     return centers
 
 
-def _nearest_cells(vec_col: str, centers: list[list[float]], n: int) -> Column:
-    """The ``n`` nearest cell ids for a vector, as an array<int> — a pure
+def _nearest_cells(centers: list[list[float]], n: int) -> Column:
+    """The ``n`` nearest cell ids of the row's ``embedding``, as an
+    array<int> — a pure
     scan-local expression (centroids inlined as literals, array_sort on
     (d², cell) structs), so cell assignment shuffles nothing and scales
     as a map-only pass. The vector is L2-normalized in-expression to
@@ -205,7 +211,7 @@ def _nearest_cells(vec_col: str, centers: list[list[float]], n: int) -> Column:
     def _arr(c: list[float]) -> str:
         return "array(" + ",".join(f"{x!r}D" for x in c) + ")"
 
-    v = f"cast({vec_col} as array<double>)"
+    v = "cast(embedding as array<double>)"
     # same arithmetic as functions.vectors.l2_norm (zip_with square fold)
     nrm = f"sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
     d2s = ",".join(
@@ -230,9 +236,6 @@ def ivf_topk(
     nprobe: int = 2,
     n_cells: int = 8,
     ka: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     cache_key: object = None,
 ) -> DataFrame:
     """Learned-IVF approximate top-k: KMeans cells, corpus-side
@@ -256,29 +259,27 @@ def ivf_topk(
     with the query side broadcast; the corpus side stays partitioned
     and is touched once.
     """
-    centers = fit_ivf_centers(
-        corpus, n_cells=n_cells, vec_col=vec_col, seed=seed, cache_key=cache_key
-    )
+    centers = fit_ivf_centers(corpus, n_cells=n_cells, cache_key=cache_key)
 
     def index() -> DataFrame:
         return corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("emb"),
-            F.explode(_nearest_cells(vec_col, centers, ka)).alias("cell"),
+            "vec_id",
+            F.col("embedding").alias("emb"),
+            F.explode(_nearest_cells(centers, ka)).alias("cell"),
         )
 
     # materialized inverted lists: steady-state queries skip the
     # corpus-wide assignment scan, same as any built ANN index
-    key = ("ivf_index", cache_key, n_cells, ka, vec_col, seed)
+    key = ("ivf_index", cache_key, n_cells, ka)
     assigned = (
         index()
         if cache_key is None
         else session_table(corpus.sparkSession, key, index, persist=True)
     )
     probes = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("q_emb"),
-        F.explode(_nearest_cells(vec_col, centers, nprobe)).alias("cell"),
+        F.col("vec_id").alias("q_vec_id"),
+        F.col("embedding").alias("q_emb"),
+        F.explode(_nearest_cells(centers, nprobe)).alias("cell"),
     )
     scored = (
         assigned.join(F.broadcast(probes), "cell")
@@ -299,12 +300,11 @@ def ivf_topk(
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cell_col: str = "label",
 ) -> DataFrame:
-    """Embedding-space near-duplicate pairs (cos ≥ threshold), blocked by
-    the coarse cell so the pair space is per-cell, not global.
+    """Embedding-space near-duplicate pairs (cos ≥ threshold) of the
+    (vec_id, embedding) rows, blocked by the coarse cell ``cell_col``
+    so the pair space is per-cell, not global.
 
     Two scale guards, both found the hard way on the dup-heavy sf1 run
     (2026-08-13), where 10x denser cells made the per-cell pair space
@@ -330,15 +330,15 @@ def cosine_neardup_pairs(
     """
     nparts = shuffle_partition_count(corpus)
     a = corpus.select(
-        F.col(id_col).alias("vec_a"),
+        F.col("vec_id").alias("vec_a"),
         F.col(cell_col).alias("cell_a"),
-        F.col(vec_col).alias("emb_a"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(_SALT_BUCKETS)).alias("salt_a"),
+        F.col("embedding").alias("emb_a"),
+        F.pmod(F.hash(F.col("vec_id")), F.lit(_SALT_BUCKETS)).alias("salt_a"),
     )
     b = corpus.select(
-        F.col(id_col).alias("vec_b"),
+        F.col("vec_id").alias("vec_b"),
         F.col(cell_col).alias("cell_b"),
-        F.col(vec_col).alias("emb_b"),
+        F.col("embedding").alias("emb_b"),
         F.explode(
             F.sequence(F.lit(0), F.lit(_SALT_BUCKETS - 1))
         ).alias("salt_b"),
@@ -364,16 +364,13 @@ def nearest_cells_quantized(
     corpus: DataFrame,
     k: int,
     n_probes: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "cells",
 ) -> DataFrame:
     """Multi-probe geometric cell assignment: for every vector, the
     ``n_probes`` nearest of ``k`` md5-seeded centroids by EXACT integer
     squared distance (the kmeans_lloyd seeding + quantization rules, so
     the whole assignment replays bit-for-bit in a SQL oracle).
 
-    Returns the corpus with ``out_col`` = array<int> of probed cell
+    Returns the corpus with ``cells`` = array<int> of probed cell
     ids, ordered nearest-first (ties -> lower cell). Blocking pairs by
     "share at least one probed cell" is the standard IVF multi-probe
     recall lever: a point near a Voronoi boundary is visible from both
@@ -388,11 +385,11 @@ def nearest_cells_quantized(
     shuffles. Every row is scored against all k centroids, so the
     probes are exact at any k (O(N*k) work).
     """
-    quant = quantize_vectors(corpus, vec_col)
+    quant = quantize_vectors(corpus)
     top = F.slice(F.sort_array(_ranked_cells(F.col("cents"))), 1, n_probes)
     return (
-        quant.crossJoin(F.broadcast(_seed_pack(quant, k, id_col)))
-        .withColumn(out_col, F.transform(top, lambda s: s["cell"]))
+        quant.crossJoin(F.broadcast(_seed_pack(quant, k)))
+        .withColumn("cells", F.transform(top, lambda s: s["cell"]))
         .drop("qv", "cents")
     )
 
@@ -400,8 +397,6 @@ def nearest_cells_quantized(
 def cosine_pairs_multiprobe(
     corpus: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cells_col: str = "cells",
 ) -> DataFrame:
     """cosine_neardup_pairs over MULTI-PROBE cell membership: ``cells_
@@ -420,16 +415,16 @@ def cosine_pairs_multiprobe(
     """
     nparts = shuffle_partition_count(corpus)
     a = corpus.select(
-        F.col(id_col).alias("vec_a"),
+        F.col("vec_id").alias("vec_a"),
         F.col(cells_col).alias("cells_a"),
-        F.col(vec_col).alias("emb_a"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(_SALT_BUCKETS)).alias("salt_a"),
+        F.col("embedding").alias("emb_a"),
+        F.pmod(F.hash(F.col("vec_id")), F.lit(_SALT_BUCKETS)).alias("salt_a"),
     ).withColumn("cell_a", F.explode("cells_a"))
     b = (
         corpus.select(
-            F.col(id_col).alias("vec_b"),
+            F.col("vec_id").alias("vec_b"),
             F.col(cells_col).alias("cells_b"),
-            F.col(vec_col).alias("emb_b"),
+            F.col("embedding").alias("emb_b"),
         )
         .withColumn("cell_b", F.explode("cells_b"))
         .withColumn(
@@ -480,12 +475,7 @@ def _fold_norms(cmat):
     return np.sqrt(cb2)
 
 
-def assign_nearest_centroid(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_nearest_centroid(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid cell assignment: for every corpus vector, the
     argmax-cosine centroid (ties -> smallest centroid id, so the
     assignment is total and engine-independent).
@@ -512,14 +502,14 @@ def assign_nearest_centroid(
     argmax, which IS the smallest-cid tie rule. Every vector is scored
     against all k centroids, so the assignment is exact at any k.
 
-    Returns (id_col, cell, vec_col) — the embedding is carried through
+    Returns (vec_id, cell, embedding) — the embedding is carried through
     so downstream per-cell passes need no join back to the corpus.
     """
     import numpy as np
     from pyspark.sql.types import StructField, StructType
 
     cent_rows = (
-        centroids.select(F.col(id_col).alias("cid"), F.col(vec_col))
+        centroids.select(F.col("vec_id").alias("cid"), "embedding")
         .orderBy("cid")
         .collect()  # bounded by contract: the centroid table only
     )
@@ -527,14 +517,14 @@ def assign_nearest_centroid(
         raise ValueError("assign_nearest_centroid: empty centroid table")
     cids = np.array([r.cid for r in cent_rows], dtype=np.int64)
     cmat = np.ascontiguousarray(
-        np.array([r[vec_col] for r in cent_rows], dtype=np.float64).T
+        np.array([r["embedding"] for r in cent_rows], dtype=np.float64).T
     )  # (dim, k); float32 -> float64 widening is exact
     cnorm = _fold_norms(cmat)
 
-    base = corpus.select(id_col, vec_col)
+    base = corpus.select("vec_id", "embedding")
     out_schema = StructType(
         list(base.schema.fields[:1])
-        + [StructField("cell", centroids.schema[id_col].dataType, False)]
+        + [StructField("cell", centroids.schema["vec_id"].dataType, False)]
         + list(base.schema.fields[1:])
     )
     bc = corpus.sparkSession.sparkContext.broadcast((cids, cmat, cnorm))
@@ -545,16 +535,16 @@ def assign_nearest_centroid(
             if pdf.empty:
                 continue
             vt = np.ascontiguousarray(
-                np.stack(pdf[vec_col].to_numpy()).T, dtype=np.float64
+                np.stack(pdf["embedding"].to_numpy()).T, dtype=np.float64
             )  # (dim, n)
             cos = _fold_cos(vt, k_cmat, k_cnorm)
             best = np.argmax(cos, axis=1)  # first max = smallest cid
-            out = pdf[[pdf.columns[0], vec_col]].copy()
+            out = pdf[["vec_id", "embedding"]].copy()
             out.insert(1, "cell", k_cids[best])
             yield out
 
     return base.mapInPandas(assign, schema=out_schema).select(
-        id_col, "cell", vec_col
+        "vec_id", "cell", "embedding"
     )
 
 
@@ -562,8 +552,6 @@ def semdedup_survivors(
     corpus: DataFrame,
     centroids: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic pruning (Abbas et al. 2023): cluster by
     nearest centroid, then inside each cluster drop every vector that
@@ -580,20 +568,12 @@ def semdedup_survivors(
     should scale with corpus density exactly as IVF cell count does.
     The assignment sweep is exact and O(N*k); a caller whose centroid
     count grows with the corpus pays that product (the SemDeDup ladder
-    in SCALE.md measured it). Returns survivors as (id_col, cell).
+    in SCALE.md measured it). Returns survivors as (vec_id, cell).
     """
-    assigned = assign_nearest_centroid(
-        corpus, centroids, id_col=id_col, vec_col=vec_col
-    )
+    assigned = assign_nearest_centroid(corpus, centroids)
     pruned = (
-        cosine_neardup_pairs(
-            assigned,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            cell_col="cell",
-        )
-        .select(F.col("vec_b").alias(id_col))
+        cosine_neardup_pairs(assigned, threshold=threshold, cell_col="cell")
+        .select(F.col("vec_b").alias("vec_id"))
         .distinct()
     )
-    return assigned.join(pruned, id_col, "left_anti").select(id_col, "cell")
+    return assigned.join(pruned, "vec_id", "left_anti").select("vec_id", "cell")

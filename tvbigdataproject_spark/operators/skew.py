@@ -53,10 +53,9 @@ def salted_join(
     probe_key: str,
     build_key: str,
     n_salt: int = 16,
-    how: str = "inner",
     salt_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Equi-join `probe` (skewed side) with `build` on
+    """Inner equi-join `probe` (skewed side) with `build` on
     probe_key == build_key, distributing each probe key over `n_salt`
     shuffle partitionings.
 
@@ -82,6 +81,5 @@ def salted_join(
     joined = salted_probe.join(
         replicated_build,
         (F.col(probe_key) == F.col(build_key)) & (salted_probe._salt == replicated_build._salt),
-        how,
     )
     return joined.drop("_salt")

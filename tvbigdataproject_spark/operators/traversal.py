@@ -88,8 +88,6 @@ def bfs_levels(
     edges: DataFrame | EdgeSet,
     source: int | str,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Minimum hop count from `source` to every node reachable within
     `max_hops` directed hops. Returns (node, hop) with hop in
@@ -111,7 +109,7 @@ def bfs_levels(
         # materialize the (static) edge set once — every hop's frontier
         # join re-reads it, and the upstream plan may be an expensive
         # join chain (an EdgeSet already is materialized and distinct)
-        e = s.edges(edges, src, dst).df
+        e = s.edges(edges).df
         visited = s.checkpoint(
             e.sparkSession.range(1).select(
                 F.lit(source).cast(e.schema["src"].dataType).alias("node"),
@@ -137,8 +135,6 @@ def bfs_levels_multi(
     edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Multi-source BFS: minimum hop count from EVERY node in `sources`
     (a one-column DataFrame of node ids, column `node`; repeated ids
@@ -156,7 +152,7 @@ def bfs_levels_multi(
     and fixed, which is how landmark methods are used.
     """
     with Scope() as s:
-        e = s.edges(edges, src, dst).df
+        e = s.edges(edges).df
         visited = s.checkpoint(
             sources.select(
                 F.col("node").alias("landmark"),
@@ -181,8 +177,6 @@ def kcore_peel(
     edges: DataFrame | EdgeSet,
     k: int,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Bounded-round k-core peel: `rounds` iterations of "drop every
     node with degree < k, recompute degrees". Returns (node, deg) for
@@ -199,7 +193,7 @@ def kcore_peel(
     ``_KCORE_EVERY`` = 2 rounds (``Scope.rounds``).
     """
     with Scope() as s:
-        e = s.edges(edges, src, dst).df
+        e = s.edges(edges).df
 
         def step(plan: DataFrame, _r: int) -> DataFrame:
             keep = (
@@ -314,14 +308,12 @@ def sssp_bounded(
     edges: DataFrame | EdgeSet,
     source: int | str,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
 ) -> DataFrame:
     """Single-source shortest path bounded to ``rounds`` relaxation
     rounds (Bellman-Ford): (node, dist) where dist is the minimum total
-    integer edge weight over any path from ``source`` using at most
-    ``rounds`` edges. With rounds >= |V|-1 this is the exact SSSP on a
+    integer edge weight (the edges' ``w`` column) over any path from
+    ``source`` using at most ``rounds`` edges. With rounds >= |V|-1
+    this is the exact SSSP on a
     non-negative-weight graph; at a fixed small bound it is the
     deterministic "distance within k hops" semantics that an unrolled
     SQL oracle can mirror layer-for-layer. ``node`` has the type of the
@@ -340,14 +332,10 @@ def sssp_bounded(
         if isinstance(edges, EdgeSet):
             # (src, dst) already unique — parallel edges pre-collapsed —
             # and the rows materialized: read the weight as given
-            e = edges.df.select("src", "dst", F.col(weight).cast("long").alias("w"))
+            e = edges.df.select("src", "dst", F.col("w").cast("long").alias("w"))
         else:
             e = s.checkpoint(
-                edges.select(
-                    F.col(src).alias("src"),
-                    F.col(dst).alias("dst"),
-                    F.col(weight).cast("long").alias("w"),
-                )
+                edges.select("src", "dst", F.col("w").cast("long").alias("w"))
                 .groupBy("src", "dst")
                 .agg(F.min("w").alias("w"))
             )
@@ -376,8 +364,6 @@ def sssp_bounded(
 def luby_mis(
     edges: DataFrame | EdgeSet,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Bounded-round Luby maximal-independent-set over an undirected
     graph (feed a bidirectional edge list). Returns (node, round) for
@@ -408,7 +394,7 @@ def luby_mis(
         + (F.col("node") + F.lit(2147483648).cast("long"))
     )
     with Scope() as s:
-        e = s.edges(edges, src, dst).df
+        e = s.edges(edges).df
         active = s.checkpoint(
             e.select(F.col("src").alias("node"))
             .distinct()
@@ -452,7 +438,7 @@ def luby_mis(
 
 
 def dag_longest_path_levels(
-    edges: DataFrame | EdgeSet,
+    edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 50,
@@ -461,6 +447,8 @@ def dag_longest_path_levels(
     any source to the node (sources are level 0) — the topological
     stratification used for dependency scheduling and, composed with
     strongly_connected_components, for condensation-DAG analysis.
+    ``src``/``dst`` name the edge columns of ``edges``; the rows are
+    deduplicated and checkpointed once (``Scope.edges``).
 
     Iterative max-propagation: level(v) = max(level(v),
     max over in-edges u->v of level(u) + 1), from all-zeros. Levels are
@@ -475,9 +463,9 @@ def dag_longest_path_levels(
     joins the new levels to the old.
     """
     with Scope() as s:
-        e = s.edges(edges, src, dst).df.select(
-            F.col("src").alias("s"), F.col("dst").alias("d")
-        )
+        e = s.edges(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        ).df.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         lvl = s.checkpoint(
             e.select(F.col("s").alias("node"))
             .unionByName(e.select(F.col("d").alias("node")))
@@ -556,8 +544,6 @@ def reachable_masks(
     edges: DataFrame | EdgeSet,
     sources: DataFrame,
     max_rounds: int = 50,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """(node, mask) for every node reachable from ``sources`` in either
     edge direction, in ONE frontier loop: mask bit 1 = reachable FROM
@@ -594,7 +580,7 @@ def reachable_masks(
         # the tagged union below is distinct by construction over a
         # distinct base — the b column separates the branches — and
         # re-deriving it per round is two narrow cached scans).
-        base = s.edges(edges, src, dst).df
+        base = s.edges(edges).df
         # r13 size-gated driver-local endgame (components._scc_local
         # rationale): below the edge threshold the fused two-wave
         # frontier loop — max(ecc_fwd, ecc_rev) rounds x (checkpoint +

@@ -18,20 +18,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.functions import minhash_signature, shingles
-from tvbigdataproject_spark.operators.textstats import DEFAULT_STOPWORDS, quality_metrics
+from tvbigdataproject_spark.operators.textstats import quality_metrics
+
+# The quality gate: a document passes with at least this many tokens
+# and at least this quality_metrics score.
+_MIN_TOKENS = 20
+_MIN_QUALITY = 0.45
 
 
-def prepare_corpus(
-    docs: DataFrame,
-    min_tokens: int = 20,
-    min_quality: float = 0.45,
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
-) -> DataFrame:
-    """Filter low-quality docs, drop exact duplicates (keep the lowest
-    doc_id per content digest), and attach token stats + a content
-    fingerprint. Returns (doc_id, lang, source, n_tokens, quality_score,
-    fingerprint)."""
-    m = quality_metrics(F.col("text"), stopwords)
+def prepare_corpus(docs: DataFrame) -> DataFrame:
+    """Filter low-quality docs (the ``_MIN_TOKENS`` / ``_MIN_QUALITY``
+    gate), drop exact duplicates (keep the lowest doc_id per content
+    digest), and attach token stats + a content fingerprint. Returns
+    (doc_id, lang, source, n_tokens, quality_score, fingerprint)."""
+    m = quality_metrics(F.col("text"))
     scored = docs.select(
         "doc_id",
         "lang",
@@ -41,7 +41,7 @@ def prepare_corpus(
         m["quality_score"].alias("quality_score"),
     )
     gated = scored.where(
-        (F.col("n_tokens") >= min_tokens) & (F.col("quality_score") >= min_quality)
+        (F.col("n_tokens") >= _MIN_TOKENS) & (F.col("quality_score") >= _MIN_QUALITY)
     )
     # exact dedup among survivors: keep the minimum id per digest
     keep = (

@@ -291,23 +291,19 @@ class TweetGraphPipeline:
 
     # --- Q6: word-cloud corpus (reference bigdata/__init__.py:73-94) ------
 
-    def word_cloud_corpus(self, drop_empty: bool = False) -> DataFrame:
+    def word_cloud_corpus(self) -> DataFrame:
         """Cleaned tweet text, preferring the retweeted post's text when
         present (reference P5: when/otherwise at bigdata/__init__.py:87-90;
         cleaning via spaCy UDF D6 — native fallback here; the optional
         spaCy pandas_udf lives in operators/textstats.py).
 
         The reference keeps null/empty texts as empty cleaned strings
-        (cleaner(None) -> '', bigdata/__init__.py:40-41), so one output
-        row per tweet is the default; ``drop_empty=True`` opts into
-        filtering them."""
+        (cleaner(None) -> '', bigdata/__init__.py:40-41), so there is one
+        output row per tweet."""
         source_text = F.when(
             F.col("retweeted_status.text").isNull(), F.col("text")
         ).otherwise(F.col("retweeted_status.text"))
-        out = self.tweets.select(simple_clean(source_text).alias("text"))
-        if drop_empty:
-            out = out.where(F.length("text") > 0)
-        return out
+        return self.tweets.select(simple_clean(source_text).alias("text"))
 
     # --- Q7: neighborhood subgraph (reference :252-276) -------------------
 

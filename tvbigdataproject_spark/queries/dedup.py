@@ -643,9 +643,7 @@ def minhash_estimate_error(spark, sf_dir):
     from tvbigdataproject_spark.operators.dedup import _minhash_candidates
 
     docs = read_table(spark, sf_dir, "documents")
-    with_sh, sig, cand = _minhash_candidates(
-        docs, "text", "doc_id", n=3, num_hashes=8, bands=4
-    )
+    with_sh, sig, cand = _minhash_candidates(docs, n=3, num_hashes=8, bands=4)
     sig_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     shs_a = with_sh.select(

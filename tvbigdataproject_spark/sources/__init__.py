@@ -5,5 +5,4 @@ from tvbigdataproject_spark.sources.io import (  # noqa: F401
     save_graph,
     scan_spread,
     write_csv,
-    write_parquet,
 )

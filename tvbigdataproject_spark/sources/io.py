@@ -4,9 +4,11 @@ Reference sinks force a single output file via ``repartition(1)`` before
 every CSV write (reference: RetweetTagsJaccardGraph.py:242,
 bigdata/__init__.py:91,107,111) — a one-task stage that serializes the
 whole dataset through one core. At scale that is the single worst plan
-node in the reference, so sinks here default to the natural output
-parallelism; callers that truly want few files pass ``coalesce_to`` and
-it is applied as ``coalesce`` (no extra shuffle), never ``repartition(1)``.
+node in the reference, so sinks here write at the natural output
+parallelism; the one-file sink (``write_single_csv``) runs the plan at
+full parallelism and applies ``coalesce(1)`` (no extra shuffle) to the
+final write only, never ``repartition(1)``. Every CSV sink writes a
+header row.
 """
 
 from __future__ import annotations
@@ -156,11 +158,10 @@ def write_csv(
     df: DataFrame,
     path: str,
     sep: str = ";",
-    header: bool = True,
-    coalesce_to: int | None = None,
     audit_null_cols: list[str] | None = None,
 ) -> dict | None:
-    """CSV sink (reference S2/S3: RetweetTagsJaccardGraph.py:242-243).
+    """CSV sink, one part file per task (reference S2/S3:
+    RetweetTagsJaccardGraph.py:242-243).
 
     ``audit_null_cols`` (may be ``[]``) attaches inline quality
     accounting (operators/quality.py): row count + per-column null
@@ -172,11 +173,8 @@ def write_csv(
             with_quality_observation,
         )
 
-        df, obs = with_quality_observation(df, null_cols=audit_null_cols)
-        metrics = obs
-    if coalesce_to is not None:
-        df = df.coalesce(coalesce_to)
-    df.write.mode("overwrite").option("header", str(header).lower()).option("sep", sep).csv(path)
+        df, metrics = with_quality_observation(df, null_cols=audit_null_cols)
+    df.write.mode("overwrite").option("header", "true").option("sep", sep).csv(path)
     return dict(metrics.get) if metrics is not None else None
 
 
@@ -184,7 +182,6 @@ def write_single_csv(
     df: DataFrame,
     file_path: str,
     sep: str = ";",
-    header: bool = True,
     audit_null_cols: list[str] | None = None,
 ) -> dict | None:
     """Write ``df`` as ONE real CSV file at ``file_path``.
@@ -221,9 +218,9 @@ def write_single_csv(
     tmp = tempfile.mkdtemp(dir=parent)
     try:
         out_dir = os.path.join(tmp, "out")
-        df.coalesce(1).write.mode("overwrite").option(
-            "header", str(header).lower()
-        ).option("sep", sep).csv(out_dir)
+        df.coalesce(1).write.mode("overwrite").option("header", "true").option(
+            "sep", sep
+        ).csv(out_dir)
         (part,) = glob.glob(os.path.join(out_dir, "part-*.csv"))
         os.makedirs(os.path.dirname(os.path.abspath(file_path)), exist_ok=True)
         if os.path.isdir(file_path):
@@ -234,49 +231,28 @@ def write_single_csv(
     return dict(metrics.get) if metrics is not None else None
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def save_graph(
     vertices: DataFrame,
     edges: DataFrame,
     path: str,
     prefix: str = "g",
-    fmt: str = "csv",
-    coalesce_to: int | None = None,
     single_file: bool = False,
     sep: str = ";",
     audit: bool = False,
 ) -> dict | None:
-    """Graph sink: edges + vertices as two datasets (reference S4:
-    bigdata/__init__.py:96-114 writes ``prefix.edges.csv`` /
-    ``prefix.vertices.csv`` via repartition(1); here both stay parallel
-    by default, CSV kept for Gephi compatibility, parquet for everything
-    else; ``single_file=True`` produces the reference's exact one-file
-    layout via write_single_csv for small final graphs). ``audit=True``
-    (CSV modes) rides row accounting on both writes and returns
-    ``{"edges": {...}, "vertices": {...}}``."""
-    e_path = os.path.join(path, f"{prefix}.edges.{fmt}")
-    v_path = os.path.join(path, f"{prefix}.vertices.{fmt}")
+    """Graph sink: edges + vertices as two CSV datasets, kept for Gephi
+    compatibility (reference S4: bigdata/__init__.py:96-114 writes
+    ``prefix.edges.csv`` / ``prefix.vertices.csv`` via repartition(1);
+    here both stay parallel by default, and ``single_file=True``
+    produces the reference's exact one-file layout via write_single_csv
+    for small final graphs). ``audit=True`` rides row accounting on both
+    writes and returns ``{"edges": {...}, "vertices": {...}}``."""
     null_cols: list[str] | None = [] if audit else None
-    if fmt == "csv":
+    out = {}
+    for name, df in (("edges", edges), ("vertices", vertices)):
+        file_path = os.path.join(path, f"{prefix}.{name}.csv")
         if single_file:
-            em = write_single_csv(edges, e_path, sep=sep, audit_null_cols=null_cols)
-            vm = write_single_csv(vertices, v_path, sep=sep, audit_null_cols=null_cols)
+            out[name] = write_single_csv(df, file_path, sep=sep, audit_null_cols=null_cols)
         else:
-            em = write_csv(
-                edges, e_path, sep=sep, coalesce_to=coalesce_to, audit_null_cols=null_cols
-            )
-            vm = write_csv(
-                vertices, v_path, sep=sep, coalesce_to=coalesce_to, audit_null_cols=null_cols
-            )
-        if audit:
-            return {"edges": em, "vertices": vm}
-    else:
-        write_parquet(edges, e_path)
-        write_parquet(vertices, v_path)
-    return None
+            out[name] = write_csv(df, file_path, sep=sep, audit_null_cols=null_cols)
+    return out if audit else None
